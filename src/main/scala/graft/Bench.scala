@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — driver contract: prints ONE JSON line
   * `{"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}`.
   *
@@ -14,32 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to the machine's cores (the target env is local[32]);
-    // SPARK_GRAFT_CPUS always wins when set.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // r18 (r17 verdict #3, measured with graft.tools.JobProfile):
-      // the battery's ~150 distinct queries churn far past the
-      // generated-class cache's default 100 entries, so every pass of
-      // every query regenerates + recompiles + re-JITs its codegen
-      // classes — the first materialization after such churn pays a
-      // multi-cpu-second interpreter/C2 ramp (ta_repetition's split
-      // stage: 4.9 cpu-s first-after-churn vs 0.3 warm; its battery
-      // cpu_s sat at 5-9 vs 1.3 solo for identical work). A cache
-      // sized to the query population keeps compiled classes across
-      // passes — the same setting any long-lived driver serving a
-      // diverse query load wants, not a local[32] tune.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def materialize(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)

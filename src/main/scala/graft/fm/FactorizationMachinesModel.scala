@@ -149,11 +149,10 @@ class FactorizationMachinesModel(
       .join(params, col("__fm_fid") === col("__fm_pid"), "left_outer")
       .select(col(sid) +: inputCols.map(col) :+
         (coalesce(col("__fm_w"), lit(0.0)) * col("__fm_x")).as("__fm_wixi") :+
-        // native codegen'd array math when available (r17, brief rule 4
-        // — the HOF forms are interpreted per element); bit-identical
-        FmNative.arrScale(coalesce(col("__fm_v"), zeroArr), col("__fm_x"))
-          .as("__fm_vfxi") :+
-        (FmNative.sqSum(coalesce(col("__fm_v"), zeroArr))
+        // native codegen'd array math (graft.functions.FmArrayOps)
+        call_function("fm_arr_scale", coalesce(col("__fm_v"), zeroArr),
+          col("__fm_x")).as("__fm_vfxi") :+
+        (call_function("fm_sq_sum", coalesce(col("__fm_v"), zeroArr))
           * col("__fm_x") * col("__fm_x")).as("__fm_vi2xi2") :+
         when(col("__fm_pid").isNotNull, 1L).otherwise(0L).as("__fm_isReal"): _*)
 
@@ -194,10 +193,10 @@ class FactorizationMachinesModel(
       .select(
         col(sid),
         (col("strength") * col("featureValue")).as("wixi"),
-        // native codegen'd array math when available (r17, brief rule 4
-        // — the HOF forms are interpreted per element); bit-identical
-        FmNative.arrScale(col("vecArr"), col("featureValue")).as("vfxi"),
-        (FmNative.sqSum(col("vecArr"))
+        // native codegen'd array math (graft.functions.FmArrayOps)
+        call_function("fm_arr_scale", col("vecArr"), col("featureValue"))
+          .as("vfxi"),
+        (call_function("fm_sq_sum", col("vecArr"))
           * col("featureValue") * col("featureValue")).as("vi2xi2"))
 
     // Per-sample reduction: sum of wixi, sum of vi2xi2, and the k

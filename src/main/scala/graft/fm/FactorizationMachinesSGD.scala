@@ -240,52 +240,29 @@ class FactorizationMachinesSGD(override val uid: String)
           transform(sequence(lit(0), lit(k - 1)),
             f => hashGaussian(col("featureId"), f, sdv) * sd)).as("vecArr"))
 
-    // Per-row FM terms (Model:173-181). The array math runs as the
-    // codegen'd native expressions (graft.functions.FmArrayOps) when the
-    // session has GraftExtensions — the HOF forms are CodegenFallback,
-    // interpreted per element on every (sample, feature) row of every
-    // epoch (r17, brief rule 4). Same FP order, bit-identical values
-    // (oracle- and golden-gated); the HOF twin serves plain sessions.
+    // Per-row FM terms (Model:173-181); the array math runs as the
+    // codegen'd native expressions (graft.functions.FmArrayOps).
     val terms = exploded.select(
       col("label"), col("sampleId"), col("featureId"), col("x"),
       col("vecArr"),
       (col("strength") * col("x")).as("wixi"),
-      FmNative.arrScale(col("vecArr"), col("x")).as("vfxi"),
-      (FmNative.sqSum(col("vecArr")) * col("x") * col("x")).as("vi2xi2"))
+      call_function("fm_arr_scale", col("vecArr"), col("x")).as("vfxi"),
+      (call_function("fm_sq_sum", col("vecArr")) * col("x") * col("x"))
+        .as("vi2xi2"))
 
-    // Per-sample sums broadcast back onto every feature row. Two
-    // value-identical shapes (both accumulate doubles in arbitrary
-    // within-sample order; the SGD oracles and golden gradient tests
-    // gate bit-equality):
-    //  - WINDOW (default): k+3 scalar window sums — ONE shuffle of the
-    //    exploded rows on sampleId plus an in-partition sort.
-    //  - GROUPBY+JOIN (env GRAFT_FM_GROUPBY_SUMS=true): partial-
-    //    aggregated groupBy (small shuffle) + an equi-join back onto
-    //    the exploded rows (second full shuffle, no sort).
-    // Measured at sf0.1 (COVERAGE.md r5): the window form wins —
-    // the join-back's second full shuffle costs more than the window
-    // sort saves. Kept switchable for re-measurement on other shapes.
-    val withSums = if (sys.env.get("GRAFT_FM_GROUPBY_SUMS").contains("true")) {
-      val aggs = Seq(
-        sum(col("wixi")).as("wixiSum"),
-        sum(col("vi2xi2")).as("vi2xi2Sum"),
-        count(lit(1)).as("cnt")) ++
-        (0 until k).map(f => sum(element_at(col("vfxi"), f + 1)).as(s"_vfs$f"))
-      val persample = terms.groupBy(col("sampleId"))
-        .agg(aggs.head, aggs.tail: _*)
-      terms.select(col("label"), col("sampleId"), col("featureId"),
-          col("x"), col("vecArr"))
-        .join(persample, Seq("sampleId"))
-    } else {
-      val vfCols = (0 until k).map(f =>
-        sum(element_at(col("vfxi"), f + 1)).over(w).as(s"_vfs$f"))
-      terms.select(
-        (Seq(col("label"), col("sampleId"), col("featureId"), col("x"),
-          col("vecArr"),
-          sum(col("wixi")).over(w).as("wixiSum"),
-          sum(col("vi2xi2")).over(w).as("vi2xi2Sum"),
-          count(lit(1)).over(w).as("cnt")) ++ vfCols): _*)
-    }
+    // Per-sample sums broadcast back onto every feature row as k+3
+    // scalar window sums: ONE shuffle of the exploded rows on sampleId
+    // plus an in-partition sort. Measured at sf0.1 (COVERAGE.md r5)
+    // against a groupBy + join-back (second full shuffle): the window
+    // form wins.
+    val vfCols = (0 until k).map(f =>
+      sum(element_at(col("vfxi"), f + 1)).over(w).as(s"_vfs$f"))
+    val withSums = terms.select(
+      (Seq(col("label"), col("sampleId"), col("featureId"), col("x"),
+        col("vecArr"),
+        sum(col("wixi")).over(w).as("wixiSum"),
+        sum(col("vi2xi2")).over(w).as("vi2xi2Sum"),
+        count(lit(1)).over(w).as("cnt")) ++ vfCols): _*)
 
     val normSq = (0 until k).map(f => col(s"_vfs$f") * col(s"_vfs$f")).reduce(_ + _)
     // Training prediction is UNCLIPPED (Model:221 — calcLossGrad has no
@@ -306,7 +283,7 @@ class FactorizationMachinesSGD(override val uid: String)
         (Seq(
           col("featureId"),
           (col("x") * col("residual")).as("gw"),
-          FmNative.gradV(col("vecArr"),
+          call_function("fm_grad_v", col("vecArr"),
             array((0 until k).map(i => col(s"_vfs$i")): _*),
             col("x"), col("residual")).as("gv"),
           (col("residual") * col("residual") / col("cnt")).as("lossShare"))
@@ -357,13 +334,13 @@ class FactorizationMachinesSGD(override val uid: String)
         mergedKey.as("id"),
         soft(coalesce(col("strength"), hashGaussian(mergedKey, lit(-1), sdv) * sd)
           - coalesce(col("dW"), lit(0.0))).as("strength"),
-        FmNative.softUpdate(
+        call_function("fm_soft_update",
           coalesce(col("vecArr"),
             org.apache.spark.sql.functions.transform(
               sequence(lit(0), lit(k - 1)),
               f => hashGaussian(mergedKey, f, sdv) * sd)),
           coalesce(col("dV"), zeroArr),
-          shrinkage).as("vecArr"))
+          lit(shrinkage)).as("vecArr"))
 
     // Eager: materializes before the caller drops the old table AND cuts
     // the (otherwise exponentially duplicated) logical plan to a leaf.

@@ -179,10 +179,12 @@ case class DotProductQ(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session extensions registering the engine's native SQL functions.
-  * Attach with `SparkSession.builder().withExtensions(new GraftExtensions)`;
-  * afterwards `expr("dot_product(a, b)")` resolves to the codegen'd
-  * expression in any query of that session. */
+/** Session extensions registering the engine's native SQL functions,
+  * optimizer rules and the AsOf planner strategy. Every graft session
+  * requires them — the operators call these expressions directly, with
+  * no interpreted fallback — and [[graft.GraftSession]] attaches them.
+  * In such a session `expr("dot_product(a, b)")` resolves to the
+  * codegen'd expression in any query. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction((

@@ -17,11 +17,7 @@ import org.apache.spark.sql.types._
   * bit-identical — the SGD/score SQL oracles and the golden suites gate
   * that equivalence. Input arrays are FM parameter/feature vectors and
   * never carry null elements (built by `vector_to_array`, `transform`,
-  * or `array_repeat`); outputs are primitive double arrays.
-  *
-  * All four have interpreted twins in the estimator/model code (the
-  * HOF constructions they replaced) selected when a session lacks
-  * [[GraftExtensions]] — the [[graft.ops.Similarity.dot]] pattern. */
+  * or `array_repeat`); outputs are primitive double arrays. */
 object FmArrayOps {
 
   private def arrType(e: Expression): Boolean = e.dataType match {

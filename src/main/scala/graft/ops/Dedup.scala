@@ -83,28 +83,14 @@ object Dedup {
     * dense_rank-over-unpartitioned-window dictionary (a single-partition
     * vocabulary sort plus a join — the serialization bottleneck flagged
     * in VERDICT r1): this is per-row codegen'd arithmetic — no vocab
-    * table, no join, no shuffle, and it scales embarrassingly.
-    * When the session has GraftExtensions, the fold runs as the native
-    * `token_hash` expression (one codegen'd byte loop); the HOF
-    * construction below is the value-identical fallback (equivalence
-    * property-tested in TokenHashSuite). Empty tokens fold to the init
-    * value 0 on both engines and in both implementations (Spark's
-    * sequence(1,0) would yield [1,0], hence the explicit guard). */
-  private[graft] def tokHash(tok: Column): Column = {
-    val active = org.apache.spark.sql.SparkSession.active
-    if (active.catalog.functionExists("token_hash"))
-      call_function("token_hash", tok)
-    else
-      when(length(tok) === 0, lit(0L)).otherwise(
-        aggregate(
-          transform(sequence(lit(1), length(tok)),
-            i => ascii(tok.substr(i, lit(1))).cast("long")),
-          lit(0L),
-          (h, c) => (h * 131 + c) % TokP))
-  }
+    * table, no join, no shuffle, and it scales embarrassingly. The fold
+    * runs as the native `token_hash` expression (one codegen'd byte
+    * loop). Empty tokens fold to the init value 0 on both engines. */
+  private[graft] def tokHash(tok: Column): Column =
+    call_function("token_hash", tok)
 
   /** Tokenized corpus with 1-based positions and rolling-hash token ids. */
-  private[ops] def encodedToks(c: DataFrame): DataFrame =
+  private[graft] def encodedToks(c: DataFrame): DataFrame =
     c.select(col("doc_id"),
       posexplode(split(col("text"), " ")).as(Seq("pos0", "tok")))
       .select(col("doc_id"), (col("pos0") + 1).as("pos"),
@@ -2034,11 +2020,6 @@ object Dedup {
     // (e.g. the full MinHash pipeline over the corpus) must keep the
     // session's full parallelism — only the tiny-label loop shrinks.
     val pair = edges0.toDF("doc1", "doc2").localCheckpoint()
-    // Flag to force the O(log n) variant outright (e.g. a caller that
-    // KNOWS its graph is high-diameter and wants to skip the doomed
-    // propagation rounds).
-    if (sys.env.get("GRAFT_CC_STAR").contains("true"))
-      return connectedComponentsStar(pair)
     val converged = graft.Knobs.withShufflePartitions(spark, 8) { scoped =>
       val pairS = graft.Knobs.rebind(pair, scoped)
       val edges = pairS

@@ -131,18 +131,10 @@ object Similarity {
     * and DuckDB — ranks, thresholds and displays need no absorbing
     * grain (the r5 `round(rawcos, 12)` rule is retired with the wobble
     * it absorbed). Runs as the codegen'd native expression
-    * (graft.functions.DotProductQ) when the session has GraftExtensions
-    * registered (Verify/Bench/tests do), else the higher-order-function
-    * fallback — same value either way. SQL twins inline the same
+    * (graft.functions.DotProductQ). SQL twins inline the same
     * expression ([[qDotSql]]). */
-  private[ops] def dot(a: Column, b: Column): Column = {
-    val active = SparkSession.active
-    if (active.catalog.functionExists("dot_product_q"))
-      org.apache.spark.sql.functions.call_function("dot_product_q", a, b)
-    else
-      aggregate(zip_with(a, b, (x, y) => floor(x * y * lit(1e12) + lit(0.5))),
-        lit(0L), (acc, x) => acc + x).cast("double")
-  }
+  private[ops] def dot(a: Column, b: Column): Column =
+    call_function("dot_product_q", a, b)
 
   /** DuckDB twin of [[dot]]: `qDotSql("a.e", "b.e")` is the aggregate
     * expression for `sum()`-style contexts. */
@@ -1077,16 +1069,14 @@ object Similarity {
 
   /** Centroid table for the flat quantizer: the [[ivfStride]] picks by
     * default; Lloyd-refined ([[kmeansCentroids]]) when the session conf
-    * `spark.graft.ivf.kmeansIters` (env fallback
-    * `GRAFT_IVF_KMEANS_ITERS`) is a positive iteration count — the
+    * `spark.graft.ivf.kmeansIters` is a positive iteration count — the
     * deployment switch for clustered corpora where refined centroids
     * balance the cells (fewer over-full cells ⇒ fewer candidates per
     * probe at equal recall). Defaults to 0 so every stride-pinned
     * oracle is untouched. */
   private def ivfCentroidTable(prep: DataFrame, nlist: Int): DataFrame = {
     val iters = graft.DispatchConf(prep.sparkSession, "spark.graft.ivf.")
-      .int("kmeansIters",
-        sys.env.getOrElse("GRAFT_IVF_KMEANS_ITERS", "0").toInt)
+      .int("kmeansIters", 0)
     if (iters > 0) kmeansCentroids(prep, nlist, iters)
     else {
       val stride = ivfStride(prep.count(), nlist)
@@ -1136,11 +1126,9 @@ object Similarity {
     * APPROXIMATE by the standard IVF trade: the true nearest fine
     * centroid is found iff its group is probed — exact on clustered
     * corpora (suite-pinned two-level ≡ flat there), near-exact on
-    * unstructured ones. Select per call, per session via the conf
-    * `spark.graft.ivf.twoLevel=true`, or process-wide via the
-    * `GRAFT_IVF_TWO_LEVEL=true` env fallback ([[rankedCellsAuto]]);
-    * the DEFAULT stays flat so every oracle-checked query is
-    * untouched. */
+    * unstructured ones. Select per call, or per session via the conf
+    * `spark.graft.ivf.twoLevel=true` ([[rankedCellsAuto]]); the
+    * DEFAULT stays flat so every oracle-checked query is untouched. */
   private[ops] def rankedCellsTwoLevel(prep: DataFrame, nlist: Int,
       upTo: Int, coarseProbe: Int = 2): DataFrame = {
     val stride = ivfStride(prep.count(), nlist)
@@ -1189,17 +1177,15 @@ object Similarity {
   /** Quantizer dispatch: flat [[rankedCells]] by default (every oracle
     * pins flat), [[rankedCellsTwoLevel]] when the session conf
     * `spark.graft.ivf.twoLevel` is `true` (runtime-settable per
-    * session/query, the same dispatch surface as
-    * `spark.graft.asof.skew.*`; the `GRAFT_IVF_TWO_LEVEL` env var
-    * remains as the process-wide fallback for conf-less launchers) —
-    * the deployment switch for large-nlist regimes. Used by
+    * session/query, read through [[graft.DispatchConf]] like every
+    * other dispatcher) — the deployment switch for large-nlist regimes. Used by
     * [[ivfTopKDetRaw]] and `Dedup.semanticAssign`, so one flag moves
     * BOTH consumers onto the same quantizer (the single-definition
     * rule). */
   private[graft] def rankedCellsAuto(prep: DataFrame, nlist: Int,
       upTo: Int): DataFrame =
-    if (prep.sparkSession.conf.get("spark.graft.ivf.twoLevel",
-        sys.env.getOrElse("GRAFT_IVF_TWO_LEVEL", "false")) == "true")
+    if (graft.DispatchConf(prep.sparkSession, "spark.graft.ivf.")
+        .bool("twoLevel", false))
       rankedCellsTwoLevel(prep, nlist, upTo)
     else rankedCells(prep, nlist, upTo)
 
@@ -1776,7 +1762,7 @@ object Similarity {
     * stride picks, so a deployment that turned on
     * `spark.graft.ivf.kmeansIters` got refined centroids on transient
     * queries but could never persist them): `kmeansItersPin` beats the
-    * session conf (`spark.graft.ivf.kmeansIters`, env fallback) per the
+    * session conf (`spark.graft.ivf.kmeansIters`) per the
     * standing pin rule, 0 means stride. The trained quantizer is
     * recorded in the format tag and frozen for the index lifetime —
     * append/compact/probe read the persisted centroids back, so every
@@ -1784,9 +1770,7 @@ object Similarity {
   def saveIvfIndex(prep: DataFrame, dir: String, nlist: Int = IvfNlist,
       kmeansItersPin: Option[Int] = None): Unit = {
     val iters = graft.DispatchConf(prep.sparkSession, "spark.graft.ivf.")
-      .int("kmeansIters",
-        sys.env.getOrElse("GRAFT_IVF_KMEANS_ITERS", "0").toInt,
-        kmeansItersPin)
+      .int("kmeansIters", 0, kmeansItersPin)
     // a rebuild is a RECOVERY verb ([[IndexIntent]]): it overwrites
     // every component, so a torn directory is tolerated and repaired
     IndexIntent.beginRepair(prep.sparkSession, dir, "saveIvfIndex")

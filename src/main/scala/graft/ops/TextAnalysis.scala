@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for large-scale training-data pipelines
@@ -20,25 +20,11 @@ import org.apache.spark.sql.functions._
 object TextAnalysis {
 
   /** Unicode-aware normalization (NFC → diacritic strip → lower) via
-    * the native codegen'd `normalize_text` expression when the session
-    * has GraftExtensions; value-identical Scala fallback otherwise.
-    * Complements the SQL-oracle [[normalize]] query, whose scope is
-    * deliberately ASCII (DuckDB cannot express Java's Normalizer);
-    * pinned instead by UnicodeNormalizeSuite at two SFs. */
-  def normalizeUnicode(c: Column): Column = {
-    val active = SparkSession.active
-    if (active.catalog.functionExists("normalize_text"))
-      call_function("normalize_text", c)
-    else {
-      val f = udf { (s: String) =>
-        if (s == null) null
-        else graft.functions.NormalizeText
-          .fold(org.apache.spark.unsafe.types.UTF8String.fromString(s))
-          .toString
-      }
-      f(c)
-    }
-  }
+    * the native codegen'd `normalize_text` expression. Complements the
+    * SQL-oracle [[normalize]] query, whose scope is deliberately ASCII
+    * (DuckDB cannot express Java's Normalizer); pinned instead by
+    * UnicodeNormalizeSuite at two SFs. */
+  def normalizeUnicode(c: Column): Column = call_function("normalize_text", c)
 
   private def toks: Column = split(col("text"), " ")
 

@@ -2,7 +2,7 @@ package graft.ops
 // (lives under tools/ on disk; package graft.ops for access to the
 // engine-internal arithmetic helpers the mirror must share)
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only STAGED-COMPARATOR check for `sim_ingest_grow` at fixture
@@ -25,18 +25,9 @@ import org.apache.spark.sql.functions._
 object IvfIngestGrowCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-        // ---- lifecycle route: the declared query, staged prepare included
+    val spark = graft.GraftSession()
+
+    // ---- lifecycle route: the declared query, staged prepare included
     graft.SparkEntry.prepares("sim_ingest_grow")(spark, sfDir)
     val lifecycle = graft.SparkEntry.queries("sim_ingest_grow")(spark, sfDir)
       .collect().map(r => (r.getInt(0), r.getLong(1))).toSet

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only job profiler: runs one declared query end-to-end (prepare +
   * query fn + noop materialization) and prints every Spark job's
@@ -19,17 +18,7 @@ object JobProfile {
     // reproduces it)
     val warm = args.lift(2).map(_.r)
     val reps = args.lift(3).map(_.toInt).getOrElse(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     case class J(id: Int, var start: Long = 0L, var end: Long = 0L,
       var tasks: Int = 0, var site: String = "")

@@ -1,10 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` for selected declared queries
   * to `<outDir>/<name>.txt` — the optimization rounds' plan-evidence
-  * artifact (plans/rNN/<query>_{before,after}.txt). Not part of the
+  * artifact (plans/rNN/{before,after}/<query>.txt). Not part of the
   * driver contract.
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> [nameRegex]
@@ -20,17 +18,7 @@ object PlanDump {
     val sfDir = args(0)
     val outDir = args(1)
     val only = args.lift(2).map(_.r)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val selected = graft.SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.findFirstIn(n).isDefined))

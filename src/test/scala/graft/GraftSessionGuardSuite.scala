@@ -1,0 +1,59 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source guards for the "every graft session carries GraftExtensions"
+  * decision: [[GraftSession]] is the one place a session is built, the
+  * operators call the native expressions with no session-capability
+  * probe, and library code has no alternate path chosen by an
+  * environment variable (the `SPARK_GRAFT_*` deployment settings of
+  * Bench, Verify, the tools and GraftSession are outside the library
+  * packages). */
+class GraftSessionGuardSuite extends AnyFunSuite {
+
+  private def sources(dir: String): Seq[Path] = {
+    val root = Paths.get(dir)
+    assert(Files.isDirectory(root), s"$root not found from ${Paths.get("").toAbsolutePath}")
+    val walk = Files.walk(root)
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  private def offenders(files: Seq[Path], pattern: String): Seq[String] = {
+    val re = pattern.r
+    files.flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if re.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+  }
+
+  private def assertNone(hits: Seq[String]): Unit =
+    if (hits.nonEmpty) fail(hits.mkString("\n", "\n", ""))
+
+  private val libraryPackages =
+    """^package graft\.(fm|ops|functions|plans|relational|streaming)\b""".r
+
+  private def inLibrary(f: Path): Boolean =
+    Files.readAllLines(f).asScala.find(_.startsWith("package "))
+      .exists(libraryPackages.findFirstIn(_).isDefined)
+
+  test("library packages read no environment variables") {
+    val lib = sources("src/main/scala").filter(inLibrary)
+    assert(lib.nonEmpty)
+    assertNone(offenders(lib, """sys\s*\.\s*env\b|System\s*\.\s*getenv\b"""))
+  }
+
+  test("no session-capability probe under src/main") {
+    assertNone(offenders(sources("src/main/scala"), """catalog\s*\.\s*functionExists\b"""))
+  }
+
+  test("GraftSession.scala is the only SparkSession builder") {
+    val all = sources("src/main/scala") ++ sources("src/test/scala")
+    val builder = """SparkSession\s*\.\s*builder\b"""
+    assertNone(offenders(all.filterNot(_.getFileName.toString == "GraftSession.scala"), builder))
+    assert(offenders(sources("src/main/scala"), builder).size == 1)
+  }
+}

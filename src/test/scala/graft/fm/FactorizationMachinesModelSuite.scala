@@ -7,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 trait SparkSessionSuite extends AnyFunSuite with BeforeAndAfterAll with Matchers {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .withExtensions(new graft.functions.GraftExtensions)
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.GraftSession(cpus = 4)
 
   override def afterAll(): Unit = {
     spark.stop()

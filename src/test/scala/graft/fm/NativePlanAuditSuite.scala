@@ -1,0 +1,109 @@
+package graft.fm
+
+import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.functions.{array, col, concat_ws, lit}
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** Plan audits for the native expressions: every graft session carries
+  * GraftExtensions, and the operators call the codegen'd expressions
+  * directly — so the engine's own plans must contain them. Lives in
+  * `graft.fm` for access to the SGD step. */
+class NativePlanAuditSuite extends SparkSessionSuite {
+
+  /** Simple class names of every expression in `plan`, looking through
+    * subqueries, adaptive stages and cached relations (a persisted
+    * intermediate's plan lives inside its InMemoryRelation). */
+  private def exprNames(plan: QueryPlan[_]): Set[String] = {
+    val nested: Seq[Any] = plan match {
+      case m: InMemoryRelation => Seq(m.cacheBuilder.cachedPlan)
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => Nil
+    }
+    val own = plan.expressions.flatMap(_.collect { case e => e.getClass.getSimpleName })
+    (own ++ (plan.children ++ plan.subqueries ++ nested)
+      .flatMap(p => exprNames(p.asInstanceOf[QueryPlan[_]]))).toSet
+  }
+
+  private def names(df: DataFrame): Set[String] =
+    exprNames(df.queryExecution.optimizedPlan)
+
+  private val fmOps = Set("FmArrScale", "FmSqSum", "FmGradV", "FmSoftUpdate")
+
+  test("one SGD step runs FmArrScale, FmSqSum, FmGradV and FmSoftUpdate") {
+    val s = spark
+    import s.implicits._
+    val params = Seq((0, 0.1, Seq(0.5, -0.5)), (1, -0.2, Seq(1.0, 0.25)))
+      .toDF("id", "strength", "vecArr")
+    val batch = Seq(
+      (1.0, Vectors.sparse(3, Seq(0 -> 1.0, 1 -> 2.0))),
+      (0.0, Vectors.sparse(3, Seq(1 -> 0.5, 2 -> -1.0))))
+      .toDF("label", "features")
+    val est = new FactorizationMachinesSGD("audit")
+      .setDimFactorization(2).setStepSize(0.5).setRegParam(0.1)
+
+    // The step's actions (count, loss, eager checkpoint) each report
+    // their plan to the listener; the updated table comes back
+    // checkpointed, so its own plan is a leaf.
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = exprNames(qe.optimizedPlan).foreach(seen.add)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      est.stepW0(params, batch, iter = 1, w0 = 0.0) should not be empty
+      // the listener bus is async: wait for delivery
+      val deadline = System.currentTimeMillis + 10000
+      while (!fmOps.forall(seen.contains) && System.currentTimeMillis < deadline)
+        Thread.sleep(100)
+    } finally spark.listenerManager.unregister(listener)
+    withClue(s"expressions seen: $seen\n") {
+      fmOps.foreach(n => assert(seen.contains(n), n))
+    }
+  }
+
+  test("carry-through transform scores with FmArrScale and FmSqSum") {
+    val s = spark
+    import s.implicits._
+    val model = new FactorizationMachinesModel("audit", 2, 0.5,
+      Seq(Strength(0, 0.1), Strength(1, 0.2)).toDS(),
+      Seq(FactorizedInteraction(0, Vectors.dense(1.0, 2.0).toDense),
+        FactorizedInteraction(1, Vectors.dense(3.0, -1.0).toDense)).toDS())
+      .setCarryThroughScoring(true)
+    val input = Seq((1, Vectors.dense(1.0, 2.0))).toDF("rowId", "features")
+    val found = names(model.transform(input))
+    withClue(s"expressions: $found\n") {
+      found should contain allOf ("FmArrScale", "FmSqSum")
+    }
+  }
+
+  // Inputs derive from spark.range: the optimizer would evaluate a
+  // projection over an in-memory Seq into a literal relation, and the
+  // expressions under audit with it.
+  private def text(s: String): DataFrame = spark.range(2).select(
+    col("id").as("doc_id"), concat_ws(" ", lit(s), col("id").cast("string")).as("text"))
+
+  test("Similarity.prepared's norm runs DotProductQ") {
+    val emb = spark.range(2).select(col("id").as("vec_id"),
+      array(col("id").cast("float"), lit(0.5f)).as("embedding"))
+    names(graft.ops.Similarity.prepared(emb)) should contain("DotProductQ")
+  }
+
+  test("Dedup.encodedToks hashes tokens with TokenHash") {
+    names(graft.ops.Dedup.encodedToks(text("the quick fox"))) should contain("TokenHash")
+  }
+
+  test("TextAnalysis.normalizeUnicode runs NormalizeText") {
+    val df = text("Caf\u00e9")
+      .select(graft.ops.TextAnalysis.normalizeUnicode(col("text")))
+    names(df) should contain("NormalizeText")
+  }
+}

@@ -4,12 +4,13 @@ import graft.fm.SparkSessionSuite
 import org.apache.spark.sql.functions._
 
 /** The quantized dot kernel behind the r11 cross-engine-exact cosine:
-  * `dot_product_q` must (1) equal its portable higher-order-function
-  * fallback BIT-FOR-BIT (Similarity.dot dispatches between them by
-  * session capability, so any drift would silently split battery
-  * results by session type), (2) be order-independent (the property
-  * the raw double fold lacks and the whole design exists to provide),
-  * and (3) keep DotProduct's null/length contract. */
+  * `dot_product_q` must (1) equal the portable higher-order-function
+  * reference below BIT-FOR-BIT (the same per-element quantize-then-
+  * int64-sum the DuckDB twins inline via `Similarity.qDotSql`, so any
+  * drift would split the engine from its oracles), (2) be
+  * order-independent (the property the raw double fold lacks and the
+  * whole design exists to provide), and (3) keep DotProduct's
+  * null/length contract. */
 class DotProductQSuite extends SparkSessionSuite {
 
   private def hof(a: org.apache.spark.sql.Column,

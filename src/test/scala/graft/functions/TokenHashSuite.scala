@@ -5,10 +5,10 @@ import org.apache.spark.sql.functions._
 
 class TokenHashSuite extends SparkSessionSuite {
 
-  /** The native expression must be value-identical to the HOF
-    * construction Dedup falls back to (ascii over per-character substr),
-    * including the empty string and multi-char ASCII tokens of every
-    * length the corpus produces. */
+  /** The native expression must be value-identical to the reference
+    * HOF construction below (ascii over per-character substr — the
+    * fold the DuckDB twins express), including the empty string and
+    * multi-char ASCII tokens of every length the corpus produces. */
   test("token_hash equals the ascii/substr/fold construction") {
     val s = spark
     import s.implicits._
