@@ -4,7 +4,7 @@ import org.apache.spark.ml.Estimator
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.util.Identifiable
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -31,10 +31,10 @@ import scala.collection.mutable.ArrayBuffer
   *     opts into training it by the batch-mean residual gradient
   *     `w0 ← w0 − lr·Σ_batch residual / n` each iteration (no L1 on
   *     the intercept — shrinking the bias toward 0 is never wanted).
-  *     The residual sum rides the per-sample stage the gradient pass
-  *     already computes; per-sample residuals are exact dyadic
-  *     rationals under the oracle fixtures, so Σ is order-independent
-  *     and the update stays hash-checkable.
+  *     The residual sum rides the per-feature gradient reduction (one
+  *     addend per sample, taken on its first feature row); per-sample
+  *     residuals are exact dyadic rationals under the oracle fixtures,
+  *     so Σ is order-independent and the update stays hash-checkable.
   *
   * Deliberate divergences (each flagged in SURVEY §7):
   *   - the reference's gradient `deltaWi·pred − label` (SGD:145) is an
@@ -47,11 +47,14 @@ import scala.collection.mutable.ArrayBuffer
   *   - per-sample sums use k scalar window sums over codegen'd
   *     `element_at` projections instead of a UDAF-over-window (FM:45-81,
   *     Model:191) — one shuffle per iteration for the sample-side pass;
-  *   - the new parameter table is eagerly materialized (and
-  *     local-checkpointed every `checkpointEvery` iterations) before the
+  *   - the new parameter table is eagerly local-checkpointed before the
   *     old one is unpersisted, so lineage cannot grow across iterations
   *     (the reference unpersisted lazily and recomputed chains,
-  *     SURVEY §3.1 step 5).
+  *     SURVEY §3.1 step 5). That checkpoint is the step's ONLY Spark
+  *     action: `fit` sizes every mini-batch in one job up front, and the
+  *     batch loss and intercept residual sum are observed on the
+  *     checkpoint job itself (the reference ran a count, a loss reduce
+  *     and the parameter update as separate jobs, SGD:126-139).
   *
   * Scale notes (100 TB): per iteration the exploded batch shuffles once
   * by sampleId (window pass) and once by featureId (gradient reduction +
@@ -134,13 +137,24 @@ class FactorizationMachinesSGD(override val uid: String)
 
     val batches =
       data.randomSplit(Array.fill($(maxIter))($(miniBatchFraction)), $(seed))
+    // Every mini-batch size in ONE job (the steps do not count): the
+    // batches tagged with their index, unioned, counted per index.
+    val sizes = graft.Phase("fm.sgd.sizes") {
+      batches.zipWithIndex
+        .map { case (b, i) => b.select(lit(i).as("batch")) }
+        .reduce(_ union _)
+        .groupBy(col("batch")).count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    }
 
     // Warm starts resume the bias too; cold starts at the reference's 0.0.
     var w0 = initialModel.map(_.globalBias).getOrElse(0.0)
     val losses = ArrayBuffer.empty[Double]
     batches.zipWithIndex.foreach { case (batch, idx) =>
       val iter = idx + 1
-      stepW0(params, batch, iter, w0) match {
+      val n = sizes.getOrElse(idx, 0L)
+      graft.Phase(s"fm.sgd.step $iter/${$(maxIter)}")(
+        stepW0(params, batch, n, iter, w0)) match {
         case Some((newParams, loss, newW0)) =>
           params.unpersist() // newParams is already materialized by step()
           params = newParams
@@ -199,31 +213,39 @@ class FactorizationMachinesSGD(override val uid: String)
 
   /** One SGD iteration at the reference's fixed w0 = 0.0 — the shape
     * every oracle query pins. See [[stepW0]]. */
-  private[fm] def step(
-      params: DataFrame, batch: DataFrame, iter: Int): Option[(DataFrame, Double)] =
-    stepW0(params, batch, iter, 0.0).map { case (p, l, _) => (p, l) }
+  private[fm] def step(params: DataFrame, batch: DataFrame, n: Long,
+      iter: Int): Option[(DataFrame, Double)] =
+    stepW0(params, batch, n, iter, 0.0).map { case (p, l, _) => (p, l) }
 
-  /** One SGD iteration: returns the updated combined parameter table —
-    * already eagerly local-checkpointed (materialized + plan truncated;
-    * see the lineage note above) so the caller can immediately drop the
-    * previous table — the batch loss, and the (possibly updated) global
-    * bias. w0 enters the training prediction; it is only UPDATED when
-    * `fitIntercept` is set (by the batch-mean residual gradient, no L1).
-    * None for an empty batch (SGD:126-128). */
+  /** One SGD iteration over `batch`, whose row count the caller passes
+    * as `n` (`fit` sizes all batches in one job): returns the updated
+    * combined parameter table — already eagerly local-checkpointed
+    * (materialized + plan truncated; see the lineage note above) so the
+    * caller can immediately drop the previous table — the batch loss,
+    * and the (possibly updated) global bias. w0 enters the training
+    * prediction; it is only UPDATED when `fitIntercept` is set (by the
+    * batch-mean residual gradient, no L1). The checkpoint is the step's
+    * only Spark action. Samples without active features count in `n`
+    * and add nothing, so an all-featureless batch is pure L1 shrinkage
+    * at loss 0.0. None for an empty batch (SGD:126-128). */
   private[fm] def stepW0(
-      params: DataFrame, batch: DataFrame, iter: Int,
+      params: DataFrame, batch: DataFrame, n: Long, iter: Int,
       w0: Double): Option[(DataFrame, Double, Double)] = {
+    if (n == 0) return None
     val k = $(dimFactorization)
     val sd = $(initialSd)
     val sdv = $(seed)
     val lr = $(stepSize) / math.sqrt(iter)
     val shrinkage = lr * $(regParam)
 
-    val n = batch.count()
-    if (n == 0) return None
-
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("sampleId"))
+
+    // Parameter ids are never null. Saying so up front gives the table's
+    // two uses below (the lookup join, where the optimizer infers this
+    // very filter, and the full-outer merge) the same shuffle of the
+    // table, which the step's one job then runs once.
+    val table = params.filter(col("id").isNotNull)
 
     // explode + left-outer param join; unseen features get deterministic
     // gaussian init (Model:155-171 with the determinism fix).
@@ -231,7 +253,7 @@ class FactorizationMachinesSGD(override val uid: String)
       .withColumn("sampleId", monotonically_increasing_id())
       .select(col("label"), col("sampleId"),
         inline(FactorizationMachinesModel.activeEntries(col("features"))))
-      .join(params, col("featureId") === params("id"), "left_outer")
+      .join(table, col("featureId") === table("id"), "left_outer")
       .select(col("label"), col("sampleId"), col("featureId"),
         col("featureValue").as("x"),
         coalesce(col("strength"),
@@ -255,14 +277,19 @@ class FactorizationMachinesSGD(override val uid: String)
     // plus an in-partition sort. Measured at sf0.1 (COVERAGE.md r5)
     // against a groupBy + join-back (second full shuffle): the window
     // form wins.
+    val fitW0 = $(fitIntercept)
     val vfCols = (0 until k).map(f =>
       sum(element_at(col("vfxi"), f + 1)).over(w).as(s"_vfs$f"))
+    // With the intercept on, a sample's first feature row (its least
+    // featureId) carries the sample's one residual addend below.
+    val firstCol =
+      if (fitW0) Seq(min(col("featureId")).over(w).as("firstId")) else Seq.empty
     val withSums = terms.select(
       (Seq(col("label"), col("sampleId"), col("featureId"), col("x"),
         col("vecArr"),
         sum(col("wixi")).over(w).as("wixiSum"),
         sum(col("vi2xi2")).over(w).as("vi2xi2Sum"),
-        count(lit(1)).over(w).as("cnt")) ++ vfCols): _*)
+        count(lit(1)).over(w).as("cnt")) ++ vfCols ++ firstCol): _*)
 
     val normSq = (0 until k).map(f => col(s"_vfs$f") * col(s"_vfs$f")).reduce(_ + _)
     // Training prediction is UNCLIPPED (Model:221 — calcLossGrad has no
@@ -270,13 +297,12 @@ class FactorizationMachinesSGD(override val uid: String)
     // stay bit-identical to r1–r5 (0.0 + x flips a −0.0 x).
     val basePred = col("wixiSum") + lit(0.5) * (normSq - col("vi2xi2Sum"))
     val pred = if (w0 == 0.0) basePred else lit(w0) + basePred
-    val fitW0 = $(fitIntercept)
     // CORRECT gradient: deltaWi·(pred − label); the reference's SGD:145
     // computes deltaWi·pred − label (precedence bug, documented).
-    // sampleId rides along only when the intercept pass needs the
-    // per-sample residual below.
+    // r is the residual on a sample's first row and null on the rest.
     val interceptCols =
-      if (fitW0) Seq(col("sampleId"), col("residual").as("r")) else Seq.empty
+      if (fitW0) Seq(when(col("featureId") === col("firstId"), col("residual")).as("r"))
+      else Seq.empty
     val gradRows = withSums
       .withColumn("residual", pred - col("label"))
       .select(
@@ -288,35 +314,26 @@ class FactorizationMachinesSGD(override val uid: String)
             col("x"), col("residual")).as("gv"),
           (col("residual") * col("residual") / col("cnt")).as("lossShare"))
           ++ interceptCols): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // Batch loss Σ_samples (ŷ−y)² — computed as Σ_rows residual²/cnt in a
-    // single SQL job (replaces the reference's groupBy(first)+RDD reduce,
-    // SGD:134-138 / SURVEY A4+A6).
-    val loss = gradRows.agg(sum(col("lossShare"))).head.getDouble(0)
-
-    // Intercept update (opt-in): w0 ← w0 − Σ_samples residual · (lr/n).
-    // The per-sample residual is replicated across a sample's exploded
-    // rows bit-identically (window values), so distinct() recovers ONE
-    // exact row per sample and the sum is order-independent under the
-    // dyadic fixtures — same association order as the SQL twin
-    // (`sum · (lr/n)`). No shrinkage: L1 never applies to the bias.
-    val newW0 =
-      if (!fitW0) w0
-      else w0 - gradRows.select(col("sampleId"), col("r")).distinct()
-        .agg(sum(col("r"))).head.getDouble(0) * (lr / n)
 
     // Per-feature gradient reduction (A3) then full-outer merge back onto
     // the parameter table with zero defaults + L1 soft-threshold
-    // (SGD:148-181). Both sides shuffle on the feature id.
+    // (SGD:148-181). Both sides shuffle on the feature id. The same
+    // reduction also sums the batch loss Σ_samples (ŷ−y)² as
+    // Σ_rows residual²/cnt (replaces the reference's groupBy(first) +
+    // RDD reduce, SGD:134-138 / SURVEY A4+A6) and, with the intercept
+    // on, Σ_samples residual (one addend per featured sample).
     val scale = lr / n
     val gvAgg = (0 until k).map(f =>
       (sum(element_at(col("gv"), f + 1)) * scale).as(s"_gv$f"))
+    val rSum = if (fitW0) Seq("rSum") else Seq.empty
     val grads = gradRows
       .groupBy(col("featureId"))
-      .agg((sum(col("gw")) * scale).as("dW"), gvAgg: _*)
-      .select(col("featureId"), col("dW"),
-        array((0 until k).map(f => col(s"_gv$f")): _*).as("dV"))
+      .agg((sum(col("gw")) * scale).as("dW"),
+        (gvAgg :+ sum(col("lossShare")).as("lossSum")) ++
+          rSum.map(_ => sum(col("r")).as("rSum")): _*)
+      .select((Seq(col("featureId"), col("dW"),
+        array((0 until k).map(f => col(s"_gv$f")): _*).as("dV"),
+        col("lossSum")) ++ rSum.map(col)): _*)
 
     def soft(c: Column): Column =
       signum(c) * greatest(lit(0.0), abs(c) - lit(shrinkage))
@@ -328,8 +345,14 @@ class FactorizationMachinesSGD(override val uid: String)
     // inits the forward pass randomly but SGD:171 merges against 0.0;
     // divergence documented.)
     val mergedKey = coalesce(col("id"), col("featureId"))
-    val newParams = params
+    // The batch totals are observed on the merge output: it runs in the
+    // checkpoint job's result stage, where Spark applies accumulator
+    // updates exactly once (a shuffle-map stage may re-run).
+    val totals = Observation()
+    val newParams = table
       .join(grads, col("id") === col("featureId"), "full_outer")
+      .observe(totals, sum(col("lossSum")).as("loss"),
+        rSum.map(c => sum(col(c)).as("r")): _*)
       .select(
         mergedKey.as("id"),
         soft(coalesce(col("strength"), hashGaussian(mergedKey, lit(-1), sdv) * sd)
@@ -345,7 +368,14 @@ class FactorizationMachinesSGD(override val uid: String)
     // Eager: materializes before the caller drops the old table AND cuts
     // the (otherwise exponentially duplicated) logical plan to a leaf.
     val materialized = newParams.localCheckpoint(true)
-    gradRows.unpersist()
-    Some((materialized, loss, newW0))
+    // A sum over no rows (every sample featureless) is null: 0.0.
+    def total(name: String): Double =
+      Option(totals.get.getOrElse(name, null)).fold(0.0)(_.asInstanceOf[Double])
+    // Intercept update (opt-in): w0 ← w0 − Σ_samples residual · (lr/n),
+    // the SQL twin's association order (`sum · (lr/n)`); exact under the
+    // dyadic fixtures whatever the summation order. No shrinkage: L1
+    // never applies to the bias.
+    val newW0 = if (fitW0) w0 - total("r") * (lr / n) else w0
+    Some((materialized, total("loss"), newW0))
   }
 }

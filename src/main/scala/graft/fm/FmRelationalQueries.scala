@@ -125,8 +125,9 @@ object FmRelationalQueries {
     // — all inside the ONE final scoring job, so a lazy persist let the
     // concurrent branches race the cache and re-run the lineitem
     // aggregation up to 3× (the sim_bm25 recompute class; the step/train
-    // queries below are safe — their batch.count() fills the caches
-    // sequentially before any multi-branch job runs).
+    // queries below are safe — the batch.count() each passes to step()
+    // as n fills the caches sequentially before any multi-branch job
+    // runs; `fit` sizes its batches in one job of its own).
     val f = graft.InternalCaches.pinEager(feats(s, d))
     val params = graft.InternalCaches.pinEager(paramTable(f))
     import s.implicits._
@@ -193,8 +194,9 @@ object FmRelationalQueries {
       |FROM thresholded
       |ORDER BY id""".stripMargin) { (s, d) =>
     // Persisted: params is referenced twice inside step() (exploded join
-    // + full-outer merge) and batch twice (count + explode) — uncached,
-    // each reference re-runs the lineitem aggregation and vector build.
+    // + full-outer merge) and batch twice (the count passed as n +
+    // explode) — uncached, each reference re-runs the lineitem
+    // aggregation and vector build.
     val f = feats(s, d).persist()
     val params = paramTable(f).persist()
     val batch = featureVectors(f)
@@ -203,7 +205,7 @@ object FmRelationalQueries {
     val est = new FactorizationMachinesSGD("fmStepOracle")
       .setDimFactorization(K).setStepSize(0.1).setRegParam(0.5)
       .setInitialSd(0.01).setSeed(0L)
-    val Some((newParams, _)) = est.step(params, batch, iter = 1)
+    val Some((newParams, _)) = est.step(params, batch, batch.count(), iter = 1)
     // Bit-exact through the gradient sums; ·(lr/n) and the soft threshold
     // are deterministic scalar ops — no rounding, only −0.0 normalized.
     val out = newParams.select(
@@ -278,7 +280,7 @@ object FmRelationalQueries {
     val est = new FactorizationMachinesSGD("fmStepIntercept")
       .setDimFactorization(K).setStepSize(0.1).setRegParam(0.5)
       .setInitialSd(0.01).setSeed(0L).setFitIntercept(true)
-    val Some((newParams, _, newW0)) = est.stepW0(params, batch, iter = 1, w0 = W0)
+    val Some((newParams, _, newW0)) = est.stepW0(params, batch, batch.count(), iter = 1, w0 = W0)
     val out = newParams.select(
       (col("id") +: nz(col("strength")).as("strength") +:
         (0 until K).map(f =>
@@ -361,8 +363,9 @@ object FmRelationalQueries {
         .setDimFactorization(K).setStepSize(0.1).setRegParam(0.5)
         .setInitialSd(0.01).setSeed(0L)
       val p0 = paramTable(f).persist()
-      val Some((p1, _)) = est.step(p0, batch, iter = 1)
-      val Some((p2, _)) = est.step(p1, batch, iter = 2)
+      val n = batch.count()
+      val Some((p1, _)) = est.step(p0, batch, n, iter = 1)
+      val Some((p2, _)) = est.step(p1, batch, n, iter = 2)
       // Step 2 consumes step 1's inexact ÷n, so its sums can differ by
       // ulps across engines: round(…,6) absorbs them (generic doubles —
       // the decimal-tie pathology of the old ÷10/÷23 fixtures is gone),
@@ -470,8 +473,9 @@ object FmRelationalQueries {
       .setDimFactorization(K).setStepSize(0.1).setRegParam(0.5)
       .setInitialSd(0.01).setSeed(0L)
     var params = paramTable(f)
+    val n = batch.count()
     val losses = (1 to 3).map { iter =>
-      val Some((next, loss)) = est.step(params, batch, iter)
+      val Some((next, loss)) = est.step(params, batch, n, iter)
       params = next
       loss
     }

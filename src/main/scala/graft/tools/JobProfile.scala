@@ -4,9 +4,10 @@ import org.apache.spark.scheduler._
 
 /** Dev-only job profiler: runs one declared query end-to-end (prepare +
   * query fn + noop materialization) and prints every Spark job's
-  * wall-time, task count, and first-stage callsite — the "count jobs
-  * per verb" measurement the r17 verdict asked for on the ingest
-  * lifecycle verbs (guide §1). Not part of the driver contract. */
+  * wall-time, task count, and its [[graft.Phase]] description — or,
+  * outside any phase, its first-stage callsite — the "count jobs per
+  * verb" measurement the r17 verdict asked for on the ingest lifecycle
+  * verbs (guide §1). Not part of the driver contract. */
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val name = args(0)
@@ -28,9 +29,13 @@ object JobProfile {
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val j = J(e.jobId, e.time)
-        j.site = e.stageInfos.headOption.map(_.details.linesIterator
-          .filter(l => l.contains("graft") && !l.contains("JobProfile"))
-          .take(1).mkString).getOrElse("")
+        // AQE stage jobs inherit the description, while their callsite
+        // names Spark's executor pool
+        j.site = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(e.stageInfos.headOption.map(_.details.linesIterator
+            .filter(l => l.contains("graft") && !l.contains("JobProfile"))
+            .take(1).mkString).getOrElse(""))
         if (j.site.isEmpty)
           j.site = e.stageInfos.headOption.map(_.name).getOrElse("")
         jobs.put(e.jobId, j)

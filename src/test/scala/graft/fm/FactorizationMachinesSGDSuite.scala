@@ -1,7 +1,11 @@
 package graft.fm
 
 import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import scala.jdk.CollectionConverters._
 
 class FactorizationMachinesSGDSuite extends SparkSessionSuite {
 
@@ -35,7 +39,7 @@ class FactorizationMachinesSGDSuite extends SparkSessionSuite {
       .map { case (l, fs) => (l, Vectors.sparse(3, fs)) }
       .toDF("label", "features")
 
-    val Some((newParams, loss)) = est.step(params, batch, iter = 1)
+    val Some((newParams, loss)) = est.step(params, batch, samples.size, iter = 1)
     val got = newParams.collect()
       .map(r => r.getAs[Int]("id") ->
         (r.getAs[Double]("strength"), r.getAs[Seq[Double]]("vecArr").toArray))
@@ -73,6 +77,85 @@ class FactorizationMachinesSGDSuite extends SparkSessionSuite {
       got(i)._1 shouldBe ew +- 1e-9
       (0 until k).foreach(f => got(i)._2(f) shouldBe ev(f) +- 1e-9)
     }
+  }
+
+  /** Intercept training by hand: `w0' = w0 − Σr·(lr/n)` from a nonzero
+    * bias, where n counts every sample of the batch and Σr only the
+    * samples with an active feature (a featureless sample has no feature
+    * row to carry a residual). */
+  test("fitIntercept step matches hand-computed bias update") {
+    val s = spark
+    import s.implicits._
+
+    val k = 2
+    val w0 = 0.5
+    val w = Map(0 -> 0.25, 1 -> -0.5, 2 -> 0.75)
+    val v = Map(0 -> Array(0.5, -0.25), 1 -> Array(1.0, 0.25), 2 -> Array(-0.75, 0.125))
+    val samples = Seq(
+      (1.0, Seq(0 -> 1.0, 1 -> 2.0)),
+      (0.0, Seq(1 -> 0.5, 2 -> -1.0)),
+      (2.0, Seq.empty[(Int, Double)]))
+    val params = w.keys.toSeq.sorted
+      .map(id => (id, w(id), v(id)))
+      .toDF("id", "strength", "vecArr")
+    val batch = samples
+      .map { case (l, fs) => (l, Vectors.sparse(3, fs)) }
+      .toDF("label", "features")
+    val est = new FactorizationMachinesSGD("w0")
+      .setDimFactorization(k).setStepSize(0.5).setRegParam(0.1)
+      .setFitIntercept(true)
+
+    val n = batch.count()
+    n shouldBe 3
+    val Some((_, loss, newW0)) = est.stepW0(params, batch, n, iter = 1, w0 = w0)
+
+    val residuals = samples.filter(_._2.nonEmpty).map { case (label, fs) =>
+      val wixi = fs.map { case (i, x) => w(i) * x }.sum
+      val vfx = Array.tabulate(k)(f => fs.map { case (i, x) => v(i)(f) * x }.sum)
+      val v2x2 = fs.map { case (i, x) => v(i).map(d => d * d).sum * x * x }.sum
+      w0 + wixi + 0.5 * (vfx.map(d => d * d).sum - v2x2) - label
+    }
+    val lr = 0.5 / math.sqrt(1.0)
+    newW0 shouldBe (w0 - residuals.sum * (lr / n)) +- 1e-12
+    loss shouldBe residuals.map(r => r * r).sum +- 1e-12
+  }
+
+  /** The eager checkpoint is a step's ONLY Spark action: the batch size
+    * comes from the caller, and the loss and intercept residual sum are
+    * observed on the checkpoint job. Nothing is left in the cache. */
+  test("stepW0 runs one Spark action and caches nothing") {
+    val s = spark
+    import s.implicits._
+    val params = Seq((0, 0.1, Seq(0.5, -0.5)), (1, -0.2, Seq(1.0, 0.25)))
+      .toDF("id", "strength", "vecArr")
+    val batch = Seq(
+      (1.0, Vectors.sparse(3, Seq(0 -> 1.0, 1 -> 2.0))),
+      (0.0, Vectors.sparse(3, Seq(1 -> 0.5, 2 -> -1.0))))
+      .toDF("label", "features")
+    val est = new FactorizationMachinesSGD("one")
+      .setDimFactorization(2).setStepSize(0.5).setRegParam(0.1)
+      .setFitIntercept(true)
+
+    spark.catalog.clearCache()
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = actions.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = actions.add(funcName)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      est.stepW0(params, batch, n = 2, iter = 1, w0 = 0.5) should not be empty
+      // the listener bus is async but ordered: a marker action arriving
+      // means every execution of the step has been delivered
+      spark.range(1).collect()
+      val deadline = System.currentTimeMillis + 10000
+      while (!actions.contains("collect") && System.currentTimeMillis < deadline)
+        Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    actions.asScala.toSeq shouldBe Seq("localCheckpoint", "collect")
+    assert(spark.sharedState.cacheManager.isEmpty, "the step left a cached plan")
   }
 
   /** E2E: loss decreases on synthetic rank-k data with known structure

@@ -1,6 +1,8 @@
 package graft.fm
 
+import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -94,23 +96,56 @@ class FmPropertySuite extends SparkSessionSuite {
       val v2x2 = fs.map { case (i, x) => v(i).map(d => d * d).sum * x * x }.sum
       wx + 0.5 * (vfx.map(d => d * d).sum - v2x2)
     }
-    val batch = samples.map(fs => (predict(fs), Vectors.sparse(3, fs)))
+    val zeroResidual = samples.map(fs => (predict(fs), Vectors.sparse(3, fs)))
       .toDF("label", "features")
-
-    val est = new FactorizationMachinesSGD("zr")
-      .setDimFactorization(k).setStepSize(0.5).setRegParam(0.2)
-    val Some((newParams, loss)) = est.step(params, batch, iter = 1)
-    loss shouldBe 0.0 +- 1e-12
+    // No sample has an active feature => no gradient row at all; the
+    // samples still count in n, and the bias has no residual to learn.
+    val featureless = Seq(1.0, -2.0)
+      .map(l => (l, Vectors.sparse(3, Seq.empty[(Int, Double)])))
+      .toDF("label", "features")
 
     val shrink = 0.5 * 0.2
     def soft(c: Double) = math.signum(c) * math.max(0.0, math.abs(c) - shrink)
-    val got = newParams.collect().map(r => r.getAs[Int]("id") ->
-      (r.getAs[Double]("strength"), r.getAs[Seq[Double]]("vecArr"))).toMap
-    w.keys.foreach { i =>
-      got(i)._1 shouldBe soft(w(i)) +- 1e-9
-      (0 until k).foreach(f => got(i)._2(f) shouldBe soft(v(i)(f)) +- 1e-9)
+    def assertShrunk(newParams: DataFrame, loss: Double): Unit = {
+      loss shouldBe 0.0 +- 1e-12
+      val got = newParams.collect().map(r => r.getAs[Int]("id") ->
+        (r.getAs[Double]("strength"), r.getAs[Seq[Double]]("vecArr"))).toMap
+      got.keySet shouldBe w.keySet
+      w.keys.foreach { i =>
+        got(i)._1 shouldBe soft(w(i)) +- 1e-9
+        (0 until k).foreach(f => got(i)._2(f) shouldBe soft(v(i)(f)) +- 1e-9)
+      }
+      // |w(1)| = 0.04 < shrink 0.1 => clamped to exactly zero.
+      got(1)._1 shouldBe 0.0
     }
-    // |w(1)| = 0.04 < shrink 0.1 => clamped to exactly zero.
-    got(1)._1 shouldBe 0.0
+
+    // (batch, w0): the featureless batch trains from a nonzero bias.
+    for ((batch, w0) <- Seq(zeroResidual -> 0.0, featureless -> 0.25)) {
+      val est = new FactorizationMachinesSGD("zr")
+        .setDimFactorization(k).setStepSize(0.5).setRegParam(0.2)
+        .setFitIntercept(true)
+      val Some((newParams, loss, newW0)) =
+        est.stepW0(params, batch, batch.count(), iter = 1, w0 = w0)
+      assertShrunk(newParams, loss)
+      newW0 shouldBe w0 +- 1e-12
+
+      // the same update through fit: a warm start from params, one
+      // full-batch iteration
+      val warm = new FactorizationMachinesModel("zrWarm", k, w0,
+        w.toSeq.map { case (i, x) => Strength(i, x) }.toDS(),
+        v.toSeq.map { case (i, a) => FactorizedInteraction(i, Vectors.dense(a).toDense) }
+          .toDS())
+      val fitEst = new FactorizationMachinesSGD("zrFit")
+        .setDimFactorization(k).setStepSize(0.5).setRegParam(0.2)
+        .setMaxIter(1).setMiniBatchFraction(1.0).setFitIntercept(true)
+        .setInitialModel(warm)
+      val model = fitEst.fit(batch)
+      fitEst.lastLossHistory should have size 1
+      assertShrunk(
+        model.dimensionStrength.toDF().join(model.factorizedInteraction.toDF()
+          .select(col("id"), vector_to_array(col("vec")).as("vecArr")), "id"),
+        fitEst.lastLossHistory.head)
+      model.globalBias shouldBe w0 +- 1e-12
+    }
   }
 }

@@ -47,9 +47,9 @@ class NativePlanAuditSuite extends SparkSessionSuite {
     val est = new FactorizationMachinesSGD("audit")
       .setDimFactorization(2).setStepSize(0.5).setRegParam(0.1)
 
-    // The step's actions (count, loss, eager checkpoint) each report
-    // their plan to the listener; the updated table comes back
-    // checkpointed, so its own plan is a leaf.
+    // The step's one action, the eager checkpoint, reports its plan to
+    // the listener; the updated table comes back checkpointed, so its
+    // own plan is a leaf.
     val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
@@ -59,7 +59,7 @@ class NativePlanAuditSuite extends SparkSessionSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      est.stepW0(params, batch, iter = 1, w0 = 0.0) should not be empty
+      est.stepW0(params, batch, n = 2, iter = 1, w0 = 0.0) should not be empty
       // the listener bus is async: wait for delivery
       val deadline = System.currentTimeMillis + 10000
       while (!fmOps.forall(seen.contains) && System.currentTimeMillis < deadline)
