@@ -1,7 +1,7 @@
 package graft.fm
 
 import org.apache.spark.ml.Model
-import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
 import org.apache.spark.ml.linalg.{DenseVector, Vector}
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
@@ -9,7 +9,6 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.storage.StorageLevel
 
 /** The strength of the i-th feature (w_i). Reference: Model:281. */
 case class Strength(id: Int, strength: Double)
@@ -44,9 +43,12 @@ case class FactorizedInteraction(id: Int, vec: DenseVector)
   *   - the per-sample vector sum is k scalar `sum(element_at(...))`
   *     aggregates instead of a UDAF (FM:45-81) — partial aggregation and
   *     codegen-friendly, since k = dimFactorization is a small constant;
-  *   - unseen features are dropped by the inner join and feature-less
-  *     samples fall back to the raw (unclipped) global bias, exactly as
-  *     pinned by Suite:65-68 (Model:78-87 join-back + na.fill).
+  *   - input columns ride through the per-sample aggregation, so
+  *     scoring is one pass that caches nothing (Model:74-87 cached the
+  *     input and joined the predictions back);
+  *   - unseen features contribute nothing and samples without a learned
+  *     feature fall back to the raw (unclipped) global bias, exactly as
+  *     pinned by Suite:65-68 (Model:86's na.fill after the clip).
   *
   * Scale notes (100 TB): the exploded fact shuffles on featureId for the
   * parameter join and on sampleId for the per-sample reduction — both
@@ -74,8 +76,6 @@ class FactorizationMachinesModel(
   def setSampleIdCol(value: String): this.type = set(sampleIdCol, value)
   def setMinLabel(value: Double): this.type = set(minLabel, value)
   def setMaxLabel(value: Double): this.type = set(maxLabel, value)
-  def setCarryThroughScoring(value: Boolean): this.type =
-    set(carryThroughScoring, value)
 
   override def copy(extra: ParamMap): FactorizationMachinesModel = {
     val copied = new FactorizationMachinesModel(uid, dimFactorization,
@@ -86,51 +86,35 @@ class FactorizationMachinesModel(
   override def transformSchema(schema: StructType): StructType =
     validateAndTransformSchema(schema, fitting = false)
 
-  /** Scoring entry point — reference Model:69-87. The default path is
-    * carry-through (one pass, caches nothing). The join-back path
-    * (carryThroughScoring=false, the reference's plan shape, better for
-    * wide-payload rows) caches the input because
-    * `monotonically_increasing_id` is partition-layout dependent and the
-    * id column is referenced on both sides of the join-back; an uncached
-    * recomputation could re-assign ids. That cache entry intentionally
-    * outlives the call (the result is lazy) and is NOT unpersisted —
-    * repeated join-back transform() calls in a long-lived session
-    * accumulate cache entries (the reference leaks identically); clear
-    * the session cache periodically if using that path. */
-  override def transform(dataset: Dataset[_]): DataFrame = {
-    transformSchema(dataset.schema)
-    if ($(carryThroughScoring)) return transformCarryThrough(dataset)
-    val df = FactorizationMachinesModel
-      .addSampleId(dataset, $(sampleIdCol))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val predicted = predict(df)
-    df.join(predicted, Seq($(sampleIdCol)), "left_outer")
-      // Feature-less samples get the *raw* bias — the reference applies
-      // na.fill(globalBias) after the clip (Model:86), pinned by the
-      // empty-vector golden (Suite:68).
-      .withColumn($(predictionCol),
-        coalesce(col($(predictionCol)), lit(globalBias)))
-      .drop($(sampleIdCol))
-  }
+  /** The two parameter tables pre-joined into the combined
+    * (id, strength, vecArr) table the SGD loop trains; the inverse of
+    * [[FactorizationMachinesModel.fromParamTable]]. */
+  def paramTable: DataFrame =
+    dimensionStrength.toDF()
+      .join(factorizedInteraction.toDF(), Seq("id"))
+      .select(col("id"), col("strength"), vector_to_array(col("vec")).as("vecArr"))
 
-  /** One-pass scoring: input columns ride through the per-sample
+  /** Scoring entry point — reference Model:69-87 semantics in one pass
+    * that caches nothing: input columns ride through the per-sample
     * aggregation via first(). Feature-less samples explode into a
     * sentinel entry (featureId −1); the param join is left_outer with
     * zero defaults, so sentinel and unseen-feature rows contribute
-    * nothing (identical to the reference's inner-join drop), and samples
-    * with zero MATCHED features get the raw bias — matching the
-    * join-back path bit for bit, including all-unseen-feature samples. */
-  private def transformCarryThrough(dataset: Dataset[_]): DataFrame = {
+    * nothing (the reference drops them in an inner join), and samples
+    * with zero MATCHED features get the raw bias — the reference's
+    * na.fill(globalBias) after the clip (Model:86), including
+    * all-unseen-feature samples. */
+  override def transform(dataset: Dataset[_]): DataFrame = {
+    transformSchema(dataset.schema)
     val k = dimFactorization
     val inputCols = dataset.columns.toSeq
-    // All internal columns carry a reserved prefix so user columns named
-    // id/strength/featureId/... can never collide (the join-back path is
-    // immune because predict() projects before joining).
-    val sid = "__fm_sid"
-    val params = dimensionStrength.toDF()
-      .join(factorizedInteraction.toDF(), Seq("id"))
+    // The sample id is `sampleIdCol`, which transformSchema keeps clear
+    // of the input; every other internal column carries a reserved
+    // prefix so user columns named id/strength/featureId/... can never
+    // collide.
+    val sid = $(sampleIdCol)
+    val params = paramTable
       .select(col("id").as("__fm_pid"), col("strength").as("__fm_w"),
-        vector_to_array(col("vec")).as("__fm_v"))
+        col("vecArr").as("__fm_v"))
 
     val entries = FactorizationMachinesModel.activeEntries(col($(featuresCol)))
     val sentinel = array(struct(
@@ -172,47 +156,6 @@ class FactorizationMachinesModel(
     grouped.select(inputCols.map(col) :+
       when(col("__fm_nReal") === 0, lit(globalBias)).otherwise(clip(raw))
         .as($(predictionCol)): _*)
-  }
-
-  /** (sampleId, prediction) for every sample with >= 1 learned feature. */
-  private[fm] def predict(dfSampleIndexed: DataFrame): DataFrame = {
-    val k = dimFactorization
-    val sid = $(sampleIdCol)
-
-    // Pre-join the two param tables once: (id, strength, vecArr).
-    val params = dimensionStrength.toDF()
-      .join(factorizedInteraction.toDF(), Seq("id"))
-      .select(col("id"), col("strength"), vector_to_array(col("vec")).as("vecArr"))
-
-    val exploded = dfSampleIndexed.select(
-      col(sid),
-      inline(FactorizationMachinesModel.activeEntries(col($(featuresCol)))))
-
-    val terms = exploded
-      .join(params, exploded("featureId") === params("id"), "inner")
-      .select(
-        col(sid),
-        (col("strength") * col("featureValue")).as("wixi"),
-        // native codegen'd array math (graft.functions.FmArrayOps)
-        call_function("fm_arr_scale", col("vecArr"), col("featureValue"))
-          .as("vfxi"),
-        (call_function("fm_sq_sum", col("vecArr"))
-          * col("featureValue") * col("featureValue")).as("vi2xi2"))
-
-    // Per-sample reduction: sum of wixi, sum of vi2xi2, and the k
-    // components of Σ_i v_i·x_i as k scalar sums (A1/A2 without a UDAF).
-    val aggCols =
-      sum(col("wixi")).as("wixiSum") +:
-      sum(col("vi2xi2")).as("vi2xi2Sum") +:
-      (0 until k).map(f => sum(element_at(col("vfxi"), f + 1)).as(s"_vf$f"))
-    val grouped = terms.groupBy(col(sid)).agg(aggCols.head, aggCols.tail: _*)
-
-    val normSq = (0 until k)
-      .map(f => col(s"_vf$f") * col(s"_vf$f"))
-      .reduce(_ + _)
-    val raw = lit(globalBias) + col("wixiSum") +
-      lit(0.5) * (normSq - col("vi2xi2Sum"))
-    grouped.select(col(sid), clip(raw).as($(predictionCol)))
   }
 
   /** least(greatest(pred, minLabel), maxLabel) — Model:131 — applied only
@@ -292,6 +235,18 @@ object FactorizationMachinesModel extends MLReadable[FactorizationMachinesModel]
 
   override def read: MLReader[FactorizationMachinesModel] = new Reader
 
+  /** A model over a combined (id, strength, vecArr) parameter table —
+    * the inverse of [[FactorizationMachinesModel.paramTable]]. */
+  def fromParamTable(uid: String, dimFactorization: Int, globalBias: Double,
+      table: DataFrame): FactorizationMachinesModel = {
+    val spark = table.sparkSession
+    import spark.implicits._
+    new FactorizationMachinesModel(uid, dimFactorization, globalBias,
+      table.select(col("id"), col("strength")).as[Strength],
+      table.select(col("id"), array_to_vector(col("vecArr")).as("vec"))
+        .as[FactorizedInteraction])
+  }
+
   /** Sparse/dense vector → array of its active (featureId, featureValue)
     * pairs. The single unavoidable UDF at the VectorUDT boundary
     * (replaces Model:244-250's Map materialization); everything after it
@@ -302,9 +257,4 @@ object FactorizationMachinesModel extends MLReadable[FactorizationMachinesModel]
       if (v != null) v.foreachActive((i, x) => buf += ActiveEntry(i, x))
       buf.toSeq
   }
-
-  /** Reference Model:268-272. Ids are non-contiguous and partition-layout
-    * dependent — internal only, never exposed in output (SURVEY §7). */
-  def addSampleId(dataset: Dataset[_], columnName: String): DataFrame =
-    dataset.select(dataset("*"), monotonically_increasing_id().as(columnName))
 }

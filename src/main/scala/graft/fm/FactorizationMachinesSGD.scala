@@ -1,7 +1,6 @@
 package graft.fm
 
 import org.apache.spark.ml.Estimator
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.util.Identifiable
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation}
@@ -115,37 +114,31 @@ class FactorizationMachinesSGD(override val uid: String)
 
   override def fit(dataset: Dataset[_]): FactorizationMachinesModel = {
     transformSchema(dataset.schema)
-    val k = $(dimFactorization)
-    val spark = dataset.sparkSession
-    import spark.implicits._
-
     // Column-pruned input: only (label, features) survive to the loop.
     val data = dataset
       .select(col($(labelCol)).as("label"), col($(featuresCol)).as("features"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var params = initialModel
-      .map { m =>
-        m.dimensionStrength.toDF()
-          .join(m.factorizedInteraction.toDF(), Seq("id"))
-          .select(col("id"), col("strength"),
-            org.apache.spark.ml.functions.vector_to_array(col("vec")).as("vecArr"))
-      }
+    var params = initialModel.map(_.paramTable)
       .getOrElse(initialParams(data))
       .persist(StorageLevel.MEMORY_AND_DISK)
     params.count() // materialize the (deterministic) init
 
+    // maxIter = 0 trains nothing: randomSplit rejects an empty weight
+    // list, so there are no batches to split or size.
     val batches =
-      data.randomSplit(Array.fill($(maxIter))($(miniBatchFraction)), $(seed))
+      if ($(maxIter) == 0) Array.empty[DataFrame]
+      else data.randomSplit(Array.fill($(maxIter))($(miniBatchFraction)), $(seed))
     // Every mini-batch size in ONE job (the steps do not count): the
     // batches tagged with their index, unioned, counted per index.
-    val sizes = graft.Phase("fm.sgd.sizes") {
-      batches.zipWithIndex
-        .map { case (b, i) => b.select(lit(i).as("batch")) }
-        .reduce(_ union _)
-        .groupBy(col("batch")).count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    }
+    val sizes = if (batches.isEmpty) Map.empty[Int, Long] else
+      graft.Phase("fm.sgd.sizes") {
+        batches.zipWithIndex
+          .map { case (b, i) => b.select(lit(i).as("batch")) }
+          .reduce(_ union _)
+          .groupBy(col("batch")).count()
+          .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      }
 
     // Warm starts resume the bias too; cold starts at the reference's 0.0.
     var w0 = initialModel.map(_.globalBias).getOrElse(0.0)
@@ -154,7 +147,7 @@ class FactorizationMachinesSGD(override val uid: String)
       val iter = idx + 1
       val n = sizes.getOrElse(idx, 0L)
       graft.Phase(s"fm.sgd.step $iter/${$(maxIter)}")(
-        stepW0(params, batch, n, iter, w0)) match {
+        step(params, batch, n, iter, w0)) match {
         case Some((newParams, loss, newW0)) =>
           params.unpersist() // newParams is already materialized by step()
           params = newParams
@@ -168,11 +161,8 @@ class FactorizationMachinesSGD(override val uid: String)
     lastLossHistory = losses.toSeq
     data.unpersist()
 
-    val strengths = params.select(col("id"), col("strength")).as[Strength]
-    val factors = params
-      .select(col("id"), array_to_vector(col("vecArr")).as("vec"))
-      .as[FactorizedInteraction]
-    val model = new FactorizationMachinesModel(uid, k, w0, strengths, factors)
+    val model = FactorizationMachinesModel
+      .fromParamTable(uid, $(dimFactorization), w0, params)
       .setMinLabel($(minLabel)).setMaxLabel($(maxLabel))
       .setFeaturesCol($(featuresCol)).setPredictionCol($(predictionCol))
       .setSampleIdCol($(sampleIdCol))
@@ -193,29 +183,26 @@ class FactorizationMachinesSGD(override val uid: String)
       cos(lit(2.0 * math.Pi) * uniform("bm-u2"))
   }
 
+  /** Seeded init of feature `id`'s strength: N(0, initialSd²). */
+  private def initStrength(id: Column): Column =
+    hashGaussian(id, lit(-1), $(seed)) * $(initialSd)
+
+  /** Seeded init of feature `id`'s factor vector: k draws of
+    * N(0, initialSd²), independent of [[initStrength]]'s. */
+  private def initVec(id: Column): Column =
+    transform(sequence(lit(0), lit($(dimFactorization) - 1)),
+      f => hashGaussian(id, f, $(seed)) * $(initialSd))
+
   /** Initial combined parameter table (id, strength, vecArr) over the
     * distinct feature universe of the input — reference SGD:218-252 with
     * seeded init. */
-  private[fm] def initialParams(data: DataFrame): DataFrame = {
-    val k = $(dimFactorization)
-    val sd = $(initialSd)
-    val s = $(seed)
+  private[fm] def initialParams(data: DataFrame): DataFrame =
     data
       .select(inline(FactorizationMachinesModel.activeEntries(col("features"))))
       .select(col("featureId").as("id"))
       .distinct()
-      .select(
-        col("id"),
-        (hashGaussian(col("id"), lit(-1), s) * sd).as("strength"),
-        transform(sequence(lit(0), lit(k - 1)),
-          f => hashGaussian(col("id"), f, s) * sd).as("vecArr"))
-  }
-
-  /** One SGD iteration at the reference's fixed w0 = 0.0 — the shape
-    * every oracle query pins. See [[stepW0]]. */
-  private[fm] def step(params: DataFrame, batch: DataFrame, n: Long,
-      iter: Int): Option[(DataFrame, Double)] =
-    stepW0(params, batch, n, iter, 0.0).map { case (p, l, _) => (p, l) }
+      .select(col("id"), initStrength(col("id")).as("strength"),
+        initVec(col("id")).as("vecArr"))
 
   /** One SGD iteration over `batch`, whose row count the caller passes
     * as `n` (`fit` sizes all batches in one job): returns the updated
@@ -227,14 +214,13 @@ class FactorizationMachinesSGD(override val uid: String)
     * batch-mean residual gradient, no L1). The checkpoint is the step's
     * only Spark action. Samples without active features count in `n`
     * and add nothing, so an all-featureless batch is pure L1 shrinkage
-    * at loss 0.0. None for an empty batch (SGD:126-128). */
-  private[fm] def stepW0(
+    * at loss 0.0. None for an empty batch (SGD:126-128). w0 defaults to
+    * the reference's fixed 0.0, the shape most oracle queries pin. */
+  private[fm] def step(
       params: DataFrame, batch: DataFrame, n: Long, iter: Int,
-      w0: Double): Option[(DataFrame, Double, Double)] = {
+      w0: Double = 0.0): Option[(DataFrame, Double, Double)] = {
     if (n == 0) return None
     val k = $(dimFactorization)
-    val sd = $(initialSd)
-    val sdv = $(seed)
     val lr = $(stepSize) / math.sqrt(iter)
     val shrinkage = lr * $(regParam)
 
@@ -256,11 +242,8 @@ class FactorizationMachinesSGD(override val uid: String)
       .join(table, col("featureId") === table("id"), "left_outer")
       .select(col("label"), col("sampleId"), col("featureId"),
         col("featureValue").as("x"),
-        coalesce(col("strength"),
-          hashGaussian(col("featureId"), lit(-1), sdv) * sd).as("strength"),
-        coalesce(col("vecArr"),
-          transform(sequence(lit(0), lit(k - 1)),
-            f => hashGaussian(col("featureId"), f, sdv) * sd)).as("vecArr"))
+        coalesce(col("strength"), initStrength(col("featureId"))).as("strength"),
+        coalesce(col("vecArr"), initVec(col("featureId"))).as("vecArr"))
 
     // Per-row FM terms (Model:173-181); the array math runs as the
     // codegen'd native expressions (graft.functions.FmArrayOps).
@@ -355,13 +338,10 @@ class FactorizationMachinesSGD(override val uid: String)
         rSum.map(c => sum(col(c)).as("r")): _*)
       .select(
         mergedKey.as("id"),
-        soft(coalesce(col("strength"), hashGaussian(mergedKey, lit(-1), sdv) * sd)
+        soft(coalesce(col("strength"), initStrength(mergedKey))
           - coalesce(col("dW"), lit(0.0))).as("strength"),
         call_function("fm_soft_update",
-          coalesce(col("vecArr"),
-            org.apache.spark.sql.functions.transform(
-              sequence(lit(0), lit(k - 1)),
-              f => hashGaussian(mergedKey, f, sdv) * sd)),
+          coalesce(col("vecArr"), initVec(mergedKey)),
           coalesce(col("dV"), zeroArr),
           lit(shrinkage)).as("vecArr"))
 

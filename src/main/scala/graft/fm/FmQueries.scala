@@ -26,8 +26,8 @@ object FmQueries {
 
   /** Scores deterministic 4-dim feature vectors derived from lineitem with
     * the golden model — drives the full scoring dataflow (explode → param
-    * join → per-sample agg → FM formula → join-back/bias-fallback) from
-    * the driver surface.
+    * join → per-sample agg with the input columns carried through → FM
+    * formula / bias fallback) through `SparkEntry`.
     *
     * ORACLE (r10 — this was the battery's last rows-only check): the
     * VectorUDT input itself is not SQL-expressible, but the golden
@@ -88,7 +88,7 @@ object FmQueries {
         max(col("l_linenumber")).as("ln"))
       .select(col("l_orderkey"),
         toVec(col("q"), col("disc"), col("tax"), col("ln")).as("features"))
-    goldenModel(s).setCarryThroughScoring(true).transform(input)
+    goldenModel(s).transform(input)
       .select(col("l_orderkey"), round(col("prediction"), 6).as("prediction"))
       .orderBy(col("l_orderkey"))
   }

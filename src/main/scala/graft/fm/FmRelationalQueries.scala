@@ -2,7 +2,7 @@ package graft.fm
 
 import graft.{QueryDef, Tables}
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The FM dataflow itself as DuckDB-oracle-checked queries.
@@ -68,7 +68,7 @@ object FmRelationalQueries {
 
   /** −0.0 → +0.0 (Spark side): `===` treats −0.0 = 0.0, so the branch
     * rewrites exactly the two zeros and nothing else. */
-  private def nz(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def nz(c: Column): Column =
     when(c === 0.0, lit(0.0)).otherwise(c)
 
   /** Spark-side deterministic parameter table (id, strength, vecArr). */
@@ -97,6 +97,26 @@ object FmRelationalQueries {
         collect_list(col("x")).as("xs"))
       .select(col("sample_id"), toVec(col("ids"), col("xs")).as("features"))
   }
+
+  /** Labelled training batch over [[featureVectors]]: label = sample_id
+    * mod 7. */
+  private def labelled(f: DataFrame): DataFrame =
+    featureVectors(f)
+      .select((col("sample_id") % 7).cast("double").as("label"), col("features"))
+
+  /** The estimator every step/fit oracle trains with: lr = 0.1,
+    * regParam = 0.5 (shrinkage 0.05 actually zeroes weights, so the
+    * soft-threshold path is exercised), seeded init. */
+  private def oracleEstimator(uid: String): FactorizationMachinesSGD =
+    new FactorizationMachinesSGD(uid)
+      .setDimFactorization(K).setStepSize(0.1).setRegParam(0.5)
+      .setInitialSd(0.01).setSeed(0L)
+
+  /** A combined parameter table as (id, strength, v0..v{K-1}), every
+    * weight passed through `g`. */
+  private def flatParams(p: DataFrame, g: Column => Column = nz): DataFrame =
+    p.select((col("id") +: g(col("strength")).as("strength") +:
+      (0 until K).map(f => g(element_at(col("vecArr"), f + 1)).as(s"v$f"))): _*)
 
   /** End-to-end scoring through FactorizationMachinesModel.transform,
     * hash-checked against a pure-SQL FM implementation in DuckDB. */
@@ -130,175 +150,24 @@ object FmRelationalQueries {
     // runs; `fit` sizes its batches in one job of its own).
     val f = graft.InternalCaches.pinEager(feats(s, d))
     val params = graft.InternalCaches.pinEager(paramTable(f))
-    import s.implicits._
-    val strengths = params.select(col("id"), col("strength")).as[Strength]
-    val factors = params
-      .select(col("id"),
-        org.apache.spark.ml.functions.array_to_vector(col("vecArr")).as("vec"))
-      .as[FactorizedInteraction]
-    val model = new FactorizationMachinesModel("fmSqlOracle", K, W0, strengths, factors)
-      .setCarryThroughScoring(true) // 3.5x cheaper, bit-identical outputs
+    val model = FactorizationMachinesModel.fromParamTable("fmSqlOracle", K, W0, params)
     // Bit-exact math (see class doc) — no rounding; only −0.0 normalized.
     model.transform(featureVectors(f))
       .select(col("sample_id"), nz(col("prediction")).as("prediction"))
       .orderBy(col("sample_id"))
   }
 
-  /** One full SGD update step through FactorizationMachinesSGD.step —
-    * gradient reduction, full-outer merge, L1 soft-threshold — checked
-    * against the same math written as SQL. label = sample_id mod 7;
-    * lr = 0.1, regParam = 0.5 (shrinkage 0.05 actually zeroes weights,
-    * so the soft-threshold path is exercised). */
-  val fmStepSql: QueryDef = QueryDef.sql(
-    "fm_sgd_step_vs_sql_oracle",
-    s"""WITH $featsSql,
-      |terms AS (
-      |  SELECT sample_id, feature_id, x, ${wSql("feature_id")} AS w,
-      |         ${(0 until K).map(f => s"${vSql("feature_id", f)} AS v$f").mkString(", ")}
-      |  FROM feats),
-      |persample AS (
-      |  SELECT sample_id,
-      |    sum(w*x) AS wx,
-      |    ${(0 until K).map(f => s"sum(v$f*x) AS vfx$f").mkString(", ")},
-      |    sum((${(0 until K).map(f => s"v$f*v$f").mkString(" + ")}) * x * x) AS v2x2
-      |  FROM terms GROUP BY sample_id),
-      |resid AS (
-      |  SELECT sample_id,
-      |    (wx + 0.5*((${(0 until K).map(f => s"vfx$f*vfx$f").mkString(" + ")}) - v2x2))
-      |      - CAST(sample_id % 7 AS DOUBLE) AS r,
-      |    ${(0 until K).map(f => s"vfx$f").mkString(", ")}
-      |  FROM persample),
-      |n AS (SELECT count(*) AS n FROM (SELECT DISTINCT sample_id FROM feats) s),
-      |grads AS (
-      |  SELECT t.feature_id,
-      |    sum(t.x * p.r) * (0.1 / (SELECT n FROM n)) AS dw,
-      |    ${(0 until K).map(f =>
-           s"sum((t.x * p.vfx$f - t.v$f * t.x * t.x) * p.r) * (0.1 / (SELECT n FROM n)) AS dv$f")
-           .mkString(", ")}
-      |  FROM terms t JOIN resid p ON t.sample_id = p.sample_id
-      |  GROUP BY t.feature_id),
-      |updated AS (
-      |  SELECT t.id, t.w - g.dw AS cw,
-      |    ${(0 until K).map(f => s"t.v$f - g.dv$f AS cv$f").mkString(", ")}
-      |  FROM (SELECT DISTINCT feature_id AS id, ${wSql("feature_id")} AS w,
-      |          ${(0 until K).map(f => s"${vSql("feature_id", f)} AS v$f").mkString(", ")}
-      |        FROM feats) t
-      |  JOIN grads g ON t.id = g.feature_id),
-      |thresholded AS (
-      |  SELECT id, sign(cw) * greatest(0.0, abs(cw) - 0.1 * 0.5) AS sw,
-      |    ${(0 until K).map(f =>
-         s"sign(cv$f) * greatest(0.0, abs(cv$f) - 0.1 * 0.5) AS sv$f").mkString(", ")}
-      |  FROM updated)
-      |SELECT id, ${nzSql("sw", "strength")},
-      |  ${(0 until K).map(f => nzSql(s"sv$f", s"v$f")).mkString(", ")}
-      |FROM thresholded
-      |ORDER BY id""".stripMargin) { (s, d) =>
-    // Persisted: params is referenced twice inside step() (exploded join
-    // + full-outer merge) and batch twice (the count passed as n +
-    // explode) — uncached, each reference re-runs the lineitem
-    // aggregation and vector build.
-    val f = feats(s, d).persist()
-    val params = paramTable(f).persist()
-    val batch = featureVectors(f)
-      .select((col("sample_id") % 7).cast("double").as("label"), col("features"))
-      .persist()
-    val est = new FactorizationMachinesSGD("fmStepOracle")
-      .setDimFactorization(K).setStepSize(0.1).setRegParam(0.5)
-      .setInitialSd(0.01).setSeed(0L)
-    val Some((newParams, _)) = est.step(params, batch, batch.count(), iter = 1)
-    // Bit-exact through the gradient sums; ·(lr/n) and the soft threshold
-    // are deterministic scalar ops — no rounding, only −0.0 normalized.
-    val out = newParams.select(
-      (col("id") +: nz(col("strength")).as("strength") +:
-        (0 until K).map(f =>
-          nz(element_at(col("vecArr"), f + 1)).as(s"v$f"))): _*)
-      .orderBy(col("id"))
-    // NOTE: newParams is localCheckpoint'd (lineage truncated) — it must
-    // NOT be unpersisted before `out` materializes; Verify/Bench clear
-    // the cache after each query instead.
-    out
-  }
-
-  /** [[fmStepSql]] with INTERCEPT TRAINING on (r6, verdict #5): the
-    * prediction carries w0 = 0.5, shifting every residual (so every
-    * gradient, so every updated weight differs from the w0-less twin),
-    * and the output also pins the trained bias
-    * `w0' = w0 − Σ_samples r · (lr/n)` as a constant column. All terms
-    * stay exact dyadic rationals (0.5 is exact; per-sample residuals
-    * are exact, so their sum is order-independent), hence bit-exact
-    * cross-engine with no rounding — only −0.0 normalized. */
-  val fmStepInterceptSql: QueryDef = QueryDef.sql(
-    "fm_sgd_step_intercept_vs_sql_oracle",
-    s"""WITH $featsSql,
-      |terms AS (
-      |  SELECT sample_id, feature_id, x, ${wSql("feature_id")} AS w,
-      |         ${(0 until K).map(f => s"${vSql("feature_id", f)} AS v$f").mkString(", ")}
-      |  FROM feats),
-      |persample AS (
-      |  SELECT sample_id,
-      |    sum(w*x) AS wx,
-      |    ${(0 until K).map(f => s"sum(v$f*x) AS vfx$f").mkString(", ")},
-      |    sum((${(0 until K).map(f => s"v$f*v$f").mkString(" + ")}) * x * x) AS v2x2
-      |  FROM terms GROUP BY sample_id),
-      |resid AS (
-      |  SELECT sample_id,
-      |    ($W0 + (wx + 0.5*((${(0 until K).map(f => s"vfx$f*vfx$f").mkString(" + ")}) - v2x2)))
-      |      - CAST(sample_id % 7 AS DOUBLE) AS r,
-      |    ${(0 until K).map(f => s"vfx$f").mkString(", ")}
-      |  FROM persample),
-      |n AS (SELECT count(*) AS n FROM (SELECT DISTINCT sample_id FROM feats) s),
-      |grads AS (
-      |  SELECT t.feature_id,
-      |    sum(t.x * p.r) * (0.1 / (SELECT n FROM n)) AS dw,
-      |    ${(0 until K).map(f =>
-           s"sum((t.x * p.vfx$f - t.v$f * t.x * t.x) * p.r) * (0.1 / (SELECT n FROM n)) AS dv$f")
-           .mkString(", ")}
-      |  FROM terms t JOIN resid p ON t.sample_id = p.sample_id
-      |  GROUP BY t.feature_id),
-      |updated AS (
-      |  SELECT t.id, t.w - g.dw AS cw,
-      |    ${(0 until K).map(f => s"t.v$f - g.dv$f AS cv$f").mkString(", ")}
-      |  FROM (SELECT DISTINCT feature_id AS id, ${wSql("feature_id")} AS w,
-      |          ${(0 until K).map(f => s"${vSql("feature_id", f)} AS v$f").mkString(", ")}
-      |        FROM feats) t
-      |  JOIN grads g ON t.id = g.feature_id),
-      |thresholded AS (
-      |  SELECT id, sign(cw) * greatest(0.0, abs(cw) - 0.1 * 0.5) AS sw,
-      |    ${(0 until K).map(f =>
-         s"sign(cv$f) * greatest(0.0, abs(cv$f) - 0.1 * 0.5) AS sv$f").mkString(", ")}
-      |  FROM updated)
-      |SELECT id, ${nzSql("sw", "strength")},
-      |  ${(0 until K).map(f => nzSql(s"sv$f", s"v$f")).mkString(", ")},
-      |  (SELECT $W0 - sum(r) * (0.1 / (SELECT n FROM n)) FROM resid) AS w0_new
-      |FROM thresholded
-      |ORDER BY id""".stripMargin) { (s, d) =>
-    val f = feats(s, d).persist()
-    val params = paramTable(f).persist()
-    val batch = featureVectors(f)
-      .select((col("sample_id") % 7).cast("double").as("label"), col("features"))
-      .persist()
-    val est = new FactorizationMachinesSGD("fmStepIntercept")
-      .setDimFactorization(K).setStepSize(0.1).setRegParam(0.5)
-      .setInitialSd(0.01).setSeed(0L).setFitIntercept(true)
-    val Some((newParams, _, newW0)) = est.stepW0(params, batch, batch.count(), iter = 1, w0 = W0)
-    val out = newParams.select(
-      (col("id") +: nz(col("strength")).as("strength") +:
-        (0 until K).map(f =>
-          nz(element_at(col("vecArr"), f + 1)).as(s"v$f")) :+
-        lit(newW0).as("w0_new")): _*)
-      .orderBy(col("id"))
-    // newParams is localCheckpoint'd — not unpersisted before out runs.
-    out
-  }
-
   /** One SQL iteration block: from params relation pIn(id, w, v0..) to
     * pOut — the exact engine math of one [[FactorizationMachinesSGD.step]]
     * (per-sample sums, residual, gradient reduction ·lr/n, L1 soft
-    * threshold). `resid$i` also carries the per-sample row count so the
-    * loss twin ([[fmTrainLossSql]]) can reproduce the engine's
+    * threshold). A `w0` enters the residual as the `(w0 + (…))` prefix
+    * of the prediction. `resid$i` also carries the per-sample row count
+    * so the loss twin ([[fmTrainLossSql]]) can reproduce the engine's
     * Σ_rows r²/cnt as the SAME multiset of addends. */
-  private def stepSql(i: Int, pIn: String, pOut: String, lrSql: String): String = {
+  private def stepSql(i: Int, pIn: String, pOut: String, lrSql: String,
+      w0: Option[Double] = None): String = {
       val vs = (0 until K)
+      val pred = s"(wx + 0.5*((${vs.map(f => s"vfx$f*vfx$f").mkString(" + ")}) - v2x2))"
       s"""terms$i AS (
         |  SELECT f.sample_id, f.feature_id, f.x, p.w,
         |         ${vs.map(f => s"p.v$f").mkString(", ")}
@@ -310,7 +179,7 @@ object FmRelationalQueries {
         |  FROM terms$i GROUP BY sample_id),
         |resid$i AS (
         |  SELECT sample_id, cnt,
-        |    (wx + 0.5*((${vs.map(f => s"vfx$f*vfx$f").mkString(" + ")}) - v2x2))
+        |    ${w0.fold(pred)(w => s"($w + $pred)")}
         |      - CAST(sample_id % 7 AS DOUBLE) AS r,
         |    ${vs.map(f => s"vfx$f").mkString(", ")}
         |  FROM persample$i),
@@ -331,18 +200,75 @@ object FmRelationalQueries {
         |  FROM $pIn p JOIN grads$i g ON g.feature_id = p.id)""".stripMargin
   }
 
+  /** The step/fit oracles' shared SQL prelude: the feature relation, the
+    * batch size n and the deterministic parameter table p0. */
+  private val stepPreludeSql =
+    s"""$featsSql,
+      |n AS (SELECT count(*) AS n FROM (SELECT DISTINCT sample_id FROM feats) s),
+      |p0 AS (
+      |  SELECT DISTINCT feature_id AS id, ${wSql("feature_id")} AS w,
+      |    ${(0 until K).map(f => s"${vSql("feature_id", f)} AS v$f").mkString(", ")}
+      |  FROM feats)""".stripMargin
+
+  /** One full-batch [[stepSql]] iteration from p0 at lr = 0.1, selecting
+    * the updated weights (−0.0 normalized) plus `extraCols`. */
+  private def oneStepSql(w0: Option[Double] = None, extraCols: String = ""): String =
+    s"""WITH $stepPreludeSql,
+      |${stepSql(1, "p0", "p1", "0.1", w0)}
+      |SELECT id, ${nzSql("w", "strength")},
+      |  ${(0 until K).map(f => nzSql(s"v$f", s"v$f")).mkString(", ")}$extraCols
+      |FROM p1
+      |ORDER BY id""".stripMargin
+
+  /** One full SGD update step through FactorizationMachinesSGD.step —
+    * gradient reduction, full-outer merge, L1 soft-threshold — checked
+    * against the same math written as SQL ([[stepSql]]). */
+  val fmStepSql: QueryDef = QueryDef.sql("fm_sgd_step_vs_sql_oracle", oneStepSql()) { (s, d) =>
+    // Persisted: params is referenced twice inside step() (exploded join
+    // + full-outer merge) and batch twice (the count passed as n +
+    // explode) — uncached, each reference re-runs the lineitem
+    // aggregation and vector build.
+    val f = feats(s, d).persist()
+    val params = paramTable(f).persist()
+    val batch = labelled(f).persist()
+    val Some((newParams, _, _)) =
+      oracleEstimator("fmStepOracle").step(params, batch, batch.count(), iter = 1)
+    // Bit-exact through the gradient sums; ·(lr/n) and the soft threshold
+    // are deterministic scalar ops — no rounding, only −0.0 normalized.
+    // NOTE: newParams is localCheckpoint'd (lineage truncated) — it must
+    // NOT be unpersisted before the result materializes; Verify/Bench
+    // clear the cache after each query instead.
+    flatParams(newParams).orderBy(col("id"))
+  }
+
+  /** [[fmStepSql]] with INTERCEPT TRAINING on (r6, verdict #5): the
+    * prediction carries w0 = 0.5, shifting every residual (so every
+    * gradient, so every updated weight differs from the w0-less twin),
+    * and the output also pins the trained bias
+    * `w0' = w0 − Σ_samples r · (lr/n)` as a constant column. All terms
+    * stay exact dyadic rationals (0.5 is exact; per-sample residuals
+    * are exact, so their sum is order-independent), hence bit-exact
+    * cross-engine with no rounding — only −0.0 normalized. */
+  val fmStepInterceptSql: QueryDef = QueryDef.sql(
+    "fm_sgd_step_intercept_vs_sql_oracle",
+    oneStepSql(Some(W0),
+      s",\n  (SELECT $W0 - sum(r) * (0.1 / (SELECT n FROM n)) FROM resid1) AS w0_new")) { (s, d) =>
+    val f = feats(s, d).persist()
+    val params = paramTable(f).persist()
+    val batch = labelled(f).persist()
+    val Some((newParams, _, newW0)) = oracleEstimator("fmStepIntercept")
+      .setFitIntercept(true).step(params, batch, batch.count(), iter = 1, w0 = W0)
+    // newParams is localCheckpoint'd — not unpersisted before the result runs.
+    flatParams(newParams).withColumn("w0_new", lit(newW0)).orderBy(col("id"))
+  }
+
   /** TWO chained SGD iterations against a pure-SQL oracle — pins the
     * learning-rate decay schedule, per-iteration shrinkage, and
     * iteration COMPOSITION (see [[stepSql]]). */
   val fmTwoStepsSql: QueryDef =
     QueryDef.sql(
       "fm_sgd_two_steps_vs_sql_oracle",
-      s"""WITH $featsSql,
-        |n AS (SELECT count(*) AS n FROM (SELECT DISTINCT sample_id FROM feats) s),
-        |p0 AS (
-        |  SELECT DISTINCT feature_id AS id, ${wSql("feature_id")} AS w,
-        |    ${(0 until K).map(f => s"${vSql("feature_id", f)} AS v$f").mkString(", ")}
-        |  FROM feats),
+      s"""WITH $stepPreludeSql,
         |${stepSql(1, "p0", "p1", "0.1")},
         |${stepSql(2, "p1", "p2", "0.1 / sqrt(2.0)")},
         |rounded AS (
@@ -356,27 +282,18 @@ object FmRelationalQueries {
       // Same caching rationale as the one-step query; the batch is
       // consumed by BOTH iterations.
       val f = feats(s, d).persist()
-      val batch = featureVectors(f)
-        .select((col("sample_id") % 7).cast("double").as("label"), col("features"))
-        .persist()
-      val est = new FactorizationMachinesSGD("fmTwoSteps")
-        .setDimFactorization(K).setStepSize(0.1).setRegParam(0.5)
-        .setInitialSd(0.01).setSeed(0L)
+      val batch = labelled(f).persist()
+      val est = oracleEstimator("fmTwoSteps")
       val p0 = paramTable(f).persist()
       val n = batch.count()
-      val Some((p1, _)) = est.step(p0, batch, n, iter = 1)
-      val Some((p2, _)) = est.step(p1, batch, n, iter = 2)
+      val Some((p1, _, _)) = est.step(p0, batch, n, iter = 1)
+      val Some((p2, _, _)) = est.step(p1, batch, n, iter = 2)
       // Step 2 consumes step 1's inexact ÷n, so its sums can differ by
       // ulps across engines: round(…,6) absorbs them (generic doubles —
       // the decimal-tie pathology of the old ÷10/÷23 fixtures is gone),
       // then −0.0 (from rounding tiny negatives) is normalized.
-      val out = p2.select(
-        (col("id") +: nz(round(col("strength"), 6)).as("strength") +:
-          (0 until K).map(f =>
-            nz(round(element_at(col("vecArr"), f + 1), 6)).as(s"v$f"))): _*)
-        .orderBy(col("id"))
       // p1/p2 are localCheckpoint'd: never unpersist before materializing.
-      out
+      flatParams(p2, c => nz(round(c, 6))).orderBy(col("id"))
     }
 
   /** The full `fit()` driver loop end-to-end under the SQL oracle —
@@ -390,45 +307,13 @@ object FmRelationalQueries {
     * one [[stepSql]] iteration. This pins what the raw-step queries
     * can't: fit's warm-start ingestion (vec→array round-trip),
     * randomSplit batching, the iteration driver, and model assembly. */
-  val fmTrainQuickSql: QueryDef = QueryDef.sql(
-    "fm_train_quick",
-    s"""WITH $featsSql,
-      |n AS (SELECT count(*) AS n FROM (SELECT DISTINCT sample_id FROM feats) s),
-      |p0 AS (
-      |  SELECT DISTINCT feature_id AS id, ${wSql("feature_id")} AS w,
-      |    ${(0 until K).map(f => s"${vSql("feature_id", f)} AS v$f").mkString(", ")}
-      |  FROM feats),
-      |${stepSql(1, "p0", "p1", "0.1")}
-      |SELECT id, ${nzSql("w", "strength")},
-      |  ${(0 until K).map(f => nzSql(s"v$f", s"v$f")).mkString(", ")}
-      |FROM p1
-      |ORDER BY id""".stripMargin) { (s, d) =>
+  val fmTrainQuickSql: QueryDef = QueryDef.sql("fm_train_quick", oneStepSql()) { (s, d) =>
     val f = feats(s, d).persist()
     val params = paramTable(f).persist()
-    import s.implicits._
-    val strengths = params.select(col("id"), col("strength")).as[Strength]
-    val factors = params
-      .select(col("id"),
-        org.apache.spark.ml.functions.array_to_vector(col("vecArr")).as("vec"))
-      .as[FactorizedInteraction]
-    val warm = new FactorizationMachinesModel("fmTrainWarm", K, 0.0, strengths, factors)
-    val batch = featureVectors(f)
-      .select((col("sample_id") % 7).cast("double").as("label"), col("features"))
-    val est = new FactorizationMachinesSGD("fmTrainQuick")
-      .setDimFactorization(K).setMaxIter(1).setMiniBatchFraction(1.0)
-      .setStepSize(0.1).setRegParam(0.5).setInitialSd(0.01).setSeed(0L)
-      .setInitialModel(warm)
-    val model = est.fit(batch)
-    model.dimensionStrength.toDF()
-      .join(model.factorizedInteraction.toDF()
-        .select(col("id"),
-          org.apache.spark.ml.functions.vector_to_array(col("vec")).as("vecArr")),
-        Seq("id"))
-      .select(
-        (col("id") +: nz(col("strength")).as("strength") +:
-          (0 until K).map(f =>
-            nz(element_at(col("vecArr"), f + 1)).as(s"v$f"))): _*)
-      .orderBy(col("id"))
+    val warm = FactorizationMachinesModel.fromParamTable("fmTrainWarm", K, 0.0, params)
+    val est = oracleEstimator("fmTrainQuick")
+      .setMaxIter(1).setMiniBatchFraction(1.0).setInitialModel(warm)
+    flatParams(est.fit(labelled(f)).paramTable).orderBy(col("id"))
   }
 
   /** Per-iteration TRAINING LOSS history over three chained full-batch
@@ -444,12 +329,7 @@ object FmRelationalQueries {
     * three orders of magnitude of headroom. */
   val fmTrainLossSql: QueryDef = QueryDef.sql(
     "fm_train_loss_vs_sql_oracle",
-    s"""WITH $featsSql,
-      |n AS (SELECT count(*) AS n FROM (SELECT DISTINCT sample_id FROM feats) s),
-      |p0 AS (
-      |  SELECT DISTINCT feature_id AS id, ${wSql("feature_id")} AS w,
-      |    ${(0 until K).map(f => s"${vSql("feature_id", f)} AS v$f").mkString(", ")}
-      |  FROM feats),
+    s"""WITH $stepPreludeSql,
       |${stepSql(1, "p0", "p1", "0.1")},
       |${stepSql(2, "p1", "p2", "0.1 / sqrt(2.0)")},
       |${stepSql(3, "p2", "p3", "0.1 / sqrt(3.0)")},
@@ -466,16 +346,12 @@ object FmRelationalQueries {
       |FROM losses
       |ORDER BY iter""".stripMargin) { (s, d) =>
     val f = feats(s, d).persist()
-    val batch = featureVectors(f)
-      .select((col("sample_id") % 7).cast("double").as("label"), col("features"))
-      .persist()
-    val est = new FactorizationMachinesSGD("fmTrainLoss")
-      .setDimFactorization(K).setStepSize(0.1).setRegParam(0.5)
-      .setInitialSd(0.01).setSeed(0L)
+    val batch = labelled(f).persist()
+    val est = oracleEstimator("fmTrainLoss")
     var params = paramTable(f)
     val n = batch.count()
     val losses = (1 to 3).map { iter =>
-      val Some((next, loss)) = est.step(params, batch, n, iter)
+      val Some((next, loss, _)) = est.step(params, batch, n, iter)
       params = next
       loss
     }

@@ -39,28 +39,13 @@ trait FactorizationMachinesModelParams extends Params {
     new DoubleParam(this, "maxLabel", "maximum label value (predictions clipped down to it)")
   final def getMaxLabel: Double = $(maxLabel)
 
-  /** Execution knob, not a semantic one: carry the input columns through
-    * the per-sample aggregation instead of caching the input and joining
-    * predictions back (Model:74-87's plan shape). Outputs are identical
-    * either way, including the raw-bias fallback for feature-less
-    * samples. Carry-through is the DEFAULT: one pass, no cache (the
-    * join-back path must persist its input and the entry outlives the
-    * call), no join-back shuffle — ~3.5× cheaper on narrow rows. Set
-    * false for wide-payload rows, where replicating the payload per
-    * active feature through the shuffle costs more than the extra join. */
-  final val carryThroughScoring: BooleanParam = new BooleanParam(this,
-    "carryThroughScoring",
-    "score in one pass carrying input columns through the aggregation")
-  final def getCarryThroughScoring: Boolean = $(carryThroughScoring)
-
   setDefault(
     featuresCol -> "features",
     labelCol -> "label",
     predictionCol -> "prediction",
     sampleIdCol -> "sampleId",
     minLabel -> Double.NegativeInfinity,
-    maxLabel -> Double.PositiveInfinity,
-    carryThroughScoring -> true)
+    maxLabel -> Double.PositiveInfinity)
 
   /** Schema contract of the reference (FactorizationMachines.scala:33-37,
     * FactorizationMachinesModel.scala:236-240): features must be VectorUDT,
@@ -132,7 +117,7 @@ trait FactorizationMachinesParams extends FactorizationMachinesModelParams {
     * SURVEY M2 — a documented wart: non-centered labels silently lose
     * model quality). Since r6, `true` opts into training the bias by the
     * batch-mean residual gradient each iteration
-    * (FactorizationMachinesSGD.stepW0). */
+    * (FactorizationMachinesSGD.step). */
   final val fitIntercept: BooleanParam = new BooleanParam(this, "fitIntercept",
     "whether to fit the global bias term (reference default: never)")
   final def getFitIntercept: Boolean = $(fitIntercept)

@@ -21,20 +21,6 @@ trait SparkSessionSuite extends AnyFunSuite with BeforeAndAfterAll with Matchers
   */
 class FactorizationMachinesModelSuite extends SparkSessionSuite {
 
-  private def goldenModel(s: SparkSession): FactorizationMachinesModel = {
-    import s.implicits._
-    val strengths = Seq(
-      Strength(0, 0.1), Strength(1, 0.2), Strength(2, 0.3), Strength(3, 0.4)
-    ).toDS()
-    val factors = Seq(
-      FactorizedInteraction(0, Vectors.dense(1.0, 2.0, 3.0).toDense),
-      FactorizedInteraction(1, Vectors.dense(3.0, 2.0, 1.0).toDense),
-      FactorizedInteraction(2, Vectors.dense(-0.1, -0.1, -0.2).toDense),
-      FactorizedInteraction(3, Vectors.dense(-0.5, 0.3, 0.0).toDense)
-    ).toDS()
-    new FactorizationMachinesModel("uid", 3, 5.0, strengths, factors)
-  }
-
   test("golden scoring: dense, sparse, unlearned dim, empty") {
     val s = spark
     import s.implicits._
@@ -46,7 +32,7 @@ class FactorizationMachinesModelSuite extends SparkSessionSuite {
       (103, Vectors.sparse(numFeatureDimensions, Seq()))
     ).toDF("rowId", "features")
 
-    val actual = goldenModel(s).transform(input)
+    val actual = FmQueries.goldenModel(s).transform(input)
       .collect()
       .sortBy(_.getAs[Int]("rowId"))
 
@@ -66,7 +52,7 @@ class FactorizationMachinesModelSuite extends SparkSessionSuite {
       (103, Vectors.sparse(4, Seq())) // bias fallback is NOT clipped
     ).toDF("rowId", "features")
 
-    val actual = goldenModel(s)
+    val actual = FmQueries.goldenModel(s)
       .setMinLabel(5.5).setMaxLabel(10.0)
       .transform(input)
       .collect()
@@ -83,7 +69,7 @@ class FactorizationMachinesModelSuite extends SparkSessionSuite {
     import s.implicits._
     val input = Seq((1, "payload", Vectors.dense(1.0, 0.0, 0.0, 0.0)))
       .toDF("rowId", "extra", "features")
-    val out = goldenModel(s).transform(input)
+    val out = FmQueries.goldenModel(s).transform(input)
     out.columns.toSeq shouldBe Seq("rowId", "extra", "features", "prediction")
     out.count() shouldBe 1
   }
@@ -92,7 +78,7 @@ class FactorizationMachinesModelSuite extends SparkSessionSuite {
     val s = spark
     import s.implicits._
     val bad = Seq((1, 2.0)).toDF("rowId", "features")
-    an[Exception] should be thrownBy goldenModel(s).transform(bad)
+    an[Exception] should be thrownBy FmQueries.goldenModel(s).transform(bad)
   }
 }
 

@@ -1,6 +1,7 @@
 package graft.fm
 
 import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -39,7 +40,7 @@ class FactorizationMachinesSGDSuite extends SparkSessionSuite {
       .map { case (l, fs) => (l, Vectors.sparse(3, fs)) }
       .toDF("label", "features")
 
-    val Some((newParams, loss)) = est.step(params, batch, samples.size, iter = 1)
+    val Some((newParams, loss, _)) = est.step(params, batch, samples.size, iter = 1)
     val got = newParams.collect()
       .map(r => r.getAs[Int]("id") ->
         (r.getAs[Double]("strength"), r.getAs[Seq[Double]]("vecArr").toArray))
@@ -107,7 +108,7 @@ class FactorizationMachinesSGDSuite extends SparkSessionSuite {
 
     val n = batch.count()
     n shouldBe 3
-    val Some((_, loss, newW0)) = est.stepW0(params, batch, n, iter = 1, w0 = w0)
+    val Some((_, loss, newW0)) = est.step(params, batch, n, iter = 1, w0 = w0)
 
     val residuals = samples.filter(_._2.nonEmpty).map { case (label, fs) =>
       val wixi = fs.map { case (i, x) => w(i) * x }.sum
@@ -123,7 +124,7 @@ class FactorizationMachinesSGDSuite extends SparkSessionSuite {
   /** The eager checkpoint is a step's ONLY Spark action: the batch size
     * comes from the caller, and the loss and intercept residual sum are
     * observed on the checkpoint job. Nothing is left in the cache. */
-  test("stepW0 runs one Spark action and caches nothing") {
+  test("step runs one Spark action and caches nothing") {
     val s = spark
     import s.implicits._
     val params = Seq((0, 0.1, Seq(0.5, -0.5)), (1, -0.2, Seq(1.0, 0.25)))
@@ -146,7 +147,7 @@ class FactorizationMachinesSGDSuite extends SparkSessionSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      est.stepW0(params, batch, n = 2, iter = 1, w0 = 0.5) should not be empty
+      est.step(params, batch, n = 2, iter = 1, w0 = 0.5) should not be empty
       // the listener bus is async but ordered: a marker action arriving
       // means every execution of the step has been delivered
       spark.range(1).collect()
@@ -156,6 +157,41 @@ class FactorizationMachinesSGDSuite extends SparkSessionSuite {
     } finally spark.listenerManager.unregister(listener)
     actions.asScala.toSeq shouldBe Seq("localCheckpoint", "collect")
     assert(spark.sharedState.cacheManager.isEmpty, "the step left a cached plan")
+  }
+
+  /** maxIter = 0 trains nothing: `fit` returns the initial model — the
+    * seeded init at w0 = 0.0 on a cold start, the warm model's tables
+    * and bias on a warm one — with an empty loss history. */
+  test("maxIter = 0 returns the initial model, cold and warm") {
+    val s = spark
+    import s.implicits._
+    val df = Seq(
+      (1.0, Vectors.sparse(3, Seq(0 -> 1.0, 1 -> 2.0))),
+      (0.0, Vectors.sparse(3, Seq(1 -> 0.5, 2 -> -1.0))))
+      .toDF("label", "features")
+    def table(p: DataFrame): Map[Int, (Double, Seq[Double])] =
+      p.collect().map(r => r.getAs[Int]("id") ->
+        (r.getAs[Double]("strength"), r.getAs[Seq[Double]]("vecArr"))).toMap
+
+    val cold = new FactorizationMachinesSGD()
+      .setDimFactorization(2).setMaxIter(0).setSeed(5L)
+    val coldModel = cold.fit(df)
+    cold.lastLossHistory shouldBe empty
+    coldModel.globalBias shouldBe 0.0
+    val init = table(cold.initialParams(df))
+    init.keySet shouldBe Set(0, 1, 2)
+    table(coldModel.paramTable) shouldBe init
+
+    val warmModel = FactorizationMachinesModel.fromParamTable("warm", 2, 0.75,
+      Seq((0, 0.1, Seq(0.5, -0.5)), (1, -0.2, Seq(1.0, 0.25)))
+        .toDF("id", "strength", "vecArr"))
+    val warm = new FactorizationMachinesSGD()
+      .setDimFactorization(2).setMaxIter(0).setFitIntercept(true)
+      .setInitialModel(warmModel)
+    val resumed = warm.fit(df)
+    warm.lastLossHistory shouldBe empty
+    resumed.globalBias shouldBe 0.75
+    table(resumed.paramTable) shouldBe table(warmModel.paramTable)
   }
 
   /** E2E: loss decreases on synthetic rank-k data with known structure

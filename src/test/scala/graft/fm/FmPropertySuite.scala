@@ -1,6 +1,5 @@
 package graft.fm
 
-import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
@@ -125,7 +124,7 @@ class FmPropertySuite extends SparkSessionSuite {
         .setDimFactorization(k).setStepSize(0.5).setRegParam(0.2)
         .setFitIntercept(true)
       val Some((newParams, loss, newW0)) =
-        est.stepW0(params, batch, batch.count(), iter = 1, w0 = w0)
+        est.step(params, batch, batch.count(), iter = 1, w0 = w0)
       assertShrunk(newParams, loss)
       newW0 shouldBe w0 +- 1e-12
 
@@ -141,10 +140,7 @@ class FmPropertySuite extends SparkSessionSuite {
         .setInitialModel(warm)
       val model = fitEst.fit(batch)
       fitEst.lastLossHistory should have size 1
-      assertShrunk(
-        model.dimensionStrength.toDF().join(model.factorizedInteraction.toDF()
-          .select(col("id"), vector_to_array(col("vec")).as("vecArr")), "id"),
-        fitEst.lastLossHistory.head)
+      assertShrunk(model.paramTable, fitEst.lastLossHistory.head)
       model.globalBias shouldBe w0 +- 1e-12
     }
   }

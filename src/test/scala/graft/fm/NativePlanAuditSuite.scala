@@ -59,7 +59,7 @@ class NativePlanAuditSuite extends SparkSessionSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      est.stepW0(params, batch, n = 2, iter = 1, w0 = 0.0) should not be empty
+      est.step(params, batch, n = 2, iter = 1) should not be empty
       // the listener bus is async: wait for delivery
       val deadline = System.currentTimeMillis + 10000
       while (!fmOps.forall(seen.contains) && System.currentTimeMillis < deadline)
@@ -77,7 +77,6 @@ class NativePlanAuditSuite extends SparkSessionSuite {
       Seq(Strength(0, 0.1), Strength(1, 0.2)).toDS(),
       Seq(FactorizedInteraction(0, Vectors.dense(1.0, 2.0).toDense),
         FactorizedInteraction(1, Vectors.dense(3.0, -1.0).toDense)).toDS())
-      .setCarryThroughScoring(true)
     val input = Seq((1, Vectors.dense(1.0, 2.0))).toDF("rowId", "features")
     val found = names(model.transform(input))
     withClue(s"expressions: $found\n") {
