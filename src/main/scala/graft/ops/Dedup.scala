@@ -271,29 +271,25 @@ object Dedup {
     // rebuild = the line index's RECOVERY verb (its counts ARE the raw
     // state — there is no per-row log to rebuild a torn merge from, so
     // compaction cannot repair it the way the band index's can)
-    IndexIntent.beginRepair(spark, dir, "saveLineIndex")
-    lineRowsOf(docs)
-      .groupBy(col("lh"))
-      .agg(countDistinct(col("doc_id")).as("df"))
-      .withColumn("bucket", pmod(xxhash64(col("lh")), lit(nBuckets)).cast("int"))
-      .repartition(col("bucket")) // one file per partition (r18, guide §6)
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/counts")
-    Seq(nBuckets).toDF("n_buckets")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    lineMetaCache.remove(dir) // rebuild may change the modulus
-    IndexIntent.end(spark, dir)
+    LineDir.repair(spark, dir, "saveLineIndex") {
+      lineRowsOf(docs)
+        .groupBy(col("lh"))
+        .agg(countDistinct(col("doc_id")).as("df"))
+        .withColumn("bucket", pmod(xxhash64(col("lh")), lit(nBuckets)).cast("int"))
+        .repartition(col("bucket")) // one file per partition (r18, guide §6)
+        .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/counts")
+      IndexDir.writeMeta(Seq(nBuckets).toDF("n_buckets"), dir)
+    }
   }
 
-  /** Line-index bucket modulus, cached per directory (the
-    * [[readBandMeta]] rationale: an immutable one-row constant cost a
-    * parquet-head driver round-trip per verb; [[saveLineIndex]], the
-    * only writer, invalidates). */
-  private val lineMetaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  private def readLineMeta(s: SparkSession, dir: String): Int =
-    lineMetaCache.computeIfAbsent(dir, _ =>
-      Integer.valueOf(s.read.parquet(s"$dir/meta").head().getInt(0))
-    ).intValue
+  /** The line index's [[IndexDir]] kind: no format tag, and a torn
+    * merge is repaired only by the full rebuild. */
+  private val LineDir = IndexDir.Kind("line",
+    "a rebuild (graft.ops.Dedup.saveLineIndex over the full corpus)",
+    build = Some("saveLineIndex"))
+
+  private def lineBuckets(s: SparkSession, dir: String): Int =
+    IndexDir.meta(s, dir).getAs[Int]("n_buckets")
 
   /** INCREMENTAL maintenance for a [[saveLineIndex]] directory: count
     * the batch's lines, merge the counts into the touched bucket
@@ -303,15 +299,38 @@ object Dedup {
     * append each admitted document ONCE (disjoint doc sets across
     * appends), which makes per-batch distinct-doc counts additive —
     * the same contract as the band-index append log. */
-  def appendToLineIndex(dir: String, batch: DataFrame): Unit = {
-    val spark = batch.sparkSession
-    // intent marker: a crash inside the partition merge leaves a torn
-    // counts state detectable by every later probe/verb ([[IndexIntent]])
-    IndexIntent.begin(spark, dir, "appendToLineIndex",
-      "a rebuild (graft.ops.Dedup.saveLineIndex over the full corpus)")
-    val nBuckets = readLineMeta(spark, dir)
-    val batchCounts = lineRowsOf(batch)
-      .groupBy(col("lh")).agg(countDistinct(col("doc_id")).as("df"))
+  def appendToLineIndex(dir: String, batch: DataFrame): Unit =
+    LineDir.mutate(batch.sparkSession, dir, "appendToLineIndex") {
+      mergeLineCounts(dir, batch, 1)
+    }
+
+  /** The DELETE verb for a [[saveLineIndex]] directory — the exact
+    * mirror of [[appendToLineIndex]]: the retracted documents' per-line
+    * distinct-doc counts merge in NEGATED, over only the touched bucket
+    * partitions. The index IS its counts (no row log, so no tombstones
+    * needed): after the merge a probe is bit-identical to one against
+    * an index built from scratch over the corpus minus the deletions —
+    * a boilerplate line whose df falls back under the threshold stops
+    * being stripped (suite-pinned both directions). Rows at df 0 are
+    * kept: they hold the partition present for the dynamic overwrite
+    * and are inert to the ≥ minDf probe filter and to future merges.
+    * Callers delete indexed docs once, with the text they were indexed
+    * under — the mirror of the append contract. */
+  def deleteFromLineIndex(dir: String, deletedDocs: DataFrame): Unit =
+    LineDir.mutate(deletedDocs.sparkSession, dir, "deleteFromLineIndex",
+        "a rebuild (graft.ops.Dedup.saveLineIndex over the corpus minus " +
+        "the deletions)") {
+      mergeLineCounts(dir, deletedDocs, -1)
+    }
+
+  /** Adds `sign` × each line's distinct-doc count in `docs` into the
+    * touched bucket partitions of `dir/counts`. */
+  private def mergeLineCounts(dir: String, docs: DataFrame, sign: Int): Unit = {
+    val spark = docs.sparkSession
+    val nBuckets = lineBuckets(spark, dir)
+    val docFreq = countDistinct(col("doc_id"))
+    val batchCounts = lineRowsOf(docs)
+      .groupBy(col("lh")).agg((if (sign < 0) -docFreq else docFreq).as("df"))
       .withColumn("bucket", pmod(xxhash64(col("lh")), lit(nBuckets)).cast("int"))
       .localCheckpoint(true)
     // bounded by construction: at most nBuckets distinct small ints
@@ -329,65 +348,21 @@ object Dedup {
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("bucket").parquet(s"$dir/counts")
     }
-    IndexIntent.end(spark, dir)
-  }
-
-  /** The DELETE verb for a [[saveLineIndex]] directory — the exact
-    * mirror of [[appendToLineIndex]]: the retracted documents' per-line
-    * distinct-doc counts merge in NEGATED, over only the touched bucket
-    * partitions. The index IS its counts (no row log, so no tombstones
-    * needed): after the merge a probe is bit-identical to one against
-    * an index built from scratch over the corpus minus the deletions —
-    * a boilerplate line whose df falls back under the threshold stops
-    * being stripped (suite-pinned both directions). Rows at df 0 are
-    * kept: they hold the partition present for the dynamic overwrite
-    * and are inert to the ≥ minDf probe filter and to future merges.
-    * Callers delete indexed docs once, with the text they were indexed
-    * under — the mirror of the append contract. */
-  def deleteFromLineIndex(dir: String, deletedDocs: DataFrame): Unit = {
-    val spark = deletedDocs.sparkSession
-    IndexIntent.begin(spark, dir, "deleteFromLineIndex",
-      "a rebuild (graft.ops.Dedup.saveLineIndex over the corpus minus " +
-      "the deletions)")
-    val nBuckets = readLineMeta(spark, dir)
-    val negCounts = lineRowsOf(deletedDocs)
-      .groupBy(col("lh")).agg((-countDistinct(col("doc_id"))).as("df"))
-      .withColumn("bucket", pmod(xxhash64(col("lh")), lit(nBuckets)).cast("int"))
-      .localCheckpoint(true)
-    // bounded by construction: at most nBuckets distinct small ints
-    val touched = negCounts.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    if (touched.nonEmpty) {
-      val merged = spark.read.schema(lineCountsSchema).parquet(s"$dir/counts")
-        .filter(col("bucket").isin(touched: _*)) // partition-pruned read
-        .unionByName(negCounts)
-        .groupBy(col("bucket"), col("lh"))
-        .agg(sum(col("df")).as("df"))
-        // materialize BEFORE overwriting the partitions being read
-        .localCheckpoint(true)
-      merged.repartition(col("bucket")).write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").parquet(s"$dir/counts")
-    }
-    IndexIntent.end(spark, dir)
   }
 
   /** Compact a [[saveLineIndex]] directory fragmented by
     * [[appendToLineIndex]] / [[deleteFromLineIndex]] merges into one
     * file per bucket partition — row-identical by construction
-    * ([[IndexCompaction]]; probe equivalence suite-pinned), dropping
+    * ([[IndexDir.rewrite]]; probe equivalence suite-pinned), dropping
     * only the inert df ≤ 0 residue deletes leave behind. Offline
-    * maintenance: run between ingestion rounds. */
-  def compactLineIndex(s: SparkSession, dir: String): Unit = {
-    // NOT a recovery verb: the line index's counts are its only state,
-    // so compaction can only re-layout them — a torn merge needs the
-    // saveLineIndex rebuild. Hence the strict begin, not beginRepair.
-    IndexIntent.begin(s, dir, "compactLineIndex",
-      "a rebuild (graft.ops.Dedup.saveLineIndex over the full corpus)")
-    IndexCompaction.rewrite(s, s"$dir/counts", Some("bucket"), 1,
-      df => df.filter(col("df") > 0))
-    IndexIntent.end(s, dir)
-  }
+    * maintenance: run between ingestion rounds. NOT a recovery verb:
+    * the counts are the index's only state, so compaction can only
+    * re-layout them — a torn merge needs the saveLineIndex rebuild. */
+  def compactLineIndex(s: SparkSession, dir: String): Unit =
+    LineDir.mutate(s, dir, "compactLineIndex") {
+      IndexDir.rewrite(s, s"$dir/counts", Some("bucket"), 1,
+        df => df.filter(col("df") > 0))
+    }
 
   /** Clean a (doc_id, text) batch against a [[saveLineIndex]] directory:
     * lines whose INDEXED document frequency is >= `minDf` are dropped
@@ -396,10 +371,8 @@ object Dedup {
     * batch's touched buckets, only over-threshold hashes join the
     * batch, and per-batch work is linear in the batch. */
   def probeLineIndex(s: SparkSession, dir: String, batch: DataFrame,
-      minDf: Int = LineDf): DataFrame = {
-    IndexIntent.assertClean(s, dir,
-      "a rebuild (graft.ops.Dedup.saveLineIndex over the full corpus)")
-    val nBuckets = readLineMeta(s, dir)
+      minDf: Int = LineDf): DataFrame = LineDir.read(s, dir, "probeLineIndex") {
+    val nBuckets = lineBuckets(s, dir)
     // lazy persist is RIGHT here (r17): the touched-bucket collect just
     // below materializes every partition before any other consumer runs
     // (no concurrency race), the frame is batch-bounded (cheap to
@@ -567,11 +540,11 @@ object Dedup {
     withBands.drop("_tids", "_shing")
   }
 
-  /** Layout-convention tag persisted as `_FORMAT` in every band index
-    * directory (the [[Similarity]] IVF `_FORMAT` seam applied here).
-    * v2 (r13) is the SIGNATURE-COLLAPSED layout: band rows and bucket
-    * counts are per DISTINCT signature, not per doc — the r12 100×
-    * probe demonstrated the per-doc layout goes recall-blind under a
+  /** The band index's [[IndexDir]] kind. Its layout tag
+    * (`_FORMAT`, the [[Similarity]] IVF seam applied here): v2 (r13) is
+    * the SIGNATURE-COLLAPSED layout — band rows and bucket counts are
+    * per DISTINCT signature, not per doc. The r12 100× probe
+    * demonstrated the per-doc layout goes recall-blind under a
     * duplicate flood (c exact copies of one signature pushed every one
     * of its band buckets past [[BandBucketCap]], so the hot-exclusion
     * ADMITTED all 50 000 planted corpus near-dups: the cap meant to
@@ -579,35 +552,14 @@ object Dedup {
     * exists for). A v1 directory (no `_FORMAT` file) fails fast on
     * every verb with a rebuild instruction — probing per-doc band rows
     * under v2 semantics would double-expand evidence silently. */
-  private val BandFormatTag = "graft-band v2 sig-collapsed"
-  private def bandFormatPath(dir: String) =
-    new org.apache.hadoop.fs.Path(dir, "_FORMAT")
-  private def writeBandFormat(s: SparkSession, dir: String): Unit = {
-    val p = bandFormatPath(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(BandFormatTag.getBytes("UTF-8"))
-    finally out.close()
-  }
-  private def assertBandFormat(s: SparkSession, dir: String,
-      verb: String): Unit = {
-    val p = bandFormatPath(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tag =
-      if (!fs.exists(p)) "ABSENT (pre-r13 per-doc layout)"
-      else {
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      }
-    require(tag == BandFormatTag,
-      s"$verb on '$dir': band index layout '$tag' != engine's " +
-        s"'$BandFormatTag' — v2 stores one band row per DISTINCT " +
-        "signature (duplicate floods can no longer blind the probe via " +
-        "the bucket cap); probing a per-doc layout under v2 semantics " +
-        "would mis-expand evidence. Rebuild the directory with " +
-        "saveBandIndex.")
-  }
+  private[ops] val BandDir = IndexDir.Kind("band",
+    "graft.ops.Dedup.compactBandIndex", build = Some("saveBandIndex"),
+    format = Some(IndexDir.Format("graft-band v2 sig-collapsed",
+      "band index layout", "ABSENT (pre-r13 per-doc layout)",
+      "v2 stores one band row per DISTINCT signature (duplicate floods " +
+        "can no longer blind the probe via the bucket cap); probing a " +
+        "per-doc layout under v2 semantics would mis-expand evidence. " +
+        "Rebuild the directory with saveBandIndex.")))
 
   private def mhCols: Seq[Column] = (0 until NumHashes).map(j => col(s"mh$j"))
 
@@ -693,27 +645,25 @@ object Dedup {
     import spark.implicits._
     // a rebuild is a RECOVERY verb: it overwrites every component from
     // scratch, so it tolerates (and on success clears) a torn state
-    IndexIntent.beginRepair(spark, dir, "saveBandIndex")
-    // the layout tag goes FIRST (the IVF lesson): everything this verb
-    // writes is v2 convention, and tagging last would leave a crash
-    // window where the recovery verb rejects its own half-built dir
-    writeBandFormat(spark, dir)
-    // a rebuild starts a fresh lifecycle: drop any tombstone log left
-    // by deletes against a previous index in this directory
-    clearTombstones(spark, dir)
-    corpusSignatures(docs).write.mode("overwrite").parquet(s"$dir/sig")
-    // the bucket modulus and cap are PART OF the index — a probe under
-    // a different modulus computes different buckets and silently loses
-    // matches to the partition-pruning filter, so both persist and are
-    // read back rather than re-supplied
-    Seq((nBuckets, cap)).toDF("n_buckets", "cap")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    bandMetaCache.remove(dir) // rebuild may change the modulus/cap
-    rebuildDerivedFromSig(spark, dir, nBuckets, cap)
-    // a rebuild starts snapshot history over: v1 = the full build
-    clearBandSnapshots(spark, dir)
-    commitBandSnapshot(spark, dir, None)
-    IndexIntent.end(spark, dir)
+    BandDir.repair(spark, dir, "saveBandIndex") {
+      // the layout tag goes FIRST (the IVF lesson): everything this verb
+      // writes is v2 convention, and tagging last would leave a crash
+      // window where the recovery verb rejects its own half-built dir
+      BandDir.writeFormat(spark, dir)
+      // a rebuild starts a fresh lifecycle: drop any tombstone log left
+      // by deletes against a previous index in this directory
+      IndexDir.clearTombstones(spark, dir)
+      corpusSignatures(docs).write.mode("overwrite").parquet(s"$dir/sig")
+      // the bucket modulus and cap are PART OF the index — a probe under
+      // a different modulus computes different buckets and silently loses
+      // matches to the partition-pruning filter, so both persist and are
+      // read back rather than re-supplied
+      IndexDir.writeMeta(Seq((nBuckets, cap)).toDF("n_buckets", "cap"), dir)
+      rebuildDerivedFromSig(spark, dir, nBuckets, cap)
+      // a rebuild starts snapshot history over: v1 = the full build
+      IndexDir.clear(spark, dir)
+      commitBandSnapshot(spark, dir, None)
+    }
   }
 
   /** (Re)derive every non-sig component — members, groups, bands,
@@ -769,6 +719,13 @@ object Dedup {
       .write.mode("overwrite").parquet(s"$dir/hot")
   }
 
+  /** (n_buckets, cap) persisted by [[saveBandIndex]] ([[IndexDir.meta]]
+    * caches the row per directory: every verb stage needs it). */
+  private def readBandMeta(s: SparkSession, dir: String): (Int, Int) = {
+    val m = IndexDir.meta(s, dir)
+    (m.getAs[Int]("n_buckets"), m.getAs[Int]("cap"))
+  }
+
   /** INCREMENTAL maintenance for a [[saveBandIndex]] directory (r7,
     * verdict #1 — ingestion must not rebuild the whole index per
     * batch; r13 — the v2 signature-collapsed layout): sign the admitted
@@ -804,25 +761,17 @@ object Dedup {
     * append ADMITTED docs (the [[probeBandIndex]] survivors);
     * re-appending an already-indexed doc_id would duplicate its rows,
     * as in any append-only log. */
-  /** (n_buckets, cap) persisted by [[saveBandIndex]], cached per
-    * directory (r18, guide §1.2 per-task → per-VERB work): the meta row
-    * is immutable for the life of an index build, yet every verb stage
-    * re-read it with a one-row parquet job — 3-4 driver round-trips per
-    * ingest verb for a constant. [[saveBandIndex]] (the only writer)
-    * invalidates its dir; staging dirs are per-process by construction
-    * ([[ingestGrowDir]]), so no cross-process writer exists to go
-    * stale against. */
-  private val bandMetaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Int)]()
-  private def readBandMeta(s: SparkSession, dir: String): (Int, Int) =
-    bandMetaCache.computeIfAbsent(dir, _ => {
-      val row = s.read.parquet(s"$dir/meta")
-        .select(col("n_buckets"), col("cap")).head()
-      (row.getInt(0), row.getInt(1))
-    })
-
   def appendToBandIndex(dir: String, batch: DataFrame,
-      preSigned: Option[DataFrame] = None): DataFrame = {
+      preSigned: Option[DataFrame] = None): DataFrame =
+    // intent marker precedes the first mutation: any crash inside this
+    // verb leaves the marker and every later probe/verb refuses the
+    // torn directory (see [[IndexDir]])
+    BandDir.mutate(batch.sparkSession, dir, "appendToBandIndex") {
+      appendBand(dir, batch, preSigned)
+    }
+
+  private def appendBand(dir: String, batch: DataFrame,
+      preSigned: Option[DataFrame]): DataFrame = {
     val spark = batch.sparkSession
     // returned to label maintenance (r15 advice, medium — the heating
     // mirror of [[deleteFromBandIndex]]'s cooled keys): the (bi, bv)
@@ -834,12 +783,6 @@ object Dedup {
     // index. Bounded by the batch's touched band values.
     def noneHot = spark.range(0)
       .select(lit(0).as("bi"), lit(0L).as("bv"))
-    // intent marker precedes the first mutation: any crash inside this
-    // verb leaves the marker and every later probe/verb refuses the
-    // torn directory (see [[IndexIntent]])
-    IndexIntent.begin(spark, dir, "appendToBandIndex",
-      "graft.ops.Dedup.compactBandIndex")
-    assertBandFormat(spark, dir, "appendToBandIndex")
     val (nBuckets, cap) = readBandMeta(spark, dir)
     // one materialization of the batch signatures feeds every append.
     // `preSigned` (r18, guide §2.4): the ingest verbs' probe stage has
@@ -860,7 +803,7 @@ object Dedup {
     // isEmpty job) and the partition-pruning list.
     val touchedG = bg.select(col("gbucket")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    if (touchedG.isEmpty) { IndexIntent.end(spark, dir); return noneHot }
+    if (touchedG.isEmpty) return noneHot
     // GROUP MERGE — the heart of the v2 collapse: a batch signature is
     // NEW (no group row), REVIVED (row with live_cnt = 0: every member
     // deleted since it was last live), or ALREADY LIVE. Only new
@@ -974,41 +917,14 @@ object Dedup {
     // even when the delta is empty (all-already-live batch): the
     // manifest must still list the new sig/members files
     commitBandSnapshot(spark, dir, Some(batchCounts))
-    IndexIntent.end(spark, dir)
     newlyHot
   }
 
   // ------------------------------------------- band-index snapshots --
 
-  /** Sorted parquet data files currently under `dir/sub` (shared by
-    * the band- and IVF-index snapshot logs). */
-  private[ops] def listParquetFiles(s: SparkSession, dir: String,
-      sub: String): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(s"$dir/$sub")
-    val fs = base.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) Seq.empty
-    else {
-      val it = fs.listFiles(base, true)
-      val buf = scala.collection.mutable.ArrayBuffer[String]()
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile && f.getPath.getName.endsWith(".parquet"))
-          buf += f.getPath.toString
-      }
-      buf.toSeq.sorted
-    }
-  }
-
   /** Committed snapshot versions of a band index, oldest first. Pure
     * FS metadata (manifest file names) — no Spark job. */
-  def bandIndexVersions(s: SparkSession, dir: String): Seq[Int] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/manifests")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".txt"))
-      .map(_.stripPrefix("v").stripSuffix(".txt").toInt).sorted
-  }
+  def bandIndexVersions(s: SparkSession, dir: String): Seq[Int] = IndexDir.versions(s, dir)
 
   /** Commit a SNAPSHOT of the band index (Iceberg-style versioning,
     * the fifth lifecycle verb: build / append / compact / delete /
@@ -1031,46 +947,25 @@ object Dedup {
     * for the manifest — a snapshot must never cost a fraction of the
     * ingestion work it versions. */
   private def commitBandSnapshot(s: SparkSession, dir: String,
-      countsDelta: Option[DataFrame]): Int = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val version = bandIndexVersions(s, dir).lastOption.getOrElse(0) + 1
-    val deltaPath =
-      new org.apache.hadoop.fs.Path(s"$dir/count_deltas/version=$version")
-    val fs = deltaPath.getFileSystem(conf)
-    countsDelta match {
-      case Some(df) =>
-        // bucket as a partition dir, matching the copied-counts layout
-        df.select(col("bucket"), col("bi"), col("bv"), col("cnt"))
-          .coalesce(1).write.mode("overwrite").partitionBy("bucket")
-          .parquet(deltaPath.toString)
-      case None =>
-        fs.delete(deltaPath, true)
-        fs.mkdirs(deltaPath.getParent)
-        org.apache.hadoop.fs.FileUtil.copy(fs,
-          new org.apache.hadoop.fs.Path(s"$dir/counts"), fs, deltaPath,
-          false, conf)
+      countsDelta: Option[DataFrame]): Unit =
+    IndexDir.commit(s, dir, Seq("sig", "bands", "members")) { deltaDir =>
+      countsDelta match {
+        case Some(df) =>
+          // bucket as a partition dir, matching the copied-counts layout
+          df.select(col("bucket"), col("bi"), col("bv"), col("cnt"))
+            .coalesce(1).write.mode("overwrite").partitionBy("bucket")
+            .parquet(deltaDir)
+        case None =>
+          val conf = s.sparkContext.hadoopConfiguration
+          val deltaPath = new org.apache.hadoop.fs.Path(deltaDir)
+          val fs = deltaPath.getFileSystem(conf)
+          fs.delete(deltaPath, true)
+          fs.mkdirs(deltaPath.getParent)
+          org.apache.hadoop.fs.FileUtil.copy(fs,
+            new org.apache.hadoop.fs.Path(s"$dir/counts"), fs, deltaPath,
+            false, conf)
+      }
     }
-    val lines =
-      listParquetFiles(s, dir, "sig").map("sig\t" + _) ++
-        listParquetFiles(s, dir, "bands").map("bands\t" + _) ++
-        listParquetFiles(s, dir, "members").map("members\t" + _)
-    val mdir = new org.apache.hadoop.fs.Path(s"$dir/manifests")
-    fs.mkdirs(mdir)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$dir/manifests/v$version.txt"), true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    version
-  }
-
-  /** Drop all snapshot history (compaction/rebuild path). */
-  private def clearBandSnapshots(s: SparkSession, dir: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    Seq("manifests", "count_deltas").foreach { sub =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$sub")
-      p.getFileSystem(conf).delete(p, true)
-    }
-  }
 
   /** TIME-TRAVEL probe: [[probeBandIndex]] against the index AS OF a
     * committed snapshot `version` — the audit/reproducibility verb
@@ -1083,37 +978,21 @@ object Dedup {
     * probe had at that version. Current tombstones still apply (see
     * [[probeAgainst]]): deletion wins over history. */
   def probeBandIndexAsOf(s: SparkSession, dir: String, batch: DataFrame,
-      version: Int, minMatch: Int = 8): DataFrame = {
-    IndexIntent.assertClean(s, dir, "graft.ops.Dedup.compactBandIndex")
-    assertBandFormat(s, dir, "probeBandIndexAsOf")
-    require(bandIndexVersions(s, dir).contains(version),
-      s"no committed snapshot v$version under $dir (compaction expires history)")
-    val mpath = new org.apache.hadoop.fs.Path(s"$dir/manifests/v$version.txt")
-    val fs = mpath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val manifest = {
-      val in = fs.open(mpath)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map { line =>
-          val Array(component, file) = line.split("\t", 2)
-          component -> file
-        }.toSeq
-      finally in.close()
+      version: Int, minMatch: Int = 8): DataFrame =
+    BandDir.read(s, dir, "probeBandIndexAsOf") {
+      val files = IndexDir.manifest(s, dir, version)
+      val cap = readBandMeta(s, dir)._2
+      val sig = s.read.parquet(files("sig"): _*)
+      val bands = s.read.option("basePath", s"$dir/bands")
+        .parquet(files("bands"): _*)
+      val members = s.read.parquet(files("members"): _*)
+      val counts = IndexDir.countDeltas(s, dir, version)
+        .groupBy(col("bucket"), col("bi"), col("bv"))
+        .agg(sum(col("cnt")).as("cnt"))
+      val hot = counts.filter(col("cnt") > cap)
+        .select(col("bi"), col("bv"))
+      probeAgainst(s, dir, batch, minMatch, sig, bands, members, hot)
     }
-    def files(component: String): Seq[String] =
-      manifest.collect { case (c, f) if c == component => f }
-    val cap = readBandMeta(s, dir)._2
-    val sig = s.read.parquet(files("sig"): _*)
-    val bands = s.read.option("basePath", s"$dir/bands")
-      .parquet(files("bands"): _*)
-    val members = s.read.parquet(files("members"): _*)
-    val counts = s.read.parquet(s"$dir/count_deltas")
-      .filter(col("version") <= version)
-      .groupBy(col("bucket"), col("bi"), col("bv"))
-      .agg(sum(col("cnt")).as("cnt"))
-    val hot = counts.filter(col("cnt") > cap)
-      .select(col("bi"), col("bv"))
-    probeAgainst(s, dir, batch, minMatch, sig, bands, members, hot)
-  }
 
   /** The DELETE verb of the band-index lifecycle (build / append /
     * compact / delete) — right-to-be-forgotten and retraction at
@@ -1167,7 +1046,7 @@ object Dedup {
     * tombstone append, counts partition overwrite, hot overwrite,
     * snapshot commit — with no cross-file atomicity on a plain
     * filesystem. Every mutating verb therefore writes an INTENT
-    * MARKER ([[IndexIntent]]) before its first write and clears it
+    * MARKER ([[IndexDir]]) before its first write and clears it
     * after its last: a crash anywhere inside the verb — including the
     * old silent window between the live counts/hot mutation and the
     * [[commitBandSnapshot]] manifest write — leaves the marker, and
@@ -1182,7 +1061,12 @@ object Dedup {
     * discipline is assumed throughout (standard for index
     * maintenance; concurrent writers need an external lock or a
     * table format with optimistic commits). */
-  def deleteFromBandIndex(dir: String, deletedDocs: DataFrame): DataFrame = {
+  def deleteFromBandIndex(dir: String, deletedDocs: DataFrame): DataFrame =
+    BandDir.mutate(deletedDocs.sparkSession, dir, "deleteFromBandIndex") {
+      deleteBand(dir, deletedDocs)
+    }
+
+  private def deleteBand(dir: String, deletedDocs: DataFrame): DataFrame = {
     val spark = deletedDocs.sparkSession
     // returned to label maintenance (r14 advice, high): the (bi, bv)
     // keys this delete flips from hot to cold. Lifting the hot-guard
@@ -1193,12 +1077,8 @@ object Dedup {
     // the hot list (hot ≤ buckets over cap, tiny by construction).
     def noneCold = spark.range(0)
       .select(lit(0).as("bi"), lit(0L).as("bv"))
-    IndexIntent.begin(spark, dir, "deleteFromBandIndex",
-      "graft.ops.Dedup.compactBandIndex")
-    assertBandFormat(spark, dir, "deleteFromBandIndex")
     val (nBuckets, cap) = readBandMeta(spark, dir)
-    deletedDocs.select(col("doc_id"))
-      .write.mode("append").parquet(s"$dir/tombstones")
+    IndexDir.appendTombstones(deletedDocs.select(col("doc_id")), dir)
     // the batch re-signs itself and its per-SIGNATURE multiplicities
     // merge NEGATED into the group table; a signature whose live count
     // hits 0 is NEWLY DEAD and its band buckets lose one DISTINCT
@@ -1208,7 +1088,7 @@ object Dedup {
       .agg(count(lit(1)).as("m"))
       .withColumn("gbucket", gbucketOf(nBuckets))
       .localCheckpoint(true)
-    if (dg.isEmpty) { IndexIntent.end(spark, dir); return noneCold }
+    if (dg.isEmpty) return noneCold
     val touchedG = dg.select(col("gbucket")).distinct()
       .collect().map(_.getInt(0)).toSeq
     val mhNames = (0 until NumHashes).map(j => s"mh$j")
@@ -1275,7 +1155,6 @@ object Dedup {
     // the SNAPSHOT contract above). Committed even when no group died
     // (the tombstone itself is state a version boundary should cover)
     commitBandSnapshot(spark, dir, Some(negCounts))
-    IndexIntent.end(spark, dir)
     newlyCold
   }
 
@@ -1299,21 +1178,6 @@ object Dedup {
     }
   }
 
-  /** Remove a stale tombstone log (index rebuild in a reused dir). */
-  private[ops] def clearTombstones(s: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-  }
-
-  /** The tombstone log of a band/IVF index directory, if any deletes
-    * happened since the last compaction. */
-  private[ops] def tombstonesOf(s: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(s.read.parquet(p.toString)) else None
-  }
-
   /** Compact a [[saveBandIndex]] directory after an append run: the
     * append path is append-only by contract (one new file per batch
     * per touched bucket), so sustained ingestion fragments `sig` and
@@ -1321,45 +1185,40 @@ object Dedup {
     * pays a per-file open cost that at corpus scale dwarfs the bytes.
     * Rewrites `bands`/`counts` to one file per bucket partition and
     * `sig` to `sigFiles` files, via tmp-dir + rename swap
-    * ([[IndexCompaction]]) — row-identical, probe-before ≡ probe-after
+    * ([[IndexDir.rewrite]]) — row-identical, probe-before ≡ probe-after
     * suite-pinned, and appends resume against the compacted layout
     * unchanged. If deletes are pending ([[deleteFromBandIndex]]), the
     * rewrite PURGES the tombstoned docs' sig/band rows and clears the
     * log — the physical half of the delete verb, amortized into the
     * pass that touches the files anyway. Offline maintenance: run
     * between ingestion rounds. */
-  def compactBandIndex(s: SparkSession, dir: String, sigFiles: Int = 8): Unit = {
+  def compactBandIndex(s: SparkSession, dir: String, sigFiles: Int = 8): Unit =
     // compaction is THE recovery verb: it tolerates a torn directory
-    // (surviving _INTENT marker) and restores every invariant below
-    IndexIntent.beginRepair(s, dir, "compactBandIndex")
-    assertBandFormat(s, dir, "compactBandIndex")
-    val (nBuckets, cap) = readBandMeta(s, dir)
-    val ts = tombstonesOf(s, dir).map(t =>
-      t.select(col("doc_id")).distinct().localCheckpoint(true))
-    val purge: DataFrame => DataFrame = df =>
-      ts.fold(df)(t => df.join(broadcast(t), Seq("doc_id"), "left_anti"))
-    // sig is the ONE component compacted as a row-preserving rewrite
-    // (minus the tombstone purge); everything else — members, groups,
-    // bands, counts, hot — REBUILDS from the purged signatures, the raw
-    // per-doc facts. On the clean path the rebuilt state is identical
-    // to the incrementally maintained files (suite-pinned); on the
-    // recovery path this is what discards a torn merge a crashed
-    // append/delete left behind (r10). Rebuilding also re-REPRESENTS
-    // any group whose representative was tombstoned: the new gid is the
-    // minimum SURVIVING member, so a purged doc id can never anchor
-    // band rows (probe output is representative-invariant — gid never
-    // reaches the output — but the verify join must find gid in sig).
-    IndexCompaction.rewrite(s, s"$dir/sig", None, sigFiles, purge)
-    rebuildDerivedFromSig(s, dir, nBuckets, cap)
-    ts.foreach(t => t.limit(0).write.mode("overwrite")
-      .parquet(s"$dir/tombstones"))
-    // compaction rewrote the data files old manifests point at —
-    // history is EXPIRED (the log-structured contract); restart the
-    // snapshot log at a fresh v1 over the compacted state
-    clearBandSnapshots(s, dir)
-    commitBandSnapshot(s, dir, None)
-    IndexIntent.end(s, dir)
-  }
+    // (surviving _INTENT marker) and restores every invariant below —
+    // except a torn build's, whose raw rows may themselves be missing
+    BandDir.repair(s, dir, "compactBandIndex") {
+      val (nBuckets, cap) = readBandMeta(s, dir)
+      // sig is the ONE component compacted as a row-preserving rewrite
+      // (minus the tombstone purge); everything else — members, groups,
+      // bands, counts, hot — REBUILDS from the purged signatures, the raw
+      // per-doc facts. On the clean path the rebuilt state is identical
+      // to the incrementally maintained files (suite-pinned); on the
+      // recovery path this is what discards a torn merge a crashed
+      // append/delete left behind (r10). Rebuilding also re-REPRESENTS
+      // any group whose representative was tombstoned: the new gid is the
+      // minimum SURVIVING member, so a purged doc id can never anchor
+      // band rows (probe output is representative-invariant — gid never
+      // reaches the output — but the verify join must find gid in sig).
+      IndexDir.purgeTombstones(s, dir, "doc_id") { purge =>
+        IndexDir.rewrite(s, s"$dir/sig", None, sigFiles, purge)
+        rebuildDerivedFromSig(s, dir, nBuckets, cap)
+      }
+      // compaction rewrote the data files old manifests point at —
+      // history is EXPIRED (the log-structured contract); restart the
+      // snapshot log at a fresh v1 over the compacted state
+      IndexDir.clear(s, dir)
+      commitBandSnapshot(s, dir, None)
+    }
 
   /** Probe a [[saveBandIndex]] directory with a (doc_id, text) batch:
     * the batch signs itself MAP-SIDE ([[withRowSignature]]), the index
@@ -1375,9 +1234,7 @@ object Dedup {
     * inline flavors' [[BandBucketCap]] semantics AND its fanout stays
     * bounded on a boilerplate bucket. */
   def probeBandIndex(s: SparkSession, dir: String, batch: DataFrame,
-      minMatch: Int = 8): DataFrame = {
-    IndexIntent.assertClean(s, dir, "graft.ops.Dedup.compactBandIndex")
-    assertBandFormat(s, dir, "probeBandIndex")
+      minMatch: Int = 8): DataFrame = BandDir.read(s, dir, "probeBandIndex") {
     probeAgainst(s, dir, batch, minMatch,
       sig = s.read.schema(sigSchema).parquet(s"$dir/sig"),
       bands = s.read.schema(bandsSchema).parquet(s"$dir/bands"),
@@ -1505,8 +1362,7 @@ object Dedup {
     // verification until compaction re-represents the group), then the
     // probe's members (every batch member inherits its representative's
     // evidence rows verbatim: identical signature ⇒ identical evidence)
-    val liveMembers = tombstonesOf(s, dir).fold(members)(t =>
-      members.join(broadcast(t), Seq("doc_id"), "left_anti"))
+    val liveMembers = IndexDir.withoutTombstones(s, dir, members, "doc_id")
     val repRows = reps.select(col("incoming_id").as("rep_id") +:
       ((0 until h).map(j => col(s"mh$j")) ++
         (0 until Bands).map(b => col(s"band$b"))): _*)
@@ -1532,37 +1388,36 @@ object Dedup {
     * pre-dedup the batch with [[lshCandidatePairs]]; the streaming
     * wrapper gets this per-micro-batch sequencing for free. */
   def ingestIntoBandIndex(s: SparkSession, dir: String, batch: DataFrame,
-      minMatch: Int = 8): DataFrame = {
-    IndexIntent.assertClean(s, dir, "graft.ops.Dedup.compactBandIndex")
-    assertBandFormat(s, dir, "ingestIntoBandIndex")
-    // admission decides at REP level: a batch member is rejected iff
-    // its representative's signature has evidence against ≥ 1 LIVE
-    // index member. Semi-joins keep this output-bound — the full
-    // member × member evidence expansion (the probeBandIndex contract)
-    // is never materialized on the admission path, so a
-    // duplicate-flooded batch probing a duplicate-flooded index costs
-    // O(distinct signatures + batch), not O(flood²).
-    val parts = probeParts(s, dir, batch, minMatch,
-      sig = s.read.schema(sigSchema).parquet(s"$dir/sig"),
-      bands = s.read.schema(bandsSchema).parquet(s"$dir/bands"),
-      members = s.read.schema(membersSchema).parquet(s"$dir/members"),
-      hot = s.read.schema(hotSchema).parquet(s"$dir/hot"))
-    val rejectedReps = parts.repEvidence
-      .join(parts.liveMembers.select(col("gid")), Seq("gid"), "left_semi")
-      .select(col("rep_id")).distinct()
-    val rejected = parts.memberMap
-      .join(rejectedReps, Seq("rep_id"), "left_semi")
-      .select(col("member_id").as("doc_id")).distinct()
-    val admitted = batch.join(rejected, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    // the probe already signed the whole batch map-side — the append
-    // reuses those signatures restricted to the admitted docs instead
-    // of re-signing (r18; semi-join against the checkpointed admitted
-    // set, so the rejected-set subquery is not re-evaluated either)
-    appendToBandIndex(dir, admitted, Some(parts.signedSig
-      .join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi")))
-    admitted
-  }
+      minMatch: Int = 8): DataFrame =
+    BandDir.read(s, dir, "ingestIntoBandIndex") {
+      // admission decides at REP level: a batch member is rejected iff
+      // its representative's signature has evidence against ≥ 1 LIVE
+      // index member. Semi-joins keep this output-bound — the full
+      // member × member evidence expansion (the probeBandIndex contract)
+      // is never materialized on the admission path, so a
+      // duplicate-flooded batch probing a duplicate-flooded index costs
+      // O(distinct signatures + batch), not O(flood²).
+      val parts = probeParts(s, dir, batch, minMatch,
+        sig = s.read.schema(sigSchema).parquet(s"$dir/sig"),
+        bands = s.read.schema(bandsSchema).parquet(s"$dir/bands"),
+        members = s.read.schema(membersSchema).parquet(s"$dir/members"),
+        hot = s.read.schema(hotSchema).parquet(s"$dir/hot"))
+      val rejectedReps = parts.repEvidence
+        .join(parts.liveMembers.select(col("gid")), Seq("gid"), "left_semi")
+        .select(col("rep_id")).distinct()
+      val rejected = parts.memberMap
+        .join(rejectedReps, Seq("rep_id"), "left_semi")
+        .select(col("member_id").as("doc_id")).distinct()
+      val admitted = batch.join(rejected, Seq("doc_id"), "left_anti")
+        .localCheckpoint(true)
+      // the probe already signed the whole batch map-side — the append
+      // reuses those signatures restricted to the admitted docs instead
+      // of re-signing (r18; semi-join against the checkpointed admitted
+      // set, so the rejected-set subquery is not re-evaluated either)
+      appendToBandIndex(dir, admitted, Some(parts.signedSig
+        .join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi")))
+      admitted
+    }
 
   /** The MinHash band flow's SIGNATURE COLLAPSE (r12 verdict #7 — the
     * [[HammingBands.pairs]] mechanism applied to the LSH family): group
@@ -2251,27 +2106,23 @@ object Dedup {
       .foldLeft(0)(math.max)
   }
 
-  private def labelsIntentPath(labelsDir: String) =
-    new org.apache.hadoop.fs.Path(labelsDir, "_INTENT")
+  /** The labels directory's [[IndexDir]] kind: a torn label verb (a
+    * crashed [[ingestWithLabels]] may have appended the batch to the
+    * index without committing its labels) is repaired by
+    * [[buildBandLabels]] — labels are DERIVED state, so a rebuild from
+    * the index is always available, the compaction recovery property. */
+  private val LabelsDir = IndexDir.Kind("labels", "graft.ops.Dedup.buildBandLabels")
 
   /** The current (doc_id, lbl) label table. Fails fast when a torn
-    * [[ingestWithLabels]] left its intent marker — the labels may then
-    * lag the index by one batch, and the recovery verb is
-    * [[buildBandLabels]] (labels are DERIVED state: a rebuild from the
-    * index is always available, the compaction recovery property). */
-  def readBandLabels(s: SparkSession, labelsDir: String): DataFrame = {
-    val fs = labelsIntentPath(labelsDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    require(!fs.exists(labelsIntentPath(labelsDir)),
-      s"labels under '$labelsDir' have a pending ingest intent (a " +
-        "crashed ingestWithLabels may have appended the batch to the " +
-        "index without committing its labels) — rebuild with " +
-        "graft.ops.Dedup.buildBandLabels")
-    val v = latestLabelsVersion(s, labelsDir)
-    require(v > 0,
-      s"no committed labels under '$labelsDir' — run buildBandLabels")
-    s.read.schema(labelsSchema).parquet(s"$labelsDir/v$v")
-  }
+    * label verb left its intent marker — the labels may then lag the
+    * index by one batch. */
+  def readBandLabels(s: SparkSession, labelsDir: String): DataFrame =
+    LabelsDir.read(s, labelsDir, "readBandLabels") {
+      val v = latestLabelsVersion(s, labelsDir)
+      require(v > 0,
+        s"no committed labels under '$labelsDir' — run buildBandLabels")
+      s.read.schema(labelsSchema).parquet(s"$labelsDir/v$v")
+    }
 
   /** Committed label versions kept by [[writeBandLabels]]' retention
     * sweep (r14 verdict #4): labels have no as-of contract — only the
@@ -2359,8 +2210,7 @@ object Dedup {
     def restrict(df: DataFrame): DataFrame =
       onlyGids.fold(df)(g => df.join(g, Seq("gid"), "left_semi"))
     val members = restrict(s.read.schema(membersSchema).parquet(s"$dir/members"))
-    val live = tombstonesOf(s, dir).fold(members)(t =>
-      members.join(broadcast(t), Seq("doc_id"), "left_anti"))
+    val live = IndexDir.withoutTombstones(s, dir, members, "doc_id")
     val groups = s.read.schema(groupsSchema).parquet(s"$dir/groups")
     val realG = restrict(groups.filter(col("mh0").isNotNull))
     val liveReal = live.join(realG.select(col("gid")), Seq("gid"), "left_semi")
@@ -2402,17 +2252,15 @@ object Dedup {
     * [[ccClusters]] contract: singletons are their own trivial
     * cluster by omission). */
   def buildBandLabels(s: SparkSession, dir: String, labelsDir: String,
-      minMatch: Int = 8): DataFrame = {
-    IndexIntent.assertClean(s, dir, "graft.ops.Dedup.compactBandIndex")
-    assertBandFormat(s, dir, "buildBandLabels")
-    val labels = connectedComponents(indexSelfEdges(s, dir, minMatch))
-      .localCheckpoint(true)
-    writeBandLabels(labels, labelsDir)
-    val fs = labelsIntentPath(labelsDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(labelsIntentPath(labelsDir), false)
-    labels
-  }
+      minMatch: Int = 8): DataFrame =
+    BandDir.read(s, dir, "buildBandLabels") {
+      LabelsDir.repair(s, labelsDir, "buildBandLabels") {
+        val labels = connectedComponents(indexSelfEdges(s, dir, minMatch))
+          .localCheckpoint(true)
+        writeBandLabels(labels, labelsDir)
+        labels
+      }
+    }
 
   /** CLUSTER-MAINTAINING ingestion — the 100 TB deployment path for
     * near-dup cluster labels: index the batch AND bring the persisted
@@ -2462,8 +2310,13 @@ object Dedup {
       rebuildFraction: Option[Double] = None): DataFrame = {
     val rebuildFrac = graft.DispatchConf(s, "spark.graft.labels.")
       .double("rebuildFraction", LabelRebuildFraction, rebuildFraction)
-    IndexIntent.assertClean(s, dir, "graft.ops.Dedup.compactBandIndex")
-    assertBandFormat(s, dir, "ingestWithLabels")
+    BandDir.read(s, dir, "ingestWithLabels") {
+      labelsIngest(s, dir, labelsDir, batch, minMatch, rebuildFrac)
+    }
+  }
+
+  private def labelsIngest(s: SparkSession, dir: String, labelsDir: String,
+      batch: DataFrame, minMatch: Int, rebuildFrac: Double): DataFrame = {
     val oldLabels = readBandLabels(s, labelsDir)
     val parts = probeParts(s, dir, batch, minMatch,
       sig = s.read.schema(sigSchema).parquet(s"$dir/sig"),
@@ -2472,10 +2325,6 @@ object Dedup {
       hot = s.read.schema(hotSchema).parquet(s"$dir/hot"))
     val rmin = parts.liveMembers.groupBy(col("gid"))
       .agg(min(col("doc_id")).as("rep"))
-    val fs = labelsIntentPath(labelsDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(labelsDir)))
-      fs.mkdirs(new org.apache.hadoop.fs.Path(labelsDir))
     // touched-fraction dispatch (r14 verdict #2): when the batch's
     // evidence touches most of the labeled corpus, the incremental
     // merge costs MORE than re-solving from the grown index — fall
@@ -2514,9 +2363,10 @@ object Dedup {
       System.err.println(s"[dedup] ingestWithLabels: batch touches " +
         s"$nTouched/$nOld labeled docs (≥ $rebuildFrac) — " +
         "dispatching to full buildBandLabels rebuild")
-      fs.create(labelsIntentPath(labelsDir), true).close()
-      appendToBandIndex(dir, batch, Some(parts.signedSig))
-      return buildBandLabels(s, dir, labelsDir, minMatch)
+      return LabelsDir.mutate(s, labelsDir, "ingestWithLabels") {
+        appendToBandIndex(dir, batch, Some(parts.signedSig))
+        buildBandLabels(s, dir, labelsDir, minMatch)
+      }
     }
     // cross edges, materialized and re-wrapped constraint-free — a
     // constraint-bearing LogicalRDD inside the downstream unions trips
@@ -2592,62 +2442,62 @@ object Dedup {
     // merge FIRST (against the pre-append index state the edges were
     // computed from), materialized before the index mutates
     val labels = incrementalCC(oldLabels, newEdges).localCheckpoint(true)
-    fs.create(labelsIntentPath(labelsDir), true).close()
-    // the probe already signed the batch — reuse (see ingestIntoBandIndex)
-    val heatedKeys = appendToBandIndex(dir, batch, Some(parts.signedSig))
-    val heated = heatedKeys.collect()
-    // cold→hot flip repair (r15 advice, medium — the mirror of
-    // deleteWithLabels' cooled-bucket extension): a band value this
-    // append pushed over the cap leaves [[indexSelfEdges]] on the
-    // GROWN index, REMOVING candidate edges between the groups that
-    // shared it — edges the pre-append labels (and this batch's merge)
-    // legitimately used. The incremental merge's connectivity is a
-    // SUPERSET of the grown-index rebuild's (every rebuild candidate
-    // passes a stage above: grown-cold ⊆ pre-append-cold), so every
-    // rebuild component lies inside one merged component and the only
-    // components that can differ are those with a member in a newly-hot
-    // band value — re-solve exactly those against the grown index and
-    // carry the rest forward verbatim, the deleteWithLabels splice.
-    // Bounded: heated ≤ the band values this batch touched.
-    val finalLabels =
-      if (heated.isEmpty) labels
-      else {
-        System.err.println(s"[dedup] ingestWithLabels: batch heats " +
-          s"${heated.length} band value(s) over the cap — re-solving " +
-          "their components against the grown index (rebuild-route " +
-          "alignment)")
-        val heatedDf = broadcast(s.createDataFrame(
-          java.util.Arrays.asList(heated: _*), heatedKeys.schema))
-        val nBuckets = readBandMeta(s, dir)._1
-        val heatBuckets = heated
-          .map(r => math.floorMod(r.getLong(1), nBuckets.toLong).toInt)
-          .distinct.toSeq
-        val gids = s.read.schema(bandsSchema).parquet(s"$dir/bands")
-          .filter(col("bucket").isin(heatBuckets: _*))
-          .join(heatedDf, Seq("bi", "bv"), "left_semi")
-          .select(col("gid")).distinct().localCheckpoint(true)
-        val heatedDocs = s.read.schema(membersSchema).parquet(s"$dir/members")
-          .join(gids, Seq("gid"), "left_semi").select(col("doc_id"))
-        val touchedLbl = labels
-          .join(heatedDocs, Seq("doc_id"), "left_semi")
-          .select(col("lbl")).distinct().localCheckpoint(true)
-        val touchedDocs = labels.join(touchedLbl, Seq("lbl"))
-          .select(col("doc_id"))
-        val memberGids = s.read.schema(membersSchema).parquet(s"$dir/members")
-          .join(touchedDocs, Seq("doc_id"), "left_semi")
-          .select(col("gid"))
-        val touchedGids = memberGids.unionAll(gids)
-          .distinct().localCheckpoint(true)
-        val solved = connectedComponents(
-          indexSelfEdges(s, dir, minMatch, Some(touchedGids)))
-        labels.join(touchedLbl, Seq("lbl"), "left_anti")
-          .select(col("doc_id"), col("lbl"))
-          .unionAll(solved)
-          .localCheckpoint(true)
-      }
-    writeBandLabels(finalLabels, labelsDir)
-    fs.delete(labelsIntentPath(labelsDir), false)
-    finalLabels
+    LabelsDir.mutate(s, labelsDir, "ingestWithLabels") {
+      // the probe already signed the batch — reuse (see ingestIntoBandIndex)
+      val heatedKeys = appendToBandIndex(dir, batch, Some(parts.signedSig))
+      val heated = heatedKeys.collect()
+      // cold→hot flip repair (r15 advice, medium — the mirror of
+      // deleteWithLabels' cooled-bucket extension): a band value this
+      // append pushed over the cap leaves [[indexSelfEdges]] on the
+      // GROWN index, REMOVING candidate edges between the groups that
+      // shared it — edges the pre-append labels (and this batch's merge)
+      // legitimately used. The incremental merge's connectivity is a
+      // SUPERSET of the grown-index rebuild's (every rebuild candidate
+      // passes a stage above: grown-cold ⊆ pre-append-cold), so every
+      // rebuild component lies inside one merged component and the only
+      // components that can differ are those with a member in a newly-hot
+      // band value — re-solve exactly those against the grown index and
+      // carry the rest forward verbatim, the deleteWithLabels splice.
+      // Bounded: heated ≤ the band values this batch touched.
+      val finalLabels =
+        if (heated.isEmpty) labels
+        else {
+          System.err.println(s"[dedup] ingestWithLabels: batch heats " +
+            s"${heated.length} band value(s) over the cap — re-solving " +
+            "their components against the grown index (rebuild-route " +
+            "alignment)")
+          val heatedDf = broadcast(s.createDataFrame(
+            java.util.Arrays.asList(heated: _*), heatedKeys.schema))
+          val nBuckets = readBandMeta(s, dir)._1
+          val heatBuckets = heated
+            .map(r => math.floorMod(r.getLong(1), nBuckets.toLong).toInt)
+            .distinct.toSeq
+          val gids = s.read.schema(bandsSchema).parquet(s"$dir/bands")
+            .filter(col("bucket").isin(heatBuckets: _*))
+            .join(heatedDf, Seq("bi", "bv"), "left_semi")
+            .select(col("gid")).distinct().localCheckpoint(true)
+          val heatedDocs = s.read.schema(membersSchema).parquet(s"$dir/members")
+            .join(gids, Seq("gid"), "left_semi").select(col("doc_id"))
+          val touchedLbl = labels
+            .join(heatedDocs, Seq("doc_id"), "left_semi")
+            .select(col("lbl")).distinct().localCheckpoint(true)
+          val touchedDocs = labels.join(touchedLbl, Seq("lbl"))
+            .select(col("doc_id"))
+          val memberGids = s.read.schema(membersSchema).parquet(s"$dir/members")
+            .join(touchedDocs, Seq("doc_id"), "left_semi")
+            .select(col("gid"))
+          val touchedGids = memberGids.unionAll(gids)
+            .distinct().localCheckpoint(true)
+          val solved = connectedComponents(
+            indexSelfEdges(s, dir, minMatch, Some(touchedGids)))
+          labels.join(touchedLbl, Seq("lbl"), "left_anti")
+            .select(col("doc_id"), col("lbl"))
+            .unionAll(solved)
+            .localCheckpoint(true)
+        }
+      writeBandLabels(finalLabels, labelsDir)
+      finalLabels
+    }
   }
 
   /** DELETE-aware incremental label maintenance (r13 verdict #3 — the
@@ -2699,8 +2549,13 @@ object Dedup {
       rebuildFraction: Option[Double] = None): DataFrame = {
     val rebuildFrac = graft.DispatchConf(s, "spark.graft.labels.")
       .double("rebuildFraction", LabelRebuildFraction, rebuildFraction)
-    IndexIntent.assertClean(s, dir, "graft.ops.Dedup.compactBandIndex")
-    assertBandFormat(s, dir, "deleteWithLabels")
+    BandDir.read(s, dir, "deleteWithLabels") {
+      labelsDelete(s, dir, labelsDir, deletedDocs, minMatch, rebuildFrac)
+    }
+  }
+
+  private def labelsDelete(s: SparkSession, dir: String, labelsDir: String,
+      deletedDocs: DataFrame, minMatch: Int, rebuildFrac: Double): DataFrame = {
     val oldLabels = readBandLabels(s, labelsDir)
     // the delete verb re-signs the batch for group-count maintenance,
     // so the full (doc_id, text) rows ride through, not just ids
@@ -2708,70 +2563,69 @@ object Dedup {
     val touchedDel = oldLabels
       .join(del.select(col("doc_id")).distinct(), Seq("doc_id"))
       .select(col("lbl")).distinct().localCheckpoint(true)
-    val fs = labelsIntentPath(labelsDir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.create(labelsIntentPath(labelsDir), true).close()
-    val cooled = deleteFromBandIndex(dir, del)
-    // hot→cold flip repair (r14 advice): a bucket the delete dropped
-    // to ≤ cap leaves the hot list, and the lifted exclusion ADDS
-    // candidate edges between the groups sharing it — so those groups
-    // (and the components their docs belonged to) are touched as well,
-    // even when no deleted doc was anywhere near them. Bounded: the
-    // cooled list ≤ the hot list, and the bucket prefilter keeps the
-    // bands read partition-pruned.
-    val (touched, extraGids) =
-      if (cooled.isEmpty) (touchedDel, None)
-      else {
-        val nBuckets = readBandMeta(s, dir)._1
-        val coolBuckets = cooled.collect()
-          .map(r => (math.floorMod(r.getLong(1), nBuckets.toLong)).toInt)
-          .distinct.toSeq
-        val gids = s.read.schema(bandsSchema).parquet(s"$dir/bands")
-          .filter(col("bucket").isin(coolBuckets: _*))
-          .join(broadcast(cooled), Seq("bi", "bv"), "left_semi")
-          .select(col("gid")).distinct().localCheckpoint(true)
-        val cooledDocs = s.read.schema(membersSchema).parquet(s"$dir/members")
-          .join(gids, Seq("gid"), "left_semi").select(col("doc_id"))
-        val cooledLbls = oldLabels
-          .join(cooledDocs, Seq("doc_id"), "left_semi")
-          .select(col("lbl")).distinct()
-        (touchedDel.unionAll(cooledLbls).distinct().localCheckpoint(true),
-          Some(gids))
+    LabelsDir.mutate(s, labelsDir, "deleteWithLabels") {
+      val cooled = deleteFromBandIndex(dir, del)
+      // hot→cold flip repair (r14 advice): a bucket the delete dropped
+      // to ≤ cap leaves the hot list, and the lifted exclusion ADDS
+      // candidate edges between the groups sharing it — so those groups
+      // (and the components their docs belonged to) are touched as well,
+      // even when no deleted doc was anywhere near them. Bounded: the
+      // cooled list ≤ the hot list, and the bucket prefilter keeps the
+      // bands read partition-pruned.
+      val (touched, extraGids) =
+        if (cooled.isEmpty) (touchedDel, None)
+        else {
+          val nBuckets = readBandMeta(s, dir)._1
+          val coolBuckets = cooled.collect()
+            .map(r => (math.floorMod(r.getLong(1), nBuckets.toLong)).toInt)
+            .distinct.toSeq
+          val gids = s.read.schema(bandsSchema).parquet(s"$dir/bands")
+            .filter(col("bucket").isin(coolBuckets: _*))
+            .join(broadcast(cooled), Seq("bi", "bv"), "left_semi")
+            .select(col("gid")).distinct().localCheckpoint(true)
+          val cooledDocs = s.read.schema(membersSchema).parquet(s"$dir/members")
+            .join(gids, Seq("gid"), "left_semi").select(col("doc_id"))
+          val cooledLbls = oldLabels
+            .join(cooledDocs, Seq("doc_id"), "left_semi")
+            .select(col("lbl")).distinct()
+          (touchedDel.unionAll(cooledLbls).distinct().localCheckpoint(true),
+            Some(gids))
+        }
+      // members of the touched components (deleted docs included — their
+      // groups need a live-rep re-derivation), mapped to signature groups
+      val touchedDocs = oldLabels.join(touched, Seq("lbl"))
+        .select(col("doc_id"))
+      val memberGids = s.read.schema(membersSchema).parquet(s"$dir/members")
+        .join(touchedDocs, Seq("doc_id"), "left_semi")
+        .select(col("gid"))
+      val touchedGids = extraGids.fold(memberGids)(memberGids.unionAll)
+        .distinct().localCheckpoint(true)
+      // touched-fraction dispatch (r14 verdict #2) — see ingestWithLabels;
+      // the labels intent marker is already up, and buildBandLabels (the
+      // recovery verb) clears it on commit, so the crash contract holds
+      // on either route. A fraction > 1.0 is the explicit opt-out
+      // (touchedGids ⊆ groups makes dispatch impossible): skip both
+      // count jobs outright (r15 advice).
+      val skipDispatch = rebuildFrac > 1.0
+      val nTouchedG = if (skipDispatch) 0L else touchedGids.count()
+      val nGroups =
+        if (skipDispatch) 0L else s.read.schema(groupsSchema).parquet(s"$dir/groups").count()
+      if (nGroups > 0L && nTouchedG >= rebuildFrac * nGroups) {
+        System.err.println(s"[dedup] deleteWithLabels: delete touches " +
+          s"$nTouchedG/$nGroups signature groups (≥ $rebuildFrac) — " +
+          "dispatching to full buildBandLabels rebuild")
+        buildBandLabels(s, dir, labelsDir, minMatch)
+      } else {
+        val solved = connectedComponents(
+          indexSelfEdges(s, dir, minMatch, Some(touchedGids)))
+        val labels = oldLabels.join(touched, Seq("lbl"), "left_anti")
+          .select(col("doc_id"), col("lbl"))
+          .unionAll(solved)
+          .localCheckpoint(true)
+        writeBandLabels(labels, labelsDir)
+        labels
       }
-    // members of the touched components (deleted docs included — their
-    // groups need a live-rep re-derivation), mapped to signature groups
-    val touchedDocs = oldLabels.join(touched, Seq("lbl"))
-      .select(col("doc_id"))
-    val memberGids = s.read.schema(membersSchema).parquet(s"$dir/members")
-      .join(touchedDocs, Seq("doc_id"), "left_semi")
-      .select(col("gid"))
-    val touchedGids = extraGids.fold(memberGids)(memberGids.unionAll)
-      .distinct().localCheckpoint(true)
-    // touched-fraction dispatch (r14 verdict #2) — see ingestWithLabels;
-    // the labels intent marker is already up, and buildBandLabels (the
-    // recovery verb) clears it on commit, so the crash contract holds
-    // on either route. A fraction > 1.0 is the explicit opt-out
-    // (touchedGids ⊆ groups makes dispatch impossible): skip both
-    // count jobs outright (r15 advice).
-    val skipDispatch = rebuildFrac > 1.0
-    val nTouchedG = if (skipDispatch) 0L else touchedGids.count()
-    val nGroups =
-      if (skipDispatch) 0L else s.read.schema(groupsSchema).parquet(s"$dir/groups").count()
-    if (nGroups > 0L && nTouchedG >= rebuildFrac * nGroups) {
-      System.err.println(s"[dedup] deleteWithLabels: delete touches " +
-        s"$nTouchedG/$nGroups signature groups (≥ $rebuildFrac) — " +
-        "dispatching to full buildBandLabels rebuild")
-      return buildBandLabels(s, dir, labelsDir, minMatch)
     }
-    val solved = connectedComponents(
-      indexSelfEdges(s, dir, minMatch, Some(touchedGids)))
-    val labels = oldLabels.join(touched, Seq("lbl"), "left_anti")
-      .select(col("doc_id"), col("lbl"))
-      .unionAll(solved)
-      .localCheckpoint(true)
-    writeBandLabels(labels, labelsDir)
-    fs.delete(labelsIntentPath(labelsDir), false)
-    labels
   }
 
   /** Staging dir for [[ingestLabels]] — per-fixture and per-process,

@@ -1696,65 +1696,29 @@ object Similarity {
       .select(col("vec_id"), col("v"), col("nrm"), col("cid").as("cell"))
   }
 
-  /** Arithmetic-convention tag persisted as `_FORMAT` in every IVF
-    * index directory. Bumped whenever a change makes previously
-    * persisted per-vector values incompatible with the live engine —
-    * r11: stored norms moved from the raw fp sum to the 1e6-scaled
-    * quantized convention ([[prepared]]), so a pre-r11 index probed
-    * under r11 arithmetic would score rawcos ~1e6× off and silently
-    * reject every ingest (review catch). Every lifecycle verb and
-    * probe asserts the tag and fails fast with a rebuild instruction
-    * instead. */
-  private val IvfFormatTag = "graft-ivf v2 nrm=pico-quantized"
-  private def ivfFormatPath(dir: String) =
-    new org.apache.hadoop.fs.Path(dir, "_FORMAT")
-  /** Write the index format file: the arithmetic-convention tag plus
-    * the QUANTIZER the build trained (`stride` or `kmeans<iters>`,
-    * r11 verdict #3) — a persisted index must advertise which coarse
-    * quantizer its centroids came from, both for operators (is this
-    * index refined?) and so a future quantizer-SENSITIVE verb can
-    * assert against it. Default `stride` keeps hand-built test
-    * directories on the historical meaning. */
-  private[ops] def writeIvfFormat(s: SparkSession, dir: String,
-      quantizer: String = "stride"): Unit = {
-    val p = ivfFormatPath(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(s"$IvfFormatTag quantizer=$quantizer".getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Parse + assert the format file, returning the recorded quantizer.
-    * COMPATIBILITY is by component: the arithmetic convention must
-    * match [[IvfFormatTag]] exactly (mis-scaled norms are silent data
-    * corruption); the quantizer component is returned to the verb —
-    * every current verb (append/compact/probe/as-of) reads centroids
-    * back from the directory and is therefore correct under EITHER
-    * quantizer, so none rejects on it, but each now knows what it is
-    * operating on. A tag without the component is a pre-r12 index:
-    * quantizer `stride` (the only build path that existed). */
-  private def assertIvfFormat(s: SparkSession, dir: String,
-      verb: String): String = {
-    val p = ivfFormatPath(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tag =
-      if (!fs.exists(p)) "ABSENT (pre-r11 index, raw-fp norms)"
-      else {
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      }
-    val (arith, quantizer) = tag.indexOf(" quantizer=") match {
-      case -1 => (tag, "stride")
-      case i  => (tag.substring(0, i), tag.substring(i + " quantizer=".length))
-    }
-    require(arith == IvfFormatTag,
-      s"$verb on '$dir': index format '$arith' != engine's '$IvfFormatTag' " +
-        "— persisted norms follow a different arithmetic convention and " +
+  /** The IVF index's [[IndexDir]] kind. Its arithmetic-convention tag
+    * (`_FORMAT`) is bumped whenever a change makes previously persisted
+    * per-vector values incompatible with the live engine — r11: stored
+    * norms moved from the raw fp sum to the 1e6-scaled quantized
+    * convention ([[prepared]]), so a pre-r11 index probed under r11
+    * arithmetic would score rawcos ~1e6× off and silently reject every
+    * ingest. Every lifecycle verb and probe asserts the
+    * tag and fails fast with a rebuild instruction instead. The tag
+    * also records the QUANTIZER the build trained (`stride` or
+    * `kmeans<iters>`, r11 verdict #3) — an index advertises which coarse
+    * quantizer its centroids came from. Every verb reads centroids back
+    * from the directory and is correct under either quantizer, so none
+    * rejects on it; a tag without the component is a pre-r12 index,
+    * quantizer `stride` (the only build path that existed, and the
+    * default for hand-built test directories). */
+  private[ops] val IvfDir = IndexDir.Kind("ivf",
+    "graft.ops.Similarity.compactIvfIndex", build = Some("saveIvfIndex"),
+    format = Some(IndexDir.Format("graft-ivf v2 nrm=pico-quantized",
+      "index format", "ABSENT (pre-r11 index, raw-fp norms)",
+      "persisted norms follow a different arithmetic convention and " +
         "every cosine against them would be silently mis-scaled; rebuild " +
-        "the directory with saveIvfIndex")
-    quantizer
-  }
+        "the directory with saveIvfIndex",
+      param = Some("quantizer" -> "stride"))))
 
   /** Build (or rebuild) a persisted IVF index. The coarse quantizer
     * follows the SAME dispatch as the transient query path
@@ -1771,35 +1735,35 @@ object Similarity {
       kmeansItersPin: Option[Int] = None): Unit = {
     val iters = graft.DispatchConf(prep.sparkSession, "spark.graft.ivf.")
       .int("kmeansIters", 0, kmeansItersPin)
-    // a rebuild is a RECOVERY verb ([[IndexIntent]]): it overwrites
+    // a rebuild is a RECOVERY verb ([[IndexDir]]): it overwrites
     // every component, so a torn directory is tolerated and repaired
-    IndexIntent.beginRepair(prep.sparkSession, dir, "saveIvfIndex")
-    // the convention tag goes FIRST: everything this verb writes is v2
-    // arithmetic, and tagging last left a crash window where the
-    // half-built directory's advertised recovery verb
-    // ([[compactIvfIndex]]) dead-ended on its own format assertion
-    // with a misleading "pre-r11 index" diagnostic (r11 review). A
-    // crash mid-BUILD is still best recovered by re-running
-    // saveIvfIndex itself — only the build has the source rows.
-    writeIvfFormat(prep.sparkSession, dir,
-      if (iters > 0) s"kmeans$iters" else "stride")
-    // a rebuild starts a fresh lifecycle: drop any tombstone log left
-    // by deletes against a previous index in this directory
-    Dedup.clearTombstones(prep.sparkSession, dir)
-    val cent =
-      if (iters > 0) kmeansCentroids(prep, nlist, iters)
-      else {
-        val stride = ivfStride(prep.count(), nlist)
-        prep.filter(col("vec_id") % stride === 0)
-          .select(col("vec_id").as("cid"), col("v").as("cv"))
-      }
-    cent.write.mode("overwrite").parquet(s"$dir/centroids")
-    assignToCells(prep, cent)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/corpus")
-    // a rebuild starts snapshot history over: v1 = the full build
-    clearIvfSnapshots(prep.sparkSession, dir)
-    commitIvfSnapshot(prep.sparkSession, dir)
-    IndexIntent.end(prep.sparkSession, dir)
+    IvfDir.repair(prep.sparkSession, dir, "saveIvfIndex") {
+      // the convention tag goes FIRST: everything this verb writes is v2
+      // arithmetic, and tagging last left a crash window where the
+      // half-built directory's advertised recovery verb
+      // ([[compactIvfIndex]]) dead-ended on its own format assertion
+      // with a misleading "pre-r11 index" diagnostic (r11). A
+      // crash mid-BUILD is still best recovered by re-running
+      // saveIvfIndex itself — only the build has the source rows.
+      IvfDir.writeFormat(prep.sparkSession, dir,
+        Some(if (iters > 0) s"kmeans$iters" else "stride"))
+      // a rebuild starts a fresh lifecycle: drop any tombstone log left
+      // by deletes against a previous index in this directory
+      IndexDir.clearTombstones(prep.sparkSession, dir)
+      val cent =
+        if (iters > 0) kmeansCentroids(prep, nlist, iters)
+        else {
+          val stride = ivfStride(prep.count(), nlist)
+          prep.filter(col("vec_id") % stride === 0)
+            .select(col("vec_id").as("cid"), col("v").as("cv"))
+        }
+      cent.write.mode("overwrite").parquet(s"$dir/centroids")
+      assignToCells(prep, cent)
+        .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/corpus")
+      // a rebuild starts snapshot history over: v1 = the full build
+      IndexDir.clear(prep.sparkSession, dir)
+      IndexDir.commit(prep.sparkSession, dir, IvfSnapshot)()
+    }
   }
 
   /** INCREMENTAL maintenance for a [[saveIvfIndex]] directory (r7,
@@ -1824,16 +1788,14 @@ object Similarity {
   def appendToIvfIndex(dir: String, batch: DataFrame): Unit = {
     val spark = batch.sparkSession
     // two writes (corpus append + snapshot commit) — the intent marker
-    // makes a crash between them detectable ([[IndexIntent]]): without
+    // makes a crash between them detectable ([[IndexDir]]): without
     // it, as-of(latest) would silently lag the live corpus
-    assertIvfFormat(spark, dir, "appendToIvfIndex")
-    IndexIntent.begin(spark, dir, "appendToIvfIndex",
-      "graft.ops.Similarity.compactIvfIndex")
-    val cent = spark.read.parquet(s"$dir/centroids")
-    assignToCells(batch, cent).localCheckpoint(true)
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/corpus")
-    commitIvfSnapshot(spark, dir)
-    IndexIntent.end(spark, dir)
+    IvfDir.mutate(spark, dir, "appendToIvfIndex") {
+      val cent = spark.read.parquet(s"$dir/centroids")
+      assignToCells(batch, cent).localCheckpoint(true)
+        .write.mode("append").partitionBy("cell").parquet(s"$dir/corpus")
+      IndexDir.commit(spark, dir, IvfSnapshot)()
+    }
   }
 
   /** The DELETE verb of the IVF-index lifecycle (build / append /
@@ -1849,100 +1811,55 @@ object Similarity {
     * under the frozen centroids). [[compactIvfIndex]] purges the rows
     * physically and clears the log. The log is bounded by deletions
     * since the last compaction and broadcasts. Callers delete indexed
-    * vec_ids once — the mirror of the append contract. */
+    * vec_ids once — the mirror of the append contract. Like every
+    * mutating verb it refuses a torn directory and holds the marker
+    * while it writes, which keeps the single-writer rule. */
   def deleteFromIvfIndex(dir: String, vecIds: DataFrame): Unit =
-    // single FS mutation = single commit point (the parquet job commit
-    // is the atomic rename) — the one lifecycle verb that needs no
-    // intent marker: a crash mid-job leaves only uncommitted temp files
-    {
-      assertIvfFormat(vecIds.sparkSession, dir, "deleteFromIvfIndex")
-      vecIds.select(col("vec_id"))
-        .write.mode("append").parquet(s"$dir/tombstones")
+    IvfDir.mutate(vecIds.sparkSession, dir, "deleteFromIvfIndex") {
+      IndexDir.appendTombstones(vecIds.select(col("vec_id")), dir)
     }
 
   /** Compact a [[saveIvfIndex]] directory after an append run
     * ([[appendToIvfIndex]] adds one file per batch per touched cell):
     * rewrites `corpus` to one file per cell partition via tmp-dir +
-    * rename swap ([[IndexCompaction]]) — row-identical, probe-before ≡
+    * rename swap ([[IndexDir.rewrite]]) — row-identical, probe-before ≡
     * probe-after suite-pinned. The centroid table is a single tiny
     * file and never fragments. If deletes are pending
     * ([[deleteFromIvfIndex]]), the rewrite purges the tombstoned rows
     * and clears the log — the physical half of the delete verb,
     * amortized into the pass that touches the files anyway. Offline
     * maintenance: run between ingestion rounds. */
-  def compactIvfIndex(s: SparkSession, dir: String): Unit = {
-    // VERB-AWARE recovery (r11 review): compaction restores invariants
-    // FROM the raw cell rows, so it can repair a torn append/delete —
-    // but a build that died mid-flight may have left the rows
-    // themselves incomplete (or, worse, a pre-r11 directory it was
-    // about to overwrite), and "compacting" those would bless
-    // corrupt data with a clean marker and a fresh snapshot. Only the
-    // build has the source rows; refuse and say so.
-    IndexIntent.pending(s, dir).filter(_ == "saveIvfIndex").foreach { _ =>
-      throw new IllegalStateException(
-        s"index at $dir is a build ('saveIvfIndex') that did not " +
-        "complete — its cell rows may be missing or from the directory " +
-        "being overwritten, so compaction cannot restore them. Re-run " +
-        "saveIvfIndex (it repairs torn directories) instead.")
-    }
-    assertIvfFormat(s, dir, "compactIvfIndex")
+  def compactIvfIndex(s: SparkSession, dir: String): Unit =
     // compaction is the IVF recovery verb: the cell rows are the raw
     // facts and this rewrites them (minus tombstones) and restarts the
-    // snapshot log — everything a torn append left suspect
-    IndexIntent.beginRepair(s, dir, "compactIvfIndex")
-    val ts = Dedup.tombstonesOf(s, dir).map(t =>
-      t.select(col("vec_id")).distinct().localCheckpoint(true))
-    IndexCompaction.rewrite(s, s"$dir/corpus", Some("cell"), 1,
-      df => ts.fold(df)(t => df.join(broadcast(t), Seq("vec_id"), "left_anti")))
-    ts.foreach(t => t.limit(0).write.mode("overwrite")
-      .parquet(s"$dir/tombstones"))
-    // compaction rewrote the cell files old manifests point at —
-    // history expires to a fresh v1 over the compacted state
-    clearIvfSnapshots(s, dir)
-    commitIvfSnapshot(s, dir)
-    IndexIntent.end(s, dir)
-  }
+    // snapshot log — everything a torn append left suspect. A torn
+    // BUILD is refused on entry (r11): it may have left the rows
+    // themselves incomplete, or be mid-overwrite of a pre-r11 directory,
+    // and "compacting" those would bless corrupt data with a clean
+    // marker and a fresh snapshot — only the build has the source rows.
+    IvfDir.repair(s, dir, "compactIvfIndex") {
+      IndexDir.purgeTombstones(s, dir, "vec_id") { purge =>
+        IndexDir.rewrite(s, s"$dir/corpus", Some("cell"), 1, purge)
+      }
+      // compaction rewrote the cell files old manifests point at —
+      // history expires to a fresh v1 over the compacted state
+      IndexDir.clear(s, dir)
+      IndexDir.commit(s, dir, IvfSnapshot)()
+    }
 
-  /** Top-k cosine against a [[saveIvfIndex]] directory. Queries are
-    * `prepared` rows; each probes its `nprobe` nearest centroids. */
   // ------------------------------------------- IVF-index snapshots --
 
   /** Committed snapshot versions of an IVF index, oldest first (FS
     * metadata — the band-index convention, [[Dedup.bandIndexVersions]]). */
-  def ivfIndexVersions(s: SparkSession, dir: String): Seq[Int] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/manifests")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".txt"))
-      .map(_.stripPrefix("v").stripSuffix(".txt").toInt).sorted
-  }
+  def ivfIndexVersions(s: SparkSession, dir: String): Seq[Int] = IndexDir.versions(s, dir)
 
-  /** Commit an IVF-index snapshot: one FS text manifest over the
-    * append-only `corpus` cell files plus the frozen `centroids` file
-    * — SIMPLER than the band index's ([[Dedup]] keeps keyed count
-    * state and needs immutable deltas; IVF cell rows are pure
-    * per-vector facts under a frozen quantizer, so the file list IS
-    * the whole state). Metadata-class cost: no Spark job. */
-  private def commitIvfSnapshot(s: SparkSession, dir: String): Int = {
-    val version = ivfIndexVersions(s, dir).lastOption.getOrElse(0) + 1
-    val lines =
-      Dedup.listParquetFiles(s, dir, "centroids").map("centroids\t" + _) ++
-        Dedup.listParquetFiles(s, dir, "corpus").map("corpus\t" + _)
-    val mpath = new org.apache.hadoop.fs.Path(s"$dir/manifests")
-    val fs = mpath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(mpath)
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$dir/manifests/v$version.txt"), true)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    version
-  }
-
-  private def clearIvfSnapshots(s: SparkSession, dir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/manifests")
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-  }
+  /** What an IVF-index snapshot lists: the frozen `centroids` file plus
+    * the append-only `corpus` cell files — SIMPLER than the band index's
+    * ([[Dedup]] keeps keyed count state and needs immutable deltas; IVF
+    * cell rows are pure per-vector facts under a frozen quantizer, so
+    * the file list IS the whole state). Metadata-class cost: no Spark
+    * job. */
+  private val IvfSnapshot = Seq("centroids", "corpus")
 
   /** TIME-TRAVEL probe: [[topKFromIvfIndex]] against the index AS OF a
     * committed snapshot version — reads only the manifest's files
@@ -1950,34 +1867,19 @@ object Similarity {
     * every view (deletion wins over history); compaction/rebuild
     * expires history to a fresh v1. */
   def topKFromIvfIndexAsOf(s: SparkSession, dir: String, queries: DataFrame,
-      k: Int, version: Int, nprobe: Int = 2): DataFrame = {
-    assertIvfFormat(s, dir, "topKFromIvfIndexAsOf")
-    IndexIntent.assertClean(s, dir, "graft.ops.Similarity.compactIvfIndex")
-    require(ivfIndexVersions(s, dir).contains(version),
-      s"no committed snapshot v$version under $dir (compaction expires history)")
-    val mpath = new org.apache.hadoop.fs.Path(s"$dir/manifests/v$version.txt")
-    val fs = mpath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val manifest = {
-      val in = fs.open(mpath)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(_.nonEmpty).map { line =>
-          val Array(component, file) = line.split("\t", 2)
-          component -> file
-        }.toSeq
-      finally in.close()
+      k: Int, version: Int, nprobe: Int = 2): DataFrame =
+    IvfDir.read(s, dir, "topKFromIvfIndexAsOf") {
+      val files = IndexDir.manifest(s, dir, version)
+      topKAgainst(s, dir, queries, k, nprobe,
+        cent = s.read.parquet(files("centroids"): _*),
+        corpus0 = s.read.option("basePath", s"$dir/corpus")
+          .parquet(files("corpus"): _*))
     }
-    def files(component: String): Seq[String] =
-      manifest.collect { case (c, f) if c == component => f }
-    topKAgainst(s, dir, queries, k, nprobe,
-      cent = s.read.parquet(files("centroids"): _*),
-      corpus0 = s.read.option("basePath", s"$dir/corpus")
-        .parquet(files("corpus"): _*))
-  }
 
+  /** Top-k cosine against a [[saveIvfIndex]] directory. Queries are
+    * `prepared` rows; each probes its `nprobe` nearest centroids. */
   def topKFromIvfIndex(s: SparkSession, dir: String, queries: DataFrame,
-      k: Int, nprobe: Int = 2): DataFrame = {
-    assertIvfFormat(s, dir, "topKFromIvfIndex")
-    IndexIntent.assertClean(s, dir, "graft.ops.Similarity.compactIvfIndex")
+      k: Int, nprobe: Int = 2): DataFrame = IvfDir.read(s, dir, "topKFromIvfIndex") {
     topKAgainst(s, dir, queries, k, nprobe,
       cent = s.read.parquet(s"$dir/centroids"),
       corpus0 = s.read.parquet(s"$dir/corpus"))
@@ -1991,8 +1893,7 @@ object Similarity {
     // pending logical deletes (bounded by deletions since the last
     // compaction) are anti-joined off the corpus side: a tombstoned
     // vector stops ranking immediately, its purge waits for compaction
-    val corpus = Dedup.tombstonesOf(s, dir).fold(corpus0)(t =>
-      corpus0.join(broadcast(t.select(col("vec_id"))), Seq("vec_id"), "left_anti"))
+    val corpus = IndexDir.withoutTombstones(s, dir, corpus0, "vec_id")
     val byDist = Window.partitionBy(col("query_id"))
       .orderBy(col("d"), col("cid"))
     val probes = queries
@@ -2306,32 +2207,33 @@ object Similarity {
     * `cut`, APPEND the survivors ([[appendToIvfIndex]]) so the next
     * round probes against them too. Returns the admitted rows. */
   def ingestIntoIvfIndex(s: SparkSession, dir: String, batch: DataFrame,
-      cut: Double = 0.99, nprobe: Int = IvfNprobe): DataFrame = {
-    // PROBE-SIDE COLLAPSE (r12, the Hamming-band pattern applied to the
-    // vector side — sim_ingest_grow ran 39.6× at the r11 10×
-    // densification fixture): a duplicate-flooded batch probes the same
-    // cells with c identical vectors for one bit of information each.
-    // The admit/reject verdict is a pure function of the VECTOR — cell
-    // assignment, cosine, and the >= cut test all derive from v alone,
-    // and the probe's self-exclusion (query_id != vec_id) never fires
-    // because batch ids are not yet indexed (the append contract) — so
-    // ONE representative per distinct vector probes and members inherit
-    // its verdict. Exact, and the cell join's probe side now scales
-    // with DISTINCT batch vectors.
-    val gmap = graft.InternalCaches.pinEager(batch
-      .withColumn("__rep",
-        min(col("vec_id")).over(Window.partitionBy(col("v")))))
-    val reps = gmap.filter(col("vec_id") === col("__rep")).drop("__rep")
-    val rejectedReps = topKFromIvfIndex(s, dir, reps, k = 1, nprobe = nprobe)
-      .filter(col("cos") >= cut)
-      .select(col("query_id").as("__rep"))
-    val rejected = gmap.join(rejectedReps, Seq("__rep"))
-      .select(col("vec_id"))
-    val admitted = batch.join(rejected, Seq("vec_id"), "left_anti")
-      .localCheckpoint(true)
-    appendToIvfIndex(dir, admitted)
-    admitted
-  }
+      cut: Double = 0.99, nprobe: Int = IvfNprobe): DataFrame =
+    IvfDir.read(s, dir, "ingestIntoIvfIndex") {
+      // PROBE-SIDE COLLAPSE (r12, the Hamming-band pattern applied to the
+      // vector side — sim_ingest_grow ran 39.6× at the r11 10×
+      // densification fixture): a duplicate-flooded batch probes the same
+      // cells with c identical vectors for one bit of information each.
+      // The admit/reject verdict is a pure function of the VECTOR — cell
+      // assignment, cosine, and the >= cut test all derive from v alone,
+      // and the probe's self-exclusion (query_id != vec_id) never fires
+      // because batch ids are not yet indexed (the append contract) — so
+      // ONE representative per distinct vector probes and members inherit
+      // its verdict. Exact, and the cell join's probe side now scales
+      // with DISTINCT batch vectors.
+      val gmap = graft.InternalCaches.pinEager(batch
+        .withColumn("__rep",
+          min(col("vec_id")).over(Window.partitionBy(col("v")))))
+      val reps = gmap.filter(col("vec_id") === col("__rep")).drop("__rep")
+      val rejectedReps = topKFromIvfIndex(s, dir, reps, k = 1, nprobe = nprobe)
+        .filter(col("cos") >= cut)
+        .select(col("query_id").as("__rep"))
+      val rejected = gmap.join(rejectedReps, Seq("__rep"))
+        .select(col("vec_id"))
+      val admitted = batch.join(rejected, Seq("vec_id"), "left_anti")
+        .localCheckpoint(true)
+      appendToIvfIndex(dir, admitted)
+      admitted
+    }
 
   /** SELF-GROWING embedding-ingestion dedup — [[Dedup.ingestGrow]]'s
     * contract on the VECTOR side, completing the lifecycle symmetry:

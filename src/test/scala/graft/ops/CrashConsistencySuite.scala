@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 /** CRASH-INJECTION pins for the persisted-index lifecycle (r10,
   * verdict #2): a lifecycle verb is several FS mutations with no
-  * cross-file atomicity, so the [[IndexIntent]] write-ahead marker must
+  * cross-file atomicity, so the [[IndexDir]] write-ahead marker must
   * (a) survive any mid-verb crash — including the old silent window
   * between the live counts/hot mutation and the snapshot manifest
   * commit — (b) make every probe and every new verb REFUSE the torn
@@ -43,7 +43,7 @@ class CrashConsistencySuite extends SparkSessionSuite {
     Dedup.saveBandIndex(a, dir)
     Dedup.appendToBandIndex(dir, b)
     // the clean path leaves no marker behind
-    IndexIntent.pending(s, dir) shouldBe None
+    IndexDir.pending(s, dir) shouldBe None
 
     // RECONSTRUCT THE CRASH WINDOW for an append of c: run the verb for
     // real, then roll the on-disk state back to "live counts/hot
@@ -54,7 +54,7 @@ class CrashConsistencySuite extends SparkSessionSuite {
     val v = Dedup.bandIndexVersions(s, dir).last
     delete(s"$dir/manifests/v$v.txt")
     delete(s"$dir/count_deltas/version=$v")
-    IndexIntent.beginRepair(s, dir, "appendToBandIndex")
+    IndexDir.beginRepair(s, dir, "appendToBandIndex")
 
     // detection: probes and further verbs refuse the torn directory
     val e1 = intercept[IllegalStateException] {
@@ -79,7 +79,7 @@ class CrashConsistencySuite extends SparkSessionSuite {
     // the rows that survived (a ∪ b ∪ c: the append's row writes
     // completed before the simulated kill)
     Dedup.compactBandIndex(s, dir)
-    IndexIntent.pending(s, dir) shouldBe None
+    IndexDir.pending(s, dir) shouldBe None
     val dirFull = Files.createTempDirectory("bandcrashfull").toString
     Dedup.saveBandIndex(docs, dirFull)
     val recovered = canon(Dedup.probeBandIndex(s, dir, probeBatch))
@@ -108,7 +108,7 @@ class CrashConsistencySuite extends SparkSessionSuite {
     // killing the verb with rows appended but derived state untouched
     delete(s"$dir/counts")
     intercept[Exception] { Dedup.appendToBandIndex(dir, b) }
-    IndexIntent.pending(s, dir) shouldBe Some("appendToBandIndex")
+    IndexDir.pending(s, dir) shouldBe Some("appendToBandIndex")
     intercept[IllegalStateException] {
       Dedup.probeBandIndex(s, dir, probeBatch)
     }
@@ -117,7 +117,7 @@ class CrashConsistencySuite extends SparkSessionSuite {
     // survive — the appends completed before the injected failure), so
     // the recovered index is the from-scratch index over a ∪ b
     Dedup.compactBandIndex(s, dir)
-    IndexIntent.pending(s, dir) shouldBe None
+    IndexDir.pending(s, dir) shouldBe None
     val dirFull = Files.createTempDirectory("bandmidfull").toString
     Dedup.saveBandIndex(docs.filter(col("doc_id") < 400), dirFull)
     val recovered = canon(Dedup.probeBandIndex(s, dir, probeBatch))
@@ -137,13 +137,13 @@ class CrashConsistencySuite extends SparkSessionSuite {
     val dir = Files.createTempDirectory("ivfcrash").toString
     Similarity.saveIvfIndex(a, dir)
     Similarity.appendToIvfIndex(dir, b)
-    IndexIntent.pending(s, dir) shouldBe None
+    IndexDir.pending(s, dir) shouldBe None
     val live = canon(Similarity.topKFromIvfIndex(s, dir, queries, k = 5))
 
     // the crash window: corpus rows appended, snapshot not committed
     val v = Similarity.ivfIndexVersions(s, dir).last
     delete(s"$dir/manifests/v$v.txt")
-    IndexIntent.beginRepair(s, dir, "appendToIvfIndex")
+    IndexDir.beginRepair(s, dir, "appendToIvfIndex")
 
     val e = intercept[IllegalStateException] {
       Similarity.topKFromIvfIndex(s, dir, queries, k = 5)
@@ -158,7 +158,7 @@ class CrashConsistencySuite extends SparkSessionSuite {
     // rows all survive; compaction re-lays them out and restarts the
     // snapshot log), as-of(latest) ≡ live restored
     Similarity.compactIvfIndex(s, dir)
-    IndexIntent.pending(s, dir) shouldBe None
+    IndexDir.pending(s, dir) shouldBe None
     val recovered = canon(Similarity.topKFromIvfIndex(s, dir, queries, k = 5))
     recovered shouldBe live
     recovered.nonEmpty shouldBe true
@@ -184,7 +184,7 @@ class CrashConsistencySuite extends SparkSessionSuite {
     val dir = Files.createTempDirectory("ivfbuildcrash").toString
     Similarity.saveIvfIndex(prep, dir)
     val live = canon(Similarity.topKFromIvfIndex(s, dir, queries, k = 5))
-    IndexIntent.beginRepair(s, dir, "saveIvfIndex") // crash: marker stays
+    IndexDir.beginRepair(s, dir, "saveIvfIndex") // crash: marker stays
     val e = intercept[IllegalStateException] {
       Similarity.topKFromIvfIndex(s, dir, queries, k = 5)
     }
@@ -200,10 +200,10 @@ class CrashConsistencySuite extends SparkSessionSuite {
     // format tag, no data yet): re-running the build — the documented
     // mid-build recovery, only the build has the source rows — succeeds
     val dir2 = Files.createTempDirectory("ivfbuildcrash2").toString
-    IndexIntent.beginRepair(s, dir2, "saveIvfIndex")
-    Similarity.writeIvfFormat(s, dir2)
+    IndexDir.beginRepair(s, dir2, "saveIvfIndex")
+    Similarity.IvfDir.writeFormat(s, dir2)
     Similarity.saveIvfIndex(prep, dir2)
-    IndexIntent.pending(s, dir2) shouldBe None
+    IndexDir.pending(s, dir2) shouldBe None
     canon(Similarity.topKFromIvfIndex(s, dir2, queries, k = 5)) shouldBe live
   }
 
@@ -262,11 +262,11 @@ class CrashConsistencySuite extends SparkSessionSuite {
       .select(col("doc_id"), col("text"))
     val dir = Files.createTempDirectory("linecrash").toString
     Dedup.saveLineIndex(docs, dir)
-    IndexIntent.pending(s, dir) shouldBe None
+    IndexDir.pending(s, dir) shouldBe None
     val clean = canon(Dedup.probeLineIndex(s, dir, docs.limit(50)))
 
     // simulate a killed appendToLineIndex (its merge is the only state)
-    IndexIntent.beginRepair(s, dir, "appendToLineIndex")
+    IndexDir.beginRepair(s, dir, "appendToLineIndex")
     val e = intercept[IllegalStateException] {
       Dedup.probeLineIndex(s, dir, docs.limit(50))
     }
@@ -281,7 +281,7 @@ class CrashConsistencySuite extends SparkSessionSuite {
 
     // the line index's recovery verb is the full rebuild
     Dedup.saveLineIndex(docs, dir)
-    IndexIntent.pending(s, dir) shouldBe None
+    IndexDir.pending(s, dir) shouldBe None
     canon(Dedup.probeLineIndex(s, dir, docs.limit(50))) shouldBe clean
   }
 
@@ -362,7 +362,7 @@ class CrashConsistencySuite extends SparkSessionSuite {
       new Thread(() => {
         barrier.await()
         outcomes.add(
-          try Right(IndexIntent.begin(s, dir, s"verb$i", "compactBandIndex"))
+          try Right(IndexDir.begin(s, dir, s"verb$i", "compactBandIndex"))
           catch { case t: Throwable => Left(t) })
       })
     }
@@ -384,10 +384,229 @@ class CrashConsistencySuite extends SparkSessionSuite {
       }
     }
     // the winner's verb completes normally; the directory is reusable
-    IndexIntent.end(s, dir)
-    IndexIntent.pending(s, dir) shouldBe None
-    IndexIntent.begin(s, dir, "after", "compactBandIndex")
-    IndexIntent.pending(s, dir) shouldBe Some("after")
-    IndexIntent.end(s, dir)
+    IndexDir.end(s, dir)
+    IndexDir.pending(s, dir) shouldBe None
+    IndexDir.begin(s, dir, "after", "compactBandIndex")
+    IndexDir.pending(s, dir) shouldBe Some("after")
+    IndexDir.end(s, dir)
+  }
+
+  /** What a kill between [[IndexDir.rewrite]]'s two swap renames
+    * leaves: the fully written compacted copy in `X.compact-tmp`, the
+    * pre-compaction files in `X.compact-old`, and no `X`. */
+  private def tearSwap(component: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val src = new org.apache.hadoop.fs.Path(component)
+    val fs = src.getFileSystem(conf)
+    org.apache.hadoop.fs.FileUtil.copy(fs, src, fs,
+      new org.apache.hadoop.fs.Path(component + ".compact-tmp"), false, conf) shouldBe true
+    fs.rename(src, new org.apache.hadoop.fs.Path(component + ".compact-old")) shouldBe true
+  }
+
+  private def exists(path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  /** One index kind of the table-driven marker test: a clean directory
+    * whose marker lives in `markerDir`, the verb whose crash is planted,
+    * the kind's probe and mutating verbs, and its recovery verb. */
+  private case class KindCase(kind: String, markerDir: String,
+      planted: String, recovery: String, probe: () => Any,
+      verbs: Seq[(String, () => Any)], recover: () => Any)
+
+  test("every index kind: a planted marker refuses the probe and every " +
+      "mutating verb, naming the dead verb and the recovery verb, and " +
+      "the recovery verb clears it") {
+    val s = spark
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val docs = graft.Tables.documents(s, sfDir)
+      .select(col("doc_id"), col("text")).localCheckpoint(true)
+    val base = docs.filter(col("doc_id") < 300)
+    val extra = docs.filter(col("doc_id") >= 300 && col("doc_id") < 310)
+    val probeBatch = Dedup.incomingLshBatch(base)
+    val prep = Similarity.prepared(graft.Tables.embeddings(s, sfDir))
+      .localCheckpoint(true)
+    val vecs = prep.filter(col("vec_id") < 1500)
+    val moreVecs = prep.filter(col("vec_id") >= 1500 && col("vec_id") < 1510)
+    val queries = prep.filter(col("vec_id") % 100 === 0)
+
+    val lineDir = Files.createTempDirectory("kindline").toString
+    Dedup.saveLineIndex(base, lineDir)
+    val bandDir = Files.createTempDirectory("kindband").toString
+    Dedup.saveBandIndex(base, bandDir)
+    val ivfDir = Files.createTempDirectory("kindivf").toString
+    Similarity.saveIvfIndex(vecs, ivfDir)
+    val lblIndex = Files.createTempDirectory("kindlblidx").toString
+    val lblDir = Files.createTempDirectory("kindlbl").toString + "/labels"
+    Dedup.saveBandIndex(base, lblIndex)
+    Dedup.buildBandLabels(s, lblIndex, lblDir)
+
+    val cases = Seq(
+      KindCase("line", lineDir, "appendToLineIndex", "saveLineIndex",
+        () => Dedup.probeLineIndex(s, lineDir, base.limit(20)),
+        Seq("appendToLineIndex" -> (() => Dedup.appendToLineIndex(lineDir, extra)),
+          "deleteFromLineIndex" -> (() => Dedup.deleteFromLineIndex(lineDir, base.limit(1))),
+          "compactLineIndex" -> (() => Dedup.compactLineIndex(s, lineDir))),
+        () => Dedup.saveLineIndex(base, lineDir)),
+      KindCase("band", bandDir, "deleteFromBandIndex", "compactBandIndex",
+        () => Dedup.probeBandIndex(s, bandDir, probeBatch),
+        Seq("appendToBandIndex" -> (() => Dedup.appendToBandIndex(bandDir, extra)),
+          "deleteFromBandIndex" -> (() => Dedup.deleteFromBandIndex(bandDir, base.limit(1))),
+          "ingestIntoBandIndex" -> (() => Dedup.ingestIntoBandIndex(s, bandDir, extra))),
+        () => Dedup.compactBandIndex(s, bandDir)),
+      KindCase("ivf", ivfDir, "appendToIvfIndex", "compactIvfIndex",
+        () => Similarity.topKFromIvfIndex(s, ivfDir, queries, k = 5),
+        Seq("appendToIvfIndex" -> (() => Similarity.appendToIvfIndex(ivfDir, moreVecs)),
+          "deleteFromIvfIndex" -> (() => Similarity.deleteFromIvfIndex(ivfDir, vecs.limit(1))),
+          "ingestIntoIvfIndex" -> (() => Similarity.ingestIntoIvfIndex(s, ivfDir, moreVecs))),
+        () => Similarity.compactIvfIndex(s, ivfDir)),
+      KindCase("labels", lblDir, "ingestWithLabels", "buildBandLabels",
+        () => Dedup.readBandLabels(s, lblDir),
+        Seq("ingestWithLabels" -> (() => Dedup.ingestWithLabels(s, lblIndex, lblDir, extra)),
+          "deleteWithLabels" -> (() => Dedup.deleteWithLabels(s, lblIndex, lblDir, base.limit(1)))),
+        () => Dedup.buildBandLabels(s, lblIndex, lblDir)))
+
+    cases.foreach { c =>
+      IndexDir.pending(s, c.markerDir) shouldBe None
+      IndexDir.beginRepair(s, c.markerDir, c.planted)
+      (("probe" -> c.probe) +: c.verbs).foreach { case (verb, run) =>
+        withClue(s"${c.kind} $verb: ") {
+          val e = intercept[IllegalStateException](run())
+          e.getMessage should include(c.planted)
+          e.getMessage should include(c.recovery)
+        }
+      }
+      c.recover()
+      withClue(s"${c.kind}: ") { IndexDir.pending(s, c.markerDir) shouldBe None }
+      c.probe()
+    }
+    canon(Dedup.probeLineIndex(s, lineDir, base.limit(20))).nonEmpty shouldBe true
+    canon(Dedup.readBandLabels(s, lblDir)).nonEmpty shouldBe true
+  }
+
+  test("mutating and recovery verbs name their jobs index.<kind>.<verb>") {
+    val s = spark
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val docs = graft.Tables.documents(s, sfDir)
+      .select(col("doc_id"), col("text"))
+    val dir = Files.createTempDirectory("bandphase").toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(seen.add)
+    }
+    s.sparkContext.addSparkListener(listener)
+    try {
+      Dedup.saveBandIndex(docs.filter(col("doc_id") < 300), dir)
+      Dedup.appendToBandIndex(dir, docs.filter(col("doc_id") >= 300))
+      graft.Phase("marker")(s.range(1).collect())
+      val deadline = System.currentTimeMillis + 10000
+      while (!seen.contains("marker") && System.currentTimeMillis < deadline)
+        Thread.sleep(50)
+    } finally s.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val descs = seen.asScala.toSet
+    descs should contain("index.band.saveBandIndex")
+    descs should contain("index.band.appendToBandIndex")
+  }
+
+  test("band compaction completes a swap torn between its two renames") {
+    val s = spark
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val docs = graft.Tables.documents(s, sfDir)
+      .select(col("doc_id"), col("text"))
+    val probeBatch = Dedup.incomingLshBatch(docs)
+    val dir = Files.createTempDirectory("bandswap").toString
+    Dedup.saveBandIndex(docs.filter(col("doc_id") < 300), dir)
+    Dedup.appendToBandIndex(dir, docs.filter(col("doc_id") >= 300))
+    val before = canon(Dedup.probeBandIndex(s, dir, probeBatch))
+    before.nonEmpty shouldBe true
+
+    tearSwap(s"$dir/sig")
+    IndexDir.beginRepair(s, dir, "compactBandIndex")
+    Dedup.compactBandIndex(s, dir)
+    IndexDir.pending(s, dir) shouldBe None
+    exists(s"$dir/sig.compact-tmp") shouldBe false
+    exists(s"$dir/sig.compact-old") shouldBe false
+    canon(Dedup.probeBandIndex(s, dir, probeBatch)) shouldBe before
+  }
+
+  test("IVF compaction completes a swap torn between its two renames") {
+    val s = spark
+    val prep = Similarity.prepared(graft.Tables.embeddings(s, sfDir))
+      .localCheckpoint(true)
+    val queries = prep.filter(col("vec_id") % 100 === 0)
+    val dir = Files.createTempDirectory("ivfswap").toString
+    Similarity.saveIvfIndex(prep.filter(col("vec_id") < 1500), dir)
+    Similarity.appendToIvfIndex(dir, prep.filter(col("vec_id") >= 1500))
+    val before = canon(Similarity.topKFromIvfIndex(s, dir, queries, k = 5))
+    before.nonEmpty shouldBe true
+
+    tearSwap(s"$dir/corpus")
+    IndexDir.beginRepair(s, dir, "compactIvfIndex")
+    Similarity.compactIvfIndex(s, dir)
+    IndexDir.pending(s, dir) shouldBe None
+    exists(s"$dir/corpus.compact-tmp") shouldBe false
+    canon(Similarity.topKFromIvfIndex(s, dir, queries, k = 5)) shouldBe before
+    canon(Similarity.topKFromIvfIndexAsOf(s, dir, queries, k = 5,
+      Similarity.ivfIndexVersions(s, dir).last)) shouldBe before
+  }
+
+  test("band compaction of a pre-v2 directory fails on the format and " +
+      "leaves no marker behind") {
+    val s = spark
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val docs = graft.Tables.documents(s, sfDir)
+      .select(col("doc_id"), col("text"))
+    val dir = Files.createTempDirectory("bandv1").toString
+    Dedup.saveBandIndex(docs.filter(col("doc_id") < 300), dir)
+    delete(s"$dir/_FORMAT") // the v1 layout carried no tag
+    val e = intercept[IllegalArgumentException] { Dedup.compactBandIndex(s, dir) }
+    e.getMessage should include("pre-r13")
+    e.getMessage should include("saveBandIndex")
+    IndexDir.pending(s, dir) shouldBe None
+    // later verbs still name the real fix, not a stray compaction marker
+    val e2 = intercept[IllegalArgumentException] {
+      Dedup.appendToBandIndex(dir, docs.filter(col("doc_id") >= 300))
+    }
+    e2.getMessage should include("saveBandIndex")
+    IndexDir.pending(s, dir) shouldBe None
+  }
+
+  test("band compaction refuses a torn build; the rebuild repairs it") {
+    val s = spark
+    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val docs = graft.Tables.documents(s, sfDir)
+      .select(col("doc_id"), col("text"))
+    val a = docs.filter(col("doc_id") < 300)
+    val probeBatch = Dedup.incomingLshBatch(docs)
+    val dir = Files.createTempDirectory("bandbuildcrash").toString
+    Dedup.saveBandIndex(a, dir)
+    val clean = canon(Dedup.probeBandIndex(s, dir, probeBatch))
+    IndexDir.beginRepair(s, dir, "saveBandIndex") // crash: marker stays
+    val e = intercept[IllegalStateException] { Dedup.compactBandIndex(s, dir) }
+    e.getMessage should include("saveBandIndex")
+    IndexDir.pending(s, dir) shouldBe Some("saveBandIndex")
+    Dedup.saveBandIndex(a, dir)
+    IndexDir.pending(s, dir) shouldBe None
+    canon(Dedup.probeBandIndex(s, dir, probeBatch)) shouldBe clean
+  }
+
+  test("IVF delete refuses a torn directory") {
+    val s = spark
+    val prep = Similarity.prepared(graft.Tables.embeddings(s, sfDir))
+      .localCheckpoint(true)
+    val dir = Files.createTempDirectory("ivfdelcrash").toString
+    Similarity.saveIvfIndex(prep, dir)
+    IndexDir.beginRepair(s, dir, "appendToIvfIndex")
+    val e = intercept[IllegalStateException] {
+      Similarity.deleteFromIvfIndex(dir, prep.limit(3))
+    }
+    e.getMessage should include("appendToIvfIndex")
+    e.getMessage should include("compactIvfIndex")
+    exists(s"$dir/tombstones") shouldBe false
+    IndexDir.pending(s, dir) shouldBe Some("appendToIvfIndex")
   }
 }

@@ -670,7 +670,7 @@ class IndexMaintenanceSuite extends SparkSessionSuite {
     s.read.parquet(s"$dir/corpus")
       .join(del.select(col("vec_id")), Seq("vec_id"), "left_anti")
       .write.partitionBy("cell").parquet(s"$dirTruth/corpus")
-    Similarity.writeIvfFormat(s, dirTruth) // hand-built from a current-convention index
+    Similarity.IvfDir.writeFormat(s, dirTruth) // hand-built from a current-convention index
     afterDel shouldBe top(dirTruth)
     afterDel.length should be > 20
     afterDel should not be full // deletions promoted new neighbors
@@ -797,7 +797,7 @@ class IndexMaintenanceSuite extends SparkSessionSuite {
 
     // torn ingest: marker present → readers fail fast with the verb
     Files.createFile(Paths.get(s"$root/labels/_INTENT"))
-    val e = intercept[IllegalArgumentException] {
+    val e = intercept[IllegalStateException] {
       Dedup.readBandLabels(s, s"$root/labels")
     }
     e.getMessage should include("buildBandLabels")

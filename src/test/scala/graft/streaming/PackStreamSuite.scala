@@ -151,7 +151,7 @@ class PackStreamSuite extends SparkSessionSuite {
     val viewM1 = latestBelow(maxEpoch + 1) // the next committed epoch
 
     // a compaction that died holding its marker wedges the stream
-    graft.ops.IndexIntent.beginRepair(s, s"$base/state.lifecycle",
+    graft.ops.IndexDir.beginRepair(s, s"$base/state.lifecycle",
       "compactPackState")
     val wedged = intercept[IllegalStateException] {
       EventStreams.packDocsStream(s, in, s"$base/ckpt", s"$base/state",
