@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The ONE read-conf-with-pin-override shape shared by every runtime
   * dispatcher in the engine (as-of skew rescue `spark.graft.asof.skew.*`,
-  * cosine range auto-route `spark.graft.sim.range.auto.*`, IVF quantizer
-  * `spark.graft.ivf.*`, and the Hamming-band auto-routes this round adds)
+  * cosine range auto-route `spark.graft.sim.range.auto.*`, the
+  * Hamming-band auto-routes `spark.graft.hamming.auto.*`, and the
+  * reliable-pin switch `spark.graft.pin.reliable`)
   * — previously each dispatcher hand-rolled its own `conf.get(prefix+k,
   * dflt)` + optional-pin dance (r11 verdict #7).
   *

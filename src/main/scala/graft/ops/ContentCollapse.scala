@@ -37,7 +37,6 @@ import org.apache.spark.sql.functions._
   *     stakes of a stale entry would only be plan choice anyway (both
   *     routes are exact — the collapse-invariance contract), but the
   *     fingerprint holds the stronger freshness property regardless.
-  *     Opt out per session with `spark.graft.collapse.statsCache=false`.
   */
 private[graft] object ContentCollapse {
 
@@ -182,9 +181,6 @@ private[graft] object ContentCollapse {
         .head()
       (r.getLong(0), r.getLong(1))
     }
-    val cacheOn = graft.DispatchConf(s, "spark.graft.collapse.")
-      .bool("statsCache", dflt = true)
-    if (!cacheOn) return compute()
     inputFingerprint(df) match {
       case None => compute()
       case Some(fp) =>

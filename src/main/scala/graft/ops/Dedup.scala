@@ -2171,17 +2171,12 @@ object Dedup {
     // (the just-written v$v has _SUCCESS, so at least one readable
     // version always survives — a torn dir was never readable, and a
     // torn dir's number is always latest+1 under the single-writer
-    // contract, so the NEXT commit's overwrite reclaims it). Deployment
-    // knob `spark.graft.labels.keepVersions` (the [[graft.DispatchConf]]
-    // surface); clamped ≥ 1 so a zero conf can never leave the dir
-    // unreadable.
-    val keep = math.max(1, graft.DispatchConf(s, "spark.graft.labels.")
-      .int("keepVersions", LabelsKeepVersions))
+    // contract, so the NEXT commit's overwrite reclaims it).
     val p = new org.apache.hadoop.fs.Path(labelsDir)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     fs.listStatus(p).foreach { st =>
       val n = st.getPath.getName
-      if (n.matches("v\\d+") && n.drop(1).toInt <= v - keep)
+      if (n.matches("v\\d+") && n.drop(1).toInt <= v - LabelsKeepVersions)
         fs.delete(st.getPath, true)
     }
   }
@@ -2299,19 +2294,15 @@ object Dedup {
     * where every batch doc extends one giant cluster). The verbs are
     * route-invariant to the rebuild by contract, so the dispatch is
     * free correctness-wise and caps the worst case at rebuild cost
-    * (+ one labels-sized count job for the fraction itself).
-    * Deployment knob: `spark.graft.labels.rebuildFraction` (the
-    * [[graft.DispatchConf]] surface); an explicit argument pins it
-    * per the engine's pin rule. */
+    * (+ one labels-sized count job for the fraction itself). The
+    * default of the verbs' `rebuildFraction` argument. */
   private[ops] val LabelRebuildFraction = 0.4
 
   def ingestWithLabels(s: SparkSession, dir: String, labelsDir: String,
       batch: DataFrame, minMatch: Int = 8,
-      rebuildFraction: Option[Double] = None): DataFrame = {
-    val rebuildFrac = graft.DispatchConf(s, "spark.graft.labels.")
-      .double("rebuildFraction", LabelRebuildFraction, rebuildFraction)
+      rebuildFraction: Double = LabelRebuildFraction): DataFrame = {
     BandDir.read(s, dir, "ingestWithLabels") {
-      labelsIngest(s, dir, labelsDir, batch, minMatch, rebuildFrac)
+      labelsIngest(s, dir, labelsDir, batch, minMatch, rebuildFraction)
     }
   }
 
@@ -2546,11 +2537,9 @@ object Dedup {
     * and [[buildBandLabels]] re-derives, labels being derived state. */
   def deleteWithLabels(s: SparkSession, dir: String, labelsDir: String,
       deletedDocs: DataFrame, minMatch: Int = 8,
-      rebuildFraction: Option[Double] = None): DataFrame = {
-    val rebuildFrac = graft.DispatchConf(s, "spark.graft.labels.")
-      .double("rebuildFraction", LabelRebuildFraction, rebuildFraction)
+      rebuildFraction: Double = LabelRebuildFraction): DataFrame = {
     BandDir.read(s, dir, "deleteWithLabels") {
-      labelsDelete(s, dir, labelsDir, deletedDocs, minMatch, rebuildFrac)
+      labelsDelete(s, dir, labelsDir, deletedDocs, minMatch, rebuildFraction)
     }
   }
 
@@ -3009,7 +2998,7 @@ object Dedup {
     * invariant tests. Output: (vec_id, v, nrm, cell). */
   private[graft] def semanticAssign(prep: DataFrame,
       nlist: Int = Similarity.IvfNlist): DataFrame =
-    Similarity.rankedCellsAuto(prep, nlist, upTo = 1)
+    Similarity.rankedCells(prep, nlist, upTo = 1)
       .select(col("vec_id"), col("v"), col("nrm"), col("cid").as("cell"))
 
   /** Maximum vectors a cell may hold and still enter [[semanticDedup]]'s

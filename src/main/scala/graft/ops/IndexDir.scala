@@ -165,11 +165,15 @@ private[graft] object IndexDir {
     catch { case _: java.io.FileNotFoundException => None }
   }
 
-  /** Refuses a directory whose previous lifecycle verb never completed. */
+  /** Refuses a directory whose previous lifecycle verb never completed.
+    * An empty marker (left by a writer that died between creating it
+    * and naming its verb, or by a label verb older than this module)
+    * reads as an unnamed verb. */
   def assertClean(s: SparkSession, dir: String, recovery: String): Unit =
     pending(s, dir).foreach { verb =>
+      val what = if (verb.isEmpty) "lifecycle verb" else s"'$verb'"
       throw new IllegalStateException(
-        s"index at $dir is suspect: a previous '$verb' did not complete " +
+        s"index at $dir is suspect: a previous $what did not complete " +
         s"(crash left $dir/_INTENT behind), so its derived state and " +
         s"snapshot log may disagree with its rows. Run $recovery to " +
         "restore every invariant from the raw index rows, then retry.")

@@ -913,13 +913,13 @@ object Pipeline {
     * forced broadcast (r11 verdict #4: `broadcast(boff)` at 10^10 docs
     * forced ~2.4 GB past the broadcast threshold) — the planner
     * broadcasts it while it is small and shuffle-joins it when it is
-    * not; both levels are conf-tunable (`spark.graft.pack.bucket`,
-    * `spark.graft.pack.superFactor`). The OUTPUT is bucket-invariant
-    * (st/en are the same global offsets at any width), so the widths
-    * are plumbing knobs, never semantics — the oracle states the
-    * offsets with the default widths and stays green at any engine
-    * setting. The corpus shuffles once (hash on bucket, with map-side
-    * partial windows bounded at `bucket` rows). Everything is exact
+    * not; the two widths are [[PackBucket]] and [[PackSuperFactor]].
+    * The OUTPUT is bucket-invariant (st/en are the same global offsets
+    * at any width), so the widths are plumbing, never semantics — the
+    * oracle states the offsets with the same widths, and
+    * [[hierarchicalOffsets]] is swept over others by its suite. The
+    * corpus shuffles once (hash on bucket, with map-side partial
+    * windows bounded at `bucket` rows). Everything is exact
     * integer arithmetic — counts, cumulative sums, DIV/greatest/least
     * span clipping — so the assignment is bit-identical on any engine,
     * any partitioning, any cluster size. */
@@ -1000,13 +1000,10 @@ object Pipeline {
       |    THEN 1 ELSE 0 END AS BIGINT) AS is_split
       |FROM asg
       |ORDER BY seq_id, doc_id""".stripMargin) { (s, d) =>
-    val knobs = graft.DispatchConf(s, "spark.graft.pack.")
-    val bucket = knobs.long("bucket", PackBucket)
-    val superF = knobs.long("superFactor", PackSuperFactor)
     val q = Tables.documents(s, d).select(col("doc_id"),
       (size(split(col("text"), " ")) + 1).cast("long").as("n_tokens"),
-      expr(s"CAST(doc_id DIV $bucket AS BIGINT)").as("bkt"))
-    val pos = hierarchicalOffsets(q, superF)
+      expr(s"CAST(doc_id DIV $PackBucket AS BIGINT)").as("bkt"))
+    val pos = hierarchicalOffsets(q, PackSuperFactor)
     pos
       .select(col("doc_id"), col("n_tokens"), col("st"), col("en"),
         explode(expr(s"sequence(st DIV $PackBudget, (en - 1) DIV $PackBudget)"))

@@ -731,8 +731,7 @@ object Similarity {
       histogram: Option[DataFrame] = None): RangeDispatchDecision = {
     // Pins beat the session conf — the rule is now centralized in
     // [[graft.DispatchConf]] (r11 verdict #7), shared with the as-of
-    // skew dispatch, the IVF quantizer conf, and the Hamming-band
-    // dispatchers.
+    // skew dispatch and the Hamming-band dispatchers.
     val knobs = graft.DispatchConf(prep.sparkSession, RangeAutoPrefix)
     val minVec = knobs.long("minLshVectors", 4096L, minLshVectors)
     val sharePct = knobs.int("sharePct", 90, sharePctPin)
@@ -1065,24 +1064,16 @@ object Similarity {
     * follow via their shared CTE block. */
   private[graft] def rankedCells(prep: DataFrame, nlist: Int,
       upTo: Int): DataFrame =
-    rankedCellsWithCentroids(prep, ivfCentroidTable(prep, nlist), upTo)
+    rankedCellsWithCentroids(prep, strideCentroids(prep, nlist), upTo)
 
-  /** Centroid table for the flat quantizer: the [[ivfStride]] picks by
-    * default; Lloyd-refined ([[kmeansCentroids]]) when the session conf
-    * `spark.graft.ivf.kmeansIters` is a positive iteration count — the
-    * deployment switch for clustered corpora where refined centroids
-    * balance the cells (fewer over-full cells ⇒ fewer candidates per
-    * probe at equal recall). Defaults to 0 so every stride-pinned
-    * oracle is untouched. */
-  private def ivfCentroidTable(prep: DataFrame, nlist: Int): DataFrame = {
-    val iters = graft.DispatchConf(prep.sparkSession, "spark.graft.ivf.")
-      .int("kmeansIters", 0)
-    if (iters > 0) kmeansCentroids(prep, nlist, iters)
-    else {
-      val stride = ivfStride(prep.count(), nlist)
-      prep.filter(col("vec_id") % stride === 0)
-        .select(col("vec_id").as("cid"), col("v").as("cv"))
-    }
+  /** The [[ivfStride]] centroid picks as (cid, cv): every stride-th
+    * prep vector, cid = its vec_id. The one cell vocabulary of the
+    * flat, two-level and persisted quantizers and the init of
+    * [[kmeansCentroids]]; each caller checkpoints it as it needs. */
+  private def strideCentroids(prep: DataFrame, nlist: Int): DataFrame = {
+    val stride = ivfStride(prep.count(), nlist)
+    prep.filter(col("vec_id") % stride === 0)
+      .select(col("vec_id").as("cid"), col("v").as("cv"))
   }
 
   /** [[rankedCells]] against an explicit (cid, cv) centroid relation. */
@@ -1126,14 +1117,11 @@ object Similarity {
     * APPROXIMATE by the standard IVF trade: the true nearest fine
     * centroid is found iff its group is probed — exact on clustered
     * corpora (suite-pinned two-level ≡ flat there), near-exact on
-    * unstructured ones. Select per call, or per session via the conf
-    * `spark.graft.ivf.twoLevel=true` ([[rankedCellsAuto]]); the
-    * DEFAULT stays flat so every oracle-checked query is untouched. */
+    * unstructured ones. Selected per call ([[ivfTopKDet2]]); every
+    * other consumer runs flat [[rankedCells]]. */
   private[ops] def rankedCellsTwoLevel(prep: DataFrame, nlist: Int,
       upTo: Int, coarseProbe: Int = 2): DataFrame = {
-    val stride = ivfStride(prep.count(), nlist)
-    val cent = prep.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
+    val cent = strideCentroids(prep, nlist)
       .localCheckpoint() // tiny (≈ nlist rows); read 3× below
     val nFine = cent.count()
     val nCoarse = math.max(1, math.ceil(math.sqrt(nlist.toDouble)).toInt)
@@ -1174,21 +1162,6 @@ object Similarity {
       .filter(col("rn") <= upTo)
   }
 
-  /** Quantizer dispatch: flat [[rankedCells]] by default (every oracle
-    * pins flat), [[rankedCellsTwoLevel]] when the session conf
-    * `spark.graft.ivf.twoLevel` is `true` (runtime-settable per
-    * session/query, read through [[graft.DispatchConf]] like every
-    * other dispatcher) — the deployment switch for large-nlist regimes. Used by
-    * [[ivfTopKDetRaw]] and `Dedup.semanticAssign`, so one flag moves
-    * BOTH consumers onto the same quantizer (the single-definition
-    * rule). */
-  private[graft] def rankedCellsAuto(prep: DataFrame, nlist: Int,
-      upTo: Int): DataFrame =
-    if (graft.DispatchConf(prep.sparkSession, "spark.graft.ivf.")
-        .bool("twoLevel", false))
-      rankedCellsTwoLevel(prep, nlist, upTo)
-    else rankedCells(prep, nlist, upTo)
-
   /** [[ivfTopKDet]] with the RAW cosine still exposed — the shared core
     * behind the public top-k (which quantizes to the 1e-6
     * presentation grain) and [[hardNegativesIvf]] (which must apply
@@ -1197,7 +1170,7 @@ object Similarity {
     * boundary band where the two channels disagreed — r7, advice). */
   private[ops] def ivfTopKDetRaw(prep: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = IvfNlist, nprobe: Int = 2,
-      quantizer: (DataFrame, Int, Int) => DataFrame = rankedCellsAuto)
+      quantizer: (DataFrame, Int, Int) => DataFrame = rankedCells)
       : DataFrame = {
     // Persisted: `ranked` (the O(n·ncent) distance + window rank — the
     // LINEAR stage) feeds BOTH the cell assignment and the query
@@ -1720,21 +1693,16 @@ object Similarity {
         "the directory with saveIvfIndex",
       param = Some("quantizer" -> "stride"))))
 
-  /** Build (or rebuild) a persisted IVF index. The coarse quantizer
-    * follows the SAME dispatch as the transient query path
-    * ([[ivfCentroidTable]], r11 verdict #3 — the old build hard-coded
-    * stride picks, so a deployment that turned on
-    * `spark.graft.ivf.kmeansIters` got refined centroids on transient
-    * queries but could never persist them): `kmeansItersPin` beats the
-    * session conf (`spark.graft.ivf.kmeansIters`) per the
-    * standing pin rule, 0 means stride. The trained quantizer is
-    * recorded in the format tag and frozen for the index lifetime —
-    * append/compact/probe read the persisted centroids back, so every
-    * downstream verb is quantizer-agnostic by construction. */
+  /** Build (or rebuild) a persisted IVF index. The coarse quantizer is
+    * the stride picks of the transient path ([[strideCentroids]]) when
+    * `kmeansIters` is 0, else that many Lloyd refinements of them
+    * ([[kmeansCentroids]], the [[ivfTopKDetKm]] vocabulary). The
+    * trained quantizer is recorded in the format tag and frozen for the
+    * index lifetime — append/compact/probe read the persisted centroids
+    * back, so every downstream verb is quantizer-agnostic by
+    * construction. */
   def saveIvfIndex(prep: DataFrame, dir: String, nlist: Int = IvfNlist,
-      kmeansItersPin: Option[Int] = None): Unit = {
-    val iters = graft.DispatchConf(prep.sparkSession, "spark.graft.ivf.")
-      .int("kmeansIters", 0, kmeansItersPin)
+      kmeansIters: Int = 0): Unit = {
     // a rebuild is a RECOVERY verb ([[IndexDir]]): it overwrites
     // every component, so a torn directory is tolerated and repaired
     IvfDir.repair(prep.sparkSession, dir, "saveIvfIndex") {
@@ -1746,17 +1714,13 @@ object Similarity {
       // crash mid-BUILD is still best recovered by re-running
       // saveIvfIndex itself — only the build has the source rows.
       IvfDir.writeFormat(prep.sparkSession, dir,
-        Some(if (iters > 0) s"kmeans$iters" else "stride"))
+        Some(if (kmeansIters > 0) s"kmeans$kmeansIters" else "stride"))
       // a rebuild starts a fresh lifecycle: drop any tombstone log left
       // by deletes against a previous index in this directory
       IndexDir.clearTombstones(prep.sparkSession, dir)
       val cent =
-        if (iters > 0) kmeansCentroids(prep, nlist, iters)
-        else {
-          val stride = ivfStride(prep.count(), nlist)
-          prep.filter(col("vec_id") % stride === 0)
-            .select(col("vec_id").as("cid"), col("v").as("cv"))
-        }
+        if (kmeansIters > 0) kmeansCentroids(prep, nlist, kmeansIters)
+        else strideCentroids(prep, nlist)
       cent.write.mode("overwrite").parquet(s"$dir/centroids")
       assignToCells(prep, cent)
         .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/corpus")
@@ -2719,10 +2683,7 @@ object Similarity {
     * lineage truncates per iteration (localCheckpoint on ≤ k rows). */
   private[ops] def kmeansCentroids(prep: DataFrame, k: Int,
       iters: Int): DataFrame = {
-    val stride = ivfStride(prep.count(), k)
-    var cent = prep.filter(col("vec_id") % stride === 0)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-      .localCheckpoint()
+    var cent = strideCentroids(prep, k).localCheckpoint()
     for (_ <- 1 to iters) {
       val byDist = Window.partitionBy(col("vec_id"))
         .orderBy(col("d"), col("cid"))
@@ -2823,10 +2784,8 @@ object Similarity {
   /** [[ivfTopKDet]] with K-MEANS-REFINED centroids: the same IVF flow
     * ([[ivfTailSql]] / [[ivfTopKDetRaw]]), but the cell vocabulary is
     * [[kmeansCentroids]]' Lloyd-refined table instead of the raw
-    * stride picks. The library path behind the
-    * `spark.graft.ivf.kmeansIters` deployment conf, pinned here
-    * explicitly (the [[topKIvf2]] pattern: the query selects its
-    * quantizer, the conf moves the default consumers). */
+    * stride picks; the query selects its quantizer per call (the
+    * [[topKIvf2]] pattern). */
   def ivfTopKDetKm(prep: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = IvfNlist, nprobe: Int = IvfNprobe,
       iters: Int = KmIters): DataFrame =

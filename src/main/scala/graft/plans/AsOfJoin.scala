@@ -79,12 +79,10 @@ object AsOfStrategy extends SparkStrategy {
   * is hot (every well-distributed corpus, and every corpus whose
   * heaviest key is below ~`minHotRows` rows) the plan is EXACTLY the
   * plain one — same operators, same exchanges, no slice columns.
-  * Conf-tunable, all under `spark.graft.asof.skew.`:
-  *
-  *   - `enabled` (true) — the off-switch;
-  *   - `slices` (8), `hotKeyShare` (0.02), `sampleFraction` (0.05),
-  *     `maxHotKeys` (64), `minHotRows` (1000000), `seed` (42) — the
-  *     [[AsOfSkew.Config]] fields.
+  * Conf-tunable, all under `spark.graft.asof.skew.`: `slices`,
+  * `hotKeyShare`, `sampleFraction`, `maxHotKeys` and `minHotRows`, each
+  * defaulting to its [[AsOfSkew.Config]] field; the sampling seed is
+  * the Config default.
   *
   * Dispatch only applies where splitting could help: batch frames
   * (detection samples the left side eagerly — meaningless on a
@@ -97,9 +95,7 @@ object AsOfStrategy extends SparkStrategy {
   * column-pruned scan per join CONSTRUCTION): the same logical left
   * under the same knobs detects once. Callers that want zero detection
   * even on first use pass a precomputed hint through [[AsOfSkew.join]]
-  * directly, call [[joinPlain]], or flip the conf off
-  * (`spark.graft.asof.skew.enabled=false`; the memo alone can be
-  * disabled with `...skew.detectCache=false`). */
+  * directly or call [[joinPlain]]. */
 object AsOf {
 
   private val ConfPrefix = "spark.graft.asof.skew."
@@ -113,13 +109,7 @@ object AsOf {
                        tolerance: Option[Long],
                        broadcastRight: Option[Boolean]): DataFrame = {
     import org.apache.spark.sql.types.LongType
-    // conf reads through the engine-wide dispatcher-knob helper
-    // ([[graft.DispatchConf]], r11 verdict #7); this dispatcher takes
-    // no per-call pins — callers needing pinned behavior use
-    // [[AsOfSkew.join]] with an explicit Config, joinPlain, or the hint
-    val knobs = graft.DispatchConf(left.sparkSession, ConfPrefix)
     val applicable =
-      knobs.bool("enabled", dflt = true) &&
       !left.isStreaming && !right.isStreaming &&
       !broadcastRight.contains(true) &&
       left.schema(leftTime).dataType == LongType &&
@@ -131,16 +121,22 @@ object AsOf {
     if (!applicable)
       plan(left, right, keys, leftTime, rightTime, tolerance,
         broadcastRight)
-    else
+    else {
+      // conf reads through the engine-wide dispatcher-knob helper
+      // ([[graft.DispatchConf]], r11 verdict #7); this dispatcher takes
+      // no per-call pins — callers needing pinned behavior use
+      // [[AsOfSkew.join]] with an explicit Config, joinPlain, or the hint
+      val knobs = graft.DispatchConf(left.sparkSession, ConfPrefix)
+      val d = AsOfSkew.Config()
       AsOfSkew.join(left, right, keys, leftTime, rightTime, tolerance,
         broadcastRight,
-        AsOfSkew.Config(
-          slices = knobs.int("slices", 8),
-          hotKeyShare = knobs.double("hotKeyShare", 0.02),
-          sampleFraction = knobs.double("sampleFraction", 0.05),
-          maxHotKeys = knobs.int("maxHotKeys", 64),
-          minHotRows = knobs.long("minHotRows", 1000000L),
-          seed = knobs.long("seed", 42L)))
+        d.copy(
+          slices = knobs.int("slices", d.slices),
+          hotKeyShare = knobs.double("hotKeyShare", d.hotKeyShare),
+          sampleFraction = knobs.double("sampleFraction", d.sampleFraction),
+          maxHotKeys = knobs.int("maxHotKeys", d.maxHotKeys),
+          minHotRows = knobs.long("minHotRows", d.minHotRows)))
+    }
   }
   /** `left` as-of joins `right` on equal `keys` with the most recent
     * `rightTime <= leftTime`; with `tolerance = Some(t)` the match must

@@ -229,8 +229,7 @@ object AsOfSkew {
     * in-place under an identical plan mid-session) costs at most a
     * suboptimal plan choice, the same stakes as AQE's cached stats.
     * Bounded (entries are ≤ maxHotKeys boundary lists; the map clears
-    * past 256 plans); opt out per session with
-    * `spark.graft.asof.skew.detectCache=false`. */
+    * past 256 plans). */
   private val detectCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Int, Seq[String], String, Config), Map[Seq[Any], Seq[Long]]]()
 
@@ -248,9 +247,6 @@ object AsOfSkew {
   private def detectMemo(
       left: DataFrame, keyNames: Seq[String], timeName: String,
       config: Config): Map[Seq[Any], Seq[Long]] = {
-    val cacheOn = graft.DispatchConf(left.sparkSession,
-      "spark.graft.asof.skew.").bool("detectCache", dflt = true)
-    if (!cacheOn) return detect(left, keyNames, timeName, config)
     val key = (sessionToken(left.sparkSession),
       left.queryExecution.analyzed.semanticHash(),
       keyNames, timeName, config.copy(hint = None))

@@ -56,4 +56,29 @@ class GraftSessionGuardSuite extends AnyFunSuite {
     assertNone(offenders(all.filterNot(_.getFileName.toString == "GraftSession.scala"), builder))
     assert(offenders(sources("src/main/scala"), builder).size == 1)
   }
+
+  /** Session keys that were replaced by the constant or per-call
+    * argument their default already was. A test or query that still
+    * set one would now be silently ignored, so none may be named —
+    * neither as a full key nor as a `DispatchConf(prefix)` leaf. */
+  private val removedKeys = Seq(
+    "asof.skew." -> "enabled", "asof.skew." -> "seed",
+    "asof.skew." -> "detectCache", "collapse." -> "statsCache",
+    "pack." -> "bucket", "pack." -> "superFactor",
+    "labels." -> "keepVersions", "labels." -> "rebuildFraction",
+    "ivf." -> "kmeansIters", "ivf." -> "twoLevel")
+
+  test("no removed spark.graft session key is named under src") {
+    val all = sources("src/main/scala") ++ sources("src/test/scala")
+    val hits = removedKeys.flatMap { case (group, leaf) =>
+      val prefix = "spark.graft." + group
+      val full = offenders(all, java.util.regex.Pattern.quote(prefix + leaf) + """\b""")
+      val split = all.filter { f =>
+        val text = new String(Files.readAllBytes(f), "UTF-8")
+        text.contains("\"" + prefix + "\"") && text.contains("\"" + leaf + "\"")
+      }.map(f => s"$f: reads '$leaf' under \"$prefix\"")
+      full ++ split
+    }
+    assertNone(hits)
+  }
 }

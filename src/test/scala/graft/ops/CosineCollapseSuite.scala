@@ -284,7 +284,7 @@ class CosineCollapseSuite extends SparkSessionSuite {
       val queries = prep.filter(col("vec_id") % 50 === 0)
       // member-level reference: ranked cells over the SAME full corpus,
       // probes and assignment at member level (the pre-collapse plan)
-      val ranked = Similarity.rankedCellsAuto(prep, 8, 2).persist()
+      val ranked = Similarity.rankedCells(prep, 8, 2).persist()
       val assign = ranked.filter(col("rn") === 1)
         .select(col("vec_id"), col("v"), col("nrm"), col("cid").as("cell"))
       val probes = ranked.join(queries.select(col("vec_id")), Seq("vec_id"))

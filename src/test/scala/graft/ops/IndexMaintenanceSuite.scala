@@ -308,7 +308,7 @@ class IndexMaintenanceSuite extends SparkSessionSuite {
 
     val dir = Files.createTempDirectory("ivfkm").toString
     Similarity.saveIvfIndex(prep, dir,
-      kmeansItersPin = Some(Similarity.KmIters))
+      kmeansIters = Similarity.KmIters)
     val tag = new String(
       Files.readAllBytes(Paths.get(dir, "_FORMAT")), "UTF-8").trim
     tag should endWith(s"quantizer=kmeans${Similarity.KmIters}")
@@ -331,14 +331,14 @@ class IndexMaintenanceSuite extends SparkSessionSuite {
     val b2 = prep.filter(col("vec_id") >= 450)
     val dirInc = Files.createTempDirectory("ivfkminc").toString
     Similarity.saveIvfIndex(a, dirInc,
-      kmeansItersPin = Some(Similarity.KmIters))
+      kmeansIters = Similarity.KmIters)
     val before = fileDigests(dirInc)
     Similarity.appendToIvfIndex(dirInc, b1)
     fileDigests(dirInc).view.filterKeys(before.contains).toMap shouldBe before
     Similarity.appendToIvfIndex(dirInc, b2)
     val dirOne = Files.createTempDirectory("ivfkmone").toString
     Similarity.saveIvfIndex(a, dirOne,
-      kmeansItersPin = Some(Similarity.KmIters))
+      kmeansIters = Similarity.KmIters)
     Similarity.appendToIvfIndex(dirOne, b1.unionAll(b2))
     canon(Similarity.topKFromIvfIndex(s, dirInc, queries, k = 5,
       nprobe = Similarity.IvfNprobe)) shouldBe
@@ -795,11 +795,14 @@ class IndexMaintenanceSuite extends SparkSessionSuite {
     Files.createDirectories(Paths.get(s"$root/labels/v99"))
     canon(Dedup.readBandLabels(s, s"$root/labels")) shouldBe canon(l2)
 
-    // torn ingest: marker present → readers fail fast with the verb
+    // torn ingest: marker present → readers fail fast with the verb;
+    // an empty marker (a pre-IndexDir label verb's) names no verb
     Files.createFile(Paths.get(s"$root/labels/_INTENT"))
     val e = intercept[IllegalStateException] {
       Dedup.readBandLabels(s, s"$root/labels")
     }
+    e.getMessage should include("a previous lifecycle verb did not complete")
+    e.getMessage should not include "''"
     e.getMessage should include("buildBandLabels")
     // ...and the recovery verb clears it and re-derives
     val recovered = Dedup.buildBandLabels(s, s"$root/index", s"$root/labels")
@@ -1042,7 +1045,7 @@ class IndexMaintenanceSuite extends SparkSessionSuite {
     // threshold, and the rebuild route cannot miss the merge
     val d = Dedup.deleteWithLabels(s, s"$root/index", s"$root/labels",
       corpus.filter(col("doc_id") === 7102L), minMatch = 15,
-      rebuildFraction = Some(1.1))
+      rebuildFraction = 1.1)
     // the bucket cooled: hot is now empty
     s.read.parquet(s"$root/index/hot").count() shouldBe 0L
     val rb = Dedup.buildBandLabels(s, s"$root/index", s"$root/labels_rb",
@@ -1101,7 +1104,7 @@ class IndexMaintenanceSuite extends SparkSessionSuite {
       l0 shouldBe Map(7100L -> 7100L, 7101L -> 7100L,
         7200L -> 7200L, 7201L -> 7200L)
       val li = Dedup.ingestWithLabels(s, s"$root/index", s"$root/labels",
-        zBatch, minMatch = 15, rebuildFraction = Some(f))
+        zBatch, minMatch = 15, rebuildFraction = f)
       // the shared bucket heated: exactly one hot entry now
       s.read.parquet(s"$root/index/hot").count() shouldBe 1L
       // ≡ a from-scratch rebuild over the grown index
@@ -1174,7 +1177,7 @@ class IndexMaintenanceSuite extends SparkSessionSuite {
       sidecars should be >= 1L
       jobsDuring {
         Dedup.ingestWithLabels(s, s"$root/index", s"$root/labels",
-          copyOf(20, 2020), rebuildFraction = Some(f))
+          copyOf(20, 2020), rebuildFraction = f)
       }
     }
     val probed = run(0.99, "probe") // sidecar nOld + ONE semi-join count
@@ -1203,9 +1206,9 @@ class IndexMaintenanceSuite extends SparkSessionSuite {
       Dedup.saveBandIndex(base, s"$root/index")
       Dedup.buildBandLabels(s, s"$root/index", s"$root/labels")
       val li = Dedup.ingestWithLabels(s, s"$root/index", s"$root/labels",
-        batch, rebuildFraction = Some(f))
+        batch, rebuildFraction = f)
       val ld = Dedup.deleteWithLabels(s, s"$root/index", s"$root/labels",
-        del, rebuildFraction = Some(f))
+        del, rebuildFraction = f)
       (canon(li), canon(ld))
     }
     val (iInc, dInc) = route(1.1, "inc")   // incremental forced
@@ -1243,7 +1246,7 @@ class IndexMaintenanceSuite extends SparkSessionSuite {
     var last: DataFrame = null
     Seq(3000L, 3001L, 3002L, 3003L).zipWithIndex.foreach { case (id, i) =>
       last = Dedup.ingestWithLabels(s, s"$root/index", s"$root/labels",
-        copyOf(20 + 10 * (i % 2), id), rebuildFraction = Some(1.1)) // v2..v5
+        copyOf(20 + 10 * (i % 2), id), rebuildFraction = 1.1) // v2..v5
     }
     versions shouldBe Seq("v3", "v4", "v5")
     canon(Dedup.readBandLabels(s, s"$root/labels")) shouldBe canon(last)
@@ -1253,7 +1256,7 @@ class IndexMaintenanceSuite extends SparkSessionSuite {
     canon(Dedup.readBandLabels(s, s"$root/labels")) shouldBe canon(last)
     // ...and the next commit overwrites exactly that dir
     val l6 = Dedup.ingestWithLabels(s, s"$root/index", s"$root/labels",
-      copyOf(60, 3060), rebuildFraction = Some(1.1))
+      copyOf(60, 3060), rebuildFraction = 1.1)
     versions shouldBe Seq("v4", "v5", "v6")
     canon(Dedup.readBandLabels(s, s"$root/labels")) shouldBe canon(l6)
     graft.InternalCaches.releaseAll()

@@ -192,24 +192,6 @@ class SimilaritySuite extends SparkSessionSuite {
     withClue(s"sq8 recall $recall: ") { recall should be >= 0.9 }
   }
 
-  test("k-means-refined IVF dispatches from conf alone ≡ explicit path") {
-    val s = spark
-    val dir = "/root/testdata/sf0.001"
-    val prep = Similarity.prepared(graft.Tables.embeddings(s, dir)).persist()
-    val queries = prep.filter(col("vec_id") % Similarity.QueryStride === 0)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq.toIndexedSeq).sortBy(_.toString)
-    val flat = canon(Similarity.ivfTopKDet(prep, queries, 5, nprobe = Similarity.IvfNprobe))
-    val explicitKm = canon(Similarity.ivfTopKDetKm(prep, queries, 5))
-    try {
-      s.conf.set("spark.graft.ivf.kmeansIters", Similarity.KmIters.toString)
-      canon(Similarity.ivfTopKDet(prep, queries, 5, nprobe = Similarity.IvfNprobe)) shouldBe explicitKm
-    } finally s.conf.unset("spark.graft.ivf.kmeansIters")
-    // off-switch restored: back to the stride quantizer
-    canon(Similarity.ivfTopKDet(prep, queries, 5, nprobe = Similarity.IvfNprobe)) shouldBe flat
-    prep.unpersist()
-  }
-
   test("k-means-refined IVF keeps within-cluster recall on clustered data") {
     val s = spark
     import s.implicits._

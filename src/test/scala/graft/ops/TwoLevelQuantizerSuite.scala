@@ -105,27 +105,4 @@ class TwoLevelQuantizerSuite extends SparkSessionSuite {
     // twins is the next id, 4
     secondCells shouldBe Array(4L)
   }
-
-  /** The deployment dispatch (r11): `spark.graft.ivf.twoLevel=true` on
-    * the session conf routes [[Similarity.rankedCellsAuto]] — and with
-    * it every IVF consumer — onto the two-level quantizer at runtime,
-    * no env var or relaunch needed; unset/false keeps the flat default
-    * every oracle pins. */
-  test("conf spark.graft.ivf.twoLevel dispatches the quantizer per session") {
-    val s = spark
-    val prep = clustered(s)
-    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
-      df.select(col("vec_id"), col("cid"), col("rn").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .toSet
-    // default (conf unset): auto IS flat
-    s.conf.unset("spark.graft.ivf.twoLevel")
-    rows(Similarity.rankedCellsAuto(prep, 16, 2)) shouldBe
-      rows(Similarity.rankedCells(prep, 16, 2))
-    try {
-      s.conf.set("spark.graft.ivf.twoLevel", "true")
-      rows(Similarity.rankedCellsAuto(prep, 16, 2)) shouldBe
-        rows(Similarity.rankedCellsTwoLevel(prep, 16, 2))
-    } finally s.conf.unset("spark.graft.ivf.twoLevel")
-  }
 }

@@ -340,21 +340,6 @@ class AsOfSkewSuite extends SparkSessionSuite {
     } finally spark.conf.set(coalesceKey, prevCoalesce)
   }
 
-  test("off-switch: skew.enabled=false pins the plain plan even on a " +
-      "hot corpus") {
-    val (left, right) = skewedCorpus
-    withSkewConf(
-      "spark.graft.asof.skew.enabled" -> "false",
-      "spark.graft.asof.skew.sampleFraction" -> "0.5",
-      "spark.graft.asof.skew.minHotRows" -> "1") {
-      val df = AsOf.join(left, right, Seq("k" -> "rk"), "t", "rt",
-        broadcastRight = Some(false))
-      df.columns.toSeq shouldBe Seq("k", "t", "lv", "rk", "rt", "rv")
-      assert(!df.queryExecution.executedPlan.toString
-        .contains("__asof_skew"))
-    }
-  }
-
   test("default conf on a cold corpus: the dispatching plan IS the " +
       "plain plan (no slice columns, same exchange count)") {
     val s = spark
