@@ -47,26 +47,20 @@ object InternalCaches {
     * the consuming job instead of recomputing. That is the right trade
     * for short-lived intermediates on a single box (this bench) and
     * for restartable queries, but a multi-hour 100 TB job pinning a
-    * corpus derivation should opt into RELIABLE checkpointing:
-    * `spark.graft.pin.reliable=true` routes pins through
-    * `Dataset.checkpoint(eager = true)`, which persists the blocks to
-    * the fault-tolerant `SparkContext.setCheckpointDir` location
-    * (HDFS/object store) and survives executor loss. The knob defaults
-    * OFF: locally the reliable path only adds a write+read through the
-    * checkpoint dir, and the bench must stay comparable round-over-
-    * round. Reliable checkpoint files are reclaimed by the
-    * ContextCleaner (`spark.cleaner.referenceTracking.cleanCheckpoints`)
-    * rather than [[releaseAll]]. */
+    * corpus derivation should checkpoint RELIABLY instead: once
+    * `SparkContext.setCheckpointDir` names a fault-tolerant location
+    * (HDFS/object store), every pin goes through
+    * `Dataset.checkpoint(eager = true)` there and survives executor
+    * loss. Without a checkpoint dir (every local run, the bench
+    * included) pins stay local — the reliable path would only add a
+    * write+read through the dir. Reliable checkpoint files are
+    * reclaimed by the ContextCleaner
+    * (`spark.cleaner.referenceTracking.cleanCheckpoints`) rather than
+    * [[releaseAll]]. */
   private[graft] def pinEager(df: DataFrame): DataFrame = {
-    val reliable = DispatchConf(df.sparkSession, "spark.graft.pin.")
-      .bool("reliable", dflt = false)
-    if (reliable) {
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        "spark.graft.pin.reliable=true requires " +
-          "SparkContext.setCheckpointDir (an HDFS/object-store path " +
-          "that survives executor loss)")
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
       df.checkpoint(eager = true)
-    } else {
+    else {
       val cp = df.localCheckpoint(true)
       cp.queryExecution.analyzed match {
         case lr: org.apache.spark.sql.execution.LogicalRDD => pinnedRdds.add(lr.rdd)

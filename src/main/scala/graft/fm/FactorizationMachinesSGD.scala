@@ -146,8 +146,7 @@ class FactorizationMachinesSGD(override val uid: String)
     batches.zipWithIndex.foreach { case (batch, idx) =>
       val iter = idx + 1
       val n = sizes.getOrElse(idx, 0L)
-      graft.Phase(s"fm.sgd.step $iter/${$(maxIter)}")(
-        step(params, batch, n, iter, w0)) match {
+      step(params, batch, n, iter, w0) match {
         case Some((newParams, loss, newW0)) =>
           params.unpersist() // newParams is already materialized by step()
           params = newParams
@@ -347,7 +346,10 @@ class FactorizationMachinesSGD(override val uid: String)
 
     // Eager: materializes before the caller drops the old table AND cuts
     // the (otherwise exponentially duplicated) logical plan to a leaf.
-    val materialized = newParams.localCheckpoint(true)
+    // The phase tag sits here, on the step's one job, so every caller's
+    // step is tagged.
+    val materialized = graft.Phase(s"fm.sgd.step $iter/${$(maxIter)}")(
+      newParams.localCheckpoint(true))
     // A sum over no rows (every sample featureless) is null: 0.0.
     def total(name: String): Double =
       Option(totals.get.getOrElse(name, null)).fold(0.0)(_.asInstanceOf[Double])

@@ -2751,10 +2751,10 @@ object Dedup {
         |$encodedToksSql,
         |$simSigSql
         |$simPairsSelectSql""".stripMargin) { (s, d) =>
-      // No threshold pins: the oracle is route-invariant (every route
-      // is exact), so the conf may freely re-route deployments — unlike
-      // sim_range_search_auto, whose twin mirrors the decision rule and
-      // therefore must pin the literals.
+      // Default thresholds: the oracle is route-invariant (every route
+      // is exact) — unlike sim_range_search_auto, whose twin mirrors
+      // the decision rule and therefore passes its thresholds as
+      // literals.
       HammingBands.pairs(simBandSigs(s, d), "doc_id", "bands", SimBands,
           HammingMax, name, route = route)
         .select(col("id1").as("doc1"), col("id2").as("doc2"),

@@ -39,16 +39,14 @@ import org.apache.spark.sql.types.DecimalType
   *     route-invariant — unlike the cosine family, no SQL twin has to
   *     mirror the decision rule).
   *
-  * Conf surface `spark.graft.hamming.auto.*` (`minBrute`, `sharePct`,
-  * `maxBroadcast`) via [[graft.DispatchConf]]; explicit pins beat the
-  * conf per the standing pin rule. Every route (pinned or dispatched)
-  * pays one single-row pre-pass action — it buys the duplicate-free
-  * collapse skip and the broadcast gate (see [[pairs]]); a pinned
-  * route still skips the heavier histogram decision job.
+  * The thresholds (`minBrute`, `sharePct`, `maxBroadcast`) are plain
+  * per-call arguments with the defaults every query runs at. Every
+  * route (pinned or dispatched) pays one single-row pre-pass action —
+  * it buys the duplicate-free collapse skip and the broadcast gate
+  * (see [[pairs]]); a pinned route still skips the heavier histogram
+  * decision job.
   */
 object HammingBands {
-
-  private val ConfPrefix = "spark.graft.hamming.auto."
 
   /** Candidate route for one [[pairs]] call, with the measured exact
     * volumes that picked it. BigInt: per-bucket c² sums overflow Long
@@ -70,12 +68,9 @@ object HammingBands {
     * pre-dedup: precisely the pair rows the banded join would feed its
     * `distinct`. */
   def decide(usig: DataFrame, family: String,
-      minBrutePin: Option[Long] = None,
-      sharePctPin: Option[Int] = None,
+      minBrute: Long = 4096L,
+      sharePct: Int = 90,
       uKnown: Option[Long] = None): Decision = {
-    val knobs = graft.DispatchConf(usig.sparkSession, ConfPrefix)
-    val minBrute = knobs.long("minBrute", 4096L, minBrutePin)
-    val sharePct = knobs.int("sharePct", 90, sharePctPin)
     val row = usig
       .select(posexplode(col("bands")).as(Seq("bi", "bv")))
       .filter(col("bv").isNotNull)
@@ -146,19 +141,17 @@ object HammingBands {
     * CartesianProduct, whose per-pair overhead dwarfs the popcount —
     * but a broadcast of millions of unique signatures would blow the
     * driver, turning a slow-but-feasible plan into a hard job failure.
-    * The hint is therefore gated on `u <= maxBroadcast`
-    * (`spark.graft.hamming.auto.maxBroadcast`, default 4M rows — tens
-    * of MB at nBands longs each): above it, a DISPATCHED brute route
-    * falls back to the banded plan (identical output, no memory
-    * hazard), and a PINNED brute route keeps the pin but drops the
-    * hint, with one logged line either way. */
+    * The hint is therefore gated on `u <= maxBroadcast` (default 4M
+    * rows — tens of MB at nBands longs each): above it, a DISPATCHED
+    * brute route falls back to the banded plan (identical output, no
+    * memory hazard), and a PINNED brute route keeps the pin but drops
+    * the hint, with one logged line either way. */
   def pairs(sigs: DataFrame, idCol: String, bandsCol: String, nBands: Int,
       maxHamming: Int, family: String,
       route: Option[Boolean] = None,
-      minBrutePin: Option[Long] = None,
-      sharePctPin: Option[Int] = None): DataFrame = {
-    val maxBroadcast = graft.DispatchConf(sigs.sparkSession, ConfPrefix)
-      .long("maxBroadcast", 4L * 1000 * 1000, None)
+      minBrute: Long = 4096L,
+      sharePct: Int = 90,
+      maxBroadcast: Long = 4000000L): DataFrame = {
     // memoized + hashed single-row pre-pass — shared engine, see
     // [[ContentCollapse.dupStats]]. Null-signature rows (ids with no
     // computable signature) are never counted by the distinct, so they
@@ -195,7 +188,7 @@ object HammingBands {
     // inter-group candidates over UNIQUE signatures, routed
     val decision = route match {
       case Some(b) => Decision(u, BigInt(-1), BigInt(-1), b, "pinned")
-      case None => decide(usig, family, minBrutePin, sharePctPin, Some(u))
+      case None => decide(usig, family, minBrute, sharePct, Some(u))
     }
     val hintBroadcast = u <= maxBroadcast
     val useBrute =

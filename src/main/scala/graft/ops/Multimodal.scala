@@ -30,6 +30,7 @@ import org.apache.spark.sql.types._
 object Multimodal {
 
   private val BodyMod = 251
+  private val BlockHashMod = 1000000007L
   private val FrameSize = 256
 
   /** Deterministic synthetic media over documents: kind by id mod 3,
@@ -391,9 +392,7 @@ object Multimodal {
     * byte-identical BODIES under different headers (a 1024-byte video
     * body equals a 32×32 image body), hamming 0-1 — body-level dups
     * that md5-over-payload misses because the headers differ. */
-  val fuzzyDedup: QueryDef = {
-    val P = 1000000007L
-    QueryDef.sql(
+  val fuzzyDedup: QueryDef = QueryDef.sql(
       "mm_fuzzy_dedup",
       s"""WITH m AS (
         |  SELECT doc_id AS media_id,
@@ -419,7 +418,7 @@ object Multimodal {
         |                                     (u.j + 1) * c.body_len // 64 - 1),
         |        k -> CAST((c.src * 31 + k) % $BodyMod +
         |             CASE WHEN c.pert = 1 AND k = 100 THEN 1 ELSE 0 END AS BIGINT)),
-        |      (h, v) -> (h * 131 + v * v) % $P) AS bh
+        |      (h, v) -> (h * 131 + v * v) % $BlockHashMod) AS bh
         |  FROM corpus c CROSS JOIN LATERAL unnest(generate_series(0, 63)) u(j)),
         |bands AS (
         |  SELECT media_id, j // 8 AS bi,
@@ -436,51 +435,57 @@ object Multimodal {
         |  JOIN bands y ON y.media_id = c.idb AND y.bi = x.bi
         |  GROUP BY c.ida, c.idb)
         |SELECT ida, idb, hamming FROM ham WHERE hamming <= 7
-        |ORDER BY ida, idb""".stripMargin) { (s, d) =>
-      val media = syntheticMedia(Tables.documents(s, d))
-        .select(col("media_id"), expr("binary_bytes(payload)").as("bytes"),
-          (length(col("payload")) - 4).cast("long").as("n"))
-      // near-dup plant: every 10th payload gets a copy with ONE corrupted
-      // body byte (position 100; bytes are <= 250, +1 never overflows)
-      val corpus = media.select(col("media_id"), col("bytes"), col("n"),
-          lit(0).as("pert"))
-        .unionAll(media.filter(col("media_id") % 10 === 0)
-          .select((col("media_id") + 10000).as("media_id"), col("bytes"),
-            col("n"), lit(1).as("pert")))
-      // body byte at 0-based body position k — O(1) element_at into the
-      // native binary_bytes decode (the hex+substr channel this replaced
-      // was O(n) per access, O(n²) per payload) — plus the plant
-      def byteAt(k: Column): Column =
-        element_at(col("bytes"), (k + 5).cast("int")).cast("long") +
-          when(col("pert") === 1 && k === 100L, 1L).otherwise(0L)
-      // block j in [0,64): nonlinear fold over positions [j·n/64,(j+1)·n/64)
-      // (products stay exact in the double floor: j·n <= 64·3072)
-      def blockHash(j: Column): Column =
-        aggregate(
-          sequence(floor(j * col("n") / 64.0).cast("long"),
-            floor((j + 1) * col("n") / 64.0).cast("long") - 1),
-          lit(0L), (h, k) => (h * 131L + byteAt(k) * byteAt(k)) % P)
-      val pows = array((0 until 8).map(i => lit(1L << i)): _*)
-      // pinned eagerly (r16 verdict #1): the per-byte band signature is
-      // the query's dominant cost and HammingBands.pairs consumes it
-      // more than once — a lazy persist let concurrent consumers (or an
-      // eviction) recompute the whole byte scan
-      val sigs = graft.InternalCaches.pinEager(corpus
-        .select(col("media_id"),
-          transform(sequence(lit(0L), lit(7L)), b =>
-            aggregate(sequence(lit(0L), lit(7L)), lit(0L),
-              (a, k) => a + (blockHash(b * 8 + k) % 2L) *
-                element_at(pows, (k + 1).cast("int")))).as("bands")))
-      // collapse + density dispatch ([[HammingBands]]): exact twins
-      // (the densification adversary — this family ran 26.2× at the
-      // r11 10× fixture) collapse to one signature before any pairing;
-      // candidates among UNIQUE signatures route brute vs banded from
-      // one measured metadata-sized aggregate. Route-invariant: the
-      // all-pairs oracle above is exact for every route.
-      HammingBands.pairs(sigs, "media_id", "bands", 8, 7, "mm_fuzzy_dedup")
-        .select(col("id1").as("ida"), col("id2").as("idb"), col("hamming"))
-        .orderBy(col("ida"), col("idb"))
-    }
+        |ORDER BY ida, idb""".stripMargin)(fuzzyDedupPairs(_, _, None))
+
+  /** The [[fuzzyDedup]] query with the [[HammingBands.pairs]] `route`
+    * as an argument: `None` dispatches (the query), a pin fixes the
+    * plan (plan audits). */
+  private[graft] def fuzzyDedupPairs(s: SparkSession, d: String,
+      route: Option[Boolean]): DataFrame = {
+    val media = syntheticMedia(Tables.documents(s, d))
+      .select(col("media_id"), expr("binary_bytes(payload)").as("bytes"),
+        (length(col("payload")) - 4).cast("long").as("n"))
+    // near-dup plant: every 10th payload gets a copy with ONE corrupted
+    // body byte (position 100; bytes are <= 250, +1 never overflows)
+    val corpus = media.select(col("media_id"), col("bytes"), col("n"),
+        lit(0).as("pert"))
+      .unionAll(media.filter(col("media_id") % 10 === 0)
+        .select((col("media_id") + 10000).as("media_id"), col("bytes"),
+          col("n"), lit(1).as("pert")))
+    // body byte at 0-based body position k — O(1) element_at into the
+    // native binary_bytes decode (the hex+substr channel this replaced
+    // was O(n) per access, O(n²) per payload) — plus the plant
+    def byteAt(k: Column): Column =
+      element_at(col("bytes"), (k + 5).cast("int")).cast("long") +
+        when(col("pert") === 1 && k === 100L, 1L).otherwise(0L)
+    // block j in [0,64): nonlinear fold over positions [j·n/64,(j+1)·n/64)
+    // (products stay exact in the double floor: j·n <= 64·3072)
+    def blockHash(j: Column): Column =
+      aggregate(
+        sequence(floor(j * col("n") / 64.0).cast("long"),
+          floor((j + 1) * col("n") / 64.0).cast("long") - 1),
+        lit(0L), (h, k) => (h * 131L + byteAt(k) * byteAt(k)) % BlockHashMod)
+    val pows = array((0 until 8).map(i => lit(1L << i)): _*)
+    // pinned eagerly (r16 verdict #1): the per-byte band signature is
+    // the query's dominant cost and HammingBands.pairs consumes it
+    // more than once — a lazy persist let concurrent consumers (or an
+    // eviction) recompute the whole byte scan
+    val sigs = graft.InternalCaches.pinEager(corpus
+      .select(col("media_id"),
+        transform(sequence(lit(0L), lit(7L)), b =>
+          aggregate(sequence(lit(0L), lit(7L)), lit(0L),
+            (a, k) => a + (blockHash(b * 8 + k) % 2L) *
+              element_at(pows, (k + 1).cast("int")))).as("bands")))
+    // collapse + density dispatch ([[HammingBands]]): exact twins
+    // (the densification adversary — this family ran 26.2× at the
+    // r11 10× fixture) collapse to one signature before any pairing;
+    // candidates among UNIQUE signatures route brute vs banded from
+    // one measured metadata-sized aggregate. Route-invariant: the
+    // all-pairs oracle above is exact for every route.
+    HammingBands.pairs(sigs, "media_id", "bands", 8, 7, "mm_fuzzy_dedup",
+      route)
+      .select(col("id1").as("ida"), col("id2").as("idb"), col("hamming"))
+      .orderBy(col("ida"), col("idb"))
   }
 
   /** TEXT–MEDIA ALIGNMENT SCORING — the CLIP-filtering analogue: a
@@ -595,8 +600,7 @@ object Multimodal {
     * shuffles are the 8-bit band-bucket candidate equi-join and the
     * bounded Hamming verify join, exactly the [[fuzzyDedup]] 100 TB
     * shape. */
-  val phashDedup: QueryDef = {
-    QueryDef.sql(
+  val phashDedup: QueryDef = QueryDef.sql(
       "mm_phash_dedup",
       s"""WITH m AS (
         |  SELECT doc_id AS media_id,
@@ -646,63 +650,69 @@ object Multimodal {
         |  JOIN bands y ON y.media_id = c.idb AND y.bi = x.bi
         |  GROUP BY c.ida, c.idb)
         |SELECT ida, idb, hamming FROM ham WHERE hamming <= 2
-        |ORDER BY ida, idb""".stripMargin) { (s, d) =>
-      val media = syntheticMedia(Tables.documents(s, d))
-        .filter(col("kind") === "image")
-        .select(col("media_id"), expr("binary_bytes(payload)").as("bytes"),
-          col("meta.width").cast("long").as("w"),
-          col("meta.height").cast("long").as("h"))
-      val corpus = media.select(col("media_id"), col("bytes"), col("w"),
-          col("h"), lit(0L).as("pert"))
-        .unionAll(media.filter(col("media_id") % 30 === 0)
-          .select((col("media_id") + 10000).as("media_id"), col("bytes"),
-            col("w"), col("h"), lit(1L).as("pert")))
-      // pixel (x, y), 0-based: real payload byte + the brightness plant
-      // (bytes are <= 250; +3 never overflows the 0..255 range)
-      def px(x: Column, y: Column): Column =
-        element_at(col("bytes"), (y * col("w") + x + 5).cast("int"))
-          .cast("long") + lit(3L) * col("pert")
-      // cell c in [0,64): rows/cols covering floor(x*8/w) = c%8 etc.
-      // (double division is exact at these magnitudes; cast truncates
-      // toward zero = floor for the non-negative operands here)
-      def lo(i: Column, dim: Column): Column =
-        floor((i * dim + 7) / lit(8.0)).cast("long")
-      def cellOf(c: Column): Column = {
-        val cx = c % 8
-        val cy = floor(c / lit(8.0)).cast("long")
-        val (x0, x1) = (lo(cx, col("w")), lo(cx + 1, col("w")) - 1)
-        val (y0, y1) = (lo(cy, col("h")), lo(cy + 1, col("h")) - 1)
-        struct(
-          aggregate(sequence(y0, y1), lit(0L), (sy, y) =>
-            sy + aggregate(sequence(x0, x1), lit(0L), (sx, x) =>
-              sx + px(x, y))).as("cs"),
-          ((x1 - x0 + 1) * (y1 - y0 + 1)).as("cp"))
-      }
-      val pows = array((0 until 8).map(i => lit(1L << i)): _*)
-      // pinned eagerly — same rationale as mm_fuzzy_dedup's signature
-      val sigs = graft.InternalCaches.pinEager(corpus
-        .withColumn("cells",
-          transform(sequence(lit(0L), lit(63L)), c => cellOf(c)))
-        .withColumn("ts",
-          aggregate(col("cells"), lit(0L), (a, x) => a + x.getField("cs")))
-        .withColumn("tp", col("w") * col("h"))
-        .select(col("media_id"),
-          transform(sequence(lit(0L), lit(7L)), bi =>
-            aggregate(sequence(lit(0L), lit(7L)), lit(0L), (a, k) => {
-              val cell = element_at(col("cells"), (bi * 8 + k + 1).cast("int"))
-              val bit = when(cell.getField("cs") * col("tp") >
-                col("ts") * cell.getField("cp"), 1L).otherwise(0L)
-              a + bit * element_at(pows, (k + 1).cast("int"))
-            })).as("bands")))
-      // collapse + density dispatch ([[HammingBands]]): the r11 10×
-      // densification fixture drove this family 47.5× through the old
-      // uncollapsed band join; unique-signature candidate generation
-      // plus the measured brute-vs-banded route makes the duplicate
-      // flood pure output expansion. Route-invariant oracle.
-      HammingBands.pairs(sigs, "media_id", "bands", 8, 2, "mm_phash_dedup")
-        .select(col("id1").as("ida"), col("id2").as("idb"), col("hamming"))
-        .orderBy(col("ida"), col("idb"))
+        |ORDER BY ida, idb""".stripMargin)(phashDedupPairs(_, _, None))
+
+  /** The [[phashDedup]] query with the [[HammingBands.pairs]] `route`
+    * as an argument: `None` dispatches (the query), a pin fixes the
+    * plan (plan audits). */
+  private[graft] def phashDedupPairs(s: SparkSession, d: String,
+      route: Option[Boolean]): DataFrame = {
+    val media = syntheticMedia(Tables.documents(s, d))
+      .filter(col("kind") === "image")
+      .select(col("media_id"), expr("binary_bytes(payload)").as("bytes"),
+        col("meta.width").cast("long").as("w"),
+        col("meta.height").cast("long").as("h"))
+    val corpus = media.select(col("media_id"), col("bytes"), col("w"),
+        col("h"), lit(0L).as("pert"))
+      .unionAll(media.filter(col("media_id") % 30 === 0)
+        .select((col("media_id") + 10000).as("media_id"), col("bytes"),
+          col("w"), col("h"), lit(1L).as("pert")))
+    // pixel (x, y), 0-based: real payload byte + the brightness plant
+    // (bytes are <= 250; +3 never overflows the 0..255 range)
+    def px(x: Column, y: Column): Column =
+      element_at(col("bytes"), (y * col("w") + x + 5).cast("int"))
+        .cast("long") + lit(3L) * col("pert")
+    // cell c in [0,64): rows/cols covering floor(x*8/w) = c%8 etc.
+    // (double division is exact at these magnitudes; cast truncates
+    // toward zero = floor for the non-negative operands here)
+    def lo(i: Column, dim: Column): Column =
+      floor((i * dim + 7) / lit(8.0)).cast("long")
+    def cellOf(c: Column): Column = {
+      val cx = c % 8
+      val cy = floor(c / lit(8.0)).cast("long")
+      val (x0, x1) = (lo(cx, col("w")), lo(cx + 1, col("w")) - 1)
+      val (y0, y1) = (lo(cy, col("h")), lo(cy + 1, col("h")) - 1)
+      struct(
+        aggregate(sequence(y0, y1), lit(0L), (sy, y) =>
+          sy + aggregate(sequence(x0, x1), lit(0L), (sx, x) =>
+            sx + px(x, y))).as("cs"),
+        ((x1 - x0 + 1) * (y1 - y0 + 1)).as("cp"))
     }
+    val pows = array((0 until 8).map(i => lit(1L << i)): _*)
+    // pinned eagerly — same rationale as mm_fuzzy_dedup's signature
+    val sigs = graft.InternalCaches.pinEager(corpus
+      .withColumn("cells",
+        transform(sequence(lit(0L), lit(63L)), c => cellOf(c)))
+      .withColumn("ts",
+        aggregate(col("cells"), lit(0L), (a, x) => a + x.getField("cs")))
+      .withColumn("tp", col("w") * col("h"))
+      .select(col("media_id"),
+        transform(sequence(lit(0L), lit(7L)), bi =>
+          aggregate(sequence(lit(0L), lit(7L)), lit(0L), (a, k) => {
+            val cell = element_at(col("cells"), (bi * 8 + k + 1).cast("int"))
+            val bit = when(cell.getField("cs") * col("tp") >
+              col("ts") * cell.getField("cp"), 1L).otherwise(0L)
+            a + bit * element_at(pows, (k + 1).cast("int"))
+          })).as("bands")))
+    // collapse + density dispatch ([[HammingBands]]): the r11 10×
+    // densification fixture drove this family 47.5× through the old
+    // uncollapsed band join; unique-signature candidate generation
+    // plus the measured brute-vs-banded route makes the duplicate
+    // flood pure output expansion. Route-invariant oracle.
+    HammingBands.pairs(sigs, "media_id", "bands", 8, 2, "mm_phash_dedup",
+      route)
+      .select(col("id1").as("ida"), col("id2").as("idb"), col("hamming"))
+      .orderBy(col("ida"), col("idb"))
   }
 
   /** CONTENT-DEFINED CHUNKING dedup (the rsync/LBFS/backup-dedup

@@ -699,8 +699,16 @@ object Similarity {
       n: Long, lshPairs: BigInt, brutePairs: BigInt,
       useBrute: Boolean, reason: String)
 
-  /** Conf keys for [[rangeSearchPairs]], mirroring the as-of skew
-    * dispatch pattern (`spark.graft.asof.skew.*`):
+  /** Measure the banded-LSH candidate volume from the bucket histogram
+    * and decide brute vs banded. Cost: ONE Spark action — the same
+    * O(n·d) bucket pass the banded plan starts with, aggregated to at
+    * most [[BandTables]]·16 rows before the driver sees it (the 4-bit
+    * bucket space is fixed; this collect is metadata-sized at any
+    * corpus size, like `AsOfSkew.detect`'s top-k). The volume is EXACT
+    * (no sampling): within-bucket pairs c·(c−1)/2 plus cross pairs
+    * c_a·c_b for buckets at Hamming distance 1, per table, pre-dedup —
+    * precisely the pair rows [[bandedPairCosine]] feeds its dot.
+    * Thresholds:
     *   - `minLshVectors` (default 4096): at or under this corpus size
     *     the all-pairs kernel is trivially cheap — route brute
     *     regardless of the measured share (the decision still costs
@@ -712,29 +720,12 @@ object Similarity {
     *     so 90% cleanly splits spread corpora (measured 0.66 on the
     *     fixture at every SF — scale-free) from concentrated ones
     *     where LSH scores MORE dots than brute and prunes nothing. */
-  private val RangeAutoPrefix = "spark.graft.sim.range.auto."
-
-  /** Measure the banded-LSH candidate volume from the bucket histogram
-    * and decide brute vs banded. Cost: ONE Spark action — the same
-    * O(n·d) bucket pass the banded plan starts with, aggregated to at
-    * most [[BandTables]]·16 rows before the driver sees it (the 4-bit
-    * bucket space is fixed; this collect is metadata-sized at any
-    * corpus size, like `AsOfSkew.detect`'s top-k). The volume is EXACT
-    * (no sampling): within-bucket pairs c·(c−1)/2 plus cross pairs
-    * c_a·c_b for buckets at Hamming distance 1, per table, pre-dedup —
-    * precisely the pair rows [[bandedPairCosine]] feeds its dot. */
   def rangeDispatchDecision(prep: DataFrame,
       tables: Int = BandTables,
-      minLshVectors: Option[Long] = None,
-      sharePctPin: Option[Int] = None,
+      minLshVectors: Long = 4096L,
+      sharePct: Int = 90,
       buckets: Option[DataFrame] = None,
       histogram: Option[DataFrame] = None): RangeDispatchDecision = {
-    // Pins beat the session conf — the rule is now centralized in
-    // [[graft.DispatchConf]] (r11 verdict #7), shared with the as-of
-    // skew dispatch and the Hamming-band dispatchers.
-    val knobs = graft.DispatchConf(prep.sparkSession, RangeAutoPrefix)
-    val minVec = knobs.long("minLshVectors", 4096L, minLshVectors)
-    val sharePct = knobs.int("sharePct", 90, sharePctPin)
     // `histogram`: a pre-aggregated (tbl, bucket, c) relation — the
     // collapsed path derives the FULL-corpus histogram from unique
     // buckets weighted by group size (buckets are a pure function of
@@ -762,9 +753,9 @@ object Similarity {
       }
     }
     val brute = BigInt(n) * BigInt(n - 1) / 2
-    if (n <= minVec)
+    if (n <= minLshVectors)
       RangeDispatchDecision(n, lsh, brute, useBrute = true,
-        s"n=$n <= minLshVectors=$minVec: all-pairs is trivially cheap")
+        s"n=$n <= minLshVectors=$minLshVectors: all-pairs is trivially cheap")
     else if (lsh * 100 >= brute * sharePct)
       RangeDispatchDecision(n, lsh, brute, useBrute = true,
         s"banded share ${lsh * 100 / brute.max(1)}% >= sharePct=$sharePct: " +
@@ -787,16 +778,16 @@ object Similarity {
     * need a pinned candidate generation (oracle replay, recall
     * studies) use the direct entry points. Decision cost: two
     * metadata-sized actions at DataFrame-construction time (the
-    * collapse pre-pass + the histogram); conf-tunable under
-    * `spark.graft.sim.range.auto.*` ([[RangeAutoPrefix]]). Both routes
+    * collapse pre-pass + the histogram); thresholds as in
+    * [[rangeDispatchDecision]]. Both routes
     * run over content-collapsed uniques ([[collapsedCosinePairs]]) —
     * the decision itself measures the full-corpus histogram via
     * group-size weights, so it is collapse-invariant by construction
     * and the SQL twin needs no mirror of the collapse. */
   def rangeSearchPairs(prep: DataFrame, threshold: Double,
       tables: Int = BandTables,
-      minLshVectors: Option[Long] = None,
-      sharePctPin: Option[Int] = None): DataFrame = {
+      minLshVectors: Long = 4096L,
+      sharePct: Int = 90): DataFrame = {
     // Content collapse first (r13 — the [[collapsedCosinePairs]]
     // contract): the same memoized single-row pre-pass; duplicate-free
     // corpora take the pre-collapse plan verbatim.
@@ -810,7 +801,7 @@ object Similarity {
       // bandedPairCosine (r11 review).
       val bk = graft.InternalCaches.pinEager(
         lshBucketsMulti(prep, tables))
-      val d = rangeDispatchDecision(prep, tables, minLshVectors, sharePctPin,
+      val d = rangeDispatchDecision(prep, tables, minLshVectors, sharePct,
         Some(bk))
       if (d.useBrute) { bk.unpersist(); pairCosineKernel(prep, threshold) }
       else bandedPairCosine(prep, tables, Some(bk))
@@ -828,7 +819,7 @@ object Similarity {
       val sizes = g.members.groupBy(col("gid")).agg(count(lit(1)).as("cnt"))
       val hist = bk.join(sizes, bk("vec_id") === sizes("gid"))
         .groupBy(col("tbl"), col("bucket")).agg(sum(col("cnt")).as("c"))
-      val d = rangeDispatchDecision(prep, tables, minLshVectors, sharePctPin,
+      val d = rangeDispatchDecision(prep, tables, minLshVectors, sharePct,
         histogram = Some(hist))
       val cross =
         if (d.useBrute) { bk.unpersist(); pairCosineKernel(uniq, threshold) }
@@ -889,8 +880,8 @@ object Similarity {
 
   /** Range search through [[rangeSearchPairs]] — the dispatch IS the
     * oracle: the DuckDB twin computes the same bucket histogram, the
-    * same exact candidate volume, applies the same rule (the engine's
-    * conf DEFAULTS, 4096 / 90%, inlined as literals), and selects the
+    * same exact candidate volume, applies the same rule (4096 / 90%,
+    * inlined as literals on both sides), and selects the
     * matching branch — so the query stays hash-green at ANY scale,
     * including a fixture where the decision flips (battery SFs n <=
     * 4096 route brute; the 10× twin fixture n = 20 000, share 66%
@@ -948,10 +939,9 @@ object Similarity {
       |ORDER BY v1, v2""".stripMargin) { (s, d) =>
     val prep = graft.InternalCaches.pinEager(
       prepared(Tables.embeddings(s, d)))
-    // thresholds PINNED to the literals the twin inlines — a session
-    // knob must never flip this oracle-checked route
-    rangeSearchPairs(prep, 0.35, minLshVectors = Some(4096L),
-      sharePctPin = Some(90))
+    // thresholds spelled as the literals the twin inlines, so a change
+    // of the defaults cannot flip this oracle-checked route
+    rangeSearchPairs(prep, 0.35, minLshVectors = 4096L, sharePct = 90)
       .select(col("v1"), col("v2"), (floor(col("rawcos") * 1e6 + 0.5) / 1e6).as("cos"))
       .orderBy(col("v1"), col("v2"))
   }

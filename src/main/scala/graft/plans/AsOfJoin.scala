@@ -79,10 +79,9 @@ object AsOfStrategy extends SparkStrategy {
   * is hot (every well-distributed corpus, and every corpus whose
   * heaviest key is below ~`minHotRows` rows) the plan is EXACTLY the
   * plain one — same operators, same exchanges, no slice columns.
-  * Conf-tunable, all under `spark.graft.asof.skew.`: `slices`,
-  * `hotKeyShare`, `sampleFraction`, `maxHotKeys` and `minHotRows`, each
-  * defaulting to its [[AsOfSkew.Config]] field; the sampling seed is
-  * the Config default.
+  * Tuned per call: [[join]]'s `skew` argument is the
+  * [[AsOfSkew.Config]] the dispatch runs with (its defaults unless the
+  * caller passes one).
   *
   * Dispatch only applies where splitting could help: batch frames
   * (detection samples the left side eagerly — meaningless on a
@@ -93,12 +92,10 @@ object AsOfStrategy extends SparkStrategy {
   * is MEMOIZED per session on the left side's analyzed-plan semantic
   * hash (r11 advice — recurring callers previously paid a sampled
   * column-pruned scan per join CONSTRUCTION): the same logical left
-  * under the same knobs detects once. Callers that want zero detection
-  * even on first use pass a precomputed hint through [[AsOfSkew.join]]
-  * directly or call [[joinPlain]]. */
+  * under the same config detects once. Callers that want zero detection
+  * even on first use pass a precomputed `skew.hint` or call
+  * [[joinPlain]]. */
 object AsOf {
-
-  private val ConfPrefix = "spark.graft.asof.skew."
 
   /** Decide plain vs skew-hardened for a [[join]] call. The detection
     * job (inside [[AsOfSkew.join]]) runs at DataFrame-construction
@@ -107,7 +104,8 @@ object AsOf {
                        keys: Seq[(String, String)],
                        leftTime: String, rightTime: String,
                        tolerance: Option[Long],
-                       broadcastRight: Option[Boolean]): DataFrame = {
+                       broadcastRight: Option[Boolean],
+                       skew: AsOfSkew.Config): DataFrame = {
     import org.apache.spark.sql.types.LongType
     val applicable =
       !left.isStreaming && !right.isStreaming &&
@@ -121,22 +119,9 @@ object AsOf {
     if (!applicable)
       plan(left, right, keys, leftTime, rightTime, tolerance,
         broadcastRight)
-    else {
-      // conf reads through the engine-wide dispatcher-knob helper
-      // ([[graft.DispatchConf]], r11 verdict #7); this dispatcher takes
-      // no per-call pins — callers needing pinned behavior use
-      // [[AsOfSkew.join]] with an explicit Config, joinPlain, or the hint
-      val knobs = graft.DispatchConf(left.sparkSession, ConfPrefix)
-      val d = AsOfSkew.Config()
+    else
       AsOfSkew.join(left, right, keys, leftTime, rightTime, tolerance,
-        broadcastRight,
-        d.copy(
-          slices = knobs.int("slices", d.slices),
-          hotKeyShare = knobs.double("hotKeyShare", d.hotKeyShare),
-          sampleFraction = knobs.double("sampleFraction", d.sampleFraction),
-          maxHotKeys = knobs.int("maxHotKeys", d.maxHotKeys),
-          minHotRows = knobs.long("minHotRows", d.minHotRows)))
-    }
+        broadcastRight, skew)
   }
   /** `left` as-of joins `right` on equal `keys` with the most recent
     * `rightTime <= leftTime`; with `tolerance = Some(t)` the match must
@@ -174,7 +159,8 @@ object AsOf {
   def join(left: DataFrame, right: DataFrame, keys: Seq[(String, String)],
            leftTime: String, rightTime: String,
            tolerance: Option[Long] = None,
-           broadcastRight: Option[Boolean] = None): DataFrame = {
+           broadcastRight: Option[Boolean] = None,
+           skew: AsOfSkew.Config = AsOfSkew.Config()): DataFrame = {
     // UNIT SAFETY: a raw-Long tolerance subtracts the time columns'
     // underlying long slots, so its unit is whatever those slots hold —
     // nanos for LongType epoch-nanos columns (the engine convention, see
@@ -185,7 +171,8 @@ object AsOf {
     // LongType columns; timestamp-typed columns must use the
     // `java.time.Duration` overload, which converts per the column type.
     requireRawLongTolerance(left, right, leftTime, rightTime, tolerance)
-    dispatch(left, right, keys, leftTime, rightTime, tolerance, broadcastRight)
+    dispatch(left, right, keys, leftTime, rightTime, tolerance, broadcastRight,
+      skew)
   }
 
   /** [[join]] WITHOUT the skew dispatch: always the plain single-key
@@ -238,7 +225,8 @@ object AsOf {
           Math.multiplyExact(tolerance.getSeconds, 1000000L),
           tolerance.getNano / 1000L)
     }
-    dispatch(left, right, keys, leftTime, rightTime, Some(raw), broadcastRight)
+    dispatch(left, right, keys, leftTime, rightTime, Some(raw), broadcastRight,
+      AsOfSkew.Config())
   }
 
   /** [[join]] with a unit-safe `Duration` tolerance and planner-chosen

@@ -17,9 +17,9 @@ import org.apache.spark.sql.types.LongType
   * gap for the as-of family.
   *
   * Since round 11 this is the DEFAULT plan: [[AsOf.join]] dispatches
-  * through [[join]] (conf-tunable, `spark.graft.asof.skew.*`), so the
-  * flagship API rescues a power-law key without the caller knowing the
-  * wrapper exists. [[AsOf.joinPlain]] is the explicit opt-out.
+  * through [[join]] with its per-call `skew` [[Config]], so the flagship
+  * API rescues a power-law key without the caller knowing the wrapper
+  * exists. [[AsOf.joinPlain]] is the explicit opt-out.
   *
   * The split is TIME-SLICED, exploiting the operator's own invariant
   * (the best match for a left row at time t is the single greatest

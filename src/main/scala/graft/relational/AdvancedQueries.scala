@@ -262,18 +262,25 @@ object AdvancedQueries {
       .orderBy(col("error_id"))
   }
 
+  /** The aggressive skew config [[asOfSkew]] and [[asOfSkewAuto]] share:
+    * a zero share threshold, a half-rate sample and a one-row floor, so
+    * the split path engages on the uniform fixture. */
+  private val AggressiveSkew = graft.plans.AsOfSkew.Config(
+    slices = 4, hotKeyShare = 0.0, sampleFraction = 0.5,
+    maxHotKeys = 32, minHotRows = 1)
+
   /** [[asOfNative]] through the SKEW-HARDENED path
     * ([[graft.plans.AsOfSkew]]): hot keys detected from a seeded
     * sample, their time axis quantile-sliced, the slice id appended to
     * the join key so one heavy user hash-distributes over many
     * partitions of the SAME [[graft.plans.AsOfJoinExec]] — the rescue
-    * AQE cannot perform on a custom node. Config here is deliberately
-    * aggressive (tiny share threshold, half-rate sample) so the split
-    * path actually engages on the uniform fixture — detection is an
-    * optimization, never a correctness input, so the oracle is the
-    * same DuckDB ASOF JOIN as the unsplit plan. Forced to the shuffle
-    * form: splitting a broadcast as-of would be pointless (the left
-    * side never shuffles there). */
+    * AQE cannot perform on a custom node. The config is
+    * [[AggressiveSkew]], so the split path actually engages on the
+    * uniform fixture — detection is an optimization, never a
+    * correctness input, so the oracle is the same DuckDB ASOF JOIN as
+    * the unsplit plan. Forced to the shuffle form: splitting a
+    * broadcast as-of would be pointless (the left side never shuffles
+    * there). */
   val asOfSkew: QueryDef = QueryDef.sql(
     "adv_asof_skew",
     // tied clicks dedup to the MAX event_id on both engines — see
@@ -298,26 +305,21 @@ object AdvancedQueries {
       .agg(max(col("event_id")).as("click_id"))
     graft.plans.AsOfSkew.join(errors, clicks,
         keys = Seq("user_id" -> "c_user_id"), leftTime = "t", rightTime = "c_t",
-        broadcastRight = Some(false),
-        config = graft.plans.AsOfSkew.Config(
-          slices = 4, hotKeyShare = 0.0, sampleFraction = 0.5,
-          maxHotKeys = 32, minHotRows = 1))
+        broadcastRight = Some(false), config = AggressiveSkew)
       .select(col("error_id"), col("user_id"), col("click_id"),
         ((col("t") - col("c_t")) / 1000000000L).cast("long").as("gap_seconds"))
       .orderBy(col("error_id"))
   }
 
   /** [[asOfNative]] through the DEFAULT dispatching API (r11, verdict
-    * #1) with the skew conf knobs forced aggressive — the end-to-end
+    * #1) with an aggressive per-call `skew` config — the end-to-end
     * pin that a caller of the FLAGSHIP `AsOf.join` gets the rescued
-    * (time-sliced) plan from conf alone, no wrapper in sight, and that
-    * the dispatch path answers bit-identically to the plain plan
-    * (same DuckDB oracle as every as-of in the family). The conf
-    * values are scoped to this query and restored afterwards, so the
-    * rest of the battery keeps the production defaults (under which
-    * the fixture's heaviest user — far below `minHotRows` — never
-    * triggers a split and every other as-of query's plan is untouched,
-    * the PlanAudit pin). */
+    * (time-sliced) plan without touching the wrapper, and that the
+    * dispatch path answers bit-identically to the plain plan (same
+    * DuckDB oracle as every as-of in the family). Every other as-of
+    * query keeps the default config (under which the fixture's
+    * heaviest user — far below `minHotRows` — never triggers a split
+    * and its plan is untouched, the PlanAudit pin). */
   val asOfSkewAuto: QueryDef = QueryDef.sql(
     "adv_asof_skew_auto",
     """WITH clicks AS (
@@ -338,25 +340,9 @@ object AdvancedQueries {
     val clicks = ev.filter(col("event_type") === "click")
       .groupBy(col("user_id").as("c_user_id"), col("ts").as("c_t"))
       .agg(max(col("event_id")).as("click_id"))
-    val knobs = Map(
-      "spark.graft.asof.skew.slices" -> "4",
-      "spark.graft.asof.skew.hotKeyShare" -> "0.0",
-      "spark.graft.asof.skew.sampleFraction" -> "0.5",
-      "spark.graft.asof.skew.maxHotKeys" -> "32",
-      "spark.graft.asof.skew.minHotRows" -> "1")
-    val saved = knobs.keys.map(k => k -> s.conf.getOption(k)).toMap
-    knobs.foreach { case (k, v) => s.conf.set(k, v) }
-    // dispatch (detection included) happens eagerly at construction, so
-    // restoring the conf afterwards cannot un-pick the plan
-    val joined =
-      try graft.plans.AsOf.join(errors, clicks,
+    graft.plans.AsOf.join(errors, clicks,
         keys = Seq("user_id" -> "c_user_id"), leftTime = "t",
-        rightTime = "c_t", broadcastRight = Some(false))
-      finally saved.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
-    joined
+        rightTime = "c_t", broadcastRight = Some(false), skew = AggressiveSkew)
       .select(col("error_id"), col("user_id"), col("click_id"),
         ((col("t") - col("c_t")) / 1000000000L).cast("long").as("gap_seconds"))
       .orderBy(col("error_id"))

@@ -57,28 +57,13 @@ class GraftSessionGuardSuite extends AnyFunSuite {
     assert(offenders(sources("src/main/scala"), builder).size == 1)
   }
 
-  /** Session keys that were replaced by the constant or per-call
-    * argument their default already was. A test or query that still
-    * set one would now be silently ignored, so none may be named —
-    * neither as a full key nor as a `DispatchConf(prefix)` leaf. */
-  private val removedKeys = Seq(
-    "asof.skew." -> "enabled", "asof.skew." -> "seed",
-    "asof.skew." -> "detectCache", "collapse." -> "statsCache",
-    "pack." -> "bucket", "pack." -> "superFactor",
-    "labels." -> "keepVersions", "labels." -> "rebuildFraction",
-    "ivf." -> "kmeansIters", "ivf." -> "twoLevel")
-
+  /** Operators take their settings as arguments: no `spark.graft.*`
+    * session key and no conf-reading helper remain. A test or query
+    * that still set one would now be silently ignored, so none may be
+    * named anywhere under src (this guard's own source excepted). */
   test("no removed spark.graft session key is named under src") {
-    val all = sources("src/main/scala") ++ sources("src/test/scala")
-    val hits = removedKeys.flatMap { case (group, leaf) =>
-      val prefix = "spark.graft." + group
-      val full = offenders(all, java.util.regex.Pattern.quote(prefix + leaf) + """\b""")
-      val split = all.filter { f =>
-        val text = new String(Files.readAllBytes(f), "UTF-8")
-        text.contains("\"" + prefix + "\"") && text.contains("\"" + leaf + "\"")
-      }.map(f => s"$f: reads '$leaf' under \"$prefix\"")
-      full ++ split
-    }
-    assertNone(hits)
+    val all = (sources("src/main/scala") ++ sources("src/test/scala"))
+      .filterNot(_.getFileName.toString == "GraftSessionGuardSuite.scala")
+    assertNone(offenders(all, """spark\.graft\.|DispatchConf"""))
   }
 }

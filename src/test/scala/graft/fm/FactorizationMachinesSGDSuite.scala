@@ -1,6 +1,7 @@
 package graft.fm
 
 import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.col
@@ -123,7 +124,8 @@ class FactorizationMachinesSGDSuite extends SparkSessionSuite {
 
   /** The eager checkpoint is a step's ONLY Spark action: the batch size
     * comes from the caller, and the loss and intercept residual sum are
-    * observed on the checkpoint job. Nothing is left in the cache. */
+    * observed on the checkpoint job, which carries the step's phase tag
+    * whoever calls `step`. Nothing is left in the cache. */
   test("step runs one Spark action and caches nothing") {
     val s = spark
     import s.implicits._
@@ -145,17 +147,30 @@ class FactorizationMachinesSGDSuite extends SparkSessionSuite {
       override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = actions.add(funcName)
     }
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
     spark.listenerManager.register(listener)
+    spark.sparkContext.addSparkListener(jobListener)
     try {
       est.step(params, batch, n = 2, iter = 1, w0 = 0.5) should not be empty
       // the listener bus is async but ordered: a marker action arriving
       // means every execution of the step has been delivered
-      spark.range(1).collect()
+      graft.Phase("marker")(spark.range(1).collect())
       val deadline = System.currentTimeMillis + 10000
-      while (!actions.contains("collect") && System.currentTimeMillis < deadline)
+      while ((!actions.contains("collect") || !jobs.contains("marker")) &&
+          System.currentTimeMillis < deadline)
         Thread.sleep(50)
-    } finally spark.listenerManager.unregister(listener)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
     actions.asScala.toSeq shouldBe Seq("localCheckpoint", "collect")
+    // the checkpoint job is the last one started before the marker
+    jobs.asScala.toSeq.takeWhile(_ != "marker").lastOption
+      .getOrElse("") should startWith("fm.sgd.step 1")
     assert(spark.sharedState.cacheManager.isEmpty, "the step left a cached plan")
   }
 

@@ -83,7 +83,7 @@ class CosineCollapseSuite extends SparkSessionSuite {
     val prep = floodedPrep(10).persist() // 5000 rows, 500 uniques
     try {
       val direct = Similarity.rangeDispatchDecision(prep,
-        minLshVectors = Some(1000L))
+        minLshVectors = 1000L)
       // a uniform flood scales lsh AND brute volumes ~×copies², so the
       // share stays at the corpus's spread value (<90%) and the
       // full-corpus decision routes BANDED; the collapsed path must
@@ -92,7 +92,7 @@ class CosineCollapseSuite extends SparkSessionSuite {
       direct.n shouldBe 5000L
       direct.useBrute shouldBe false
       val got = canon(Similarity.rangeSearchPairs(prep, 0.35,
-        minLshVectors = Some(1000L)))
+        minLshVectors = 1000L))
       got shouldBe canon(Similarity.bandedPairCosine(prep)
         .filter(col("rawcos") >= 0.35))
     } finally { prep.unpersist(); graft.InternalCaches.releaseAll() }

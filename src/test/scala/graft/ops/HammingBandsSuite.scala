@@ -61,7 +61,7 @@ class HammingBandsSuite extends SparkSessionSuite {
     for (route <- Seq(Some(true), Some(false), None)) {
       val got = collected(HammingBands.pairs(sigs, "id", "bands", 4, 3,
         s"suite-route-$route", route = route,
-        minBrutePin = Some(50L), sharePctPin = Some(90)))
+        minBrute = 50L, sharePct = 90))
       withClue(s"route=$route: ") { got shouldBe ref }
     }
   }
@@ -70,7 +70,7 @@ class HammingBandsSuite extends SparkSessionSuite {
     val spread = sigDf(0L until 600L, spreadSig)
     val dSpread = HammingBands.decide(
       spread.withColumnRenamed("id", "gid"), "suite-spread",
-      minBrutePin = Some(100L), sharePctPin = Some(90))
+      minBrute = 100L, sharePct = 90)
     dSpread.useBrute shouldBe false
     dSpread.uniques shouldBe 600L
 
@@ -79,7 +79,7 @@ class HammingBandsSuite extends SparkSessionSuite {
     val floodU = flood.dropDuplicates("bands")
       .withColumnRenamed("id", "gid")
     val dFlood = HammingBands.decide(floodU, "suite-flood",
-      minBrutePin = Some(100L), sharePctPin = Some(90))
+      minBrute = 100L, sharePct = 90)
     dFlood.useBrute shouldBe true
     // bands 0..2 each contribute C(u,2): share >= 300% of brute
     dFlood.bandPairs should be >= dFlood.brutePairs * 3
@@ -87,7 +87,7 @@ class HammingBandsSuite extends SparkSessionSuite {
     // and the flood corpus still answers EXACTLY on the auto route
     val ref = reference(flood, 3)
     val got = collected(HammingBands.pairs(flood, "id", "bands", 4, 3,
-      "suite-flood-auto", minBrutePin = Some(100L), sharePctPin = Some(90)))
+      "suite-flood-auto", minBrute = 100L, sharePct = 90))
     got shouldBe ref
   }
 
@@ -120,24 +120,20 @@ class HammingBandsSuite extends SparkSessionSuite {
     * driver-memory hazard) instead of hinting an unbroadcastable
     * relation. */
   test("dispatched brute above maxBroadcast falls back to banded") {
-    val s = spark
     val flood = sigDf(0L until 600L, floodSig)
-    s.conf.set("spark.graft.hamming.auto.maxBroadcast", "10")
-    try {
-      val df = HammingBands.pairs(flood, "id", "bands", 4, 3,
-        "suite-gate", minBrutePin = Some(5L), sharePctPin = Some(90))
-      // the banded fallback must not plan a broadcast of the 600-row
-      // unique relation nor a cartesian
-      val plan = df.queryExecution.executedPlan.toString
-      plan should not include "CartesianProduct"
-      collected(df) shouldBe reference(flood, 3)
-    } finally s.conf.unset("spark.graft.hamming.auto.maxBroadcast")
+    val df = HammingBands.pairs(flood, "id", "bands", 4, 3,
+      "suite-gate", minBrute = 5L, sharePct = 90, maxBroadcast = 10L)
+    // the banded fallback must not plan a broadcast of the 600-row
+    // unique relation nor a cartesian
+    val plan = df.queryExecution.executedPlan.toString
+    plan should not include "CartesianProduct"
+    collected(df) shouldBe reference(flood, 3)
   }
 
   test("tiny corpora short-circuit to brute via minBrute") {
     val tiny = sigDf(0L until 40L, spreadSig)
     val d = HammingBands.decide(tiny.withColumnRenamed("id", "gid"),
-      "suite-tiny", minBrutePin = Some(100L), sharePctPin = Some(90))
+      "suite-tiny", minBrute = 100L, sharePct = 90)
     d.useBrute shouldBe true
     d.reason should include("minBrute")
   }

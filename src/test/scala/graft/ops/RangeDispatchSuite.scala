@@ -5,9 +5,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The brute-vs-banded range-search dispatch (r11): decision rule,
-  * conf knobs, route equivalence, and plan-time cost. Mirrors the
-  * as-of skew dispatch suite's contract style — the flagship entry
-  * point must do the right thing from conf alone. */
+  * per-call thresholds, route equivalence, and plan-time cost. Mirrors
+  * the as-of skew dispatch suite's contract style — the flagship entry
+  * point must do the right thing at its defaults. */
 class RangeDispatchSuite extends SparkSessionSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -45,16 +45,6 @@ class RangeDispatchSuite extends SparkSessionSuite {
     }.toDF("vec_id", "embedding")
   }
 
-  private def withConf(kv: (String, String)*)(body: => Unit): Unit = {
-    val keys = kv.map(_._1)
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    try { kv.foreach { case (k, v) => spark.conf.set(k, v) }; body }
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("small corpus takes the brute fast path and matches the exact " +
       "kernel bit-for-bit") {
     val prep = Similarity.prepared(graft.Tables.embeddings(spark, sfDir))
@@ -90,13 +80,13 @@ class RangeDispatchSuite extends SparkSessionSuite {
   test("concentrated corpus trips the share rule: banded would score " +
       "every pair per table — brute is cheaper AND exact") {
     val prep = Similarity.prepared(concentratedCorpus(200)).persist()
-    try withConf("spark.graft.sim.range.auto.minLshVectors" -> "100") {
-      val d = Similarity.rangeDispatchDecision(prep)
+    try {
+      val d = Similarity.rangeDispatchDecision(prep, minLshVectors = 100L)
       d.useBrute shouldBe true
       d.reason should include("sharePct")
       // one bucket per table: lsh volume is exactly tables * C(n,2)
       d.lshPairs shouldBe d.brutePairs * Similarity.BandTables
-      canon(Similarity.rangeSearchPairs(prep, 0.35)) shouldBe
+      canon(Similarity.rangeSearchPairs(prep, 0.35, minLshVectors = 100L)) shouldBe
         canon(Similarity.pairCosineKernel(prep, 0.35))
     } finally prep.unpersist()
   }
@@ -104,11 +94,9 @@ class RangeDispatchSuite extends SparkSessionSuite {
   test("knobs: raising sharePct past the measured share flips the " +
       "concentrated corpus back to banded") {
     val prep = Similarity.prepared(concentratedCorpus(200)).persist()
-    try withConf(
-      "spark.graft.sim.range.auto.minLshVectors" -> "100",
-      "spark.graft.sim.range.auto.sharePct" -> "300") {
-      Similarity.rangeDispatchDecision(prep).useBrute shouldBe false
-    } finally prep.unpersist()
+    try Similarity.rangeDispatchDecision(prep, minLshVectors = 100L,
+      sharePct = 300).useBrute shouldBe false
+    finally prep.unpersist()
   }
 
   test("the decision is ONE metadata-sized action (bucket histogram " +

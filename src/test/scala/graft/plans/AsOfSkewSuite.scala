@@ -306,37 +306,23 @@ class AsOfSkewSuite extends SparkSessionSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
-  private def withSkewConf(pairs: (String, String)*)(body: => Unit): Unit = {
-    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  test("flagship AsOf.join rescues the hot key from conf alone " +
-      "(r10 verdict #1)") {
+  test("flagship AsOf.join rescues the hot key per call (r10 verdict #1)") {
     val (left, right) = skewedCorpus
     val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
     val prevCoalesce = spark.conf.get(coalesceKey)
     try {
       spark.conf.set(coalesceKey, "false")
-      withSkewConf(
-        "spark.graft.asof.skew.sampleFraction" -> "0.5",
-        "spark.graft.asof.skew.minHotRows" -> "1",
-        "spark.graft.asof.skew.maxHotKeys" -> "8") {
-        val df = AsOf.join(left, right, Seq("k" -> "rk"), "t", "rt",
-          broadcastRight = Some(false))
-        val hotPartitions = df.filter(col("k") === 7L)
-          .select(spark_partition_id()).distinct().count()
-        hotPartitions should be > 1L
-        val plain = AsOf.joinPlain(left, right, Seq("k" -> "rk"), "t", "rt",
-          broadcastRight = Some(false))
-        canon(df.orderBy("lv").collect()) shouldBe
-          canon(plain.orderBy("lv").collect())
-      }
+      val df = AsOf.join(left, right, Seq("k" -> "rk"), "t", "rt",
+        broadcastRight = Some(false),
+        skew = AsOfSkew.Config(sampleFraction = 0.5, minHotRows = 1,
+          maxHotKeys = 8))
+      val hotPartitions = df.filter(col("k") === 7L)
+        .select(spark_partition_id()).distinct().count()
+      hotPartitions should be > 1L
+      val plain = AsOf.joinPlain(left, right, Seq("k" -> "rk"), "t", "rt",
+        broadcastRight = Some(false))
+      canon(df.orderBy("lv").collect()) shouldBe
+        canon(plain.orderBy("lv").collect())
     } finally spark.conf.set(coalesceKey, prevCoalesce)
   }
 

@@ -278,18 +278,19 @@ class PlanAuditSuite extends SparkSessionSuite {
     // audit fixture its unique-signature count is tiny, so the auto
     // route legitimately picks the brute kernel (a bounded
     // BroadcastNestedLoopJoin over UNIQUES — never a corpus cartesian).
-    // The PRODUCTION (banded) shape is pinned under a conf that forces
-    // it; both shapes must stay cartesian-free.
-    withHammingRoute(minBrute = "0", sharePct = "1000") {
-      Seq("mm_phash_dedup", "mm_fuzzy_dedup").foreach { q =>
-        val banded = physicalPlan(q)
+    // The PRODUCTION (banded) shape is pinned through the route
+    // argument; both shapes must stay cartesian-free.
+    Seq("mm_phash_dedup" -> graft.ops.Multimodal.phashDedupPairs _,
+        "mm_fuzzy_dedup" -> graft.ops.Multimodal.fuzzyDedupPairs _)
+      .foreach { case (q, pairs) =>
+        val banded = pairs(spark, dir, Some(false))
+          .queryExecution.executedPlan.toString
         withClue(s"$q banded plan:\n$banded\n") {
           assert(!banded.contains("CartesianProduct"))
           assert(!banded.contains("BroadcastNestedLoopJoin"))
         }
         graft.InternalCaches.releaseAll()
       }
-    }
     val bruteP = physicalPlan("mm_phash_dedup")
     withClue(s"mm_phash_dedup brute plan:\n$bruteP\n") {
       assert(!bruteP.contains("CartesianProduct"))
@@ -312,33 +313,19 @@ class PlanAuditSuite extends SparkSessionSuite {
     // audit the PRODUCTION (banded) route; the r12 collapse adds the
     // signature-group window + expansion joins, so the bound moved from
     // 8 (pre-collapse) to 12 — still a fixed constant, never O(corpus)
-    withHammingRoute(minBrute = "0", sharePct = "1000") {
-      val plan = physicalPlan("mm_phash_dedup")
-      withClue(plan) {
-        // media scan → signature is join-free until the collapse
-        // window. Count DISTINCT exchanges: the persisted signature-
-        // group map renders its cached subtree (and its one exchange)
-        // once per reference in the plan STRING, but executes once.
-        val distinctExchanges =
-          "Exchange [a-z]+\\w*(\\([^,)]*|)".r.findAllIn(plan).toSet
-        assert(distinctExchanges.size <= 6, s"exchanges: $distinctExchanges")
-        assert(!plan.contains("CartesianProduct"))
-      }
-      graft.InternalCaches.releaseAll()
+    val plan = graft.ops.Multimodal.phashDedupPairs(spark, dir, Some(false))
+      .queryExecution.executedPlan.toString
+    withClue(plan) {
+      // media scan → signature is join-free until the collapse
+      // window. Count DISTINCT exchanges: the persisted signature-
+      // group map renders its cached subtree (and its one exchange)
+      // once per reference in the plan STRING, but executes once.
+      val distinctExchanges =
+        "Exchange [a-z]+\\w*(\\([^,)]*|)".r.findAllIn(plan).toSet
+      assert(distinctExchanges.size <= 6, s"exchanges: $distinctExchanges")
+      assert(!plan.contains("CartesianProduct"))
     }
-  }
-
-  /** Pin the Hamming-band dispatch (`spark.graft.hamming.auto.*`) for
-    * the duration of `body`, restoring the session defaults after. */
-  private def withHammingRoute(minBrute: String, sharePct: String)(
-      body: => Unit): Unit = {
-    val c = spark.conf
-    c.set("spark.graft.hamming.auto.minBrute", minBrute)
-    c.set("spark.graft.hamming.auto.sharePct", sharePct)
-    try body finally {
-      c.unset("spark.graft.hamming.auto.minBrute")
-      c.unset("spark.graft.hamming.auto.sharePct")
-    }
+    graft.InternalCaches.releaseAll()
   }
 
   /** r9: the forward/nearest as-of family keeps the backward form's
