@@ -3,7 +3,7 @@ package graft.fm
 import org.apache.spark.ml.Estimator
 import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.ml.util.Identifiable
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -21,7 +21,15 @@ import scala.collection.mutable.ArrayBuffer
   *     disjoint and each is ~1/maxIter of the data;
   *   - per-iteration learning rate `stepSize / sqrt(iter)` (SGD:121) and
   *     L1 soft-thresholding with `shrinkage = lr * regParam` (SGD:122,
-  *     177-181) applied to every feature every iteration;
+  *     177-181) applied to every feature every iteration. A cold start
+  *     applies it lazily to features no batch has touched yet: the
+  *     parameter table starts empty, and a feature's row is created at
+  *     its first touch from its seeded init replayed through the
+  *     shrinkages of every step it missed (`fm_init_strength` /
+  *     `fm_init_vec`, the cumulative penalty of Tsuruoka, Tsujii &
+  *     Ananiadou, ACL 2009). The replay is the very update an untouched
+  *     row takes, `soft(x − 0.0)`, so the row equals its eager twin; a
+  *     row that exists is still shrunk eagerly every iteration;
   *   - gradient-descent update `θ ← θ − lr · Σ_batch grad / n` via a
   *     per-feature reduction joined full-outer back onto the parameter
   *     table with zero defaults (SGD:148-176);
@@ -51,9 +59,11 @@ import scala.collection.mutable.ArrayBuffer
   *     (the reference unpersisted lazily and recomputed chains,
   *     SURVEY §3.1 step 5). That checkpoint is the step's ONLY Spark
   *     action: `fit` sizes every mini-batch in one job up front, and the
-  *     batch loss and intercept residual sum are observed on the
-  *     checkpoint job itself (the reference ran a count, a loss reduce
-  *     and the parameter update as separate jobs, SGD:126-139).
+  *     batch loss, intercept residual sum and rows written are observed
+  *     on the checkpoint job itself (the reference ran a count, a loss
+  *     reduce and the parameter update as separate jobs, SGD:126-139).
+  *     A cold fit runs no init job: the reference materialized the full
+  *     initial table first (SGD:218-252).
   *
   * Scale notes (100 TB): per iteration the exploded batch shuffles once
   * by sampleId (window pass) and once by featureId (gradient reduction +
@@ -87,11 +97,16 @@ class FactorizationMachinesSGD(override val uid: String)
     * reference SGD:134-139), for diagnostics and tests. */
   @volatile var lastLossHistory: Seq[Double] = Seq.empty
 
+  /** Per-iteration parameter rows written by the last `fit`, one entry
+    * per [[lastLossHistory]] entry: on a cold start they grow with the
+    * features touched so far, not with the model. */
+  @volatile var lastStepRows: Seq[Long] = Seq.empty
+
   /** Warm-start source: when set, `fit` resumes from this model's
     * parameter tables instead of the hash-gaussian init (features absent
     * from the warm model still lazy-init deterministically inside the
-    * loop). A capability the reference lacks — its fit always re-inits
-    * (SGD:80). */
+    * loop, at first touch and with no shrinkage replayed). A capability
+    * the reference lacks — its fit always re-inits (SGD:80). */
   @volatile private var initialModel: Option[FactorizationMachinesModel] = None
   def setInitialModel(model: FactorizationMachinesModel): this.type = {
     initialModel = Some(model); this
@@ -102,7 +117,10 @@ class FactorizationMachinesSGD(override val uid: String)
   // plan would double in size every iteration — persist() bounds
   // recomputation but NOT plan size, and by ~8 accumulated iterations the
   // plan string alone OOMs the driver. Every iteration therefore ends in
-  // an eager localCheckpoint, which truncates the plan to a leaf.
+  // an eager localCheckpoint, which truncates the plan to a leaf. A cold
+  // fit's first `params` is an empty local relation (the optimizer drops
+  // both joins against it), and each later one holds only the features
+  // touched so far.
 
   override def copy(extra: ParamMap): Estimator[FactorizationMachinesModel] =
     defaultCopy(extra)
@@ -119,10 +137,19 @@ class FactorizationMachinesSGD(override val uid: String)
       .select(col($(labelCol)).as("label"), col($(featuresCol)).as("features"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    var params = initialModel.map(_.paramTable)
-      .getOrElse(initialParams(data))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    params.count() // materialize the (deterministic) init
+    // A cold start begins from an empty table: each feature's row is
+    // created by the first step that touches it (see `step`'s `pending`),
+    // so no init job runs. maxIter = 0 returns the seeded init itself.
+    var params = initialModel match {
+      case Some(m) =>
+        val warm = m.paramTable.persist(StorageLevel.MEMORY_AND_DISK)
+        warm.count() // materialize the warm table once for both its uses
+        warm
+      case None if $(maxIter) == 0 => initialParams(data)
+      case None => data.sparkSession.createDataFrame(
+        java.util.Collections.emptyList[Row](),
+        StructType.fromDDL("id INT, strength DOUBLE, vecArr ARRAY<DOUBLE>"))
+    }
 
     // maxIter = 0 trains nothing: randomSplit rejects an empty weight
     // list, so there are no batches to split or size.
@@ -143,21 +170,29 @@ class FactorizationMachinesSGD(override val uid: String)
     // Warm starts resume the bias too; cold starts at the reference's 0.0.
     var w0 = initialModel.map(_.globalBias).getOrElse(0.0)
     val losses = ArrayBuffer.empty[Double]
+    val rowsWritten = ArrayBuffer.empty[Long]
+    // Cold starts only: the shrinkages of the steps run so far, which a
+    // feature's first row replays. An empty batch shrinks nothing, so it
+    // adds none; a warm start replays none.
+    var pending = Vector.empty[Double]
     batches.zipWithIndex.foreach { case (batch, idx) =>
       val iter = idx + 1
       val n = sizes.getOrElse(idx, 0L)
-      step(params, batch, n, iter, w0) match {
-        case Some((newParams, loss, newW0)) =>
+      step(params, batch, n, iter, w0, pending) match {
+        case Some((newParams, loss, newW0, rows)) =>
           params.unpersist() // newParams is already materialized by step()
           params = newParams
           w0 = newW0
           losses += loss
-          logInfo(s"FM SGD iteration $iter/${$(maxIter)}: loss=$loss")
+          rowsWritten += rows
+          if (initialModel.isEmpty) pending :+= shrinkage(iter)
+          logInfo(s"FM SGD iteration $iter/${$(maxIter)}: loss=$loss rows=$rows")
         case None =>
           logWarning(s"FM SGD iteration $iter/${$(maxIter)}: empty mini-batch")
       }
     }
     lastLossHistory = losses.toSeq
+    lastStepRows = rowsWritten.toSeq
     data.unpersist()
 
     val model = FactorizationMachinesModel
@@ -171,57 +206,63 @@ class FactorizationMachinesSGD(override val uid: String)
 
   // ------------------------------------------------------------ internals --
 
-  /** Deterministic standard gaussian from hashes of (tag, id, f, seed) via
-    * Box–Muller — replaces the reference's unseeded Random draws. Pure
-    * Catalyst expressions: identical on every recomputation and executor. */
-  private[fm] def hashGaussian(id: Column, f: Column, seedVal: Long): Column = {
-    def uniform(tag: String): Column =
-      (pmod(xxhash64(lit(tag), id, f, lit(seedVal)), lit(1000000L))
-        .cast("double") + lit(0.5)) / lit(1000000.0)
-    sqrt(lit(-2.0) * org.apache.spark.sql.functions.log(uniform("bm-u1"))) *
-      cos(lit(2.0 * math.Pi) * uniform("bm-u2"))
-  }
+  /** Iteration `iter`'s learning rate `stepSize / sqrt(iter)` (SGD:121). */
+  private def learningRate(iter: Int): Double = $(stepSize) / math.sqrt(iter)
 
-  /** Seeded init of feature `id`'s strength: N(0, initialSd²). */
-  private def initStrength(id: Column): Column =
-    hashGaussian(id, lit(-1), $(seed)) * $(initialSd)
+  /** Iteration `iter`'s L1 shrinkage `lr · regParam` (SGD:122): the one
+    * double `step` thresholds with and `fit` records for the replay. */
+  private def shrinkage(iter: Int): Double = learningRate(iter) * $(regParam)
+
+  /** Seeded init of feature `id`'s strength, N(0, initialSd²), a
+    * deterministic hash-gaussian of (id, seed) in place of the
+    * reference's unseeded Random draws — then shrunk by `shrinks` in
+    * order (graft.functions.FmInit). */
+  private def initStrength(id: Column, shrinks: Seq[Double]): Column =
+    call_function("fm_init_strength", id, lit($(seed)), lit($(initialSd)),
+      lit(shrinks.toArray))
 
   /** Seeded init of feature `id`'s factor vector: k draws of
-    * N(0, initialSd²), independent of [[initStrength]]'s. */
-  private def initVec(id: Column): Column =
-    transform(sequence(lit(0), lit($(dimFactorization) - 1)),
-      f => hashGaussian(id, f, $(seed)) * $(initialSd))
+    * N(0, initialSd²), independent of [[initStrength]]'s, each shrunk by
+    * `shrinks` in order. */
+  private def initVec(id: Column, shrinks: Seq[Double]): Column =
+    call_function("fm_init_vec", id, lit($(seed)), lit($(dimFactorization)),
+      lit($(initialSd)), lit(shrinks.toArray))
 
   /** Initial combined parameter table (id, strength, vecArr) over the
     * distinct feature universe of the input — reference SGD:218-252 with
-    * seeded init. */
+    * seeded init. `fit` returns it for maxIter = 0; a cold fit that
+    * trains never builds it. */
   private[fm] def initialParams(data: DataFrame): DataFrame =
     data
       .select(inline(FactorizationMachinesModel.activeEntries(col("features"))))
       .select(col("featureId").as("id"))
       .distinct()
-      .select(col("id"), initStrength(col("id")).as("strength"),
-        initVec(col("id")).as("vecArr"))
+      .select(col("id"), initStrength(col("id"), Nil).as("strength"),
+        initVec(col("id"), Nil).as("vecArr"))
 
   /** One SGD iteration over `batch`, whose row count the caller passes
     * as `n` (`fit` sizes all batches in one job): returns the updated
     * combined parameter table — already eagerly local-checkpointed
     * (materialized + plan truncated; see the lineage note above) so the
     * caller can immediately drop the previous table — the batch loss,
-    * and the (possibly updated) global bias. w0 enters the training
-    * prediction; it is only UPDATED when `fitIntercept` is set (by the
-    * batch-mean residual gradient, no L1). The checkpoint is the step's
-    * only Spark action. Samples without active features count in `n`
-    * and add nothing, so an all-featureless batch is pure L1 shrinkage
-    * at loss 0.0. None for an empty batch (SGD:126-128). w0 defaults to
-    * the reference's fixed 0.0, the shape most oracle queries pin. */
+    * the (possibly updated) global bias, and the number of parameter rows
+    * written. w0 enters the training prediction; it is only UPDATED when
+    * `fitIntercept` is set (by the batch-mean residual gradient, no L1).
+    * The checkpoint is the step's only Spark action. Samples without
+    * active features count in `n` and add nothing, so an all-featureless
+    * batch is pure L1 shrinkage at loss 0.0. None for an empty batch
+    * (SGD:126-128). w0 defaults to the reference's fixed 0.0, the shape
+    * most oracle queries pin. A feature with no row in `params` starts
+    * from its seeded init shrunk by `pending`, in order: the shrinkages
+    * of a cold fit's earlier steps, which its row would have taken had
+    * it existed. Direct callers pass tables and no `pending`. */
   private[fm] def step(
       params: DataFrame, batch: DataFrame, n: Long, iter: Int,
-      w0: Double = 0.0): Option[(DataFrame, Double, Double)] = {
+      w0: Double = 0.0,
+      pending: Seq[Double] = Nil): Option[(DataFrame, Double, Double, Long)] = {
     if (n == 0) return None
     val k = $(dimFactorization)
-    val lr = $(stepSize) / math.sqrt(iter)
-    val shrinkage = lr * $(regParam)
+    val lr = learningRate(iter)
 
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("sampleId"))
@@ -233,7 +274,8 @@ class FactorizationMachinesSGD(override val uid: String)
     val table = params.filter(col("id").isNotNull)
 
     // explode + left-outer param join; unseen features get deterministic
-    // gaussian init (Model:155-171 with the determinism fix).
+    // gaussian init (Model:155-171 with the determinism fix), caught up
+    // on the shrinkage they missed.
     val exploded = batch
       .withColumn("sampleId", monotonically_increasing_id())
       .select(col("label"), col("sampleId"),
@@ -241,8 +283,9 @@ class FactorizationMachinesSGD(override val uid: String)
       .join(table, col("featureId") === table("id"), "left_outer")
       .select(col("label"), col("sampleId"), col("featureId"),
         col("featureValue").as("x"),
-        coalesce(col("strength"), initStrength(col("featureId"))).as("strength"),
-        coalesce(col("vecArr"), initVec(col("featureId"))).as("vecArr"))
+        coalesce(col("strength"), initStrength(col("featureId"), pending))
+          .as("strength"),
+        coalesce(col("vecArr"), initVec(col("featureId"), pending)).as("vecArr"))
 
     // Per-row FM terms (Model:173-181); the array math runs as the
     // codegen'd native expressions (graft.functions.FmArrayOps).
@@ -317,8 +360,9 @@ class FactorizationMachinesSGD(override val uid: String)
         array((0 until k).map(f => col(s"_gv$f")): _*).as("dV"),
         col("lossSum")) ++ rSum.map(col)): _*)
 
+    val shrink = shrinkage(iter)
     def soft(c: Column): Column =
-      signum(c) * greatest(lit(0.0), abs(c) - lit(shrinkage))
+      signum(c) * greatest(lit(0.0), abs(c) - lit(shrink))
 
     val zeroArr = array_repeat(lit(0.0), k)
     // Features with a gradient but no parameter row (first touch) must be
@@ -327,22 +371,23 @@ class FactorizationMachinesSGD(override val uid: String)
     // inits the forward pass randomly but SGD:171 merges against 0.0;
     // divergence documented.)
     val mergedKey = coalesce(col("id"), col("featureId"))
-    // The batch totals are observed on the merge output: it runs in the
-    // checkpoint job's result stage, where Spark applies accumulator
-    // updates exactly once (a shuffle-map stage may re-run).
+    // The batch totals and the rows written are observed on the merge
+    // output: it runs in the checkpoint job's result stage, where Spark
+    // applies accumulator updates exactly once (a shuffle-map stage may
+    // re-run).
     val totals = Observation()
     val newParams = table
       .join(grads, col("id") === col("featureId"), "full_outer")
       .observe(totals, sum(col("lossSum")).as("loss"),
-        rSum.map(c => sum(col(c)).as("r")): _*)
+        (count(lit(1)).as("rows") +: rSum.map(c => sum(col(c)).as("r"))): _*)
       .select(
         mergedKey.as("id"),
-        soft(coalesce(col("strength"), initStrength(mergedKey))
+        soft(coalesce(col("strength"), initStrength(mergedKey, pending))
           - coalesce(col("dW"), lit(0.0))).as("strength"),
         call_function("fm_soft_update",
-          coalesce(col("vecArr"), initVec(mergedKey)),
+          coalesce(col("vecArr"), initVec(mergedKey, pending)),
           coalesce(col("dV"), zeroArr),
-          lit(shrinkage)).as("vecArr"))
+          lit(shrink)).as("vecArr"))
 
     // Eager: materializes before the caller drops the old table AND cuts
     // the (otherwise exponentially duplicated) logical plan to a leaf.
@@ -358,6 +403,6 @@ class FactorizationMachinesSGD(override val uid: String)
     // dyadic fixtures whatever the summation order. No shrinkage: L1
     // never applies to the bias.
     val newW0 = if (fitW0) w0 - total("r") * (lr / n) else w0
-    Some((materialized, total("loss"), newW0))
+    Some((materialized, total("loss"), newW0, totals.get("rows").asInstanceOf[Long]))
   }
 }

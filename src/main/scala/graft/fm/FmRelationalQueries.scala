@@ -231,7 +231,7 @@ object FmRelationalQueries {
     val f = feats(s, d).persist()
     val params = paramTable(f).persist()
     val batch = labelled(f).persist()
-    val Some((newParams, _, _)) =
+    val Some((newParams, _, _, _)) =
       oracleEstimator("fmStepOracle").step(params, batch, batch.count(), iter = 1)
     // Bit-exact through the gradient sums; ·(lr/n) and the soft threshold
     // are deterministic scalar ops — no rounding, only −0.0 normalized.
@@ -256,7 +256,7 @@ object FmRelationalQueries {
     val f = feats(s, d).persist()
     val params = paramTable(f).persist()
     val batch = labelled(f).persist()
-    val Some((newParams, _, newW0)) = oracleEstimator("fmStepIntercept")
+    val Some((newParams, _, newW0, _)) = oracleEstimator("fmStepIntercept")
       .setFitIntercept(true).step(params, batch, batch.count(), iter = 1, w0 = W0)
     // newParams is localCheckpoint'd — not unpersisted before the result runs.
     flatParams(newParams).withColumn("w0_new", lit(newW0)).orderBy(col("id"))
@@ -286,8 +286,8 @@ object FmRelationalQueries {
       val est = oracleEstimator("fmTwoSteps")
       val p0 = paramTable(f).persist()
       val n = batch.count()
-      val Some((p1, _, _)) = est.step(p0, batch, n, iter = 1)
-      val Some((p2, _, _)) = est.step(p1, batch, n, iter = 2)
+      val Some((p1, _, _, _)) = est.step(p0, batch, n, iter = 1)
+      val Some((p2, _, _, _)) = est.step(p1, batch, n, iter = 2)
       // Step 2 consumes step 1's inexact ÷n, so its sums can differ by
       // ulps across engines: round(…,6) absorbs them (generic doubles —
       // the decimal-tie pathology of the old ÷10/÷23 fixtures is gone),
@@ -351,7 +351,7 @@ object FmRelationalQueries {
     var params = paramTable(f)
     val n = batch.count()
     val losses = (1 to 3).map { iter =>
-      val Some((next, loss, _)) = est.step(params, batch, n, iter)
+      val Some((next, loss, _, _)) = est.step(params, batch, n, iter)
       params = next
       loss
     }

@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, QuaternaryExpression, TernaryExpression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, QuaternaryExpression, QuinaryExpression, TernaryExpression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Native codegen'd replacements for the FM module's per-row array math
   * (r17, brief rule 4): the previous `transform` / `aggregate` /
@@ -16,8 +17,10 @@ import org.apache.spark.sql.types._
   * (left-to-right fold, left-associated products), so every value is
   * bit-identical — the SGD/score SQL oracles and the golden suites gate
   * that equivalence. Input arrays are FM parameter/feature vectors and
-  * never carry null elements (built by `vector_to_array`, `transform`,
-  * or `array_repeat`); outputs are primitive double arrays. */
+  * never carry null elements (built by `vector_to_array`, `fm_init_vec`,
+  * `array_repeat` or an array literal); outputs are primitive double
+  * arrays. `fm_init_strength`/`fm_init_vec` ([[FmInit]]) replace the
+  * seeded init's Column composition and its `transform(sequence(…))`. */
 object FmArrayOps {
 
   private def arrType(e: Expression): Boolean = e.dataType match {
@@ -46,7 +49,67 @@ object FmArrayOps {
       (es: Seq[Expression]) => FmGradV(es.head, es(1), es(2), es(3))),
     (new org.apache.spark.sql.catalyst.FunctionIdentifier("fm_soft_update"),
       new ExpressionInfo(classOf[FmSoftUpdate].getName, "fm_soft_update"),
-      (es: Seq[Expression]) => FmSoftUpdate(es.head, es(1), es(2))))
+      (es: Seq[Expression]) => FmSoftUpdate(es.head, es(1), es(2))),
+    (new org.apache.spark.sql.catalyst.FunctionIdentifier("fm_init_strength"),
+      new ExpressionInfo(classOf[FmInitStrength].getName, "fm_init_strength"),
+      (es: Seq[Expression]) => FmInitStrength(es.head, es(1), es(2), es(3))),
+    (new org.apache.spark.sql.catalyst.FunctionIdentifier("fm_init_vec"),
+      new ExpressionInfo(classOf[FmInitVec].getName, "fm_init_vec"),
+      (es: Seq[Expression]) => FmInitVec(es.head, es(1), es(2), es(3), es(4))))
+}
+
+/** The FM trainer's seeded parameter init, replayed through the L1 soft
+  * thresholds of the steps it missed: the shared scalar kernel of
+  * [[FmInitStrength]] and [[FmInitVec]], called from both their
+  * interpreted and their generated code.
+  *
+  * [[draw]] is bit-identical to the Column composition it replaces,
+  * `sqrt(-2·log(u1)) · cos(2π·u2) · sd` with
+  * `u = (pmod(xxhash64(tag, id, f, seed), 1e6) + 0.5) / 1e6`: Spark's
+  * `xxhash64` chains XXH64 (seed 42) over its arguments left to right,
+  * its `log` is `StrictMath.log`, and its `sqrt`/`cos` are `Math`'s.
+  * [[replay]] applies, per shrinkage `s` in order, exactly the update a
+  * parameter with no gradient takes in a step:
+  * `c = x − 0.0; t = |c| − s; x = signum(c)·(t > 0 ? t : 0)`. */
+object FmInit {
+  private def tagHash(tag: String): Long =
+    XXH64.hashUTF8String(UTF8String.fromString(tag), 42L)
+  private val u1 = tagHash("bm-u1")
+  private val u2 = tagHash("bm-u2")
+
+  private def uniform(tag: Long, id: Int, f: Int, seed: Long): Double = {
+    val h = XXH64.hashLong(seed, XXH64.hashInt(f, XXH64.hashInt(id, tag)))
+    val r = h % 1000000L
+    ((if (r < 0) (r + 1000000L) % 1000000L else r).toDouble + 0.5) / 1000000.0
+  }
+
+  /** Draw `f` of feature `id`: N(0, sd²), seeded. */
+  private def draw(id: Int, f: Int, seed: Long, sd: Double): Double =
+    Math.sqrt(-2.0 * StrictMath.log(uniform(u1, id, f, seed))) *
+      Math.cos(2.0 * Math.PI * uniform(u2, id, f, seed)) * sd
+
+  /** `x` after the soft thresholds `shrinks`, in order. */
+  private def replay(x: Double, shrinks: ArrayData): Double = {
+    var v = x
+    var j = 0
+    while (j < shrinks.numElements()) {
+      val c = v - 0.0
+      val t = Math.abs(c) - shrinks.getDouble(j)
+      v = Math.signum(c) * (if (t > 0.0) t else 0.0)
+      j += 1
+    }
+    v
+  }
+
+  /** Draw `f` of feature `id`, replayed through `shrinks`. */
+  def value(id: Int, f: Int, seed: Long, sd: Double, shrinks: ArrayData): Double =
+    replay(draw(id, f, seed, sd), shrinks)
+
+  private[functions] def checkArgs(name: String, id: Expression, seed: Expression,
+      sd: Expression, shrinks: Expression): TypeCheckResult =
+    if (id.dataType != IntegerType || seed.dataType != LongType || sd.dataType != DoubleType)
+      TypeCheckResult.TypeCheckFailure(s"$name expects (int id, bigint seed, double sd)")
+    else FmArrayOps.checkArr(name, shrinks -> "shrinks")
 }
 
 /** `fm_arr_scale(arr, x)` ≡ `transform(arr, v => v * x)`. */
@@ -242,4 +305,78 @@ case class FmSoftUpdate(first: Expression, second: Expression,
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): FmSoftUpdate =
     copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+/** `fm_init_strength(id, seed, sd, shrinks)`: feature `id`'s seeded
+  * strength `draw(id, -1, seed, sd)`, replayed through the
+  * soft thresholds `shrinks` ([[FmInit]]). */
+case class FmInitStrength(first: Expression, second: Expression,
+    third: Expression, fourth: Expression) extends QuaternaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    FmInit.checkArgs("fm_init_strength", first, second, third, fourth)
+
+  override def dataType: DataType = DoubleType
+
+  override def nullSafeEval(id: Any, seed: Any, sd: Any, shrinks: Any): Any =
+    FmInit.value(id.asInstanceOf[Int], -1, seed.asInstanceOf[Long],
+      sd.asInstanceOf[Double], shrinks.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (id, seed, sd, shrinks) =>
+      s"graft.functions.FmInit.value($id, -1, $seed, $sd, $shrinks)")
+
+  override protected def withNewChildrenInternal(newFirst: Expression,
+      newSecond: Expression, newThird: Expression,
+      newFourth: Expression): FmInitStrength =
+    copy(first = newFirst, second = newSecond, third = newThird,
+      fourth = newFourth)
+}
+
+/** `fm_init_vec(id, seed, k, sd, shrinks)`: feature `id`'s seeded factor
+  * vector, element `f` = `draw(id, f, seed, sd)` replayed through
+  * the soft thresholds `shrinks` ([[FmInit]]) — one loop over `f < k`, in
+  * place of the `transform(sequence(0, k − 1), …)` higher-order function. */
+case class FmInitVec(id: Expression, seed: Expression, k: Expression,
+    sd: Expression, shrinks: Expression) extends QuinaryExpression {
+
+  override def children: Seq[Expression] = Seq(id, seed, k, sd, shrinks)
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (k.dataType != IntegerType)
+      TypeCheckResult.TypeCheckFailure("fm_init_vec expects an int k")
+    else FmInit.checkArgs("fm_init_vec", id, seed, sd, shrinks)
+
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+
+  override def nullSafeEval(idAny: Any, seedAny: Any, kAny: Any, sdAny: Any,
+      shrinksAny: Any): Any = {
+    val out = new Array[Double](kAny.asInstanceOf[Int])
+    var f = 0
+    while (f < out.length) {
+      out(f) = FmInit.value(idAny.asInstanceOf[Int], f, seedAny.asInstanceOf[Long],
+        sdAny.asInstanceOf[Double], shrinksAny.asInstanceOf[ArrayData])
+      f += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (id, seed, k, sd, shrinks) => {
+      val out = ctx.freshName("out")
+      val f = ctx.freshName("f")
+      s"""
+         |double[] $out = new double[$k];
+         |for (int $f = 0; $f < $k; $f++) {
+         |  $out[$f] = graft.functions.FmInit.value($id, $f, $seed, $sd, $shrinks);
+         |}
+         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+         |  .fromPrimitiveArray($out);
+       """.stripMargin
+    })
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): FmInitVec =
+    copy(id = newChildren(0), seed = newChildren(1), k = newChildren(2),
+      sd = newChildren(3), shrinks = newChildren(4))
 }

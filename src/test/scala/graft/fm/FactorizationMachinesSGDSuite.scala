@@ -41,7 +41,7 @@ class FactorizationMachinesSGDSuite extends SparkSessionSuite {
       .map { case (l, fs) => (l, Vectors.sparse(3, fs)) }
       .toDF("label", "features")
 
-    val Some((newParams, loss, _)) = est.step(params, batch, samples.size, iter = 1)
+    val Some((newParams, loss, _, _)) = est.step(params, batch, samples.size, iter = 1)
     val got = newParams.collect()
       .map(r => r.getAs[Int]("id") ->
         (r.getAs[Double]("strength"), r.getAs[Seq[Double]]("vecArr").toArray))
@@ -109,7 +109,7 @@ class FactorizationMachinesSGDSuite extends SparkSessionSuite {
 
     val n = batch.count()
     n shouldBe 3
-    val Some((_, loss, newW0)) = est.step(params, batch, n, iter = 1, w0 = w0)
+    val Some((_, loss, newW0, _)) = est.step(params, batch, n, iter = 1, w0 = w0)
 
     val residuals = samples.filter(_._2.nonEmpty).map { case (label, fs) =>
       val wixi = fs.map { case (i, x) => w(i) * x }.sum
@@ -184,9 +184,6 @@ class FactorizationMachinesSGDSuite extends SparkSessionSuite {
       (1.0, Vectors.sparse(3, Seq(0 -> 1.0, 1 -> 2.0))),
       (0.0, Vectors.sparse(3, Seq(1 -> 0.5, 2 -> -1.0))))
       .toDF("label", "features")
-    def table(p: DataFrame): Map[Int, (Double, Seq[Double])] =
-      p.collect().map(r => r.getAs[Int]("id") ->
-        (r.getAs[Double]("strength"), r.getAs[Seq[Double]]("vecArr"))).toMap
 
     val cold = new FactorizationMachinesSGD()
       .setDimFactorization(2).setMaxIter(0).setSeed(5L)
@@ -316,5 +313,124 @@ class FactorizationMachinesSGDSuite extends SparkSessionSuite {
     w0On should be > 2.0
     // …and the intercept model must fit the offset data far better
     mseOn should be < mseOff * 0.5
+  }
+
+  /** `rows` seeded samples over `dim` features, `active` distinct
+    * features each with values in {1, 2, 3}, and labels near 1. */
+  private def sparseData(seed: Long, rows: Int, dim: Int, active: Int): DataFrame = {
+    val s = spark
+    import s.implicits._
+    val rng = new scala.util.Random(seed)
+    (0 until rows).map { _ =>
+      val xs = rng.shuffle((0 until dim).toList).take(active)
+        .map(_ -> (rng.nextInt(3) + 1.0)).sortBy(_._1)
+      (1.0 + rng.nextGaussian() * 0.1, Vectors.sparse(dim, xs))
+    }.toDF("label", "features")
+  }
+
+  /** `fit`'s own mini-batches of `df` (the same select and split). */
+  private def batches(df: DataFrame, est: FactorizationMachinesSGD): Array[DataFrame] =
+    df.select(col("label"), col("features"))
+      .randomSplit(Array.fill(est.getMaxIter)(est.getMiniBatchFraction), est.getSeed)
+
+  private def distinctFeatures(df: DataFrame): Set[Int] =
+    df.collect().flatMap(_.getAs[org.apache.spark.ml.linalg.Vector]("features")
+      .toSparse.indices).toSet
+
+  private def table(p: DataFrame): Map[Int, (Double, Seq[Double])] =
+    p.collect().map(r => r.getAs[Int]("id") ->
+      (r.getAs[Double]("strength"), r.getSeq[Double](r.fieldIndex("vecArr")).toSeq)).toMap
+
+  /** A cold fit starts from an empty parameter table: every job it
+    * submits is the batch sizing or a step (no init job), and a step
+    * writes a row only for a feature some batch has touched so far —
+    * step 1 exactly batch 1's features, the last step every feature of
+    * the data (the batches cover it). */
+  test("a cold fit runs no init job and writes rows only for touched features") {
+    val df = sparseData(3L, rows = 200, dim = 1000, active = 3)
+    val est = new FactorizationMachinesSGD()
+      .setDimFactorization(2).setMaxIter(4).setMiniBatchFraction(1.0)
+      .setStepSize(0.1).setRegParam(0.01).setInitialSd(0.1).setSeed(9L)
+    val split = batches(df, est)
+    split.foreach(b => b.count() should be > 0L)
+
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
+    }
+    spark.sparkContext.addSparkListener(jobListener)
+    try {
+      est.fit(df)
+      graft.Phase("marker")(spark.range(1).collect())
+      val deadline = System.currentTimeMillis + 10000
+      while (!jobs.contains("marker") && System.currentTimeMillis < deadline)
+        Thread.sleep(50)
+    } finally spark.sparkContext.removeSparkListener(jobListener)
+    val fitJobs = jobs.asScala.toSeq.takeWhile(_ != "marker")
+    fitJobs should not be empty
+    fitJobs.foreach(_ should startWith("fm.sgd."))
+
+    est.lastLossHistory should have size 4
+    val rows = est.lastStepRows
+    rows should have size 4
+    val first = distinctFeatures(split.head)
+    val all = distinctFeatures(df)
+    first.size should be < all.size
+    rows.head shouldBe first.size.toLong
+    rows.last shouldBe all.size.toLong
+    rows shouldBe rows.sorted
+  }
+
+  /** Lazy init replays exactly the shrinkage of the steps that ran: a
+    * cold fit equals the eager reference, a warm start from the full
+    * seeded init table (`initialParams`), up to the summation order
+    * of the differently planned steps. The second shape leaves a middle
+    * mini-batch empty: its step never ran, so no feature first touched
+    * later may replay its shrinkage. */
+  test("a cold fit equals the eager reference, across an empty middle batch") {
+    def check(df: DataFrame, est: () => FactorizationMachinesSGD): Unit = {
+      val cold = est()
+      val coldModel = cold.fit(df)
+      val eager = est()
+      eager.setInitialModel(FactorizationMachinesModel.fromParamTable(
+        "eager", eager.getDimFactorization, 0.0, eager.initialParams(df)))
+      val eagerModel = eager.fit(df)
+
+      val got = table(coldModel.paramTable)
+      val want = table(eagerModel.paramTable)
+      got.keySet shouldBe want.keySet
+      want.foreach { case (id, (w, v)) =>
+        withClue(s"feature $id: ") {
+          got(id)._1 shouldBe w +- 1e-15
+          got(id)._2.zip(v).foreach { case (g, e) => g shouldBe e +- 1e-15 }
+        }
+      }
+      coldModel.globalBias shouldBe eagerModel.globalBias +- 1e-12
+      cold.lastLossHistory should have size eager.lastLossHistory.size
+      cold.lastLossHistory.zip(eager.lastLossHistory).foreach { case (g, e) =>
+        g shouldBe e +- math.abs(e) * 1e-12
+      }
+      eager.lastStepRows.foreach(_ shouldBe want.size.toLong)
+    }
+
+    check(sparseData(5L, rows = 120, dim = 60, active = 3), () =>
+      new FactorizationMachinesSGD()
+        .setDimFactorization(4).setMaxIter(4).setMiniBatchFraction(1.0)
+        .setStepSize(0.1).setRegParam(0.01).setInitialSd(0.1).setSeed(21L)
+        .setFitIntercept(true))
+
+    // seed 3 splits these 6 rows into batches of 3, 1, 0, 1, 1
+    val tiny = sparseData(8L, rows = 6, dim = 40, active = 2)
+    def tinyEst() = new FactorizationMachinesSGD()
+      .setDimFactorization(2).setMaxIter(5).setMiniBatchFraction(1.0)
+      .setStepSize(0.1).setRegParam(0.01).setInitialSd(0.1).setSeed(3L)
+    val sizes = batches(tiny, tinyEst()).map(_.count())
+    withClue(s"batch sizes ${sizes.mkString(",")}: ") {
+      sizes.head should be > 0L
+      sizes.last should be > 0L
+      sizes.slice(1, sizes.length - 1) should contain(0L)
+    }
+    check(tiny, () => tinyEst())
   }
 }

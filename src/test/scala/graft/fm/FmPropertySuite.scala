@@ -123,7 +123,7 @@ class FmPropertySuite extends SparkSessionSuite {
       val est = new FactorizationMachinesSGD("zr")
         .setDimFactorization(k).setStepSize(0.5).setRegParam(0.2)
         .setFitIntercept(true)
-      val Some((newParams, loss, newW0)) =
+      val Some((newParams, loss, newW0, _)) =
         est.step(params, batch, batch.count(), iter = 1, w0 = w0)
       assertShrunk(newParams, loss)
       newW0 shouldBe w0 +- 1e-12

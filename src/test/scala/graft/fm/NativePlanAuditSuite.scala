@@ -50,23 +50,34 @@ class NativePlanAuditSuite extends SparkSessionSuite {
     // The step's one action, the eager checkpoint, reports its plan to
     // the listener; the updated table comes back checkpointed, so its
     // own plan is a leaf.
-    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution,
-          durationNs: Long): Unit = exprNames(qe.optimizedPlan).foreach(seen.add)
-      override def onFailure(funcName: String, qe: QueryExecution,
-          exception: Exception): Unit = ()
+    def checkpointPlan(pending: Seq[Double]): Set[String] = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, Set[String])]()
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution,
+            durationNs: Long): Unit = plans.add(funcName -> exprNames(qe.optimizedPlan))
+        override def onFailure(funcName: String, qe: QueryExecution,
+            exception: Exception): Unit = ()
+      }
+      def found = plans.toArray(Array.empty[(String, Set[String])])
+        .collectFirst { case ("localCheckpoint", seen) => seen }
+      spark.listenerManager.register(listener)
+      try {
+        est.step(params, batch, n = 2, iter = 2, pending = pending) should not be empty
+        // the listener bus is async: wait for delivery
+        val deadline = System.currentTimeMillis + 10000
+        while (found.isEmpty && System.currentTimeMillis < deadline) Thread.sleep(100)
+      } finally spark.listenerManager.unregister(listener)
+      found.getOrElse(Set.empty)
     }
-    spark.listenerManager.register(listener)
-    try {
-      est.step(params, batch, n = 2, iter = 1) should not be empty
-      // the listener bus is async: wait for delivery
-      val deadline = System.currentTimeMillis + 10000
-      while (!fmOps.forall(seen.contains) && System.currentTimeMillis < deadline)
-        Thread.sleep(100)
-    } finally spark.listenerManager.unregister(listener)
-    withClue(s"expressions seen: $seen\n") {
-      fmOps.foreach(n => assert(seen.contains(n), n))
+    // Feature 2 has no row: it inits natively, and in a cold fit's later
+    // step (shrinkages pending) its init also replays them natively, with
+    // no higher-order function in the plan.
+    for (pending <- Seq(Nil, Seq(0.05))) {
+      val seen = checkpointPlan(pending)
+      withClue(s"pending $pending, expressions seen: $seen\n") {
+        (fmOps ++ Set("FmInitStrength", "FmInitVec")).foreach(n => assert(seen.contains(n), n))
+        seen should not contain "ArrayTransform"
+      }
     }
   }
 
