@@ -69,28 +69,17 @@ object PreTouch {
     roots.filter(_.exists).foreach(walk)
   }
 
-  /** Everything a battery query can scan: the fixture dir, graft
-    * staging roots under java.io.tmpdir (persisted band/line/IVF
-    * indexes, staged source fixtures, stream outputs/checkpoints — all
-    * staging uses the `graft-*` prefix by convention), and the
-    * warehouse (bucketed as-of tables). Pid-tagged staging dirs
-    * (`...-p<pid>-...`) are per-process by convention, so a FOREIGN
-    * pid's dir is another (possibly dead) run's state: touching it is
-    * unbounded untimed IO that warms nothing this battery reads and
-    * inflates the bytesRead audit line (r14 advice) — excluded.
-    * Hash-keyed staging (graft-src-*, graft-events-staged-*, …) is
-    * deliberately shared/reused across runs and stays in. */
+  /** Everything a battery query can scan: the fixture dir, the graft
+    * staging roots ([[Staging.localRoots]]: persisted band/line/IVF
+    * indexes, staged source fixtures, stream outputs/checkpoints), and
+    * the warehouse (bucketed as-of tables). Another process's
+    * per-process staging dir is that (possibly dead) run's state:
+    * touching it is unbounded untimed IO that warms nothing this
+    * battery reads and inflates the bytesRead audit line (r14 advice) —
+    * excluded. Shared staging is reused across runs and stays in. */
   def benchRoots(sfDir: String, warehouseDir: String): Seq[java.io.File] = {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val pid = ProcessHandle.current().pid()
-    val pidTag = "-p(\\d+)-".r
-    val staged = Option(tmp.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("graft-"))
-      .filterNot(f => pidTag.findFirstMatchIn(f.getName)
-        .exists(_.group(1).toLong != pid))
-      .toSeq
     val wh = new java.io.File(
       warehouseDir.stripPrefix("file://").stripPrefix("file:"))
-    new java.io.File(sfDir) +: wh +: staged
+    new java.io.File(sfDir) +: wh +: Staging.localRoots
   }
 }

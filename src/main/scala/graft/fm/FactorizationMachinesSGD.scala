@@ -122,8 +122,13 @@ class FactorizationMachinesSGD(override val uid: String)
   // both joins against it), and each later one holds only the features
   // touched so far.
 
-  override def copy(extra: ParamMap): Estimator[FactorizationMachinesModel] =
-    defaultCopy(extra)
+  /** Carries the warm-start model, which is not a Param: `fit(df,
+    * paramMap)`, `CrossValidator` and `TrainValidationSplit` fit a copy. */
+  override def copy(extra: ParamMap): FactorizationMachinesSGD = {
+    val c = defaultCopy[FactorizationMachinesSGD](extra)
+    c.initialModel = initialModel
+    c
+  }
 
   override def transformSchema(schema: StructType): StructType =
     validateAndTransformSchema(schema, fitting = true)

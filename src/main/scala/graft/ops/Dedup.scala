@@ -563,11 +563,6 @@ object Dedup {
 
   private def mhCols: Seq[Column] = (0 until NumHashes).map(j => col(s"mh$j"))
 
-  /** See [[graft.Knobs.concurrently]] — shared by the lifecycle verbs
-    * and the streaming foreachBatch bodies. */
-  private def concurrently(actions: (() => Unit)*): Unit =
-    graft.Knobs.concurrently(actions: _*)
-
   // ---- pinned component schemas (r18, guide §1.2 per-verb latency):
   // an explicit read schema skips the footer-sampling job EVERY
   // spark.read.parquet otherwise runs before any execution — the
@@ -851,7 +846,7 @@ object Dedup {
     // its own sliver into each bucket dir, fragmenting the index by up
     // to ~32 files per append and paying the commit-protocol rename
     // per file)
-    concurrently(
+    graft.Knobs.concurrently(
       () => merged.select((col("gbucket") +: mhNames.map(col)) :+ col("gid") :+
           col("new_live").as("live_cnt"): _*)
         .repartition(col("gbucket"))
@@ -2617,29 +2612,17 @@ object Dedup {
     }
   }
 
-  /** Staging dir for [[ingestLabels]] — per-fixture and per-process,
-    * the [[ingestGrowDir]] convention. `index/` and `labels/` live
-    * under one root so stage/sweep manage them together. */
-  private def ingestLabelsDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-ingest-labels-" +
-      s"p${ProcessHandle.current().pid()}-" +
-      d.replaceAll("[^A-Za-z0-9]", "_")
-
-  /** [[ingestLabels]]'s untimed prepare: split the chain corpus by a
-    * doc-id hash (~3/4 "already ingested"), build the band index and
-    * its labels over that part, mark `_PRISTINE`. */
-  def stageIngestLabelsIndex(s: SparkSession, d: String): Unit = {
-    sweepDeadPidDirs(s, "graft-ingest-labels-")
-    val root = ingestLabelsDir(d)
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    val corpus = corpusChain(Tables.documents(s, d))
-      .select(col("doc_id"), col("text"))
-    val late = pmod(xxhash64(col("doc_id")), lit(4)) === 0
-    saveBandIndex(corpus.filter(!late), s"$root/index")
-    buildBandLabels(s, s"$root/index", s"$root/labels")
-    fs.create(pristinePath(root), true).close()
+  /** [[ingestLabels]]'s staged input: the chain corpus split by a
+    * doc-id hash (~3/4 "already ingested"), with the band index and its
+    * labels built over that part. `index/` and `labels/` live under one
+    * root so staging rebuilds them together. */
+  private val stagedLabelsIndex = graft.Staging.consumed("ingest-labels", "documents") {
+    (s, d, root) =>
+      val corpus = corpusChain(Tables.documents(s, d))
+        .select(col("doc_id"), col("text"))
+      val late = pmod(xxhash64(col("doc_id")), lit(4)) === 0
+      saveBandIndex(corpus.filter(!late), s"$root/index")
+      buildBandLabels(s, s"$root/index", s"$root/labels")
   }
 
   /** End-to-end PERSISTED cluster maintenance under ingest: labels
@@ -2663,14 +2646,10 @@ object Dedup {
       |JOIN (SELECT cluster_id, count(*) AS n
       |      FROM clusters GROUP BY cluster_id) s
       |  ON s.cluster_id = c.cluster_id
-      |ORDER BY c.doc_id""".stripMargin)(stageIngestLabelsIndex) { (s, d) =>
-    val root = ingestLabelsDir(d)
-    val fs = pristinePath(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(pristinePath(root))) stageIngestLabelsIndex(s, d)
-    // consume the marker: the ingest mutates index AND labels, so the
-    // next unprepared invocation must rebuild, never double-ingest
-    fs.delete(pristinePath(root), false)
+      |ORDER BY c.doc_id""".stripMargin)(stagedLabelsIndex.prepare) { (s, d) =>
+    // the ingest mutates index AND labels: consumed, so the next
+    // invocation rebuilds, never double-ingests
+    val root = stagedLabelsIndex.consume(s, d)
     val corpus = corpusChain(Tables.documents(s, d))
       .select(col("doc_id"), col("text"))
     val late = pmod(xxhash64(col("doc_id")), lit(4)) === 0
@@ -3310,6 +3289,13 @@ object Dedup {
       "' x', CAST(doc_id AS VARCHAR), ' y', CAST(doc_id AS VARCHAR), " +
       "' z', CAST(doc_id AS VARCHAR))"
 
+  /** [[ingestGrow]]'s staged input: the corpus band index, built fresh
+    * (a rebuild never inherits appended cell files from an earlier run). */
+  private val stagedGrowIndex = graft.Staging.consumed("ingest-grow", "documents") {
+    (s, d, dir) =>
+      saveBandIndex(Tables.documents(s, d).select(col("doc_id"), col("text")), dir)
+  }
+
   /** SELF-GROWING INGESTION over the REAL persisted-index lifecycle —
     * the end-to-end flow r7 closes (verdict #1+#2 combined): build the
     * corpus band index ONCE ([[saveBandIndex]]), then ingest two
@@ -3329,10 +3315,9 @@ object Dedup {
     * The initial corpus index BUILD is the untimed prepare (the
     * lifecycle this row times and checks is the two ingests, not the
     * one-time build — the same staged-input rule as the streaming
-    * rows); a `_PRISTINE` marker makes the query self-staging: the
-    * ingests mutate the index, so the marker is consumed at query
-    * start and a standalone re-invocation rebuilds instead of
-    * double-ingesting. */
+    * rows); the ingests mutate the index, so the staged input is
+    * consumed at query start and a standalone re-invocation rebuilds
+    * instead of double-ingesting. */
   val ingestGrow: QueryDef = QueryDef.sqlPrepared(
     "dedup_ingest_grow",
     s"""WITH cdocs AS (SELECT doc_id FROM documents),
@@ -3393,7 +3378,7 @@ object Dedup {
       |  SELECT 1 AS batch_no, doc_id FROM adm1
       |  UNION ALL
       |  SELECT 2 AS batch_no, doc_id FROM adm2)
-      |ORDER BY doc_id""".stripMargin)(stageIngestGrowIndex) { (s, d) =>
+      |ORDER BY doc_id""".stripMargin)(stagedGrowIndex.prepare) { (s, d) =>
     val docs = Tables.documents(s, d)
     val qText = concat(lit("q"), col("doc_id"), lit(" r"), col("doc_id"),
       lit(" s"), col("doc_id"), lit(" t"), col("doc_id"),
@@ -3406,71 +3391,13 @@ object Dedup {
       .select((col("doc_id") + 70000).as("doc_id"), qText.as("text"))
       .unionAll(docs.filter(col("doc_id") % 20 === 5)
         .select((col("doc_id") + 80000).as("doc_id"), vText.as("text")))
-    val dir = ingestGrowDir(d)
-    val fs = pristinePath(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(pristinePath(dir))) stageIngestGrowIndex(s, d)
-    // consume the marker: the ingests mutate the index, so the next
-    // unprepared invocation must rebuild, never double-ingest
-    fs.delete(pristinePath(dir), false)
+    val dir = stagedGrowIndex.consume(s, d)
     val a1 = ingestIntoBandIndex(s, dir, b1)
     val a2 = ingestIntoBandIndex(s, dir, b2)
     a1.select(lit(1).as("batch_no"), col("doc_id"))
       .unionAll(a2.select(lit(2).as("batch_no"), col("doc_id")))
       .orderBy(col("doc_id"))
       .localCheckpoint(true)
-    // the mutated, markerless dir is left for the next prepare/stage
-    // to delete and rebuild
-  }
-
-  /** Per-fixture AND per-process (pid component): deterministic within
-    * one JVM so the untimed prepare and the timed query share the
-    * staged index, but two concurrent processes on the same fixture
-    * (e.g. `graft.Verify` alongside a long `sbt test` holding the sbt
-    * lock — the documented iteration workflow) can never race
-    * delete/rebuild vs ingest on one directory (r10 advice). */
-  private def ingestGrowDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-ingest-grow-" +
-      s"p${ProcessHandle.current().pid()}-" +
-      d.replaceAll("[^A-Za-z0-9]", "_")
-
-  /** Best-effort sweep of OTHER processes' dead per-pid staging dirs
-    * under `prefix` (this pid's dir is skipped; a live pid's dir is
-    * skipped). Per-pid isolation fixed the cross-process race (r10
-    * advice) but left each run's full staged index in tmpdir forever —
-    * repeated Verify/test runs would fill the disk (r11 review). */
-  private[ops] def sweepDeadPidDirs(s: SparkSession, prefix: String): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(
-      System.getProperty("java.io.tmpdir"))
-    val fs = tmp.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val self = ProcessHandle.current().pid()
-    val PidPat = (java.util.regex.Pattern.quote(prefix) + "p(\\d+)-.*").r
-    try fs.listStatus(tmp).foreach { st =>
-      st.getPath.getName match {
-        case PidPat(pid) if pid.toLong != self &&
-            !ProcessHandle.of(pid.toLong).isPresent =>
-          try fs.delete(st.getPath, true) catch { case _: java.io.IOException => () }
-        case _ => ()
-      }
-    } catch { case _: java.io.IOException => () }
-  }
-
-  private def pristinePath(dir: String) =
-    new org.apache.hadoop.fs.Path(dir, "_PRISTINE")
-
-  /** [[ingestGrow]]'s untimed prepare: (re)build the corpus band index
-    * fresh and mark it `_PRISTINE` (= not yet ingested into). Always
-    * deletes first — leftover appended cell files from a previous
-    * ingest run would otherwise survive into the "fresh" index. */
-  def stageIngestGrowIndex(s: SparkSession, d: String): Unit = {
-    sweepDeadPidDirs(s, "graft-ingest-grow-")
-    val dir = ingestGrowDir(d)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    saveBandIndex(
-      Tables.documents(s, d).select(col("doc_id"), col("text")), dir)
-    fs.create(pristinePath(dir), true).close()
   }
 
   val all: Seq[QueryDef] =

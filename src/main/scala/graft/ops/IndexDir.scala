@@ -142,13 +142,13 @@ private[graft] object IndexDir {
   private def fs(s: SparkSession, p: Path): FileSystem =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  private def readText(s: SparkSession, p: Path): String = {
+  private[graft] def readText(s: SparkSession, p: Path): String = {
     val in = fs(s, p).open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
     finally in.close()
   }
 
-  private def writeText(s: SparkSession, p: Path, text: String): Unit = {
+  private[graft] def writeText(s: SparkSession, p: Path, text: String): Unit = {
     val out = fs(s, p).create(p, true)
     try out.write(text.getBytes("UTF-8"))
     finally out.close()

@@ -182,8 +182,7 @@ object Pipeline {
       |FROM documents
       |GROUP BY lang
       |ORDER BY lang""".stripMargin) { (s, d) =>
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-compact-" +
-      math.abs(d.hashCode)
+    val base = graft.Staging.dir("compact", d)
     val docs = Tables.documents(s, d)
     // fragment: many tiny files, as an append-heavy ingest would leave
     docs.repartition(64).write.mode("overwrite").parquet(s"$base/frag")

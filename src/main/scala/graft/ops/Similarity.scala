@@ -94,7 +94,7 @@ object Similarity {
     * `dot_product_q` expression (integer-picounit terms, exact int64
     * sum — order-independent and cross-engine exact, r11). For huge
     * corpora where even
-    * distributed n² is too much, LSH/IVF-bucket first (lshBuckets /
+    * distributed n² is too much, LSH/IVF-bucket first (lshBucketsMulti /
     * ivfCells) and run this kernel per bucket. */
   def pairCosineKernel(prep: DataFrame, threshold: Double, blocks: Int = 16): DataFrame = {
     val spark = prep.sparkSession
@@ -274,39 +274,19 @@ object Similarity {
   private def hcoef(j: Int, pos: Column): Column =
     (((lit(j * 97) + (pos - 1) * 31) % 17 - 8).cast("double") / 8.0)
 
-  // Shared by topKLsh and rangeSearchLsh — ONE definition of the bucket
-  // bits and the Hamming-1 probe masks per engine, so the two queries can
-  // never drift onto different buckets. Table 0 of the OR-amplified
-  // family IS the single-table rule (global plane indices 0..3), so the
-  // single-table form delegates rather than carrying a second copy of
-  // the plane arithmetic.
-  private val bucketBitsSql = bucketBitsSqlTable(0)
+  // Shared by topKLsh and rangeSearchLsh — ONE definition of the
+  // Hamming-1 probe masks per engine, so the two queries can never drift
+  // onto different buckets.
   private val probeMasks: Seq[Int] = Seq(0) ++ (0 until Planes).map(1 << _)
   private val probeMasksSql = probeMasks.mkString("[", ", ", "]")
   private def probeMasksCol: Column = array(probeMasks.map(lit): _*)
 
-  /** 4-bit LSH bucket id per vector — sign of the dot with each
-    * hyperplane, computed on the integer-picounit-quantized projection
-    * (r11): per-term `floor(e·coef·1e12 + 0.5)` then an exact int64
-    * sum, so a projection near zero buckets IDENTICALLY in both
-    * engines instead of hanging on summation-order ulps (the last
-    * FP-divergence channel in the vector battery). */
-  def lshBuckets(prep: DataFrame): DataFrame = {
-    val flat = prep.select(col("vec_id"), col("nrm"),
-        posexplode(col("v")).as(Seq("pos0", "e")))
-      .select(col("vec_id"), col("nrm"), (col("pos0") + 1).as("pos"), col("e"))
-    val bucket = (0 until Planes)
-      .map(j => when(sum(floor(col("e") * hcoef(j, col("pos")) * lit(1e12)
-          + lit(0.5))) >= 0, 1 << j)
-        .otherwise(0))
-      .reduce(_ + _)
-    flat.groupBy(col("vec_id"), col("nrm")).agg(bucket.as("bucket"))
-  }
-
   /** Per-table bucket bits for the OR-amplified index (SQL side):
     * table t derives its 4 planes from the same arithmetic family at
-    * global plane indices 4t..4t+3, so `bucketBitsSqlTable(0)` ==
-    * [[bucketBitsSql]]. */
+    * global plane indices 4t..4t+3. Each bit is the sign of the
+    * integer-picounit-quantized projection (r11): per-term
+    * `floor(e·coef·1e12 + 0.5)` then an exact int64 sum, so a
+    * projection near zero buckets IDENTICALLY in both engines. */
   private def bucketBitsSqlTable(t: Int): String = (0 until Planes)
     .map(j => s"CASE WHEN sum(CAST(floor(e * (((${Planes * t + j}*97 + (pos-1)*31) % 17 - 8) / 8.0) * 1e12 + 0.5) AS BIGINT)) >= 0 THEN ${1 << j} ELSE 0 END")
     .mkString(" + ")
@@ -2189,6 +2169,12 @@ object Similarity {
       admitted
     }
 
+  /** [[ivfIngestGrow]]'s staged input: the corpus IVF index, built fresh
+    * (a rebuild never inherits appended cell files from an earlier run). */
+  private val stagedIvfIndex = graft.Staging.consumed("ivf-ingest-grow", "embeddings") {
+    (s, d, dir) => saveIvfIndex(prepared(Tables.embeddings(s, d)), dir)
+  }
+
   /** SELF-GROWING embedding-ingestion dedup — [[Dedup.ingestGrow]]'s
     * contract on the VECTOR side, completing the lifecycle symmetry:
     * the corpus's IVF index persists ONCE, then every arriving batch
@@ -2196,9 +2182,9 @@ object Similarity {
     * probed cells) and the ADMITTED vectors are appended into the
     * index's cell partitions — so batch 2's near-dups of batch-1
     * admissions are rejected by an index that grew, never by a corpus
-    * rescan. The initial IVF build is the untimed prepare with a
-    * consumed `_PRISTINE` marker, exactly as in [[Dedup.ingestGrow]]:
-    * what this row times and checks is the two ingests.
+    * rescan. The initial IVF build is the untimed prepare of a
+    * consumed staged input, exactly as in [[Dedup.ingestGrow]]: what
+    * this row times and checks is the two ingests.
     * Batch 1 carries scaled near-dups of corpus vectors
     * (rejected) and reversed fresh vectors (admitted); batch 2 carries
     * scaled near-dups of batch 1's admissions (rejected ⇔ the index
@@ -2293,7 +2279,7 @@ object Similarity {
       |  SELECT 1 AS batch_no, vec_id FROM adm1
       |  UNION ALL
       |  SELECT 2 AS batch_no, vec_id FROM adm2)
-      |ORDER BY vec_id""".stripMargin)(stageIvfIngestGrowIndex) { (s, d) =>
+      |ORDER BY vec_id""".stripMargin)(stagedIvfIndex.prepare) { (s, d) =>
     def withNrm(df: DataFrame): DataFrame = df.withColumn("nrm",
       sqrt(greatest(dot(col("v"), col("v")), lit(1.0))))
     val prep = graft.InternalCaches.pinEager(
@@ -2311,47 +2297,13 @@ object Similarity {
         .select((col("vec_id") + 50000).as("vec_id"),
           concat(slice(col("v"), lit(2), size(col("v")) - 1),
             array(element_at(col("v"), 1))).as("v"))))
-    val dir = ivfIngestGrowDir(d)
-    val fs = ivfPristinePath(dir)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(ivfPristinePath(dir))) stageIvfIngestGrowIndex(s, d)
-    // consume the marker: the ingests mutate the index, so the next
-    // unprepared invocation must rebuild, never double-ingest
-    fs.delete(ivfPristinePath(dir), false)
+    val dir = stagedIvfIndex.consume(s, d)
     val a1 = ingestIntoIvfIndex(s, dir, b1)
     val a2 = ingestIntoIvfIndex(s, dir, b2)
     a1.select(lit(1).as("batch_no"), col("vec_id"))
       .unionAll(a2.select(lit(2).as("batch_no"), col("vec_id")))
       .orderBy(col("vec_id"))
       .localCheckpoint(true)
-    // the mutated, markerless dir is left for the next prepare/stage
-    // to delete and rebuild
-  }
-
-  /** Per-fixture AND per-process (pid component) — same rationale as
-    * `Dedup.ingestGrowDir` (r10 advice): concurrent processes on one
-    * fixture must never share a mutable index directory. */
-  private def ivfIngestGrowDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-ivf-ingest-grow-" +
-      s"p${ProcessHandle.current().pid()}-" +
-      d.replaceAll("[^A-Za-z0-9]", "_")
-
-  private def ivfPristinePath(dir: String) =
-    new org.apache.hadoop.fs.Path(dir, "_PRISTINE")
-
-  /** [[ivfIngestGrow]]'s untimed prepare: (re)build the corpus IVF
-    * index fresh and mark it `_PRISTINE` (= not yet ingested into).
-    * Always deletes first — leftover appended cell files from a
-    * previous ingest run would otherwise survive into the "fresh"
-    * index. */
-  def stageIvfIngestGrowIndex(s: SparkSession, d: String): Unit = {
-    Dedup.sweepDeadPidDirs(s, "graft-ivf-ingest-grow-")
-    val dir = ivfIngestGrowDir(d)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    saveIvfIndex(prepared(Tables.embeddings(s, d)), dir)
-    fs.create(ivfPristinePath(dir), true).close()
   }
 
   /** POSITIONAL PHRASE SEARCH — the exact-phrase retrieval verb BM25

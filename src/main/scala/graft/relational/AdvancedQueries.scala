@@ -1,6 +1,6 @@
 package graft.relational
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -404,18 +404,9 @@ object AdvancedQueries {
     * 8 keeps the local fixtures to one small file per bucket. */
   private val AsOfBuckets = 8
 
-  private def asOfTableSuffix(d: String): String =
-    d.replaceAll("[^A-Za-z0-9]", "_")
-  private def asOfErrorsTable(d: String) = s"graft_asof_errors_b${asOfTableSuffix(d)}"
-  private def asOfClicksTable(d: String) = s"graft_asof_clicks_b${asOfTableSuffix(d)}"
+  private def asOfErrorsTable(d: String) = s"graft_asof_errors_b${Staging.fixtureKey(d)}"
+  private def asOfClicksTable(d: String) = s"graft_asof_clicks_b${Staging.fixtureKey(d)}"
 
-  /** Stages the [[asOfBucketed]] layout: errors and deduped clicks
-    * written as Spark BUCKETED, SORTED tables — `bucketBy(N, key)` +
-    * `sortBy(key, time)`, with a pre-write `repartition(N, key)` so each
-    * write task holds exactly one bucket's rows and every bucket lands
-    * in ONE file (the condition under which the scan advertises its
-    * sort order). Always overwrites — a skip-if-exists would serve
-    * stale data after fixture regeneration. */
   /** Drops `tbl` and its warehouse location. The DROP alone is not
     * enough: the in-memory catalog forgets tables at JVM exit while
     * their warehouse directories survive, and `saveAsTable` refuses to
@@ -444,70 +435,44 @@ object AdvancedQueries {
     p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
-  /** Fingerprint of the events fixture under `d` (file names, sizes,
-    * mtimes): what the bucketed tables were staged FROM. Stored beside
-    * the tables at stage time so the stage-if-missing fallback can
-    * tell "already staged from THIS fixture" apart from "staged from a
-    * prior generation of the same path" (r10 advice — the round-8
-    * fixture-regeneration failure class). */
-  private def eventsFingerprint(s: SparkSession, d: String): String =
-    graft.Tables.fixtureFingerprint(s, d, "events")
-
-  private def asOfFpPath(s: SparkSession, d: String) =
-    new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"),
-      s"graft_asof_fp_${asOfTableSuffix(d)}.txt")
-
-  private def writeAsOfFingerprint(s: SparkSession, d: String): Unit = {
-    val p = asOfFpPath(s, d)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(eventsFingerprint(s, d).getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  private def storedAsOfFingerprint(s: SparkSession, d: String): Option[String] = {
-    val p = asOfFpPath(s, d)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    }
-  }
-
-  def stageAsOfBucketed(s: SparkSession, d: String): Unit = {
-    dropWithLocation(s, asOfErrorsTable(d))
-    dropWithLocation(s, asOfClicksTable(d))
-    val ev = Tables.events(s, d)
-    val errors = ev.filter(col("event_type") === "error")
-      .select(col("user_id"), col("ts").as("t"), col("event_id").as("error_id"))
-    // tied clicks dedup to the MAX event_id — see [[asOfNative]]
-    val clicks = ev.filter(col("event_type") === "click")
-      .groupBy(col("user_id").as("c_user_id"), col("ts").as("c_t"))
-      .agg(max(col("event_id")).as("click_id"))
-    errors.repartition(AsOfBuckets, col("user_id"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(AsOfBuckets, "user_id").sortBy("user_id", "t")
-      .saveAsTable(asOfErrorsTable(d))
-    clicks.repartition(AsOfBuckets, col("c_user_id"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(AsOfBuckets, "c_user_id").sortBy("c_user_id", "c_t")
-      .saveAsTable(asOfClicksTable(d))
-    writeAsOfFingerprint(s, d)
+  /** Stages the [[asOfBucketed]] layout: errors and deduped clicks
+    * written as Spark BUCKETED, SORTED tables — `bucketBy(N, key)` +
+    * `sortBy(key, time)`, with a pre-write `repartition(N, key)` so each
+    * write task holds exactly one bucket's rows and every bucket lands
+    * in ONE file (the condition under which the scan advertises its
+    * sort order). The staging marker lives in the warehouse beside the
+    * tables; they are reused only while both are still in the catalog
+    * (the in-memory catalog forgets them at JVM exit) and the marker
+    * holds the current events fingerprint. */
+  private def stageAsOfBucketed(s: SparkSession, d: String): Unit =
+    Staging.ensure(s,
+      s.conf.get("spark.sql.warehouse.dir") + s"/graft-asof-bucketed-${Staging.fixtureKey(d)}",
+      Tables.fixtureFingerprint(s, d, "events"),
+      fresh = s.catalog.tableExists(asOfErrorsTable(d)) &&
+        s.catalog.tableExists(asOfClicksTable(d))) {
+      dropWithLocation(s, asOfErrorsTable(d))
+      dropWithLocation(s, asOfClicksTable(d))
+      val ev = Tables.events(s, d)
+      val errors = ev.filter(col("event_type") === "error")
+        .select(col("user_id"), col("ts").as("t"), col("event_id").as("error_id"))
+      // tied clicks dedup to the MAX event_id — see [[asOfNative]]
+      val clicks = ev.filter(col("event_type") === "click")
+        .groupBy(col("user_id").as("c_user_id"), col("ts").as("c_t"))
+        .agg(max(col("event_id")).as("click_id"))
+      errors.repartition(AsOfBuckets, col("user_id"))
+        .write.mode("overwrite").format("parquet")
+        .bucketBy(AsOfBuckets, "user_id").sortBy("user_id", "t")
+        .saveAsTable(asOfErrorsTable(d))
+      clicks.repartition(AsOfBuckets, col("c_user_id"))
+        .write.mode("overwrite").format("parquet")
+        .bucketBy(AsOfBuckets, "c_user_id").sortBy("c_user_id", "c_t")
+        .saveAsTable(asOfClicksTable(d))
   }
 
   /** The joined frame behind [[asOfBucketed]], pre-presentation-sort —
     * the subtree the plan audit asserts is exchange-free and sort-free. */
   def asOfBucketedJoined(s: SparkSession, d: String): DataFrame = {
-    // stage-if-missing OR stale (r10 advice): existing tables are only
-    // reused when the stored fixture fingerprint still matches — a
-    // regenerated fixture under the same path restages instead of
-    // silently serving the prior generation's rows
-    if (!s.catalog.tableExists(asOfErrorsTable(d)) ||
-        !s.catalog.tableExists(asOfClicksTable(d)) ||
-        !storedAsOfFingerprint(s, d).contains(eventsFingerprint(s, d)))
-      stageAsOfBucketed(s, d)
+    stageAsOfBucketed(s, d)
     // joinPlain: the layout path manages skew at LAYOUT time (a hot key
     // is split across bucket files when the table is written); letting
     // the default skew dispatch add a slice column here would forfeit

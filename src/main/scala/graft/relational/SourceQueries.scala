@@ -1,6 +1,6 @@
 package graft.relational
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
@@ -14,10 +14,6 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
   */
 object SourceQueries {
 
-  private def stage(d: String, name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-src-$name-" +
-      math.abs(d.hashCode)
-
   /** CSV sink → CSV scan with header=true + inferSchema=true (the exact
     * reference read shape, Sample:98-102) → aggregate. The oracle reads
     * the original table: hash-equality proves the CSV round-trip loses
@@ -29,7 +25,7 @@ object SourceQueries {
       |FROM orders
       |GROUP BY o_orderstatus, o_orderpriority
       |ORDER BY o_orderstatus, o_orderpriority""".stripMargin) { (s, d) =>
-    val dir = stage(d, "csv")
+    val dir = Staging.dir("src-csv", d)
     Tables.orders(s, d)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"),
         col("o_totalprice"))
@@ -53,7 +49,7 @@ object SourceQueries {
       |WHERE c_nationkey < 10
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin) { (s, d) =>
-    val dir = stage(d, "orc")
+    val dir = Staging.dir("src-orc", d)
     Tables.customer(s, d)
       .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"),
         col("c_acctbal"))
@@ -96,7 +92,7 @@ object SourceQueries {
       |FROM documents
       |GROUP BY line_len
       |ORDER BY line_len""".stripMargin) { (s, d) =>
-    val dir = stage(d, "text")
+    val dir = Staging.dir("src-text", d)
     Tables.documents(s, d).select(col("text")).write.mode("overwrite").text(dir)
     s.read.text(dir)
       .groupBy(length(col("value")).as("line_len"))
@@ -118,7 +114,7 @@ object SourceQueries {
       |WHERE o_orderstatus = 'F'
       |GROUP BY o_orderpriority
       |ORDER BY o_orderpriority""".stripMargin) { (s, d) =>
-    val dir = stage(d, "part")
+    val dir = Staging.dir("src-part", d)
     Tables.orders(s, d).write.mode("overwrite")
       .partitionBy("o_orderstatus").parquet(dir)
     s.read.parquet(dir)
@@ -148,7 +144,7 @@ object SourceQueries {
       |FROM m
       |GROUP BY priority
       |ORDER BY priority""".stripMargin) { (s, d) =>
-    val dir = stage(d, "merge")
+    val dir = Staging.dir("src-merge", d)
     val orders = Tables.orders(s, d)
     orders.filter(col("o_orderkey") % 2 === 0)
       .select(col("o_orderkey"), col("o_totalprice"))
@@ -183,7 +179,7 @@ object SourceQueries {
       |    AS discount_cents,
       |  count(*) AS n
       |FROM lineitem""".stripMargin) { (s, d) =>
-    val dir = stage(d, "libsvm")
+    val dir = Staging.dir("src-libsvm", d)
     Tables.lineitem(s, d)
       .select(concat_ws(" ",
         col("l_quantity").cast("string"),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Staging, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -144,70 +144,34 @@ object EventStreams {
     * r1's Complete+memory sink, which re-materialized every window each
     * trigger and collected the whole result into the driver. The final
     * no-data microbatch (on by default) performs the last emission after
-    * the sentinel advances the watermark (see [[stageStreamingEvents]]).
-    * Output/checkpoint dirs are per-run unique: a reused checkpoint
-    * would replay as an empty increment and emit nothing. */
+    * the sentinel advances the watermark (see [[stageEvents]]).
+    * Output/checkpoint dirs are per-run scratch: a reused checkpoint
+    * would replay as an empty increment and emit nothing. The (small:
+    * windows/sessions/pairs) result is materialized before the scratch
+    * dir is deleted, so repeated runs leave nothing in tmp. */
   private def runAppendToParquet(agg: DataFrame, name: String): DataFrame = {
     val spark = agg.sparkSession
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-stream-out/" +
-      s"$name-${java.util.UUID.randomUUID}"
-    // Stateful streaming cost at fixture scale is dominated by state-store
-    // commits, and store count scales with shuffle partitions (a
-    // stream-stream join keeps FOUR stores per partition): 8 partitions
-    // instead of 32 cuts per-batch commit overhead 4x while the state
-    // itself is tiny. Size this UP with data volume on a real cluster.
-    graft.Knobs.withShufflePartitions(spark, 8) { scoped =>
-      // the stream plans (and pins, via its checkpoint) the scoped
-      // session's capped shuffle partitions; the parent session's conf
-      // is untouched for whatever else runs concurrently
-      val q = graft.Knobs.rebind(agg, scoped).writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", s"$base/data")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    Staging.scratch(spark, name) { base =>
+      // Stateful streaming cost at fixture scale is dominated by state-store
+      // commits, and store count scales with shuffle partitions (a
+      // stream-stream join keeps FOUR stores per partition): 8 partitions
+      // instead of 32 cuts per-batch commit overhead 4x while the state
+      // itself is tiny. Size this UP with data volume on a real cluster.
+      graft.Knobs.withShufflePartitions(spark, 8) { scoped =>
+        // the stream plans (and pins, via its checkpoint) the scoped
+        // session's capped shuffle partitions; the parent session's conf
+        // is untouched for whatever else runs concurrently
+        val q = graft.Knobs.rebind(agg, scoped).writeStream
+          .outputMode(OutputMode.Append)
+          .format("parquet")
+          .option("path", s"$base/data")
+          .option("checkpointLocation", s"$base/ckpt")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+      }
+      spark.read.parquet(s"$base/data")
     }
-    // Materialize the (small: windows/sessions/pairs) result eagerly so
-    // the per-run UUID output+checkpoint dirs can be deleted NOW —
-    // otherwise repeated Bench/Verify runs accumulate them in tmp
-    // unboundedly.
-    val out = spark.read.parquet(s"$base/data").localCheckpoint(true)
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    out
-  }
-
-  private def stagedDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-events-staged-" +
-      math.abs(d.hashCode)
-
-  /** Marker written as the LAST staging step: `_SUCCESS` appears after
-    * the first write, so checking it would accept a dir whose sentinel
-    * (or duplicate batch) append never ran — a crash between writes
-    * would then silently starve the watermark and drop the trailing
-    * windows on every later stage-if-missing call. The marker BODY is
-    * the source fixture's fingerprint (file names, sizes, mtimes):
-    * stage-if-missing reuse validates it, so a REGENERATED fixture
-    * under the same path restages instead of silently streaming the
-    * prior generation — the round-8 staleness class, the same fix the
-    * bucketed as-of tables got (r11 review: the packer staging
-    * re-introduced the marker-existence-only check). */
-  private val StagedMarker = "_GRAFT_STAGED"
-
-  /** Delegates to the single fixture-fingerprint definition
-    * ([[graft.Tables.fixtureFingerprint]]). */
-  private def fixtureFingerprint(s: SparkSession, d: String,
-      table: String): String = Tables.fixtureFingerprint(s, d, table)
-
-  /** Writes the staged marker with the fixture fingerprint as body. */
-  private def writeStagedMarker(s: SparkSession, dir: String,
-      fingerprint: String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(dir, StagedMarker)
-    val out = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .create(marker, true)
-    try out.write(fingerprint.getBytes("UTF-8")) finally out.close()
   }
 
   /** Stages the bounded fixture for the streaming file source (which
@@ -221,10 +185,11 @@ object EventStreams {
     * stream would otherwise never emit its trailing windows. The
     * sentinel is a separate group (event_type is a grouping key), so the
     * queries drop it after aggregation without touching real groups.
-    * Registered as the untimed QueryDef.prepare; always overwrites (a
-    * skip-if-exists would serve stale data after fixture regeneration). */
-  private def stageEvents(s: SparkSession, d: String, dir: String,
-      dupEvery: Option[Int]): Unit = {
+    * [[Staging]] writes the marker after the last append: a crash
+    * between writes would otherwise starve the watermark and drop the
+    * trailing windows on every later run. */
+  private def stageEvents(dupEvery: Option[Int])(s: SparkSession, d: String,
+      dir: String): Unit = {
     val ev = Tables.events(s, d)
     val maxTs = ev.agg(max(col("ts"))).head.getLong(0) // long nanos
     ev.write.mode("overwrite").parquet(dir)
@@ -238,37 +203,12 @@ object EventStreams {
         lit(0.0).as("value"),
         lit("").as("props"))
       .write.mode("append").parquet(dir)
-    writeStagedMarker(s, dir, fixtureFingerprint(s, d, "events"))
   }
 
-  def stageStreamingEvents(s: SparkSession, d: String): Unit =
-    stageEvents(s, d, stagedDir(d), None)
-
-  /** Stage-if-missing fallback so the query closures stand alone when
-    * the driver calls them without the prepare hook. Reuse requires the
-    * marker's stored fingerprint to match the CURRENT fixture — a
-    * regenerated fixture restages instead of serving stale rows. */
-  private def ensureStagedIn(s: SparkSession, dir: String,
-      fingerprint: String)(stage: => Unit): String = {
-    val marker = new org.apache.hadoop.fs.Path(dir, StagedMarker)
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val fresh = fs.exists(marker) && {
-      val in = fs.open(marker)
-      val stored =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      stored == fingerprint
-    }
-    if (!fresh) stage
-    dir
-  }
-
-  private def ensureStaged(s: SparkSession, d: String): String =
-    ensureStagedIn(s, stagedDir(d), fixtureFingerprint(s, d, "events"))(
-      stageStreamingEvents(s, d))
+  private val stagedEvents = Staging.shared("events-staged", "events")(stageEvents(None))
 
   private def streamingEvents(s: SparkSession, d: String): DataFrame =
-    s.readStream.schema(eventSchema).parquet(ensureStaged(s, d))
+    s.readStream.schema(eventSchema).parquet(stagedEvents.ready(s, d))
 
   /** Hourly tumbling counts through a REAL streaming plan (Append mode,
     * watermark-evicted state, file sink), checked against the batch SQL
@@ -279,7 +219,7 @@ object EventStreams {
       |  event_type, count(*) AS n, round(sum(value), 4) AS total
       |FROM events
       |GROUP BY bucket_epoch, event_type
-      |ORDER BY bucket_epoch, event_type""".stripMargin)(stageStreamingEvents) { (s, d) =>
+      |ORDER BY bucket_epoch, event_type""".stripMargin)(stagedEvents.prepare) { (s, d) =>
     val agg = tumblingCounts(streamingEvents(s, d), "1 hour")
     runAppendToParquet(agg, "st_tumbling_hourly")
       .filter(col("event_type") =!= "__flush")
@@ -304,7 +244,7 @@ object EventStreams {
       |  round(sum(value), 4) AS total
       |FROM contrib
       |GROUP BY bucket_epoch, event_type
-      |ORDER BY bucket_epoch, event_type""".stripMargin)(stageStreamingEvents) { (s, d) =>
+      |ORDER BY bucket_epoch, event_type""".stripMargin)(stagedEvents.prepare) { (s, d) =>
     val agg = slidingCounts(streamingEvents(s, d), "1 hour", "30 minutes")
     runAppendToParquet(agg, "st_sliding_halfhour")
       .filter(col("event_type") =!= "__flush")
@@ -313,20 +253,12 @@ object EventStreams {
       .orderBy(col("bucket_epoch"), col("event_type"))
   }
 
-  private def stagedDedupDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-events-dup-staged-" +
-      math.abs(d.hashCode)
-
-  /** Stages the PLANTED-duplicate corpus for the streaming dedup query:
-    * all events plus an exact copy of every 10th (same event_id, same
+  /** The PLANTED-duplicate corpus for the streaming dedup query: all
+    * events plus an exact copy of every 10th (same event_id, same
     * payload — the at-least-once-ingestion scenario), via the shared
-    * [[stageEvents]] (sentinel and marker included). */
-  def stageDuplicatedEvents(s: SparkSession, d: String): Unit =
-    stageEvents(s, d, stagedDedupDir(d), Some(10))
-
-  private def ensureDupStaged(s: SparkSession, d: String): String =
-    ensureStagedIn(s, stagedDedupDir(d),
-      fixtureFingerprint(s, d, "events"))(stageDuplicatedEvents(s, d))
+    * [[stageEvents]] (sentinel included). */
+  private val stagedDupEvents =
+    Staging.shared("events-dup-staged", "events")(stageEvents(Some(10)))
 
   /** Streaming deduplication — the ingestion-dedup pattern every
     * at-least-once pipeline needs: `dropDuplicatesWithinWatermark` on
@@ -342,8 +274,8 @@ object EventStreams {
     """SELECT event_id, CAST(floor(epoch(ts)) AS BIGINT) AS epoch,
       |  user_id, event_type, value
       |FROM events
-      |ORDER BY event_id""".stripMargin)(stageDuplicatedEvents) { (s, d) =>
-    val stream = s.readStream.schema(eventSchema).parquet(ensureDupStaged(s, d))
+      |ORDER BY event_id""".stripMargin)(stagedDupEvents.prepare) { (s, d) =>
+    val stream = s.readStream.schema(eventSchema).parquet(stagedDupEvents.ready(s, d))
       .withColumn("ts2", tsCol)
       .withWatermark("ts2", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
@@ -376,7 +308,7 @@ object EventStreams {
       |FROM e p JOIN e c ON c.user_id = p.user_id
       |WHERE p.event_type = 'purchase' AND c.event_type = 'click'
       |  AND c.ep BETWEEN p.ep - 1800 AND p.ep
-      |ORDER BY p_id, c_id""".stripMargin)(stageStreamingEvents) { (s, d) =>
+      |ORDER BY p_id, c_id""".stripMargin)(stagedEvents.prepare) { (s, d) =>
     val ev = streamingEvents(s, d)
     def side(kind: String, idAs: String, userAs: String, tsAs: String) =
       ev.filter(col("event_type") === kind || col("event_type") === "__flush")
@@ -411,8 +343,8 @@ object EventStreams {
       |FROM events e
       |JOIN customer c ON c.c_custkey = e.user_id
       |JOIN nation n ON n.n_nationkey = c.c_nationkey
-      |ORDER BY e.event_id""".stripMargin)(stageStreamingEvents) { (s, d) =>
-    val ev = s.readStream.schema(eventSchema).parquet(ensureStaged(s, d))
+      |ORDER BY e.event_id""".stripMargin)(stagedEvents.prepare) { (s, d) =>
+    val ev = streamingEvents(s, d)
       .select(col("event_id"), expr("ts DIV 1000000000").as("epoch"),
         col("user_id"))
     val cust = Tables.customer(s, d)
@@ -500,10 +432,10 @@ object EventStreams {
       |  CAST((e.t - c.t) // 1000000000 AS BIGINT) AS gap_seconds
       |FROM errors e
       |ASOF LEFT JOIN clicks c ON e.user_id = c.user_id AND e.t >= c.t
-      |ORDER BY error_id""".stripMargin)(stageStreamingEvents) { (s, d) =>
+      |ORDER BY error_id""".stripMargin)(stagedEvents.prepare) { (s, d) =>
     import s.implicits._
     implicit val sp: SparkSession = s
-    val ev = s.readStream.schema(eventSchema).parquet(ensureStaged(s, d))
+    val ev = streamingEvents(s, d)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       .as[(Long, Long, Long, String)]
     runAppendToParquet(asofEnrich(ev).toDF(), "st_asof_enrich")
@@ -543,10 +475,10 @@ object EventStreams {
     * session_start (sessions of one user never overlap); the sentinel
     * user's never-flushed state row is dropped by the user filter. */
   val sessionsStream: QueryDef = QueryDef.sqlPrepared(
-    "st_sessions_stream", sessionsOracleSql)(stageStreamingEvents) { (s, d) =>
+    "st_sessions_stream", sessionsOracleSql)(stagedEvents.prepare) { (s, d) =>
     import s.implicits._
     implicit val sp: SparkSession = s
-    val ev = s.readStream.schema(eventSchema).parquet(ensureStaged(s, d))
+    val ev = streamingEvents(s, d)
       .select(col("user_id"), expr("ts DIV 1000000000").as("epoch"),
         col("value"))
       .as[SessionEvent]
@@ -632,7 +564,7 @@ object EventStreams {
         |SELECT bucket_epoch, probe_user, CAST(min(n) AS BIGINT) AS est
         |FROM cnt
         |GROUP BY bucket_epoch, probe_user
-        |ORDER BY bucket_epoch, probe_user""".stripMargin)(stageStreamingEvents) { (s, d) =>
+        |ORDER BY bucket_epoch, probe_user""".stripMargin)(stagedEvents.prepare) { (s, d) =>
       // The sentinel stays in the stream (a pre-agg filter would be
       // pushed below the watermark node and starve it): it lands in its
       // OWN 2-hour window, whose end sits a full hour past the final
@@ -729,37 +661,32 @@ object EventStreams {
       |QUALIFY row_number() OVER (PARTITION BY user_id
       |                           ORDER BY ts DESC, event_id DESC,
       |                                    event_type DESC) = 1
-      |ORDER BY user_id""".stripMargin)(stageStreamingEvents) { (s, d) =>
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-upsert-" +
-      java.util.UUID.randomUUID
-    val state = s"$base/state"
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stream = s.readStream.schema(eventSchema)
-      .option("maxFilesPerTrigger", 8)
-      .parquet(ensureStaged(s, d))
-    graft.Knobs.withShufflePartitions(s, 8) { scoped =>
-      val q = graft.Knobs.rebind(stream, scoped).writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val incoming = batch.filter(col("event_type") =!= "__flush")
-            .select(col("user_id"), col("ts"), col("event_id"),
-              col("event_type"))
-          // the merge runs inside the capped scope too: its state table
-          // is O(users) tiny rows (the reason for the cap)
-          upsertMerge(scoped, state, incoming)
-        }
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      |ORDER BY user_id""".stripMargin)(stagedEvents.prepare) { (s, d) =>
+    Staging.scratch(s, "upsert") { base =>
+      val state = s"$base/state"
+      val stream = s.readStream.schema(eventSchema)
+        .option("maxFilesPerTrigger", 8)
+        .parquet(stagedEvents.ready(s, d))
+      graft.Knobs.withShufflePartitions(s, 8) { scoped =>
+        val q = graft.Knobs.rebind(stream, scoped).writeStream
+          .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+            val incoming = batch.filter(col("event_type") =!= "__flush")
+              .select(col("user_id"), col("ts"), col("event_id"),
+                col("event_type"))
+            // the merge runs inside the capped scope too: its state table
+            // is O(users) tiny rows (the reason for the cap)
+            upsertMerge(scoped, state, incoming)
+          }
+          .option("checkpointLocation", s"$base/ckpt")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+      }
+      s.read.parquet(state)
+        .select(col("user_id"), expr("ts DIV 1000000000").as("last_sec"),
+          col("event_id").as("last_event_id"), col("event_type").as("last_type"))
+        .orderBy(col("user_id"))
     }
-    val out = s.read.parquet(state)
-      .select(col("user_id"), expr("ts DIV 1000000000").as("last_sec"),
-        col("event_id").as("last_event_id"), col("event_type").as("last_type"))
-      .orderBy(col("user_id"))
-      .localCheckpoint(true)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    out
   }
 
   // ------------------------------- streaming near-dup ingestion dedup --
@@ -767,18 +694,13 @@ object EventStreams {
   private val docSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType)))
 
-  private def lshStagedDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-lshbatch-staged-" +
-      math.abs(d.hashCode)
-
-  /** Stages the planted incoming doc batch (the same one
+  /** The planted incoming doc batch (the same one
     * `dedup_incremental_lsh` ingests) as a parquet dir for the
     * streaming file source. */
-  def stageLshBatch(s: SparkSession, d: String): Unit = {
-    val dir = lshStagedDir(d)
-    graft.ops.Dedup.incomingLshBatch(Tables.documents(s, d))
-      .write.mode("overwrite").parquet(dir)
-    writeStagedMarker(s, dir, fixtureFingerprint(s, d, "documents"))
+  private val stagedLshBatch = Staging.shared("lshbatch-staged", "documents") {
+    (s, d, dir) =>
+      graft.ops.Dedup.incomingLshBatch(Tables.documents(s, d))
+        .write.mode("overwrite").parquet(dir)
   }
 
   /** STREAMING near-dup ingestion dedup — the streaming twin of
@@ -840,7 +762,7 @@ object EventStreams {
       |JOIN sig b ON b.doc_id = c.incoming_id
       |WHERE (${graft.ops.Dedup.eqCountSql}) >= 8
       |ORDER BY incoming_id, existing_id, bi""".stripMargin)(
-    stageLshBatch) { (s, d) =>
+    stagedLshBatch.prepare) { (s, d) =>
     val h = graft.ops.Dedup.SignatureHashes
     val docs = Tables.documents(s, d)
     val sig = graft.ops.Dedup.corpusSignatures(docs)
@@ -871,8 +793,7 @@ object EventStreams {
       acc.withColumnRenamed(s"mh$j", s"smh$j"))
       .localCheckpoint(true)
     val stream = s.readStream.schema(docSchema)
-      .parquet(ensureStagedIn(s, lshStagedDir(d),
-        fixtureFingerprint(s, d, "documents"))(stageLshBatch(s, d)))
+      .parquet(stagedLshBatch.ready(s, d))
     val signed = graft.ops.Dedup.withRowSignature(stream, "text")
       .withColumnRenamed("doc_id", "incoming_id")
     val probe = signed.select(
@@ -1016,36 +937,29 @@ object EventStreams {
   private val StPackShards = 4
   private val StPackFiles = 5
 
-  private def packStagedDir(d: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-packdocs-staged-" +
-      math.abs(d.hashCode)
-
-  /** Stages documents as [[StPackFiles]] doc_id-RANGE files with
-    * strictly ascending modification times, so the file source (oldest
-    * first, one file per trigger) replays the corpus in doc_id order —
-    * the determinism contract that lets the accumulated incremental
-    * output equal the batch packing oracle. */
-  def stagePackDocs(s: SparkSession, d: String): Unit = {
-    val dir = packStagedDir(d)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
-    fs.mkdirs(p)
-    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
-    val step = maxId / StPackFiles + 1
-    for (i <- 0 until StPackFiles) {
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/_stage$i")
-      docs.filter(col("doc_id") >= i * step && col("doc_id") < (i + 1) * step)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = fs.listStatus(tmp).map(_.getPath)
-        .filter(_.getName.startsWith("part-")).head
-      val dest = new org.apache.hadoop.fs.Path(dir, f"batch$i%03d.parquet")
-      fs.rename(part, dest)
-      fs.delete(tmp, true)
-      fs.setTimes(dest, 1000L * (i + 1), -1) // ascending, tie-free
-    }
-    writeStagedMarker(s, dir, fixtureFingerprint(s, d, "documents"))
+  /** Documents as [[StPackFiles]] doc_id-RANGE files with strictly
+    * ascending modification times, so the file source (oldest first,
+    * one file per trigger) replays the corpus in doc_id order — the
+    * determinism contract that lets the accumulated incremental output
+    * equal the batch packing oracle. */
+  private val stagedPackDocs = Staging.shared("packdocs-staged", "documents") {
+    (s, d, dir) =>
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(s.sparkContext.hadoopConfiguration)
+      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+      val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
+      val step = maxId / StPackFiles + 1
+      for (i <- 0 until StPackFiles) {
+        val tmp = new org.apache.hadoop.fs.Path(s"$dir/_stage$i")
+        docs.filter(col("doc_id") >= i * step && col("doc_id") < (i + 1) * step)
+          .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val part = fs.listStatus(tmp).map(_.getPath)
+          .filter(_.getName.startsWith("part-")).head
+        val dest = new org.apache.hadoop.fs.Path(dir, f"batch$i%03d.parquet")
+        fs.rename(part, dest)
+        fs.delete(tmp, true)
+        fs.setTimes(dest, 1000L * (i + 1), -1) // ascending, tie-free
+      }
   }
 
   /** STREAMING INCREMENTAL SEQUENCE PACKING — the streaming twin of
@@ -1233,22 +1147,16 @@ object EventStreams {
       |    THEN 1 ELSE 0 END AS BIGINT) AS is_split
       |FROM asg
       |ORDER BY shard, seq_id, doc_id""".stripMargin)(
-    stagePackDocs) { (s, d) =>
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-stream-out/" +
-      s"st_pack-${java.util.UUID.randomUUID}"
-    packDocsStream(s,
-      ensureStagedIn(s, packStagedDir(d),
-        fixtureFingerprint(s, d, "documents"))(stagePackDocs(s, d)),
-      s"$base/ckpt", s"$base/state", s"$base/out")
-    val out = s.read.parquet(s"$base/out")
-      .select(col("shard"), col("seq_id"), col("doc_id"), col("seq_off"),
-        col("span_len"), col("is_split"))
-      .distinct() // replayed epochs re-append identical rows
-      .orderBy(col("shard"), col("seq_id"), col("doc_id"))
-      .localCheckpoint(true)
-    val p = new org.apache.hadoop.fs.Path(base)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    out
+    stagedPackDocs.prepare) { (s, d) =>
+    Staging.scratch(s, "st_pack") { base =>
+      packDocsStream(s, stagedPackDocs.ready(s, d),
+        s"$base/ckpt", s"$base/state", s"$base/out")
+      s.read.parquet(s"$base/out")
+        .select(col("shard"), col("seq_id"), col("doc_id"), col("seq_off"),
+          col("span_len"), col("is_split"))
+        .distinct() // replayed epochs re-append identical rows
+        .orderBy(col("shard"), col("seq_id"), col("doc_id"))
+    }
   }
 
   val all: Seq[QueryDef] =

@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
   * per stage, one clean probe + one clean append each, no shared
   * mutated state — and compares the admitted (batch_no, vec_id) sets
   * against the declared query's persisted-lifecycle route (probe →
-  * admit → append twice into ONE directory with a `_PRISTINE`-marked
-  * staging protocol). Centroids are route-invariant by construction:
+  * admit → append twice into ONE consumed staged directory). Centroids are route-invariant by construction:
   * both routes freeze the quantizer trained on the original corpus
   * (`saveIvfIndex` over the same prep; appends never retrain).
   *

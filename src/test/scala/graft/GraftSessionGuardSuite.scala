@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Source guards for the "every graft session carries GraftExtensions"
   * decision: [[GraftSession]] is the one place a session is built, the
@@ -11,27 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * environment variable (the `SPARK_GRAFT_*` deployment settings of
   * Bench, Verify, the tools and GraftSession are outside the library
   * packages). */
-class GraftSessionGuardSuite extends AnyFunSuite {
-
-  private def sources(dir: String): Seq[Path] = {
-    val root = Paths.get(dir)
-    assert(Files.isDirectory(root), s"$root not found from ${Paths.get("").toAbsolutePath}")
-    val walk = Files.walk(root)
-    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-    finally walk.close()
-  }
-
-  private def offenders(files: Seq[Path], pattern: String): Seq[String] = {
-    val re = pattern.r
-    files.flatMap { f =>
-      Files.readAllLines(f).asScala.zipWithIndex.collect {
-        case (line, i) if re.findFirstIn(line).isDefined => s"$f:${i + 1}: ${line.trim}"
-      }
-    }
-  }
-
-  private def assertNone(hits: Seq[String]): Unit =
-    if (hits.nonEmpty) fail(hits.mkString("\n", "\n", ""))
+class GraftSessionGuardSuite extends SourceGuard {
 
   private val libraryPackages =
     """^package graft\.(fm|ops|functions|plans|relational|streaming)\b""".r

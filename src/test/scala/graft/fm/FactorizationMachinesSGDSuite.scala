@@ -1,6 +1,7 @@
 package graft.fm
 
 import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
@@ -204,6 +205,25 @@ class FactorizationMachinesSGDSuite extends SparkSessionSuite {
     warm.lastLossHistory shouldBe empty
     resumed.globalBias shouldBe 0.75
     table(resumed.paramTable) shouldBe table(warmModel.paramTable)
+  }
+
+  /** The warm start is not a Param, so `copy` carries it by hand:
+    * `fit(df, paramMap)`, CrossValidator and TrainValidationSplit all
+    * fit a copy of the estimator. */
+  test("a copied estimator keeps its warm start") {
+    val s = spark
+    import s.implicits._
+    val df = Seq(
+      (1.0, Vectors.sparse(3, Seq(0 -> 1.0, 1 -> 2.0))),
+      (0.0, Vectors.sparse(3, Seq(1 -> 0.5, 2 -> -1.0))))
+      .toDF("label", "features")
+    val warmModel = FactorizationMachinesModel.fromParamTable("warm", 2, 0.75,
+      Seq((0, 0.1, Seq(0.5, -0.5)), (1, -0.2, Seq(1.0, 0.25)))
+        .toDF("id", "strength", "vecArr"))
+    val warm = new FactorizationMachinesSGD()
+      .setDimFactorization(2).setMaxIter(0).setInitialModel(warmModel)
+    warm.fit(df, ParamMap.empty).globalBias shouldBe 0.75
+    warm.copy(ParamMap.empty).fit(df).globalBias shouldBe 0.75
   }
 
   /** E2E: loss decreases on synthetic rank-k data with known structure

@@ -733,11 +733,6 @@ class IndexMaintenanceSuite extends SparkSessionSuite {
     graft.InternalCaches.releaseAll()
   }
 
-  /** The ingest-grow rows build their corpus index in the untimed
-    * prepare and consume a `_PRISTINE` marker at query start; a
-    * standalone re-invocation (no prepare hook — the driver may call
-    * fn directly, twice) must REBUILD rather than ingest into the
-    * already-mutated index, so back-to-back runs are bit-identical. */
   /** r13: PERSISTED cluster labels under ingest. The route-invariance
     * contract: after any sequence of ingestWithLabels batches, the
     * committed labels are row-identical to buildBandLabels re-derived
@@ -1262,9 +1257,14 @@ class IndexMaintenanceSuite extends SparkSessionSuite {
     graft.InternalCaches.releaseAll()
   }
 
+  /** The ingest rows build their index in the untimed prepare and
+    * consume its staging marker at query start; a standalone
+    * re-invocation (no prepare hook — the driver may call fn directly,
+    * twice) must REBUILD rather than ingest into the already-mutated
+    * index, so back-to-back runs are bit-identical. */
   test("ingest-grow queries are idempotent across standalone re-runs") {
     val s = spark
-    Seq("dedup_ingest_grow", "sim_ingest_grow").foreach { q =>
+    Seq("dedup_ingest_grow", "dedup_ingest_labels", "sim_ingest_grow").foreach { q =>
       val fn = graft.SparkEntry.queries(q)
       val first = canon(fn(s, sfDir))
       graft.InternalCaches.releaseAll()

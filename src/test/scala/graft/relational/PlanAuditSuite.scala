@@ -380,7 +380,6 @@ class PlanAuditSuite extends SparkSessionSuite {
     * scan partitioning/ordering flows straight into the merge. */
   test("bucketed as-of join subtree has zero exchanges and zero sorts") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    AdvancedQueries.stageAsOfBucketed(spark, dir)
     val df = AdvancedQueries.asOfBucketedJoined(spark, dir)
     val plan = df.queryExecution.executedPlan
     val rendered = plan.toString
