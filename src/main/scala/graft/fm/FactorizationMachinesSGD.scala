@@ -16,9 +16,13 @@ import scala.collection.mutable.ArrayBuffer
   *
   *   - model parameters stay distributed end-to-end; the driver never
   *     holds a weight (README.md:7-8);
-  *   - `randomSplit(Array.fill(maxIter)(miniBatchFraction), seed)` with its
-  *     weight-normalization quirk (SGD:111-112, SURVEY D3): batches are
-  *     disjoint and each is ~1/maxIter of the data;
+  *   - the mini-batches of `randomSplit(Array.fill(maxIter)(
+  *     miniBatchFraction), seed)` with its weight-normalization quirk
+  *     (SGD:111-112, SURVEY D3): batches are disjoint and each is
+  *     ~1/maxIter of the data. One persisted tagging pass
+  *     ([[assignBatches]]) replays `randomSplit`'s sort and draws row
+  *     for row, so a step filters its batch instead of re-sorting and
+  *     re-sampling every sample;
   *   - per-iteration learning rate `stepSize / sqrt(iter)` (SGD:121) and
   *     L1 soft-thresholding with `shrinkage = lr * regParam` (SGD:122,
   *     177-181) applied to every feature every iteration. A cold start
@@ -53,7 +57,9 @@ import scala.collection.mutable.ArrayBuffer
   *     re-derives identical weights, making training reproducible;
   *   - per-sample sums use k scalar window sums over codegen'd
   *     `element_at` projections instead of a UDAF-over-window (FM:45-81,
-  *     Model:191) — one shuffle per iteration for the sample-side pass;
+  *     Model:191) — one shuffle per iteration for the sample-side pass.
+  *     An array-valued window aggregate in their place was measured and
+  *     did not pay end to end;
   *   - the new parameter table is eagerly local-checkpointed before the
   *     old one is unpersisted, so lineage cannot grow across iterations
   *     (the reference unpersisted lazily and recomputed chains,
@@ -138,9 +144,10 @@ class FactorizationMachinesSGD(override val uid: String)
   override def fit(dataset: Dataset[_]): FactorizationMachinesModel = {
     transformSchema(dataset.schema)
     // Column-pruned input: only (label, features) survive to the loop.
+    // It is read once, by the tagging pass below, whose persisted tags
+    // are the fit's one cached copy of the samples.
     val data = dataset
       .select(col($(labelCol)).as("label"), col($(featuresCol)).as("features"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
 
     // A cold start begins from an empty table: each feature's row is
     // created by the first step that touches it (see `step`'s `pending`),
@@ -156,21 +163,18 @@ class FactorizationMachinesSGD(override val uid: String)
         StructType.fromDDL("id INT, strength DOUBLE, vecArr ARRAY<DOUBLE>"))
     }
 
-    // maxIter = 0 trains nothing: randomSplit rejects an empty weight
-    // list, so there are no batches to split or size.
-    val batches =
-      if ($(maxIter) == 0) Array.empty[DataFrame]
-      else data.randomSplit(Array.fill($(maxIter))($(miniBatchFraction)), $(seed))
-    // Every mini-batch size in ONE job (the steps do not count): the
-    // batches tagged with their index, unioned, counted per index.
-    val sizes = if (batches.isEmpty) Map.empty[Int, Long] else
+    // Every sample tagged with its mini-batch in one pass, persisted,
+    // and every batch sized in ONE job (the steps do not count), which
+    // also fills the cache. maxIter = 0 trains nothing: no batches.
+    val tagged =
+      if ($(maxIter) == 0) None
+      else Some(assignBatches(data).persist(StorageLevel.MEMORY_AND_DISK))
+    val sizes = tagged.fold(Map.empty[Int, Long]) { t =>
       graft.Phase("fm.sgd.sizes") {
-        batches.zipWithIndex
-          .map { case (b, i) => b.select(lit(i).as("batch")) }
-          .reduce(_ union _)
-          .groupBy(col("batch")).count()
+        t.groupBy(col("batch")).count()
           .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       }
+    }
 
     // Warm starts resume the bias too; cold starts at the reference's 0.0.
     var w0 = initialModel.map(_.globalBias).getOrElse(0.0)
@@ -180,9 +184,10 @@ class FactorizationMachinesSGD(override val uid: String)
     // feature's first row replays. An empty batch shrinks nothing, so it
     // adds none; a warm start replays none.
     var pending = Vector.empty[Double]
-    batches.zipWithIndex.foreach { case (batch, idx) =>
+    for (t <- tagged; idx <- 0 until $(maxIter)) {
       val iter = idx + 1
       val n = sizes.getOrElse(idx, 0L)
+      val batch = t.filter(col("batch") === idx).drop("batch")
       step(params, batch, n, iter, w0, pending) match {
         case Some((newParams, loss, newW0, rows)) =>
           params.unpersist() // newParams is already materialized by step()
@@ -198,7 +203,7 @@ class FactorizationMachinesSGD(override val uid: String)
     }
     lastLossHistory = losses.toSeq
     lastStepRows = rowsWritten.toSeq
-    data.unpersist()
+    tagged.foreach(_.unpersist())
 
     val model = FactorizationMachinesModel
       .fromParamTable(uid, $(dimFactorization), w0, params)
@@ -232,6 +237,39 @@ class FactorizationMachinesSGD(override val uid: String)
   private def initVec(id: Column, shrinks: Seq[Double]): Column =
     call_function("fm_init_vec", id, lit($(seed)), lit($(dimFactorization)),
       lit($(initialSd)), lit(shrinks.toArray))
+
+  /** `data`'s (label, features) rows, each tagged with the index of
+    * the mini-batch `data.randomSplit(Array.fill(maxIter)(
+    * miniBatchFraction), seed)` would put it in (SGD:111-112), in one
+    * pass instead of one sorted, sampled scan per batch. It replays
+    * `randomSplit` draw for draw: each partition is sorted by (label,
+    * features), as `randomSplit` sorts every orderable column, and
+    * `rand(seed)` draws from `XORShiftRandom(seed + partitionIndex)`
+    * row by row, the very sequence of the `BernoulliCellSampler` every
+    * split runs; a row joins the batch whose cell `[lb, ub)` of the
+    * normalized cumulative weights holds its draw. The last bound is
+    * the sum of the normalized weights, which may fall short of 1.0: a
+    * draw at or above it joins no batch, as in `randomSplit`. `data` must
+    * have only those two columns and, as for `randomSplit`, the same rows
+    * in each partition on every evaluation (`fit` evaluates it once, into
+    * the persisted tags). */
+  private[fm] def assignBatches(data: DataFrame): DataFrame = {
+    val weights = Array.fill($(maxIter))($(miniBatchFraction))
+    val sum = weights.sum
+    val bounds = weights.map(_ / sum).scanLeft(0.0d)(_ + _)
+    // bounds(0) = 0.0 ≤ every draw, so among the draws below the last
+    // bound the first cell whose upper bound exceeds the draw holds it.
+    // The draw is its own column, drawn once per row: the optimizer
+    // never inlines a nondeterministic alias into its several uses.
+    val lastBatch = $(maxIter) - 1
+    val cell = (1 to lastBatch).foldRight(lit(lastBatch)) {
+      (i, rest) => when(col("u") < bounds(i), i - 1).otherwise(rest)
+    }
+    data.sortWithinPartitions(col("label"), col("features"))
+      .withColumn("u", rand($(seed)))
+      .filter(col("u") < bounds.last)
+      .select(col("label"), col("features"), cell.as("batch"))
+  }
 
   /** Initial combined parameter table (id, strength, vecArr) over the
     * distinct feature universe of the input — reference SGD:218-252 with

@@ -102,8 +102,9 @@ trait FactorizationMachinesParams extends FactorizationMachinesModelParams {
   final val miniBatchFraction: DoubleParam = new DoubleParam(this,
     "miniBatchFraction",
     "fraction of input per mini-batch in (0, 1]. Reference quirk preserved " +
-      "(SGD:111-112, SURVEY D3): batches come from randomSplit(maxIter copies)" +
-      " whose weights are normalized, so each batch is ~1/maxIter of the data",
+      "(SGD:111-112, SURVEY D3): batches are those of randomSplit(maxIter " +
+      "copies), whose weights are normalized, so each batch is ~1/maxIter of " +
+      "the data whatever this value; fit assigns them in one seeded pass",
     ParamValidators.inRange(0.0, 1.0, lowerInclusive = false, upperInclusive = true))
   final def getMiniBatchFraction: Double = $(miniBatchFraction)
 

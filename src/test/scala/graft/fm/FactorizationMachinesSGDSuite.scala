@@ -5,7 +5,7 @@ import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import scala.jdk.CollectionConverters._
@@ -360,6 +360,45 @@ class FactorizationMachinesSGDSuite extends SparkSessionSuite {
   private def table(p: DataFrame): Map[Int, (Double, Seq[Double])] =
     p.collect().map(r => r.getAs[Int]("id") ->
       (r.getAs[Double]("strength"), r.getSeq[Double](r.fieldIndex("vecArr")).toSeq)).toMap
+
+  /** `fit` tags every sample with its mini-batch in one pass
+    * (`assignBatches`); the batches must be `randomSplit`'s, row for row.
+    * The rows arrive unsorted within their partitions, so a pass that
+    * skipped `randomSplit`'s sort, or drew from another seed, would
+    * split them differently. maxIter 7 and 10 leave the last bound of
+    * the normalized cumulative weights below 1.0, and miniBatchFraction
+    * only rescales weights that are normalized away. */
+  test("mini-batch tags equal randomSplit's batches row for row") {
+    val s = spark
+    import s.implicits._
+    val rng = new scala.util.Random(4L)
+    val rows = (0 until 300).map { _ =>
+      val xs = Seq.fill(3)(rng.nextInt(50)).distinct.sorted.map(_ -> rng.nextGaussian())
+      (rng.nextGaussian(), Vectors.sparse(50, xs))
+    }
+    def tagged(df: DataFrame): Seq[(Double, String, Int)] =
+      df.collect().map(r => (r.getDouble(0), r.get(1).toString, r.getInt(2)))
+        .toSeq.sortBy(t => (t._1, t._2))
+    for (parts <- Seq(1, 5)) {
+      val df = rows.toDF("label", "features").repartition(parts).persist()
+      try {
+        df.rdd.getNumPartitions shouldBe parts
+        for (seed <- Seq(1L, 9L, 42L); maxIter <- Seq(1, 3, 7, 10);
+             fraction <- Seq(1.0, 0.3)) {
+          val est = new FactorizationMachinesSGD()
+            .setMaxIter(maxIter).setMiniBatchFraction(fraction).setSeed(seed)
+          val want = batches(df, est).zipWithIndex
+            .map { case (b, i) => b.withColumn("batch", lit(i)) }
+            .reduce(_ union _)
+          val (got, exp) = (tagged(est.assignBatches(df)), tagged(want))
+          withClue(s"parts=$parts seed=$seed maxIter=$maxIter fraction=$fraction: ") {
+            got.size shouldBe exp.size
+            got.zip(exp).count { case (g, e) => g != e } shouldBe 0
+          }
+        }
+      } finally df.unpersist()
+    }
+  }
 
   /** A cold fit starts from an empty parameter table: every job it
     * submits is the batch sizing or a step (no init job), and a step

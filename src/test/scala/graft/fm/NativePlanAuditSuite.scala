@@ -3,6 +3,7 @@ package graft.fm
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sample, Sort}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
@@ -47,36 +48,60 @@ class NativePlanAuditSuite extends SparkSessionSuite {
     val est = new FactorizationMachinesSGD("audit")
       .setDimFactorization(2).setStepSize(0.5).setRegParam(0.1)
 
-    // The step's one action, the eager checkpoint, reports its plan to
+    // A step's one action, the eager checkpoint, reports its plan to
     // the listener; the updated table comes back checkpointed, so its
     // own plan is a leaf.
-    def checkpointPlan(pending: Seq[Double]): Set[String] = {
-      val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, Set[String])]()
+    def checkpointPlans(run: => Unit, count: Int): Seq[LogicalPlan] = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, LogicalPlan)]()
       val listener = new QueryExecutionListener {
         override def onSuccess(funcName: String, qe: QueryExecution,
-            durationNs: Long): Unit = plans.add(funcName -> exprNames(qe.optimizedPlan))
+            durationNs: Long): Unit = plans.add(funcName -> qe.optimizedPlan)
         override def onFailure(funcName: String, qe: QueryExecution,
             exception: Exception): Unit = ()
       }
-      def found = plans.toArray(Array.empty[(String, Set[String])])
-        .collectFirst { case ("localCheckpoint", seen) => seen }
+      def found = plans.toArray(Array.empty[(String, LogicalPlan)]).toSeq
+        .collect { case ("localCheckpoint", plan) => plan }
       spark.listenerManager.register(listener)
       try {
-        est.step(params, batch, n = 2, iter = 2, pending = pending) should not be empty
+        run
         // the listener bus is async: wait for delivery
         val deadline = System.currentTimeMillis + 10000
-        while (found.isEmpty && System.currentTimeMillis < deadline) Thread.sleep(100)
+        while (found.size < count && System.currentTimeMillis < deadline) Thread.sleep(100)
       } finally spark.listenerManager.unregister(listener)
-      found.getOrElse(Set.empty)
+      found
     }
     // Feature 2 has no row: it inits natively, and in a cold fit's later
     // step (shrinkages pending) its init also replays them natively, with
     // no higher-order function in the plan.
     for (pending <- Seq(Nil, Seq(0.05))) {
-      val seen = checkpointPlan(pending)
+      val plan = checkpointPlans(
+        est.step(params, batch, n = 2, iter = 2, pending = pending) should not be empty,
+        count = 1).head
+      val seen = exprNames(plan)
       withClue(s"pending $pending, expressions seen: $seen\n") {
         (fmOps ++ Set("FmInitStrength", "FmInitVec")).foreach(n => assert(seen.contains(n), n))
         seen should not contain "ArrayTransform"
+      }
+    }
+
+    // In a fit, a step reads its batch from the persisted tagging pass:
+    // no step plan re-samples (Sample) or re-sorts the samples (a Sort
+    // on features). The tagging pass's own sort sits inside the cached
+    // relation, a leaf here.
+    val samples = Seq.tabulate(40)(i =>
+      (i % 3.0, Vectors.sparse(5, Seq(i % 5 -> 1.0, (i + 2) % 5 -> 0.5))))
+      .toDF("label", "features")
+    val fitPlans = checkpointPlans(
+      new FactorizationMachinesSGD("audit-fit").setDimFactorization(2)
+        .setMaxIter(3).setMiniBatchFraction(1.0).setSeed(3L).fit(samples),
+      count = 3)
+    fitPlans should have size 3
+    fitPlans.foreach { plan =>
+      withClue(s"step plan:\n$plan\n") {
+        plan.collect { case p: Sample => p } shouldBe empty
+        plan.collect { case p: Sort
+          if p.order.exists(_.references.exists(_.name == "features")) => p
+        } shouldBe empty
       }
     }
   }
