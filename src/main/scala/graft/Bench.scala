@@ -5,11 +5,15 @@ package graft
   *
   * Methodology: a warmup pass first runs a representative query mix so
   * JVM/JIT/codegen and the parquet footer caches are hot, then every
-  * registered query is timed once. Queries are materialized through the
-  * noop sink — a bare count() would let Catalyst prune away the very
-  * projections being measured.
+  * registered query is timed once per pass. Queries are materialized
+  * through the noop sink — a bare count() would let Catalyst prune away
+  * the very projections being measured.
   */
 object Bench {
+  /** Share of the session's cores the start load average may reach
+    * before the run warns that its wall times are suspect. */
+  private val LoadWarnShare = 0.5
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession()
@@ -22,10 +26,7 @@ object Bench {
     // can scan — fixture parquet AND persisted index/state dirs — so a
     // cold page cache lands OUTSIDE the timed region. Re-touches after
     // each prepare are stat-only except for files the prepare rewrote.
-    // SPARK_GRAFT_PRETOUCH=0 restores the raw-cold behavior (used by
-    // the cold-vs-warm adjudication runs themselves).
-    val preTouchOn = sys.env.getOrElse("SPARK_GRAFT_PRETOUCH", "1") != "0"
-    def preTouch(): Unit = if (preTouchOn)
+    def preTouch(): Unit =
       PreTouch.touch(PreTouch.benchRoots(sfDir,
         spark.conf.get("spark.sql.warehouse.dir")))
     preTouch()
@@ -39,147 +40,77 @@ object Bench {
     val selected = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.findFirstIn(n).isDefined))
 
-    // Single-run timings are vulnerable to box load (r8: a loaded judge
-    // box inflated the record ~3× with zero code change). Two defenses:
-    // SPARK_GRAFT_BENCH_RUNS=N takes the per-query MEDIAN of N timed
-    // passes (BASELINE.md's own protocol), and the one-minute load
-    // average is recorded alongside either way so a load-inflated
-    // record is self-describing.
+    // Single-run timings are hostage to box load (r8: ~3× with zero code
+    // change): SPARK_GRAFT_BENCH_RUNS=N records the per-query MEDIAN of
+    // N passes, and the load averages are recorded either way. A typo or
+    // a value <= 0 fails loudly rather than writing a record of -1.0s.
     val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map { raw =>
-      // validate loudly (r9 advice): a typo'd value would otherwise
-      // crash with a bare NumberFormatException, and runs <= 0 would
-      // silently record -1.0 for every query in a well-formed-looking
-      // file
       val n = try raw.toInt catch {
         case _: NumberFormatException => throw new IllegalArgumentException(
           s"SPARK_GRAFT_BENCH_RUNS must be a positive integer, got '$raw'")
       }
-      require(n >= 1,
-        s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $n")
+      require(n >= 1, s"SPARK_GRAFT_BENCH_RUNS must be >= 1, got $n")
       n
     }.getOrElse(1)
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    // Executor task CPU time per query (r15 verdict #2): wall-clock is
-    // hostage to box load — every cross-round level question (316 vs
-    // 274 s records on identical code) dissolves against a channel the
-    // scheduler queue can't inflate. Sum of TaskMetrics.executorCpuTime
-    // over the tasks each timed materialization runs; cpu_s is the
-    // REGRESSION GATE, wall stays the latency report.
+    val cores = spark.sparkContext.defaultParallelism
+    if (loadStart > LoadWarnShare * cores)
+      System.err.println(f"[bench] WARNING: load average $loadStart%.2f at start " +
+        s"exceeds half of the session's $cores cores: wall times are suspect, " +
+        "compare cpu_s")
+    // Executor task CPU time per query (r15 verdict #2) is the REGRESSION
+    // GATE — the scheduler queue cannot inflate it — and wall stays the
+    // latency report. [[Profile]] attributes it BY JOB GROUP (r17): each
+    // timed materialization runs in window "q:<name>#<pass>", each
+    // prepare in "prep:<name>" (never read), and work that carries no
+    // group is charged to the open window. Windows settle the listener
+    // bus on both edges, so no query's late events smear into the next.
     //
-    // r17 (measurement fix, r16 advice #1): attribution is BY JOB GROUP,
-    // not by wall-clock window deltas on one global counter — the old
-    // scheme systematically charged late task-end events from the
-    // untimed prepare/pre-touch stages (and the previous query) to the
-    // timed window. Each timed materialization runs under job group
-    // "q:<name>#<pass>" and each prepare under "prep:<name>" (discarded);
-    // tasks whose stage carries no group (streaming micro-batches run on
-    // their own threads, which don't inherit the group) fall back to the
-    // query whose timed window is open — the old behavior, now confined
-    // to the only tasks that need it. Per-query cpu is read after the
-    // whole run settles, so boundary smear is gone, not just reduced.
-    val cpuByKey = new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.atomic.AtomicLong]()
-    val stageKey = new java.util.concurrent.ConcurrentHashMap[Integer, String]()
-    @volatile var fallbackKey = "warmup"
-    val cpuListener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        g.foreach(k => e.stageIds.foreach(sid => stageKey.put(sid, k)))
-      }
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) {
-          val k = Option(stageKey.get(Integer.valueOf(e.stageId)))
-            .getOrElse(fallbackKey)
-          cpuByKey
-            .computeIfAbsent(k,
-              _ => new java.util.concurrent.atomic.AtomicLong(0L))
-            .addAndGet(m.executorCpuTime)
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(cpuListener)
-    // INTERLEAVED passes (r14 verdict #1): the r14 committed record
-    // shipped a ~35 s blip on four ADJACENT queries because the runs
-    // loop was query-outer — all N samples of a query ran back-to-back,
-    // so one ~2-minute external disturbance covered every sample of the
-    // queries it overlapped and the per-query median could not reject
-    // it. Pass-outer ordering runs the full selected battery once per
-    // pass; a localized disturbance lands on DIFFERENT queries in
-    // different passes, and the median absorbs it. Per-run semantics
-    // are unchanged: cache release, prepare, pre-touch all run
-    // (untimed) before every timed materialization exactly as before.
+    // Passes are INTERLEAVED (r14 verdict #1): the whole selected battery
+    // runs once per pass, so a localized ~2-minute disturbance lands on
+    // different queries in different passes and the median rejects it.
+    val profile = Profile.attach(spark)
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     val okByKey = scala.collection.mutable.Map.empty[String, Boolean]
     for (pass <- 1 to runs; name <- selected) {
-      // untimed housekeeping + staging runs under a discarded job group,
-      // so its task CPU can no longer smear into any query's bucket
-      spark.sparkContext.setJobGroup(s"prep:$name", s"prepare $name")
-      InternalCaches.releaseAll() // paired release of operator-internal persists
-      spark.catalog.clearCache() // isolate queries from each other's state
-      // One-time input staging runs OUTSIDE the timed region. A staging
-      // failure must be visible — the query would otherwise fail (or
-      // time stale data) with no indication of the real cause.
-      SparkEntry.prepares.get(name)
-        .foreach(p => try p(spark, sfDir) catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] prepare($name) failed: ${e.getMessage}")
-        })
-      preTouch() // untimed: pick up files the prepare staged/rewrote
+      profile.window(s"prep:$name", s"prepare $name") {
+        InternalCaches.releaseAll() // paired release of operator-internal persists
+        spark.catalog.clearCache() // isolate queries from each other's state
+        // A staging failure must be visible — the query would otherwise
+        // fail (or time stale data) with no indication of the real cause.
+        SparkEntry.prepares.get(name)
+          .foreach(p => try p(spark, sfDir) catch {
+            case e: Throwable =>
+              System.err.println(s"[bench] prepare($name) failed: ${e.getMessage}")
+          })
+        preTouch() // pick up files the prepare staged/rewrote
+      }
       val key = s"q:$name#$pass"
-      spark.sparkContext.setJobGroup(key, name)
-      fallbackKey = key
-      val t0 = System.nanoTime()
-      val ok = try { materialize(name); true } catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.clearJobGroup()
+      val (ok, dt) = profile.window(key, name) {
+        val t0 = System.nanoTime()
+        val ok = try { materialize(name); true } catch { case _: Throwable => false }
+        (ok, (System.nanoTime() - t0) / 1e9)
+      }
       samples(name) = (if (ok) dt else -1.0) :: samples.getOrElse(name, Nil)
       okByKey(key) = ok
     }
-    // let the async listener bus settle before reading the cpu buckets
-    Thread.sleep(2000)
-    spark.sparkContext.removeSparkListener(cpuListener)
-    val cpuSamples = scala.collection.mutable.Map.empty[String, List[Double]]
-    for (pass <- 1 to runs; name <- selected) {
-      val key = s"q:$name#$pass"
-      val ns = Option(cpuByKey.get(key)).map(_.get()).getOrElse(0L)
-      val dc = if (okByKey.getOrElse(key, false)) ns / 1e9 else -1.0
-      cpuSamples(name) = dc :: cpuSamples.getOrElse(name, Nil)
-    }
-    def medians(m: scala.collection.Map[String, List[Double]]) =
-      selected.map { name =>
-        val good = m.getOrElse(name, Nil).filter(_ >= 0).sorted
-        name -> (if (good.isEmpty) -1.0 else good(good.length / 2))
-      }
-    val results = medians(samples)
-    val cpuResults = medians(cpuSamples)
+    profile.close()
+    def okKeys(name: String) = (1 to runs).map(p => s"q:$name#$p").filter(okByKey)
+    val results = selected.map(n => n -> median(samples(n)))
+    val cpuResults = selected.map(n => n -> median(okKeys(n).map(profile.total(_).cpuNs / 1e9)))
     val loadEnd = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
-    if (preTouchOn)
-      System.err.println(f"[bench] pre-touched ${PreTouch.bytesRead / 1e6}%.0f" +
-        " MB of input/state files outside the timed regions")
-    // STDOUT CONTRACT (r17 verdict #1): the driver captures only a
-    // ~2,000-char stdout TAIL and tries to parse the bench JSON from it
-    // — `parsed: null` in EVERY round to date because (a) the line grew
-    // to 9.6 KB (full-precision wall + cpu maps) and (b) sbt's
-    // "[success] Total time..." epilogue trailed it, so the line was
-    // never the last stdout line either. Two channels now:
-    //  - stdout: ONE minimal line — wall map at 3 decimals, no cpu map,
-    //    loads at 2 decimals — printed AFTER spark.stop() so nothing
-    //    follows it (build.sbt sets `showSuccess := false` to kill the
-    //    sbt epilogue). The 154 query NAMES alone sum to ~2.4 KB, so
-    //    the line (~3.6 KB) still cannot fit inside a 2,000-char tail;
-    //    being last-line-parseable is the best the contract allows
-    //    without dropping entries (forbidden).
-    //  - BENCH_FULL.json: the complete full-precision record (wall +
-    //    cpu_s maps), the auditable round-over-round channel.
+    System.err.println(f"[bench] pre-touched ${PreTouch.bytesRead / 1e6}%.0f" +
+      " MB of input/state files outside the timed regions")
+    // STDOUT CONTRACT (r17 verdict #1): the JSON is parsed from a
+    // ~2,000-char stdout tail, so stdout gets ONE minimal line —
+    // wall at 3 decimals, loads at 2, no cpu map — printed AFTER
+    // spark.stop() so it is the last line (build.sbt also drops sbt's
+    // success epilogue). The full-precision record (wall, cpu_s and the
+    // profile) goes to BENCH_FULL.json, the round-over-round channel.
     def jmap(m: Seq[(String, Double)], fmt: Double => String) =
-      m.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-        .mkString("{", ",", "}")
+      obj(m.map { case (k, v) => k -> fmt(v) })
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val cpuTotal = cpuResults.collect { case (_, v) if v >= 0 => v }.sum
     val line =
@@ -194,11 +125,10 @@ object Bench {
       s""""queries":${jmap(results, _.toString)},""" +
       s""""cpu_s":${jmap(cpuResults, _.toString)},"cpu_s_total":$cpuTotal,""" +
       s""""sf":"$sfDir","runs_per_query":$runs,""" +
-      s""""load_avg_start":$loadStart,"load_avg_end":$loadEnd}"""
-    // Persist the complete map so timings stay auditable round-over-
-    // round. A SPARK_GRAFT_ONLY subset must never clobber the committed
-    // full-bench record (r6, advice) — partial runs default to
-    // BENCH_SUBSET.json unless an output path is given explicitly.
+      s""""load_avg_start":$loadStart,"load_avg_end":$loadEnd,""" +
+      s""""profile":${obj(selected.map(n => n -> profileRecord(profile, okKeys(n))))}}"""
+    // A SPARK_GRAFT_ONLY subset must never clobber the committed
+    // full-bench record (r6): it defaults to BENCH_SUBSET.json.
     val defaultOut =
       if (only.isDefined) "BENCH_SUBSET.json" else "BENCH_FULL.json"
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
@@ -213,5 +143,56 @@ object Bench {
     // line, and a shutdown hiccup must not be able to print after it
     try spark.stop() catch { case _: Throwable => () }
     println(line)
+  }
+
+  /** Median of the non-negative samples (the upper one of an even
+    * count); -1.0 when there are none. */
+  private def median(xs: Seq[Double]): Double = {
+    val good = xs.filter(_ >= 0).sorted
+    if (good.isEmpty) -1.0 else good(good.length / 2)
+  }
+
+  private def js(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  private def obj(fields: Iterable[(String, String)]): String =
+    fields.map { case (k, v) => js(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** One query's profile over its successful timed windows `keys`: the
+    * median of each figure, per-phase rows keyed by job description
+    * (the query name for jobs outside any [[Phase]]), and each pass's
+    * streaming micro-batch `durationMs` maps. */
+  private def profileRecord(profile: Profile, keys: Seq[String]): String = {
+    // per field, the median across passes; integral medians (counts,
+    // bytes) print without a fraction
+    def medians(rows: Seq[Seq[(String, Double)]]) = rows.headOption.toSeq.flatMap(
+      _.indices.map { i =>
+        val m = median(rows.map(_(i)._2))
+        rows.head(i)._1 -> (if (m == math.rint(m)) m.toLong.toString else m.toString)
+      })
+    val byKey = keys.map(profile.phases)
+    val phases = byKey.flatMap(_.keys).distinct.sorted.map { d =>
+      d -> obj(medians(byKey.map { ps =>
+        val w = ps.getOrElse(d, new Profile.Work)
+        Seq("jobs" -> w.jobs.toDouble, "tasks" -> w.tasks.toDouble,
+          "cpu_s" -> w.cpuNs / 1e9, "gc_s" -> w.gcMs / 1e3)
+      }))
+    }
+    val totals = medians(keys.map { k =>
+      val w = profile.total(k)
+      Seq("jobs" -> w.jobs.toDouble, "stages" -> w.stages.toDouble,
+        "stages_skipped" -> w.stagesSkipped.toDouble, "tasks" -> w.tasks.toDouble,
+        "gc_s" -> w.gcMs / 1e3, "shuffle_read_bytes" -> w.shuffleRead.toDouble,
+        "shuffle_write_bytes" -> w.shuffleWrite.toDouble,
+        "spill_bytes" -> w.spill.toDouble, "driver_gap_s" -> profile.driverGapS(k))
+    })
+    val batches = keys.map(profile.batches(_).map(b =>
+      obj(b.toSeq.sorted.map { case (k, v) => k -> v.toString })).mkString("[", ",", "]"))
+    obj(totals ++ Seq("phases" -> obj(phases)) ++
+      (if (batches.forall(_ == "[]")) Nil else Seq("batches" -> batches.mkString("[", ",", "]"))))
   }
 }

@@ -567,7 +567,7 @@ object Dedup {
   // an explicit read schema skips the footer-sampling job EVERY
   // spark.read.parquet otherwise runs before any execution — the
   // ingest lifecycle verbs paid 10+ such single-task driver
-  // round-trips per query (measured with graft.tools.JobProfile:
+  // round-trips per query (measured with the old r18 job profiler:
   // dedup_ingest_labels ran 113 jobs, ~14 of them schema inference).
   // The layouts are fixed by the v2 format tag, so the schemas are
   // compile-time constants; partition columns (bucket/gbucket) are

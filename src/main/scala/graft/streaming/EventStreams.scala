@@ -1043,8 +1043,8 @@ object EventStreams {
           .localCheckpoint(true)
         // the two per-epoch writes (assignments, new offsets) are
         // independent once `pos` is checkpointed — overlap their
-        // commit-protocol latency (r18, guide §2.6; measured via
-        // graft.tools.StreamProfile: addBatch is 87-93% of every
+        // commit-protocol latency (r18, guide §2.6; measured with the
+        // old r18 stream profiler: addBatch is 87-93% of every
         // micro-batch and these writes are most of it)
         graft.Knobs.concurrently(
           () => pos

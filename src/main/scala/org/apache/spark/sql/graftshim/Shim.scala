@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -16,7 +17,10 @@ import org.apache.spark.sql.classic
   *    `injectFunction` is public but covers only SQL-name dispatch, not
   *    programmatic construction of expressions like Spark's own
   *    bloom-filter pair, whose build/probe sides take non-SQL-literal
-  *    arguments.
+  *    arguments;
+  *  - waiting for the listener bus to deliver every posted event
+  *    (`LiveListenerBus.waitUntilEmpty`, bounded at 10 s; it throws on
+  *    timeout) — the bus is asynchronous and has no public drain.
   *
   * Every library that ships custom operators hosts these one-liners
   * inside the `sql` package. Nothing else in this repo lives outside
@@ -29,4 +33,6 @@ object Shim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  def waitForListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -1,9 +1,6 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import graft.fm.SparkSessionSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.col
 
 /** [[Phase]] names every job its body submits, AQE stage jobs included,
@@ -14,12 +11,7 @@ class PhaseSuite extends SparkSessionSuite {
 
   test("a phase tags its body's jobs and restores the caller's description") {
     val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty(descKey))).getOrElse("(none)"))
-    }
-    sc.addSparkListener(listener)
+    val p = Profile.attach(spark)
     sc.setJobDescription("outer")
     try {
       Phase("inner") {
@@ -31,19 +23,12 @@ class PhaseSuite extends SparkSessionSuite {
       an[IllegalStateException] should be thrownBy
         Phase("failing")(throw new IllegalStateException("body failed"))
       sc.getLocalProperty(descKey) shouldBe "outer"
-
-      // the listener bus is async but ordered: wait for a marker job
-      Phase("marker")(spark.range(1).collect())
-      val deadline = System.currentTimeMillis + 10000
-      while (!seen.contains("marker") && System.currentTimeMillis < deadline)
-        Thread.sleep(50)
     } finally {
       sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
+      p.close()
     }
-    val jobs = seen.asScala.toSeq
-    jobs.last shouldBe "marker"
-    jobs.init.size should be >= 2
-    all(jobs.init) shouldBe "inner"
+    val jobs = p.phases(Profile.NoGroup)
+    jobs.keySet shouldBe Set("inner")
+    jobs("inner").jobs should be >= 2L
   }
 }

@@ -2,7 +2,6 @@ package graft.fm
 
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.param.ParamMap
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions.{col, lit}
@@ -148,30 +147,20 @@ class FactorizationMachinesSGDSuite extends SparkSessionSuite {
       override def onFailure(funcName: String, qe: QueryExecution,
           exception: Exception): Unit = actions.add(funcName)
     }
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
-    }
     spark.listenerManager.register(listener)
-    spark.sparkContext.addSparkListener(jobListener)
+    val profile = graft.Profile.attach(spark)
     try {
       est.step(params, batch, n = 2, iter = 1, w0 = 0.5) should not be empty
-      // the listener bus is async but ordered: a marker action arriving
-      // means every execution of the step has been delivered
       graft.Phase("marker")(spark.range(1).collect())
-      val deadline = System.currentTimeMillis + 10000
-      while ((!actions.contains("collect") || !jobs.contains("marker")) &&
-          System.currentTimeMillis < deadline)
-        Thread.sleep(50)
     } finally {
+      profile.close()
       spark.listenerManager.unregister(listener)
-      spark.sparkContext.removeSparkListener(jobListener)
     }
     actions.asScala.toSeq shouldBe Seq("localCheckpoint", "collect")
-    // the checkpoint job is the last one started before the marker
-    jobs.asScala.toSeq.takeWhile(_ != "marker").lastOption
-      .getOrElse("") should startWith("fm.sgd.step 1")
+    // every job the step started is its checkpoint's
+    val stepJobs = profile.phases(graft.Profile.NoGroup).keySet - "marker"
+    stepJobs should not be empty
+    all(stepJobs) should startWith("fm.sgd.step 1")
     assert(spark.sharedState.cacheManager.isEmpty, "the step left a cached plan")
   }
 
@@ -413,20 +402,10 @@ class FactorizationMachinesSGDSuite extends SparkSessionSuite {
     val split = batches(df, est)
     split.foreach(b => b.count() should be > 0L)
 
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val jobListener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(String.valueOf(e.properties.getProperty("spark.job.description")))
-    }
-    spark.sparkContext.addSparkListener(jobListener)
-    try {
-      est.fit(df)
-      graft.Phase("marker")(spark.range(1).collect())
-      val deadline = System.currentTimeMillis + 10000
-      while (!jobs.contains("marker") && System.currentTimeMillis < deadline)
-        Thread.sleep(50)
-    } finally spark.sparkContext.removeSparkListener(jobListener)
-    val fitJobs = jobs.asScala.toSeq.takeWhile(_ != "marker")
+    val profile = graft.Profile.attach(spark)
+    try est.fit(df)
+    finally profile.close()
+    val fitJobs = profile.phases(graft.Profile.NoGroup).keySet
     fitJobs should not be empty
     fitJobs.foreach(_ should startWith("fm.sgd."))
 

@@ -51,7 +51,7 @@ class NativePlanAuditSuite extends SparkSessionSuite {
     // A step's one action, the eager checkpoint, reports its plan to
     // the listener; the updated table comes back checkpointed, so its
     // own plan is a leaf.
-    def checkpointPlans(run: => Unit, count: Int): Seq[LogicalPlan] = {
+    def checkpointPlans(run: => Unit): Seq[LogicalPlan] = {
       val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, LogicalPlan)]()
       val listener = new QueryExecutionListener {
         override def onSuccess(funcName: String, qe: QueryExecution,
@@ -59,24 +59,20 @@ class NativePlanAuditSuite extends SparkSessionSuite {
         override def onFailure(funcName: String, qe: QueryExecution,
             exception: Exception): Unit = ()
       }
-      def found = plans.toArray(Array.empty[(String, LogicalPlan)]).toSeq
-        .collect { case ("localCheckpoint", plan) => plan }
       spark.listenerManager.register(listener)
       try {
         run
-        // the listener bus is async: wait for delivery
-        val deadline = System.currentTimeMillis + 10000
-        while (found.size < count && System.currentTimeMillis < deadline) Thread.sleep(100)
+        graft.Profile.settle(spark)
       } finally spark.listenerManager.unregister(listener)
-      found
+      plans.toArray(Array.empty[(String, LogicalPlan)]).toSeq
+        .collect { case ("localCheckpoint", plan) => plan }
     }
     // Feature 2 has no row: it inits natively, and in a cold fit's later
     // step (shrinkages pending) its init also replays them natively, with
     // no higher-order function in the plan.
     for (pending <- Seq(Nil, Seq(0.05))) {
       val plan = checkpointPlans(
-        est.step(params, batch, n = 2, iter = 2, pending = pending) should not be empty,
-        count = 1).head
+        est.step(params, batch, n = 2, iter = 2, pending = pending) should not be empty).head
       val seen = exprNames(plan)
       withClue(s"pending $pending, expressions seen: $seen\n") {
         (fmOps ++ Set("FmInitStrength", "FmInitVec")).foreach(n => assert(seen.contains(n), n))
@@ -93,8 +89,7 @@ class NativePlanAuditSuite extends SparkSessionSuite {
       .toDF("label", "features")
     val fitPlans = checkpointPlans(
       new FactorizationMachinesSGD("audit-fit").setDimFactorization(2)
-        .setMaxIter(3).setMiniBatchFraction(1.0).setSeed(3L).fit(samples),
-      count = 3)
+        .setMaxIter(3).setMiniBatchFraction(1.0).setSeed(3L).fit(samples))
     fitPlans should have size 3
     fitPlans.foreach { plan =>
       withClue(s"step plan:\n$plan\n") {

@@ -491,23 +491,12 @@ class CrashConsistencySuite extends SparkSessionSuite {
     val docs = graft.Tables.documents(s, sfDir)
       .select(col("doc_id"), col("text"))
     val dir = Files.createTempDirectory("bandphase").toString
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
-          .foreach(seen.add)
-    }
-    s.sparkContext.addSparkListener(listener)
+    val profile = graft.Profile.attach(s)
     try {
       Dedup.saveBandIndex(docs.filter(col("doc_id") < 300), dir)
       Dedup.appendToBandIndex(dir, docs.filter(col("doc_id") >= 300))
-      graft.Phase("marker")(s.range(1).collect())
-      val deadline = System.currentTimeMillis + 10000
-      while (!seen.contains("marker") && System.currentTimeMillis < deadline)
-        Thread.sleep(50)
-    } finally s.sparkContext.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    val descs = seen.asScala.toSet
+    } finally profile.close()
+    val descs = profile.phases(graft.Profile.NoGroup).keySet
     descs should contain("index.band.saveBandIndex")
     descs should contain("index.band.appendToBandIndex")
   }

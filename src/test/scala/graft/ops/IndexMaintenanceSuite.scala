@@ -1133,29 +1133,10 @@ class IndexMaintenanceSuite extends SparkSessionSuite {
     def copyOf(id: Long, newId: Long) = docs.filter(col("doc_id") === id)
       .select(lit(newId).as("doc_id"), dropFirst)
     def jobsDuring(body: => Unit): Int = {
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          n.incrementAndGet()
-      }
-      s.sparkContext.addSparkListener(l)
-      // the listener bus is async and has no public drain — poll the
-      // counter to stability instead of one fixed sleep (r16 advice:
-      // a slow bus could under-count behind a 2 s nap)
-      try {
-        body
-        var last = -1
-        var stableFor = 0
-        var waited = 0
-        while (stableFor < 5 && waited < 50) { // 1 s stable, 10 s cap
-          Thread.sleep(200)
-          waited += 1
-          if (n.get() == last) stableFor += 1 else { stableFor = 0; last = n.get() }
-        }
-      }
-      finally s.sparkContext.removeSparkListener(l)
-      n.get()
+      val profile = graft.Profile.attach(s)
+      try body
+      finally profile.close()
+      profile.total(graft.Profile.NoGroup).jobs.toInt
     }
     def run(f: Double, tag: String): Int = {
       val root = Files.createTempDirectory(s"labeljobs$tag").toString

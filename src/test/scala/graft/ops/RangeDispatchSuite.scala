@@ -112,14 +112,11 @@ class RangeDispatchSuite extends SparkSessionSuite {
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
     }
-    Thread.sleep(500) // let straggler events from earlier tests drain
+    graft.Profile.settle(spark) // deliver earlier tests' events first
     spark.listenerManager.register(listener)
     try {
       Similarity.rangeDispatchDecision(prep)
-      val deadline = System.currentTimeMillis + 10000
-      while (counter.get < 1 && System.currentTimeMillis < deadline)
-        Thread.sleep(100)
-      Thread.sleep(500)
+      graft.Profile.settle(spark)
       counter.get shouldBe 1
     } finally {
       spark.listenerManager.unregister(listener)

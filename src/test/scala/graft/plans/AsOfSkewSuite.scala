@@ -211,19 +211,15 @@ class AsOfSkewSuite extends SparkSessionSuite {
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
     }
-    // let any straggler events from earlier tests drain first
-    Thread.sleep(500)
+    // deliver any events from earlier tests first
+    graft.Profile.settle(spark)
     spark.listenerManager.register(listener)
     try {
       val bounds = AsOfSkew.detect(left, Seq("k"), "t", aggressive)
       // detection found the 50%-share key, boundaries attached
       bounds.keySet should contain(Seq(7L))
       bounds(Seq(7L)) should not be empty
-      // the listener bus is async: wait for delivery, then settle
-      val deadline = System.currentTimeMillis + 10000
-      while (counter.get < 1 && System.currentTimeMillis < deadline)
-        Thread.sleep(100)
-      Thread.sleep(500)
+      graft.Profile.settle(spark)
       withClue("detection must be a single pass (one action) over the " +
           "sample — counts, quantiles and the total share one job: ") {
         counter.get shouldBe 1
@@ -246,14 +242,14 @@ class AsOfSkewSuite extends SparkSessionSuite {
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
     }
-    Thread.sleep(500)
+    graft.Profile.settle(spark)
     spark.listenerManager.register(listener)
     val hinted =
       try {
         val df = AsOfSkew.join(left, right, Seq("k" -> "rk"), "t", "rt",
           broadcastRight = Some(false),
           config = aggressive.copy(hint = Some(hint)))
-        Thread.sleep(500)
+        graft.Profile.settle(spark)
         withClue("a hinted join must plan with ZERO driver actions: ") {
           counter.get shouldBe 0
         }
@@ -293,12 +289,12 @@ class AsOfSkewSuite extends SparkSessionSuite {
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
     }
-    Thread.sleep(500)
+    graft.Profile.settle(spark)
     spark.listenerManager.register(listener)
     try {
       val df = AsOfSkew.join(left, right, Seq("k" -> "rk"), "t", "rt",
         broadcastRight = Some(false)) // default config: minHotRows = 1M
-      Thread.sleep(500)
+      graft.Profile.settle(spark)
       withClue("stats-based skip must plan without any driver action: ") {
         counter.get shouldBe 0
       }
