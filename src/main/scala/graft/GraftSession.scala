@@ -4,10 +4,12 @@ import org.apache.spark.sql.SparkSession
 
 /** The ONE builder for a local graft session — Bench, Verify, the dev
   * tools and the test suites all start here, so every graft session
-  * carries [[graft.functions.GraftExtensions]]. The engine relies on
-  * that: its operators call the native expressions (`fm_*`,
-  * `dot_product_q`, `token_hash`, `normalize_text`, the sketches) and
-  * the AsOf planner strategy directly, with no interpreted fallback.
+  * carries [[graft.functions.GraftExtensions]], the one table of the
+  * engine's native SQL functions. The engine relies on that: its
+  * operators call the native expressions (`fm_*`, `dot_product_q`,
+  * `token_hash`, `normalize_text`, `binary_bytes`, `gram_run_stats`,
+  * the sketches) and the AsOf planner strategy and optimizer rules
+  * directly, with no interpreted fallback.
   */
 object GraftSession {
 

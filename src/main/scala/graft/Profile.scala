@@ -7,15 +7,18 @@ import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
+import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 
 /** The one Spark profiler. A listener that charges every job, stage and
   * task to the job group that submitted it and, within the group, to
   * the job's description — the [[Phase]] tag, `""` when there is none.
   * Work submitted with no job group goes to the open [[window]]'s group
-  * ([[Profile.NoGroup]] outside any window), and so does the `durationMs`
-  * of every streaming micro-batch: progress events reach this listener
-  * from every session's streams, `newSession()` scopes included.
+  * ([[Profile.NoGroup]] outside any window). A stream's micro-batches
+  * run under job group = its runId; they and the `durationMs` of each
+  * micro-batch go to the group that was open when the stream started,
+  * under phase `""` unless a [[Phase]] inside the batch names one.
+  * Stream events reach this listener from every session's streams,
+  * `newSession()` scopes included.
   *
   * Nothing attaches a profile by default; a session that does not
   * profile pays nothing. The listener bus is asynchronous: read a
@@ -32,6 +35,8 @@ final class Profile private (sc: SparkContext) extends SparkListener {
     .withDefaultValue(Vector.empty)
   private val progress = mutable.Map.empty[String, Vector[Map[String, Long]]]
     .withDefaultValue(Vector.empty)
+  // runId of each running stream → the group open when it started
+  private val streams = mutable.Map.empty[String, String]
   @volatile private var open = NoGroup
 
   private def workOf(key: (String, String)): Work =
@@ -41,8 +46,13 @@ final class Profile private (sc: SparkContext) extends SparkListener {
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     def prop(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
-    val key = (prop("spark.jobGroup.id").getOrElse(open),
-      prop("spark.job.description").getOrElse(""))
+    val group = prop("spark.jobGroup.id").getOrElse(open)
+    val description = prop("spark.job.description").getOrElse("")
+    val key = streams.get(group) match {
+      // Spark's own micro-batch description names the runId
+      case Some(g) => (g, if (description.contains(group)) "" else description)
+      case None => (group, description)
+    }
     e.stageIds.foreach(stageKey(_) = key)
     jobStages(e.jobId) = (key, e.stageIds)
     workOf(key).jobs += 1
@@ -79,9 +89,11 @@ final class Profile private (sc: SparkContext) extends SparkListener {
   }
 
   override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case q: QueryStartedEvent => synchronized(streams(q.runId.toString) = open)
+    case q: QueryTerminatedEvent => synchronized(streams -= q.runId.toString)
     case p: QueryProgressEvent => synchronized {
       val d = p.progress.durationMs.asScala.map { case (k, v) => k -> v.longValue }.toMap
-      progress(open) :+= d
+      progress(streams.getOrElse(p.progress.runId.toString, open)) :+= d
     }
     case _ =>
   }
@@ -124,8 +136,8 @@ final class Profile private (sc: SparkContext) extends SparkListener {
     synchronized(windows(group)).map { case (t0, t1) => uncoveredS(t0, t1, spans) }.sum
   }
 
-  /** `durationMs` of each streaming micro-batch reported while `group`
-    * was open, in arrival order. */
+  /** `durationMs` of each micro-batch of the streams started while
+    * `group` was open, in arrival order. */
   def batches(group: String): Seq[Map[String, Long]] =
     synchronized(progress(group))
 

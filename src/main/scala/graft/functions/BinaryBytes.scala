@@ -1,13 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType}
 
 /** Native Catalyst expression: a binary payload's bytes as
-  * `array<int>` of UNSIGNED values (0–255) — one O(n) codegen'd copy
+  * `array<int>` of UNSIGNED values (0–255) — one O(n) copy
   * that makes every subsequent byte access an O(1) `element_at`.
   *
   * Spark's SQL surface has no positional access into `binary`, so the
@@ -30,37 +30,20 @@ case class BinaryBytes(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
 
-  override def nullSafeEval(input: Any): Any = {
-    val bs = input.asInstanceOf[Array[Byte]]
-    val out = new Array[Int](bs.length)
-    var i = 0
-    while (i < bs.length) { out(i) = bs(i) & 0xff; i += 1 }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
+  override def nullSafeEval(input: Any): Any = BinaryBytes.unsigned(input.asInstanceOf[Array[Byte]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      s"""
-         |int[] $out = new int[$in.length];
-         |for (int $i = 0; $i < $in.length; $i++) {
-         |  $out[$i] = $in[$i] & 0xff;
-         |}
-         |${ev.value} =
-         |  org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, in => s"graft.functions.BinaryBytes.unsigned($in)")
 
   override protected def withNewChildInternal(newChild: Expression): BinaryBytes =
     copy(child = newChild)
 }
 
 object BinaryBytes {
-  /** Registration triple for [[GraftExtensions]]. */
-  val registration: (org.apache.spark.sql.catalyst.FunctionIdentifier,
-      ExpressionInfo, Seq[Expression] => Expression) = (
-    new org.apache.spark.sql.catalyst.FunctionIdentifier("binary_bytes"),
-    new ExpressionInfo(classOf[BinaryBytes].getName, "binary_bytes"),
-    (exprs: Seq[Expression]) => BinaryBytes(exprs.head))
+  def unsigned(bs: Array[Byte]): ArrayData = {
+    val out = new Array[Int](bs.length)
+    var i = 0
+    while (i < bs.length) { out(i) = bs(i) & 0xff; i += 1 }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
 }

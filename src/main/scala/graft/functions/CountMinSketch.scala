@@ -4,7 +4,7 @@ import java.nio.ByteBuffer
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -108,11 +108,4 @@ object CountMinSketchAgg {
     * bit-identical to the SQL `%` the oracle applies. */
   def bucket(tid: Long, i: Int): Int =
     Math.floorMod(Math.floorMod(tid * A(i) + B(i), P), W.toLong).toInt
-
-  /** Registration triple for [[GraftExtensions]]. */
-  val registration: (org.apache.spark.sql.catalyst.FunctionIdentifier,
-      ExpressionInfo, Seq[Expression] => Expression) = (
-    new org.apache.spark.sql.catalyst.FunctionIdentifier("cms_sketch"),
-    new ExpressionInfo(classOf[CountMinSketchAgg].getName, "cms_sketch"),
-    (exprs: Seq[Expression]) => CountMinSketchAgg(exprs.head))
 }

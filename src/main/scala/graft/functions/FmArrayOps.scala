@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, QuaternaryExpression, QuinaryExpression, TernaryExpression, UnaryExpression, UnsafeArrayData, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, QuinaryExpression, TernaryExpression, UnaryExpression, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -12,15 +12,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * `zip_with` higher-order functions are CodegenFallback — interpreted
   * once per ARRAY ELEMENT per exploded row, on the hottest rows the
   * engine produces (every (sample, feature) pair of every SGD epoch and
-  * every scoring pass). Each expression below is one compiled primitive
-  * loop and reproduces its HOF's floating-point operation ORDER exactly
-  * (left-to-right fold, left-associated products), so every value is
-  * bit-identical — the SGD/score SQL oracles and the golden suites gate
-  * that equivalence. Input arrays are FM parameter/feature vectors and
-  * never carry null elements (built by `vector_to_array`, `fm_init_vec`,
-  * `array_repeat` or an array literal); outputs are primitive double
-  * arrays. `fm_init_strength`/`fm_init_vec` ([[FmInit]]) replace the
-  * seeded init's Column composition and its `transform(sequence(…))`. */
+  * every scoring pass). Each expression below is one primitive loop —
+  * one static kernel on its companion (or on [[FmInit]]) that its
+  * `nullSafeEval` and its generated code both call — and reproduces its
+  * HOF's floating-point operation ORDER exactly (left-to-right fold,
+  * left-associated products), so every value is bit-identical — the
+  * SGD/score SQL oracles and the golden suites gate that equivalence.
+  * Input arrays are FM parameter/feature vectors and never carry null
+  * elements (built by `vector_to_array`, `fm_init_vec`, `array_repeat`
+  * or an array literal), and the two-array kernels refuse arrays of
+  * unequal length; outputs are primitive double arrays.
+  * `fm_init_strength`/`fm_init_vec` ([[FmInit]]) replace the seeded
+  * init's Column composition and its `transform(sequence(…))`. */
 object FmArrayOps {
 
   private def arrType(e: Expression): Boolean = e.dataType match {
@@ -36,26 +39,14 @@ object FmArrayOps {
     bad.map(TypeCheckResult.TypeCheckFailure).getOrElse(TypeCheckResult.TypeCheckSuccess)
   }
 
-  val registrations: Seq[(org.apache.spark.sql.catalyst.FunctionIdentifier,
-      ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (new org.apache.spark.sql.catalyst.FunctionIdentifier("fm_arr_scale"),
-      new ExpressionInfo(classOf[FmArrScale].getName, "fm_arr_scale"),
-      (es: Seq[Expression]) => FmArrScale(es.head, es(1))),
-    (new org.apache.spark.sql.catalyst.FunctionIdentifier("fm_sq_sum"),
-      new ExpressionInfo(classOf[FmSqSum].getName, "fm_sq_sum"),
-      (es: Seq[Expression]) => FmSqSum(es.head)),
-    (new org.apache.spark.sql.catalyst.FunctionIdentifier("fm_grad_v"),
-      new ExpressionInfo(classOf[FmGradV].getName, "fm_grad_v"),
-      (es: Seq[Expression]) => FmGradV(es.head, es(1), es(2), es(3))),
-    (new org.apache.spark.sql.catalyst.FunctionIdentifier("fm_soft_update"),
-      new ExpressionInfo(classOf[FmSoftUpdate].getName, "fm_soft_update"),
-      (es: Seq[Expression]) => FmSoftUpdate(es.head, es(1), es(2))),
-    (new org.apache.spark.sql.catalyst.FunctionIdentifier("fm_init_strength"),
-      new ExpressionInfo(classOf[FmInitStrength].getName, "fm_init_strength"),
-      (es: Seq[Expression]) => FmInitStrength(es.head, es(1), es(2), es(3))),
-    (new org.apache.spark.sql.catalyst.FunctionIdentifier("fm_init_vec"),
-      new ExpressionInfo(classOf[FmInitVec].getName, "fm_init_vec"),
-      (es: Seq[Expression]) => FmInitVec(es.head, es(1), es(2), es(3), es(4))))
+  /** `a`'s length, which must equal `b`'s: `name`'s kernels index both
+    * arrays by it. */
+  private[functions] def sameLength(name: String, a: ArrayData, b: ArrayData): Int = {
+    val n = a.numElements()
+    if (b.numElements() != n) throw new IllegalArgumentException(
+      s"$name expects arrays of equal length, got $n and ${b.numElements()}")
+    n
+  }
 }
 
 /** The FM trainer's seeded parameter init, replayed through the L1 soft
@@ -105,6 +96,14 @@ object FmInit {
   def value(id: Int, f: Int, seed: Long, sd: Double, shrinks: ArrayData): Double =
     replay(draw(id, f, seed, sd), shrinks)
 
+  /** Draws `0 until k` of feature `id`, each replayed through `shrinks`. */
+  def vec(id: Int, seed: Long, k: Int, sd: Double, shrinks: ArrayData): ArrayData = {
+    val out = new Array[Double](k)
+    var f = 0
+    while (f < k) { out(f) = value(id, f, seed, sd, shrinks); f += 1 }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
   private[functions] def checkArgs(name: String, id: Expression, seed: Expression,
       sd: Expression, shrinks: Expression): TypeCheckResult =
     if (id.dataType != IntegerType || seed.dataType != LongType || sd.dataType != DoubleType)
@@ -123,35 +122,24 @@ case class FmArrScale(left: Expression, right: Expression)
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
-  override def nullSafeEval(arrAny: Any, xAny: Any): Any = {
-    val arr = arrAny.asInstanceOf[ArrayData]
-    val x = xAny.asInstanceOf[Double]
-    val n = arr.numElements()
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) { out(i) = arr.getDouble(i) * x; i += 1 }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
+  override def nullSafeEval(arr: Any, x: Any): Any =
+    FmArrScale.scale(arr.asInstanceOf[ArrayData], x.asInstanceOf[Double])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (arr, x) => {
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = $arr.numElements();
-         |double[] $out = new double[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $out[$i] = $arr.getDouble($i) * $x;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (arr, x) => s"graft.functions.FmArrScale.scale($arr, $x)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): FmArrScale =
     copy(left = newLeft, right = newRight)
+}
+
+object FmArrScale {
+  def scale(arr: ArrayData, x: Double): ArrayData = {
+    val out = new Array[Double](arr.numElements())
+    var i = 0
+    while (i < out.length) { out(i) = arr.getDouble(i) * x; i += 1 }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
 }
 
 /** `fm_sq_sum(arr)` ≡ `aggregate(arr, 0.0, (a, v) => a + v * v)` —
@@ -164,41 +152,29 @@ case class FmSqSum(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = DoubleType
 
-  override def nullSafeEval(arrAny: Any): Any = {
-    val arr = arrAny.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    var a = 0.0
-    var i = 0
-    while (i < n) { val v = arr.getDouble(i); a = a + v * v; i += 1 }
-    a
-  }
+  override def nullSafeEval(arr: Any): Any = FmSqSum.sqSum(arr.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, arr => {
-      val n = ctx.freshName("n")
-      val a = ctx.freshName("a")
-      val v = ctx.freshName("v")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = $arr.numElements();
-         |double $a = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $v = $arr.getDouble($i);
-         |  $a = $a + $v * $v;
-         |}
-         |${ev.value} = $a;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, arr => s"graft.functions.FmSqSum.sqSum($arr)")
 
   override protected def withNewChildInternal(newChild: Expression): FmSqSum =
     copy(child = newChild)
+}
+
+object FmSqSum {
+  def sqSum(arr: ArrayData): Double = {
+    var a = 0.0
+    var i = 0
+    while (i < arr.numElements()) { val v = arr.getDouble(i); a = a + v * v; i += 1 }
+    a
+  }
 }
 
 /** `fm_grad_v(vecArr, vfs, x, residual)` ≡
   * `transform(sequence(0, k-1), f =>
   *    (x * vfs[f+1] - vecArr[f+1] * x * x) * residual)`
   * with the HOF's exact association: `(x·vfs_f) − ((vecArr_f·x)·x)`,
-  * then `· residual`. */
+  * then `· residual`. `vecArr` and `vfs` must have the same length. */
 case class FmGradV(first: Expression, second: Expression,
     third: Expression, fourth: Expression) extends QuaternaryExpression {
 
@@ -209,43 +185,31 @@ case class FmGradV(first: Expression, second: Expression,
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
-  override def nullSafeEval(vecAny: Any, vfsAny: Any, xAny: Any, rAny: Any): Any = {
-    val vec = vecAny.asInstanceOf[ArrayData]
-    val vfs = vfsAny.asInstanceOf[ArrayData]
-    val x = xAny.asInstanceOf[Double]
-    val r = rAny.asInstanceOf[Double]
-    val n = vec.numElements()
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      out(i) = (x * vfs.getDouble(i) - vec.getDouble(i) * x * x) * r
-      i += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
+  override def nullSafeEval(vec: Any, vfs: Any, x: Any, r: Any): Any =
+    FmGradV.gradV(vec.asInstanceOf[ArrayData], vfs.asInstanceOf[ArrayData],
+      x.asInstanceOf[Double], r.asInstanceOf[Double])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (vec, vfs, x, r) => {
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      s"""
-         |int $n = $vec.numElements();
-         |double[] $out = new double[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $out[$i] = ($x * $vfs.getDouble($i)
-         |    - $vec.getDouble($i) * $x * $x) * $r;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (vec, vfs, x, r) =>
+      s"graft.functions.FmGradV.gradV($vec, $vfs, $x, $r)")
 
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression,
       newFourth: Expression): FmGradV =
     copy(first = newFirst, second = newSecond, third = newThird,
       fourth = newFourth)
+}
+
+object FmGradV {
+  def gradV(vec: ArrayData, vfs: ArrayData, x: Double, r: Double): ArrayData = {
+    val out = new Array[Double](FmArrayOps.sameLength("fm_grad_v", vec, vfs))
+    var i = 0
+    while (i < out.length) {
+      out(i) = (x * vfs.getDouble(i) - vec.getDouble(i) * x * x) * r
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
 }
 
 /** `fm_soft_update(vecArr, dV, shrinkage)` ≡
@@ -255,7 +219,8 @@ case class FmGradV(first: Expression, second: Expression,
   * Spark's `Signum`/`Abs` on doubles, and `(t > 0.0) ? t : 0.0`
   * reproduces `greatest(lit(0.0), t)` (Spark's Greatest keeps the
   * first operand unless a later one compares strictly greater, so
-  * `t = -0.0` yields `0.0` on both paths). */
+  * `t = -0.0` yields `0.0` on both paths). `vecArr` and `dV` must have
+  * the same length (`zip_with` would pad the shorter with nulls). */
 case class FmSoftUpdate(first: Expression, second: Expression,
     third: Expression) extends TernaryExpression {
 
@@ -266,14 +231,24 @@ case class FmSoftUpdate(first: Expression, second: Expression,
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
-  override def nullSafeEval(vecAny: Any, dvAny: Any, sAny: Any): Any = {
-    val vec = vecAny.asInstanceOf[ArrayData]
-    val dv = dvAny.asInstanceOf[ArrayData]
-    val s = sAny.asInstanceOf[Double]
-    val n = vec.numElements()
-    val out = new Array[Double](n)
+  override def nullSafeEval(vec: Any, dv: Any, s: Any): Any =
+    FmSoftUpdate.softUpdate(vec.asInstanceOf[ArrayData], dv.asInstanceOf[ArrayData],
+      s.asInstanceOf[Double])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (vec, dv, s) =>
+      s"graft.functions.FmSoftUpdate.softUpdate($vec, $dv, $s)")
+
+  override protected def withNewChildrenInternal(newFirst: Expression,
+      newSecond: Expression, newThird: Expression): FmSoftUpdate =
+    copy(first = newFirst, second = newSecond, third = newThird)
+}
+
+object FmSoftUpdate {
+  def softUpdate(vec: ArrayData, dv: ArrayData, s: Double): ArrayData = {
+    val out = new Array[Double](FmArrayOps.sameLength("fm_soft_update", vec, dv))
     var i = 0
-    while (i < n) {
+    while (i < out.length) {
       val c = vec.getDouble(i) - dv.getDouble(i)
       val t = Math.abs(c) - s
       out(i) = Math.signum(c) * (if (t > 0.0) t else 0.0)
@@ -281,30 +256,6 @@ case class FmSoftUpdate(first: Expression, second: Expression,
     }
     UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (vec, dv, s) => {
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val c = ctx.freshName("c")
-      val t = ctx.freshName("t")
-      s"""
-         |int $n = $vec.numElements();
-         |double[] $out = new double[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $c = $vec.getDouble($i) - $dv.getDouble($i);
-         |  double $t = Math.abs($c) - $s;
-         |  $out[$i] = Math.signum($c) * (($t > 0.0) ? $t : 0.0);
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): FmSoftUpdate =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }
 
 /** `fm_init_strength(id, seed, sd, shrinks)`: feature `id`'s seeded
@@ -349,31 +300,13 @@ case class FmInitVec(id: Expression, seed: Expression, k: Expression,
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
-  override def nullSafeEval(idAny: Any, seedAny: Any, kAny: Any, sdAny: Any,
-      shrinksAny: Any): Any = {
-    val out = new Array[Double](kAny.asInstanceOf[Int])
-    var f = 0
-    while (f < out.length) {
-      out(f) = FmInit.value(idAny.asInstanceOf[Int], f, seedAny.asInstanceOf[Long],
-        sdAny.asInstanceOf[Double], shrinksAny.asInstanceOf[ArrayData])
-      f += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
+  override def nullSafeEval(id: Any, seed: Any, k: Any, sd: Any, shrinks: Any): Any =
+    FmInit.vec(id.asInstanceOf[Int], seed.asInstanceOf[Long], k.asInstanceOf[Int],
+      sd.asInstanceOf[Double], shrinks.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (id, seed, k, sd, shrinks) => {
-      val out = ctx.freshName("out")
-      val f = ctx.freshName("f")
-      s"""
-         |double[] $out = new double[$k];
-         |for (int $f = 0; $f < $k; $f++) {
-         |  $out[$f] = graft.functions.FmInit.value($id, $f, $seed, $sd, $shrinks);
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray($out);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (id, seed, k, sd, shrinks) =>
+      s"graft.functions.FmInit.vec($id, $seed, $k, $sd, $shrinks)")
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): FmInitVec =

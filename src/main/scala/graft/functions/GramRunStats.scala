@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -177,13 +177,4 @@ case class GramRunStats(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): GramRunStats =
     copy(left = newLeft, right = newRight)
-}
-
-object GramRunStats {
-  /** Registration triple for [[GraftExtensions]]. */
-  val registration: (org.apache.spark.sql.catalyst.FunctionIdentifier,
-      ExpressionInfo, Seq[Expression] => Expression) = (
-    new org.apache.spark.sql.catalyst.FunctionIdentifier("gram_run_stats"),
-    new ExpressionInfo(classOf[GramRunStats].getName, "gram_run_stats"),
-    (exprs: Seq[Expression]) => GramRunStats(exprs.head, exprs(1)))
 }

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -116,11 +116,4 @@ object HyperLogLogAgg {
     * 1-based; [[RhoCap]] when the payload is all zeros. */
   def rho(w: Long): Long =
     if (w == 0L) RhoCap else java.lang.Long.numberOfTrailingZeros(w) + 1L
-
-  /** Registration triple for [[GraftExtensions]]. */
-  val registration: (org.apache.spark.sql.catalyst.FunctionIdentifier,
-      ExpressionInfo, Seq[Expression] => Expression) = (
-    new org.apache.spark.sql.catalyst.FunctionIdentifier("hll_sketch"),
-    new ExpressionInfo(classOf[HyperLogLogAgg].getName, "hll_sketch"),
-    (exprs: Seq[Expression]) => HyperLogLogAgg(exprs.head))
 }

@@ -3,7 +3,7 @@ package graft.functions
 import java.text.Normalizer
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -84,11 +84,4 @@ object NormalizeText {
       }
     UTF8String.fromString(folded)
   }
-
-  /** Registration triple for [[GraftExtensions]]. */
-  val registration: (org.apache.spark.sql.catalyst.FunctionIdentifier,
-      ExpressionInfo, Seq[Expression] => Expression) = (
-    new org.apache.spark.sql.catalyst.FunctionIdentifier("normalize_text"),
-    new ExpressionInfo(classOf[NormalizeText].getName, "normalize_text"),
-    (exprs: Seq[Expression]) => NormalizeText(exprs.head))
 }

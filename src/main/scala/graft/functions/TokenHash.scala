@@ -1,14 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: the dedup modules' character-polynomial
   * rolling hash `h ← (131·h + ascii(char)) mod 1e9+7` as one tight
-  * codegen'd byte loop, replacing a per-token
+  * byte loop, [[TokenHash.hash]], replacing a per-token
   * `aggregate(transform(sequence(1, length(tok)), i →
   * ascii(substr(tok, i, 1))), …)` expression tree that allocates an
   * index array and evaluates a substr+ascii pair per character.
@@ -23,8 +23,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class TokenHash(child: Expression) extends UnaryExpression {
 
-  private val M = 1000000007L
-
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case StringType => TypeCheckResult.TypeCheckSuccess
     case dt => TypeCheckResult.TypeCheckFailure(
@@ -33,8 +31,20 @@ case class TokenHash(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType
 
-  override def nullSafeEval(input: Any): Any = {
-    val bs = input.asInstanceOf[UTF8String].getBytes
+  override def nullSafeEval(input: Any): Any = TokenHash.hash(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, in => s"graft.functions.TokenHash.hash($in)")
+
+  override protected def withNewChildInternal(newChild: Expression): TokenHash =
+    copy(child = newChild)
+}
+
+object TokenHash {
+  private final val M = 1000000007L
+
+  def hash(tok: UTF8String): Long = {
+    val bs = tok.getBytes
     var h = 0L
     var i = 0
     while (i < bs.length) {
@@ -43,33 +53,4 @@ case class TokenHash(child: Expression) extends UnaryExpression {
     }
     h
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, in => {
-      val bs = ctx.freshName("bs")
-      val h = ctx.freshName("h")
-      val i = ctx.freshName("i")
-      s"""
-         |byte[] $bs = $in.getBytes();
-         |long $h = 0L;
-         |for (int $i = 0; $i < $bs.length; $i++) {
-         |  if (($bs[$i] & 0xC0) != 0x80) {
-         |    $h = ($h * 131L + (long) $bs[$i]) % ${M}L;
-         |  }
-         |}
-         |${ev.value} = $h;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): TokenHash =
-    copy(child = newChild)
-}
-
-object TokenHash {
-  /** Registration triple for [[GraftExtensions]]. */
-  val registration: (org.apache.spark.sql.catalyst.FunctionIdentifier,
-      ExpressionInfo, Seq[Expression] => Expression) = (
-    new org.apache.spark.sql.catalyst.FunctionIdentifier("token_hash"),
-    new ExpressionInfo(classOf[TokenHash].getName, "token_hash"),
-    (exprs: Seq[Expression]) => TokenHash(exprs.head))
 }

@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
 /** [[Profile]] charges work to job groups and, within a group, to
-  * [[Phase]]s; work with no group to the open window; streaming progress
-  * from any session to the open window. Its reads are exact after
-  * [[Profile.settle]], with no timed wait. */
+  * [[Phase]]s; work with no group to the open window; a stream's
+  * micro-batch work and progress, from any session, to the window it
+  * started in. Its reads are exact after [[Profile.settle]], with no
+  * timed wait. */
 class ProfileSuite extends SparkSessionSuite {
 
   // a shuffle: under AQE the map stage runs as a job of its own
@@ -55,24 +56,40 @@ class ProfileSuite extends SparkSessionSuite {
     p.phases("open").keySet shouldBe Set("")
   }
 
-  test("a stream in a newSession() scope reports its micro-batches") {
+  /** Runs, inside `p`'s window `stream`, a stream in a `newSession()`
+    * scope over two parquet files, one micro-batch each. */
+  private def streamInWindow(p: Profile): Unit = {
     val dir = Files.createTempDirectory("profile-stream").toString
     spark.range(100).write.parquet(s"$dir/in/a")
     spark.range(100, 200).write.parquet(s"$dir/in/b")
     val schema = spark.read.parquet(s"$dir/in/a").schema
     val scoped = spark.newSession()
-    val p = Profile.attach(spark)
-    try p.window("stream", "stream") {
+    p.window("stream", "stream") {
       scoped.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .parquet(s"$dir/in/*")
         .writeStream.format("noop")
         .option("checkpointLocation", s"$dir/checkpoint")
         .trigger(Trigger.AvailableNow())
         .start().awaitTermination()
-    } finally p.close()
+    }
+  }
+
+  test("a stream in a newSession() scope reports its micro-batches") {
+    val p = Profile.attach(spark)
+    try streamInWindow(p) finally p.close()
     val batches = p.batches("stream")
     batches.size should be >= 2
     all(batches.map(_.keySet)) should contain("triggerExecution")
+  }
+
+  test("a stream's micro-batch jobs are charged to the window it started in") {
+    val p = Profile.attach(spark)
+    try streamInWindow(p) finally p.close()
+    val w = p.total("stream")
+    w.jobs should be >= p.batches("stream").size.toLong
+    w.tasks should be > 0L
+    w.cpuNs should be > 0L
+    p.phases("stream").keySet should contain("")
   }
 
   test("after settle every job of a finished action is counted") {

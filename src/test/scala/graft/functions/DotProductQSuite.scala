@@ -9,14 +9,19 @@ import org.apache.spark.sql.functions._
   * int64-sum the DuckDB twins inline via `Similarity.qDotSql`, so any
   * drift would split the engine from its oracles), (2) be
   * order-independent (the property the raw double fold lacks and the
-  * whole design exists to provide), and (3) keep DotProduct's
-  * null/length contract. */
+  * whole design exists to provide), and (3) return null on a null
+  * input or a length mismatch, as the HOF fold does. */
 class DotProductQSuite extends SparkSessionSuite {
 
   private def hof(a: org.apache.spark.sql.Column,
       b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     aggregate(zip_with(a, b, (x, y) => floor(x * y * lit(1e12) + lit(0.5))),
       lit(0L), (acc, x) => acc + x).cast("double")
+
+  // the raw double fold, left to right
+  private def rawDot(a: org.apache.spark.sql.Column,
+      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 
   test("native kernel equals the HOF fallback bit-for-bit") {
     val s = spark
@@ -55,8 +60,8 @@ class DotProductQSuite extends SparkSessionSuite {
           i => sin(i.cast("double") * 2.1 + col("id"))).as("a"),
         transform(sequence(lit(0), lit(63)),
           i => cos(i.cast("double") * 0.9 + col("id") * 3)).as("b"))
-      .select(expr("dot_product(a, b)").as("fwd"),
-        expr("dot_product(reverse(a), reverse(b))").as("rev"))
+      .select(rawDot(col("a"), col("b")).as("fwd"),
+        rawDot(reverse(col("a")), reverse(col("b"))).as("rev"))
       .collect()
     val anyDrift = raw.exists(r =>
       java.lang.Double.doubleToRawLongBits(r.getDouble(0)) !=

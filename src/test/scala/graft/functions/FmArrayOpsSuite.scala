@@ -163,4 +163,19 @@ class FmArrayOpsSuite extends SparkSessionSuite {
       }
     }
   }
+
+  /** A generated projection (over `spark.range`) once read `b` past its
+    * end by `a`'s length; both paths now refuse the call. */
+  test("fm_grad_v and fm_soft_update refuse arrays of unequal length") {
+    val df = spark.range(4).select(
+      array_repeat(col("id").cast("double"), 8).as("a"),
+      array(col("id").cast("double")).as("b"))
+    for ((name, call) <- Seq("fm_grad_v" -> "fm_grad_v(a, b, 1.0D, 1.0D)",
+        "fm_soft_update" -> "fm_soft_update(a, b, 0.0D)")) withClue(s"$name: ") {
+      val e = intercept[Exception](df.select(expr(call)).collect())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      messages should include(s"$name expects arrays of equal length, got 8 and 1")
+    }
+  }
 }
